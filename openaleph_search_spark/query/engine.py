@@ -113,7 +113,10 @@ class Engine:
         """Planner debug (the ES ``_validate_query``/explain role),
         driver-only — zero Spark jobs beyond the cached term
         dictionary: the parsed IR, analyzed + dictionary-expanded
-        terms, and the physical strategy ``search()`` would pick.
+        terms, the physical strategy ``search()`` would pick, the
+        query's ``est_postings`` (df summed over its terms) and
+        ``scatter_tasks``, the scatter job's task count (None when
+        ``search()`` runs no scatter job).
         Mirrors search()'s branch conditions; a drift here breaks the
         test that asserts strategy names against observed plans."""
         sa = args if isinstance(args, SearchArgs) else parse_args(args)
@@ -161,6 +164,15 @@ class Engine:
             strategy = "full_match_then_branches"
         else:
             strategy = "topk_scatter_gather"
+        # the fan-out comes from the helper _scatter_exec runs; search()
+        # takes a scatter job unless the tree is match-all, the layout
+        # lost its per-part files, or a filter has no exact MetaSpec
+        # (pure-negative queries scatter their banned set unfiltered)
+        _, _, _, _, est, groups = ex._scatter_plan([tree], sa.k)
+        scatter = (strategy != "match_all_meta_scan" and ex.scatter_ok()
+                   and (pure_negative or self._meta_spec(
+                       {f: v for f, v in sa.filters.items()
+                        if f not in post_fields}, sa, None) is not None))
         return {
             "query_tree": repr(tree),
             "strategy": strategy,
@@ -171,6 +183,8 @@ class Engine:
             "k": sa.k,
             "pruning_eligible": strategy == "topk_scatter_gather",
             "post_filter_fields": post_fields,
+            "est_postings": est,
+            "scatter_tasks": len(groups) if scatter else None,
         }
 
     def stats(self) -> dict:

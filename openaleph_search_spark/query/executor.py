@@ -650,6 +650,36 @@ def _scatter_eval_group(parts, fs, dm_paths, post_paths, tomb, items,
 # driver-side planning + Spark wiring
 # ---------------------------------------------------------------------------
 
+# postings one scatter task must have to evaluate before the query
+# fans out to another task: the fixed CPU of one Python task divided by
+# the eval CPU per posting. scripts/scatter_fanout_sweep.py prints both
+# and their ratio: 0.19-0.26 s / 110-145 ns = 1.7-2.0M postings over
+# three runs on a 4-vCPU host (local[2]).
+_POSTINGS_PER_TASK = 2_000_000
+
+
+def _scatter_groups(parts: list[int], par: int,
+                    est_postings: int) -> list[list[int]]:
+    """Partition source parts into evaluation groups, one per task,
+    sized by the query's work: ``ceil(est_postings / _POSTINGS_PER_TASK)``
+    tasks, capped by the part count and ``par`` (defaultParallelism).
+
+    A Python task is not cheap: each ``mapInPandas`` task costs
+    0.19-0.26 s of CPU before it evaluates anything, even on a reused
+    worker (4-vCPU host, pyspark 4.1.2). pyspark's ``setup_spark_files``
+    calls ``importlib.invalidate_caches()`` on every task, and that makes
+    each cached ``zipimporter`` re-read ``pyspark.zip``'s directory. So
+    a small query runs as one task, and a query only fans out once each
+    task carries as much eval work as that fixed cost. Round-robin
+    keeps groups balanced in part count."""
+    n = max(1, min(len(parts), par,
+                   -(-int(est_postings) // _POSTINGS_PER_TASK)))
+    groups: list[list[int]] = [[] for _ in range(n)]
+    for i, p in enumerate(parts):
+        groups[i % n].append(p)
+    return groups
+
+
 # term dictionaries below this total parquet size are cached on the
 # driver once per executor: idf lookups and prefix/wildcard expansion
 # then cost zero Spark jobs per query (ES keeps the terms dict in the
@@ -877,7 +907,7 @@ class SearchExecutor:
         """Shared driver-side planning: prefix expansion, term stats →
         idf, pruning-soundness guard, postings scan with term filter +
         positions-column pruning. → (terms, ctx dict, postings)."""
-        terms, ctx, need_pos, cols = self._plan_ctx(trees, k)
+        terms, ctx, need_pos, cols, _ = self._plan_ctx(trees, k)
         if not terms:
             return terms, None, None
         postings = (self._postings()
@@ -890,14 +920,18 @@ class SearchExecutor:
 
     def _plan_ctx(self, trees: list[Node], k: int | None):
         """Driver-side planning shared by the Catalyst and scatter
-        paths → (terms, ctx, need_pos, scan column list)."""
+        paths → (terms, ctx, need_pos, scan column list, est_postings).
+
+        ``est_postings`` is the sum of df over the resolved terms (the
+        union across ``trees``): the query's posting volume, read from
+        the same dictionary lookup that yields idf — no extra job."""
         for t in trees:
             self._expand_prefixes(t)
             self._expand_wildcards(t)
         terms = sorted(set().union(
             *(self._collect_terms(t) for t in trees)))
         if not terms:
-            return terms, None, False, []
+            return terms, None, False, [], 0
 
         n_docs = float(self.meta["n_docs"])
         avgdl = float(self.meta["avgdl"])
@@ -911,14 +945,14 @@ class SearchExecutor:
             pos = np.searchsorted(tarr, qt)
             np.minimum(pos, max(tarr.size - 1, 0), out=pos)
             hit = tarr.size > 0 and (tarr[pos] == qt)
-            idf = {t: float(bm25_idf(float(dfarr[p]), n_docs))
+            dfs = {t: int(dfarr[p])
                    for t, p, h in zip(terms, pos, np.atleast_1d(hit))
                    if h}
         else:
             stats = (self.storage.term_stats(self.spark)
                      .filter(F.col("term").isin(terms)).collect())
-            idf = {r["term"]: float(bm25_idf(float(r["df"]), n_docs))
-                   for r in stats}
+            dfs = {r["term"]: int(r["df"]) for r in stats}
+        idf = {t: float(bm25_idf(float(d), n_docs)) for t, d in dfs.items()}
 
         # column pruning: positions are the fattest payload — only
         # phrase queries read them (the parquet scan skips the column
@@ -937,7 +971,7 @@ class SearchExecutor:
                "k1": k1, "b": b, "avgdl_by_field": avgdl_by_field,
                "b_by_field": dict(self.meta.get("b_by_field") or {}),
                "bigrams": bigrams_on}
-        return terms, ctx, need_pos, cols
+        return terms, ctx, need_pos, cols, sum(dfs.values())
 
     @staticmethod
     def _attach_bounds(pdf: pd.DataFrame, ctx: dict) -> pd.DataFrame:
@@ -1032,23 +1066,16 @@ class SearchExecutor:
     def scatter_ok(self) -> bool:
         return self._scatter_layout() is not None
 
-    def _scatter_groups(self, lay: dict) -> list[list[int]]:
-        """Partition source parts into evaluation groups — scale-
-        adaptive: one task per part at small part counts, otherwise
-        max(num_shards, defaultParallelism/2) tasks so query fan-out
-        tracks the executor slots, not a constant. The /2 is measured:
-        per-task overhead (~5-10 ms Arrow/python round-trip) beats the
-        parallelism gain of slot-count tasks for sub-second queries
-        (16 groups 0.25 s vs 32 groups 0.31 s on the 640k-doc bench
-        index at local[32]); larger queries still scale with the
-        cluster through defaultParallelism."""
-        par = self.spark.sparkContext.defaultParallelism
-        S = int(self.meta["num_shards"])
-        n = max(1, min(len(lay["parts"]), max(S, par // 2)))
-        groups: list[list[int]] = [[] for _ in range(n)]
-        for i, p in enumerate(lay["parts"]):
-            groups[i % n].append(p)
-        return groups
+    def _scatter_plan(self, trees: list[Node], k: int | None):
+        """Driver-side scatter planning → (terms, ctx, need_pos, cols,
+        est_postings, groups). The one place the fan-out is decided:
+        ``_scatter_exec`` runs it and ``Engine.explain`` reports it."""
+        terms, ctx, need_pos, cols, est = self._plan_ctx(trees, k)
+        lay = self._scatter_layout()
+        groups = (_scatter_groups(
+            lay["parts"], self.spark.sparkContext.defaultParallelism, est)
+            if terms and lay is not None else [])
+        return terms, ctx, need_pos, cols, est, groups
 
     def _scatter_exec(self, items: list[tuple], k: int | None,
                       spec: MetaSpec | None, mode: str,
@@ -1065,11 +1092,10 @@ class SearchExecutor:
         Modes: scores | multi | hydrate | facet | count.
         """
         lay = self._scatter_layout()
-        trees = [t for _, t in items]
-        terms, ctx, need_pos, cols = self._plan_ctx(trees, k)
+        terms, ctx, need_pos, cols, _, groups = self._scatter_plan(
+            [t for _, t in items], k)
         if not terms or (spec is not None and spec.match_none):
             return self.spark.createDataFrame([], out_schema)
-        groups = self._scatter_groups(lay)
         fn = self._scatter_fn(
             groups, lay["fs"], lay["dm"], lay["post"],
             lay["tombs"] if spec is not None else [],

@@ -184,6 +184,44 @@ def test_percolate_arrow_emitter_matches_pandas_body(spark,
     assert sorted(map(key, arrow)) == sorted(map(key, pandas_rows))
 
 
+def test_percolate_docs_large_var_types(spark, fixture_docs_df):
+    """With useLargeVarTypes on, Spark declares large_string for the
+    result's strings: the batch must percolate to the same rows, and
+    the mapInArrow emitter must build that type itself."""
+    stored = compile_watchlist([
+        {"entity_id": "e1", "names": ["Paul Manafort"]},
+        {"entity_id": "e3", "names": ["Владимир Путин"]},
+    ])
+    key = lambda r: (r["path"], r["entity_id"], r["score"],
+                     tuple(r["matched_names"]))
+    want = sorted(map(key, percolate_docs(fixture_docs_df, stored,
+                                          slop=2).collect()))
+    conf = "spark.sql.execution.arrow.useLargeVarTypes"
+    old = spark.conf.get(conf, "false")
+    spark.conf.set(conf, "true")
+    try:
+        got = sorted(map(key, percolate_docs(fixture_docs_df, stored,
+                                             slop=2).collect()))
+    finally:
+        spark.conf.set(conf, old)
+    assert want and got == want
+    import pyarrow as pa
+    from openaleph_search_spark.query.percolate import (
+        _percolate_batch_arrow_fn)
+    pdf = fixture_docs_df.select("path", "content").toPandas()
+    rb = pa.RecordBatch.from_pandas(pdf, preserve_index=False).cast(
+        pa.schema([("path", pa.large_string()),
+                   ("content", pa.large_string())]))
+    fn = _percolate_batch_arrow_fn(stored, ["path"], "content", 2,
+                                   large_var_types=True)
+    out = list(fn(iter([rb])))
+    assert out
+    for b in out:
+        assert pa.types.is_large_string(b.schema.field("entity_id").type)
+        assert pa.types.is_large_string(
+            b.schema.field("matched_names").type.value_type)
+
+
 # ------------------------------------------------------------- mentions --
 def test_mentions_query(fixture_engine):
     from openaleph_search_spark.query.percolate import mentions_query

@@ -177,13 +177,17 @@ def test_run_multi_single_pass(spark, fixture_engine):
 
 
 def test_scatter_matches_legacy_everywhere(spark, fixture_index,
-                                           fixture_docs_df, tmp_path):
+                                           fixture_docs_df, tmp_path,
+                                           monkeypatch):
     """The zero-exchange scatter path must be row- and score-identical
     to the legacy Catalyst path across every engine branch it serves:
     top-k, filters/excludes/empties, facet fast path, count, msearch —
-    and with tombstones present."""
+    and with tombstones present. Each case also runs with every part in
+    ONE group and with one group PER part: any grouping of whole parts
+    is a valid evaluation group, so the fan-out never changes results."""
     from openaleph_search_spark.index.mutate import delete_by_ids
     from openaleph_search_spark.index.storage import IndexStorage
+    from openaleph_search_spark.query import executor as xmod
     from openaleph_search_spark.query.engine import Engine
 
     def pair(idx):
@@ -193,25 +197,50 @@ def test_scatter_matches_legacy_everywhere(spark, fixture_index,
         assert new.executor.scatter_ok()
         return new, old
 
+    def results(eng, cases):
+        out = []
+        for a in cases.get("search", []):
+            out.append((a, [tuple(r) for r in eng.search(a).hits.collect()]))
+        for a in cases.get("facet", []):
+            out.append((a, eng.search(a).facets["lang"].collect()))
+        for a in cases.get("count", []):
+            out.append((a, eng.count(a)))
+        for ms in cases.get("msearch", []):
+            out.append((ms, sorted(map(tuple,
+                                       eng.msearch(ms, k=3).collect()))))
+        return out
+
+    fanouts = {
+        "planned": xmod._scatter_groups,
+        "one_group": lambda parts, par, est: [list(parts)],
+        "group_per_part": lambda parts, par, est: [[p] for p in parts],
+    }
+
+    def check(new, old, cases):
+        want = results(old, cases)
+        assert len(new.executor._scatter_layout()["parts"]) > 1
+        for name, fn in fanouts.items():
+            monkeypatch.setattr(xmod, "_scatter_groups", fn)
+            for (case, got), (_, exp) in zip(results(new, cases), want):
+                assert got == exp, (name, case)
+        monkeypatch.undo()
+
     new, old = pair(fixture_index)
-    argsets = [
-        {"q": "banana crime", "limit": 5},
-        {"q": "banana", "filter:lang": "go", "limit": 5},
-        {"q": "banana OR kwazulu", "exclude:lang": "txt", "limit": 5},
-        {"q": '"banana crime"', "limit": 5},
-        {"q": "crime", "qfields": "content,path^2", "limit": 5},
-    ]
-    for a in argsets:
-        got = [tuple(r) for r in new.search(a).hits.collect()]
-        want = [tuple(r) for r in old.search(a).hits.collect()]
-        assert got == want, a
-    fa = {"q": "banana", "facet": "lang", "limit": 0}
-    assert (new.search(fa).facets["lang"].collect()
-            == old.search(fa).facets["lang"].collect())
-    assert new.count({"q": "banana"}) == old.count({"q": "banana"})
-    ms = {"a": {"q": "banana"}, "b": {"q": "crime wave"}}
-    assert sorted(map(tuple, new.msearch(ms, k=3).collect())) \
-        == sorted(map(tuple, old.msearch(ms, k=3).collect()))
+    check(new, old, {
+        "search": [
+            {"q": "banana crime", "limit": 5},
+            {"q": "banana", "filter:lang": "go", "limit": 5},
+            {"q": "banana OR kwazulu", "exclude:lang": "txt", "limit": 5},
+            {"q": '"banana crime"', "limit": 5},
+            {"q": "crime", "qfields": "content,path^2", "limit": 5},
+        ],
+        "facet": [{"q": "banana", "facet": "lang", "limit": 0},
+                  {"q": "banana OR kwazulu", "filter:repo": "r2",
+                   "facet": "lang", "limit": 0}],
+        "count": [{"q": "banana"},
+                  {"q": "banana OR kwazulu", "filter:lang": "txt"}],
+        "msearch": [{"a": {"q": "banana"}, "b": {"q": "crime wave"}}],
+    })
 
     # tombstoned index: scatter must subtract deletes identically
     import shutil
@@ -221,14 +250,54 @@ def test_scatter_matches_legacy_everywhere(spark, fixture_index,
     victim = old.search({"q": "banana", "limit": 1}).hits.collect()[0]
     delete_by_ids(spark, st, [victim["doc_id"]])
     tnew, told = pair(mdir)
-    for a in ({"q": "banana crime", "limit": 5},
-              {"q": "banana", "filter:lang": "go", "limit": 5}):
-        assert [tuple(r) for r in tnew.search(a).hits.collect()] \
-            == [tuple(r) for r in told.search(a).hits.collect()], a
-    assert tnew.count({"q": "banana"}) == told.count({"q": "banana"})
+    check(tnew, told, {
+        "search": [{"q": "banana crime", "limit": 5},
+                   {"q": "banana", "filter:lang": "go", "limit": 5}],
+        "facet": [{"q": "banana", "facet": "lang", "limit": 0}],
+        "count": [{"q": "banana"},
+                  {"q": "banana", "filter:lang": "go"}],
+        "msearch": [{"a": {"q": "banana"}, "b": {"q": "crime wave"}}],
+    })
     assert all(r["doc_id"] != victim["doc_id"]
                for r in tnew.search({"q": "banana", "limit": 5})
                .hits.collect())
+
+
+def test_explain_reports_scatter_fanout(spark, fixture_engine,
+                                        monkeypatch):
+    """explain() reports the fan-out _scatter_exec would plan: one task
+    for a small query, min(parts, defaultParallelism) once est_postings
+    exceeds par × _POSTINGS_PER_TASK, None for non-scatter strategies."""
+    from openaleph_search_spark.query import executor as xmod
+    ex = fixture_engine.executor
+    parts = len(ex._scatter_layout()["parts"])
+    par = spark.sparkContext.defaultParallelism
+    tarr, dfarr = ex._term_dict()
+    df = dict(zip(tarr.tolist(), dfarr.tolist()))
+
+    e = fixture_engine.explain({"q": "banana crime", "limit": 10})
+    assert e["strategy"] == "topk_scatter_gather"
+    assert e["est_postings"] == df["banana"] + df["crime"]
+    assert e["scatter_tasks"] == 1
+    # the planned fan-out is the one the executed job runs
+    fixture_engine.search({"q": "banana crime", "limit": 10}).hits.collect()
+    assert ex._last_scatter["n_groups"] == 1
+
+    # a query larger than par tasks' worth of postings fans out fully
+    monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK",
+                        max(1, e["est_postings"] // (par + 1)))
+    big = fixture_engine.explain({"q": "banana crime", "limit": 10})
+    assert big["scatter_tasks"] == min(parts, par)
+    assert fixture_engine.explain(
+        {"q": "banana", "facet": "lang", "limit": 0})["scatter_tasks"] \
+        == min(parts, par, -(-df["banana"] // xmod._POSTINGS_PER_TASK))
+    monkeypatch.undo()
+
+    assert fixture_engine.explain({"limit": 10})["scatter_tasks"] is None
+    # a range filter has no exact MetaSpec → legacy cogrouped plan
+    assert fixture_engine.explain(
+        {"q": "banana", "filter:gte:doc_len": "3",
+         "limit": 10})["scatter_tasks"] is None
 
 
 def test_ivf_centroid_selection_is_bounded_topn(spark):

@@ -413,6 +413,36 @@ def test_percolate_batch_matches_per_doc_reference(docs, clauses, slop):
     assert got == want
 
 
+# --------------------------------------------------------------------------
+# scatter fan-out: grouping of source parts into tasks
+# --------------------------------------------------------------------------
+
+@given(parts=st.lists(st.integers(0, 1 << 20), min_size=1, max_size=80,
+                      unique=True),
+       par=st.integers(1, 256),
+       ests=st.lists(st.integers(0, 300), min_size=2, max_size=2),
+       frac=st.integers(0, 3))
+@settings(max_examples=300, deadline=None)
+def test_scatter_groups_partition_parts(parts, par, ests, frac):
+    """Every part lands in exactly one non-empty group, the task count
+    stays within [1, min(parts, par)], and it never drops as the
+    query's est_postings grows."""
+    from openaleph_search_spark.query.executor import (
+        _POSTINGS_PER_TASK, _scatter_groups)
+    # whole multiples of the per-task postings, ± a remainder around
+    # the boundaries where the task count steps
+    lo, hi = sorted(max(0, e * _POSTINGS_PER_TASK + frac - 1)
+                    for e in ests)
+    counts = []
+    for est in (lo, hi):
+        groups = _scatter_groups(parts, par, est)
+        assert sorted(p for g in groups for p in g) == sorted(parts)
+        assert all(groups)
+        assert 1 <= len(groups) <= min(len(parts), par)
+        counts.append(len(groups))
+    assert counts[0] <= counts[1]
+
+
 _arg_keys = st.sampled_from([
     "q", "prefix", "offset", "limit", "facet", "sort", "filter:lang",
     "filter:gte:doc_len", "filter:lte:created", "exclude:repo",

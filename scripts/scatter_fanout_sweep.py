@@ -38,34 +38,13 @@ import time
 import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-_TICK = os.sysconf("SC_CLK_TCK")
+from perfbench.trace import tree_cpu_s as _cpu_of, tree_pids  # noqa: E402
 
 
 def tree_cpu_s() -> float:
     """CPU seconds used so far by this process and every descendant
-    (the JVM and its Python daemon/workers), reaped children included."""
-    kids: dict[int, list[int]] = {}
-    for d in os.listdir("/proc"):
-        if not d.isdigit():
-            continue
-        try:
-            with open(f"/proc/{d}/stat") as f:
-                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
-        except OSError:
-            continue
-        kids.setdefault(ppid, []).append(int(d))
-    total, todo = 0, [os.getpid()]
-    while todo:
-        p = todo.pop()
-        todo.extend(kids.get(p, []))
-        try:
-            with open(f"/proc/{p}/stat") as f:
-                fields = f.read().rsplit(")", 1)[1].split()
-        except OSError:
-            continue
-        total += sum(int(x) for x in fields[11:15])
-    return total / _TICK
+    (the JVM and its Python daemon/workers)."""
+    return _cpu_of(tree_pids(os.getpid()))
 
 
 def measure(fn, reps: int) -> tuple[float, float]:

@@ -171,8 +171,8 @@ def main(argv=None):
             from openaleph_search_spark.index.mutate import compact
             from openaleph_search_spark.index.storage import IndexStorage
             st = IndexStorage(args.index)
-            compact(spark, st)
-            print(json.dumps(st.read_meta()))
+            stats = compact(spark, st)
+            print(json.dumps({**st.read_meta(), "compact": stats}))
         elif args.cmd == "export":
             from openaleph_search_spark.query.engine import Engine
             eng = Engine(spark, args.index)

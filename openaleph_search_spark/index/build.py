@@ -15,7 +15,8 @@ drives it, Lucene executes it).  Pipeline:
     │     + doc_meta/part=N.parquet
     │     commit manifest/part=N.json   ← per-partition checkpoint
     ├─ global_stats (N, avgdl) from doc_meta           ── tiny agg
-    └─ term_stats from a map-side-combined sum over block rows
+    └─ term_stats: df/cf summed by term over the postings' block
+       stats (a projected read of term, doc_count, sum_tf)
 
 Scale properties (designed for 1000-executor / 100 TB):
 
@@ -51,10 +52,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..analysis.analyzer import tokenize_flat
 from .codec import (BLOCK_SIZE, K1, B, delta_restarting,
                     encode_positions_grouped, varint_encode_sliced)
-from .storage import IndexStorage
+from .storage import PART_FILE, IndexStorage
 
 DOC_ID_PART_SHIFT = 33  # doc_id = (src_part << 33) | local_row
-LAYOUT_VERSION = 6  # bump on any physical-layout / shard-map change
+LAYOUT_VERSION = 7  # bump on any physical-layout / shard-map change
 FIELD_SEP = "\x1f"  # term-dictionary field prefix: "path\x1ffoo"
 DEFAULT_FIELDS = {"path": "path", "repo": "repo", "lang": "lang"}
 BIGRAM_FIELD = "_bi"  # T16 index_phrases shingles (phrase fast path)
@@ -191,7 +192,6 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
         positions = np.concatenate(pos_parts)
         dl_tok = np.concatenate(dl_tok_parts).astype(np.int64)
 
-        block_rows = 0
         run = pd.DataFrame({c: [] for c in _BLOCK_COLS})
         dl_per_doc = content_dl
         if row_idx.size:
@@ -274,7 +274,6 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
                      for lo, hi in zip(blk_lo, blk_hi)]
                     if pos_payloads is not None else [b""] * tot),
             }, columns=_BLOCK_COLS)
-            block_rows = tot  # truthy marker for the stats partial
 
         meta = pd.DataFrame({
             "doc_id": doc_ids,
@@ -292,8 +291,7 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
         # object stores / HDFS, atomic under speculative task attempts
         shard_dir = os.path.join(storage.postings_dir, f"shard={shard}")
         for d in (shard_dir, storage.doc_meta_dir,
-                  storage.manifest_dir, storage.term_stats_parts_dir,
-                  storage.field_lens_dir):
+                  storage.manifest_dir, storage.field_lens_dir):
             storage.io.mkdirs(d)
         # the task writes its single-shard run STRAIGHT into the final
         # hive layout (shard = src_part mod S is constant per task):
@@ -350,23 +348,6 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
                                      ("dl", pa.int32())])),
             os.path.join(storage.field_lens_dir,
                          f"part={src_part}.parquet"))
-        # per-partition term-stat partials: the global term dictionary
-        # aggregation then runs over tiny pre-combined rows
-        if block_rows:
-            ts = (run.groupby("term", sort=False)
-                  .agg(df=("doc_count", "sum"), cf=("sum_tf", "sum"))
-                  .reset_index())
-        else:
-            ts = pd.DataFrame({"term": [], "df": [], "cf": []})
-        storage.io.write_parquet_atomic(
-            pa.Table.from_pandas(ts, preserve_index=False,
-                                 schema=pa.schema([
-                                     ("term", pa.string()),
-                                     ("df", pa.int64()),
-                                     ("cf", pa.int64())])),
-            os.path.join(storage.term_stats_parts_dir,
-                         f"part={src_part}.parquet"))
-
         # per-field (docs, tokens) partials → global per-field avgdl
         storage.io.write_bytes_atomic(
             os.path.join(storage.manifest_dir,
@@ -549,8 +530,8 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
     # across part files (partition-prefixed doc ids), so the executor's
     # sort-by-first_doc merge needs no re-encode.
 
-    # ---- term stats (global df/cf — unlike ES's per-shard idf) over the
-    # per-partition partials written in step A ---------------------------
+    # ---- term stats (global df/cf — unlike ES's per-shard idf), summed
+    # over the block stats of the postings written in step A -------------
     aggregate_term_stats(spark, storage)
     _mark("term_stats")
 
@@ -573,53 +554,50 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
     return storage
 
 
-# below this, the partials fit trivially in driver memory and a whole
-# Spark job (schedule + shuffle + commit) is pure fixed overhead
+# below this many postings bytes, the projected (term, doc_count,
+# sum_tf) columns fit trivially in driver memory and a whole Spark job
+# (schedule + shuffle + commit) is pure fixed overhead
 _TERM_STATS_DRIVER_BYTES = 256 * 1024 * 1024
 
 
 def aggregate_term_stats(spark: SparkSession,
                          storage: IndexStorage) -> None:
-    """Global term dictionary (df/cf) from the per-partition partials.
+    """Global term dictionary (df/cf): ``doc_count``/``sum_tf`` summed
+    by term over every block row of the per-part postings files.
 
-    Adaptive execution: the partials are pre-combined per source
-    partition (≤ |vocab| rows each), so at small-to-medium scale the
-    whole aggregation is a driver-side pyarrow group_by — no Spark job,
-    no shuffle, no per-job fixed latency. Past a size threshold (100-TB
-    builds: vocab × partitions rows) it stays a distributed groupBy."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    names = [n for n in storage.io.listdir(storage.term_stats_parts_dir)
-             if n.endswith(".parquet")]
-    paths = [os.path.join(storage.term_stats_parts_dir, n)
-             for n in names]
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=16) as pool:
-        total = sum(pool.map(storage.io.file_size, paths))
-    if total <= _TERM_STATS_DRIVER_BYTES:
-        # threaded reads: this runs serially on the driver right after
-        # the build job — at small scale it was ~1.5 s of one-file-at-
-        # a-time I/O on the critical path (pure fixed cost against the
-        # N→4N scaling target)
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            tables = list(pool.map(storage.io.read_parquet, paths))
-        merged = (pa.concat_tables(tables)
+    The postings are the only source, so build, resume, append and
+    compaction all stay exact with no per-part partial to keep in step.
+    Adaptive execution: at small-to-medium scale the whole aggregation
+    is a driver-side pyarrow group_by over a projected read — no Spark
+    job, no shuffle, no per-job fixed latency. Past a size threshold
+    (100-TB builds) it stays a distributed groupBy."""
+    import pyarrow.dataset as ds
+    from pyarrow import fs as pafs
+    io = storage.io
+    sel = pafs.FileSelector(io.path(storage.postings_dir), recursive=True,
+                            allow_not_found=True)
+    files = [i for i in io.fs.get_file_info(sel)
+             if PART_FILE.fullmatch(i.base_name)]
+    if sum(i.size for i in files) <= _TERM_STATS_DRIVER_BYTES:
+        merged = (ds.dataset([i.path for i in files], filesystem=io.fs,
+                             format="parquet")
+                  .to_table(columns=["term", "doc_count", "sum_tf"])
                   .group_by("term")
-                  .aggregate([("df", "sum"), ("cf", "sum")])
+                  .aggregate([("doc_count", "sum"), ("sum_tf", "sum")])
                   .rename_columns(["term", "df", "cf"]))
-        storage.io.mkdirs(storage.term_stats_dir)
-        for n in [x for x in storage.io.listdir(storage.term_stats_dir)
-                  if x.endswith(".parquet")]:
-            storage.io.delete_file(
-                os.path.join(storage.term_stats_dir, n))
-        storage.io.write_parquet_atomic(
+        # replace the file first, then drop stale ones (a Spark-path
+        # write's), so readers never see an empty term dictionary
+        io.mkdirs(storage.term_stats_dir)
+        io.write_parquet_atomic(
             merged, os.path.join(storage.term_stats_dir,
                                  "part=all.parquet"))
+        for n in io.listdir(storage.term_stats_dir):
+            if n.endswith(".parquet") and n != "part=all.parquet":
+                io.delete_file(os.path.join(storage.term_stats_dir, n))
         return
-    (spark.read.parquet(
-        os.path.join(storage.term_stats_parts_dir, "*.parquet"))
+    (storage.postings(spark)
         .groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+        .agg(F.sum("doc_count").alias("df"), F.sum("sum_tf").alias("cf"))
         .write.mode("overwrite").parquet(storage.term_stats_dir))
 
 

@@ -250,6 +250,58 @@ def encode_blocks(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
     return blocks
 
 
+def drop_docs(docs_payloads: list[bytes], tfs_payloads: list[bytes],
+              dls_payloads: list[bytes], pos_payloads: list[bytes],
+              doc_counts: np.ndarray, dead: np.ndarray,
+              with_positions: bool) -> tuple[np.ndarray, dict]:
+    """Drop the doc ids in ``dead`` (sorted int64) from packed block rows.
+
+    One concatenated varint decode per payload covers every block; the
+    dead docs are masked, whole per-doc position runs go with them
+    (``np.repeat(keep, tf)``), and the surviving docs are re-encoded
+    per block with the build's ``delta_restarting`` +
+    ``varint_encode_sliced``. → (``kept``: input row index of every
+    block that keeps ≥ 1 doc, its rebuilt block columns)."""
+    counts = np.asarray(doc_counts, dtype=np.int64)
+    heads = np.cumsum(counts) - counts
+    deltas = varint_decode(b"".join(docs_payloads))
+    # a running sum across blocks may wrap in uint64; differences
+    # within a block stay exact under modular arithmetic
+    run = np.cumsum(deltas, dtype=np.uint64)
+    docs = run - np.repeat(run[heads] - deltas[heads], counts)
+    tfs = varint_decode(b"".join(tfs_payloads)) + np.uint64(1)
+    dls = varint_decode(b"".join(dls_payloads))
+    keep = ~np.isin(docs.astype(np.int64), dead)
+    new_counts = np.bincount(
+        np.repeat(np.arange(counts.size), counts)[keep],
+        minlength=counts.size)
+    kept = np.flatnonzero(new_counts)
+    c = new_counts[kept]
+    d, t, l = docs[keep], tfs[keep], dls[keep]
+    lo = np.cumsum(c) - c
+    cols = {
+        "first_doc": d[lo].astype(np.int64),
+        "last_doc": d[lo + c - 1].astype(np.int64),
+        "doc_count": c.astype(np.int32),
+        "sum_tf": np.add.reduceat(t, lo).astype(np.int64),
+        "max_tf": np.maximum.reduceat(t, lo).astype(np.int32),
+        "min_dl": np.minimum.reduceat(l, lo).astype(np.int64),
+        "docs_payload": varint_encode_sliced(delta_restarting(d, lo), lo),
+        "tfs_payload": varint_encode_sliced(t - np.uint64(1), lo),
+        "dls_payload": varint_encode_sliced(l, lo),
+    }
+    if with_positions:
+        # positions are delta-coded within each doc, so the kept runs
+        # re-encode to their original bytes
+        pos = varint_decode(b"".join(pos_payloads))
+        pos_lo = (np.cumsum(t) - t)[lo].astype(np.int64)
+        cols["pos_payload"] = varint_encode_sliced(
+            pos[np.repeat(keep, tfs.astype(np.int64))], pos_lo)
+    else:
+        cols["pos_payload"] = [b""] * kept.size
+    return kept, cols
+
+
 def decode_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode one block row → (doc_ids, tfs, dls) as uint64 arrays."""
     deltas = varint_decode(row["docs_payload"])

@@ -89,8 +89,12 @@ class FsIO:
         return pq.read_table(self.path(uri), filesystem=self.fs)
 
     def write_parquet_atomic(self, table, uri: str) -> None:
+        """Written without schema metadata: pandas' metadata would
+        otherwise sit in every footer twice (raw and inside
+        ``ARROW:schema``), and no reader uses it."""
         import pyarrow.parquet as pq
         p = self.path(uri)
         tmp = f"{p}.tmp-{uuid.uuid4().hex[:8]}"
-        pq.write_table(table, tmp, filesystem=self.fs)
+        pq.write_table(table.replace_schema_metadata(None), tmp,
+                       filesystem=self.fs)
         self.fs.move(tmp, p)

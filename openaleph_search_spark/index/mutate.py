@@ -6,7 +6,11 @@ The reference's mutations are ES row-level ops
 index/entities.py:361-369). Columnar Spark-first equivalents:
 
 * **delete** = tombstones: a small doc_id table subtracted at query
-  time (Lucene's own soft-delete design). ``compact()`` folds them in.
+  time (Lucene's own soft-delete design). ``compact()`` folds them in
+  by rewriting, in place, only the source parts that hold a
+  tombstoned doc: each part's files are replaced one at a time under
+  their own ``part=<p>.parquet`` names, manifest last. No writer swaps
+  a live directory.
 * **append** = an incremental build of new source partitions into the
   same layout. Appends change collection stats (N, avgdl) — harmless:
   impact bounds are derived at query time from each block's stored
@@ -15,11 +19,14 @@ index/entities.py:361-369). Columnar Spark-first equivalents:
 """
 from __future__ import annotations
 
+import json
 import os
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .storage import IndexStorage
+from .storage import PART_FILE, IndexStorage
 
 
 def tombstones_dir(storage: IndexStorage) -> str:
@@ -54,67 +61,6 @@ def delete_by_ids(spark: SparkSession, storage: IndexStorage,
     return delete_docs(spark, storage, F.col("doc_id").isin(doc_ids))
 
 
-def _drop_docs_cogrouped(with_positions: bool):
-    """Cogrouped fn (per shard): decode only blocks whose doc range can
-    contain a tombstoned id, drop those docs, re-encode (incl. the
-    block's min_dl — impact bounds are derived from it live at query
-    time, so no bound-refill pass exists).
-
-    Tombstones arrive as the cogroup's right side, so the dead-id set
-    stays distributed (sharded), never collected to the driver."""
-    import numpy as np
-    import pandas as pd
-    from .codec import (decode_block, decode_positions,
-                        encode_positions, varint_encode)
-
-    def fn(blocks_pdf: pd.DataFrame, dead_pdf: pd.DataFrame
-           ) -> pd.DataFrame:
-        if blocks_pdf.empty:
-            return blocks_pdf
-        dead = np.sort(dead_pdf["doc_id"].to_numpy(np.int64))
-        if dead.size == 0:
-            return blocks_pdf
-        lo = np.searchsorted(dead, blocks_pdf["first_doc"].to_numpy())
-        hi = np.searchsorted(dead, blocks_pdf["last_doc"].to_numpy(),
-                             side="right")
-        touched = hi > lo  # block doc range contains ≥1 dead id
-        rows = []
-        for _, row in blocks_pdf[touched].iterrows():
-            d, t, l = decode_block(row)
-            keep = ~np.isin(d.astype(np.int64), dead,
-                            assume_unique=True)
-            if keep.all():
-                rows.append(row)
-                continue
-            if not keep.any():
-                continue
-            pos = (decode_positions(row["pos_payload"], t)
-                   if with_positions else None)
-            d, t, l = d[keep], t[keep], l[keep]
-            deltas = np.empty_like(d)
-            deltas[0] = d[0]
-            np.subtract(d[1:], d[:-1], out=deltas[1:])
-            new = row.copy()
-            new["first_doc"] = int(d[0])
-            new["last_doc"] = int(d[-1])
-            new["doc_count"] = int(d.size)
-            new["sum_tf"] = int(t.sum())
-            new["max_tf"] = int(t.max())
-            new["min_dl"] = int(l.min())
-            new["docs_payload"] = varint_encode(deltas)
-            new["tfs_payload"] = varint_encode(t - np.uint64(1))
-            new["dls_payload"] = varint_encode(l)
-            new["pos_payload"] = (encode_positions(
-                [p for p, k in zip(pos, keep) if k])
-                if with_positions else b"")
-            rows.append(new)
-        parts = [blocks_pdf[~touched]]
-        if rows:
-            parts.append(pd.DataFrame(rows))
-        return pd.concat(parts, ignore_index=True)
-    return fn
-
-
 def upsert_docs(spark: SparkSession, storage: IndexStorage,
                 docs: DataFrame) -> None:
     """S3 upsert: tombstone any existing rows with the same
@@ -143,88 +89,182 @@ def export_index(spark: SparkSession, storage: IndexStorage,
     return dm
 
 
-def compact(spark: SparkSession, storage: IndexStorage) -> None:
-    """Fold tombstones in and refresh stats/bounds.
 
-    Tombstoned docs are dropped from the packed blocks via a per-shard
-    cogroup (the dead-id set stays distributed — no driver collect, no
-    closure broadcast); fresh per-field avgdl is recomputed from the
-    cleaned field_lens table. Impact bounds need no refill — they are
-    derived live at query time from each block's (max_tf, min_dl)."""
-    import json as _json
+_PAYLOADS = ("docs_payload", "tfs_payload", "dls_payload", "pos_payload")
 
-    from .build import DOC_ID_PART_SHIFT, POSTINGS_SCHEMA
+
+def _source_parts(storage: IndexStorage) -> list[int]:
+    """Source parts of the index, from ``doc_meta/part=<p>.parquet``.
+    Raises ValueError when a data file breaks that naming (what a
+    layout-6 compaction left behind): such an index must be rebuilt."""
+    from .build import LAYOUT_VERSION
+    parts = []
+    for name in storage.io.listdir(storage.doc_meta_dir):
+        if not name.endswith(".parquet"):
+            continue
+        m = PART_FILE.fullmatch(name)
+        if m is None:
+            raise ValueError(
+                f"compact() needs the layout-{LAYOUT_VERSION} per-part "
+                f"files, but doc_meta/{name} is not part=<int>.parquet "
+                "(an index compacted under layout 6 or older): rebuild "
+                "the index")
+        parts.append(int(m.group(1)))
+    return sorted(parts)
+
+
+def _tombstone_paths(storage: IndexStorage) -> list[str]:
+    io = storage.io
+    d = tombstones_dir(storage)
+    return [io.path(os.path.join(d, n)) for n in io.listdir(d)
+            if n.endswith(".parquet")]
+
+
+def _read_dead(fs, tomb_paths: list[str]) -> np.ndarray:
+    """Sorted unique tombstoned doc ids, read through pyarrow."""
+    import pyarrow.dataset as ds
+    ids = ds.dataset(tomb_paths, filesystem=fs).to_table(
+        columns=["doc_id"]).column("doc_id")
+    return np.unique(ids.to_numpy().astype(np.int64))
+
+
+def _rewrite_part(storage: IndexStorage, part: int, num_shards: int,
+                  dead: np.ndarray, with_positions: bool) -> dict:
+    """Drop ``dead`` (this part's sorted tombstoned ids) from one source
+    part and write its files back in place, each one atomically and the
+    manifest last. Every value is re-derived from the part's own files,
+    so a re-run after a crash anywhere in here converges."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from .codec import drop_docs
+    io = storage.io
+    name = f"part={part}.parquet"
+
+    post_path = os.path.join(storage.postings_dir,
+                             f"shard={part % num_shards}", name)
+    post = io.read_parquet(post_path)
+    lo = np.searchsorted(dead, post["first_doc"].to_numpy())
+    hi = np.searchsorted(dead, post["last_doc"].to_numpy(), side="right")
+    touched = np.flatnonzero(hi > lo)  # block range holds a dead id
+    blocks_dropped = 0
+    if touched.size:
+        old = post.take(touched)
+        kept, cols = drop_docs(
+            *(old[c].to_pylist() for c in _PAYLOADS),
+            old["doc_count"].to_numpy(), dead, with_positions)
+        cols["term"] = old["term"].take(kept).combine_chunks()
+        new = pa.Table.from_arrays(
+            [pa.array(cols[f.name], f.type) for f in post.schema],
+            schema=post.schema)
+        # rebuilt blocks keep their (term, first_doc) slot in the run
+        rest = np.flatnonzero(hi <= lo)
+        order = np.argsort(np.concatenate([rest, touched[kept]]),
+                           kind="stable")
+        post = pa.concat_tables([post.take(rest), new]).take(order)
+        blocks_dropped = int(touched.size - kept.size)
+        io.write_parquet_atomic(post, post_path)
+
+    dm_path = os.path.join(storage.doc_meta_dir, name)
+    dm = io.read_parquet(dm_path)
+    live = ~np.isin(dm["doc_id"].to_numpy(), dead)
+    dm = dm.filter(pa.array(live))
+    io.write_parquet_atomic(dm, dm_path)
+    fl_path = os.path.join(storage.field_lens_dir, name)
+    fl = io.read_parquet(fl_path)
+    fl = fl.filter(pa.array(~np.isin(fl["doc_id"].to_numpy(), dead)))
+    io.write_parquet_atomic(fl, fl_path)
+
+    # the part's per-field (docs, tokens) partial, over its survivors
+    n = dm.num_rows
+    sums = fl.group_by("field").aggregate([("dl", "sum")])
+    tokens = dict(zip(sums["field"].to_pylist(),
+                      sums["dl_sum"].to_pylist()))
+    fields_path = os.path.join(storage.manifest_dir,
+                               f"fields_part={part}.json")
+    io.write_bytes_atomic(fields_path, json.dumps({
+        f: (n, tokens.get(f, 0))
+        for f in json.loads(io.read_bytes(fields_path))}).encode())
+    man = json.loads(io.read_bytes(storage.manifest_path(part)))
+    man.update(docs=n, postings=post.num_rows,
+               tokens=int(pc.sum(dm["doc_len"]).as_py() or 0))
+    io.write_bytes_atomic(storage.manifest_path(part),
+                          json.dumps(man).encode())
+    return {"part": part, "docs_dropped": int(live.size - n),
+            "blocks_dropped": blocks_dropped}
+
+
+def _compact_parts(storage: IndexStorage, parts: list[int],
+                   tomb_paths: list[str], num_shards: int,
+                   with_positions: bool) -> list[dict]:
+    """One compaction task: read the tombstones, keep the dead ids of
+    its own parts, rewrite those parts one by one."""
+    from .build import DOC_ID_PART_SHIFT
+    dead = _read_dead(storage.io.fs, tomb_paths)
+    part_of = dead >> DOC_ID_PART_SHIFT
+    return [_rewrite_part(storage, p, num_shards, dead[part_of == p],
+                          with_positions) for p in parts]
+
+
+def compact(spark: SparkSession, storage: IndexStorage) -> dict:
+    """Fold the tombstones into the index and refresh its statistics.
+
+    One ``spark.range(n).mapInPandas`` job over the source parts that
+    hold a tombstoned id (the scatter query path's shape, no shuffle):
+    each task rewrites its parts in place (``_rewrite_part``), and parts
+    without a dead id are not touched. Every file keeps its
+    ``part=<p>.parquet`` name, so reads stay on the scatter path. Then
+    the driver finishes like build and append: global term stats from
+    the postings, per-field avgdl from the per-part partials, meta.json,
+    and last the tombstones go. A crash before that leaves the
+    tombstones in place (readers keep subtracting them) and a re-run
+    finishes the job. Impact bounds need no refill: they are derived
+    live at query time from each block's (max_tf, min_dl).
+
+    → ``{"parts_rewritten", "parts_skipped", "docs_dropped",
+    "blocks_dropped", "tasks"}``."""
+    from .build import (DOC_ID_PART_SHIFT, _read_field_stats,
+                        aggregate_term_stats)
+    stats = dict.fromkeys(("parts_rewritten", "parts_skipped",
+                           "docs_dropped", "blocks_dropped", "tasks"), 0)
+    tomb_paths = _tombstone_paths(storage)
+    if not tomb_paths:
+        return stats
+    parts = _source_parts(storage)
+    dead = _read_dead(storage.io.fs, tomb_paths)
+    targets = sorted(set((dead >> DOC_ID_PART_SHIFT).tolist())
+                     & set(parts))
     meta = storage.read_meta()
-    tombs = read_tombstones(spark, storage)
-    if tombs is None:
-        return
-    S = int(meta["num_shards"])
+    if targets:
+        # one task per part up to the cluster's parallelism: each
+        # Python task has a fixed cost, so size the fan-out by the work
+        n = min(len(targets), spark.sparkContext.defaultParallelism)
+        groups = [targets[i::n] for i in range(n)]
+        args = (tomb_paths, int(meta["num_shards"]),
+                bool(meta["with_positions"]))
 
-    doc_meta = storage.doc_meta(spark).join(tombs, "doc_id", "left_anti")
-    n_docs = doc_meta.count()
-    field_lens = (storage.field_lens(spark)
-                  .join(tombs, "doc_id", "left_anti"))
+        def fn(it):
+            for pdf in it:
+                for gid in pdf["id"]:
+                    yield pd.DataFrame(_compact_parts(
+                        storage, groups[int(gid)], *args))
+        rows = (spark.range(0, n, 1, n)
+                .mapInPandas(fn, "part int, docs_dropped long, "
+                                 "blocks_dropped long")
+                .collect())
+        stats.update(
+            parts_rewritten=len(rows), tasks=n,
+            docs_dropped=sum(r["docs_dropped"] for r in rows),
+            blocks_dropped=sum(r["blocks_dropped"] for r in rows))
+    stats["parts_skipped"] = len(parts) - stats["parts_rewritten"]
 
-    shard_of = F.pmod(F.shiftright("doc_id", DOC_ID_PART_SHIFT),
-                      F.lit(S)).cast("int")
-    tombs_sharded = tombs.withColumn("shard", shard_of)
-    runs_clean = (storage.tf_runs(spark).groupBy("shard")
-                  .cogroup(tombs_sharded.groupBy("shard"))
-                  .applyInPandas(
-                      lambda key, l, r: _drop_docs_cogrouped(
-                          meta["with_positions"])(l, r),
-                      POSTINGS_SCHEMA))
-
-    def swap(df_writer, target):
-        tmp = target + ".compact"
-        df_writer(tmp)
-        storage.io.delete_dir(target)
-        storage.io.move(tmp, target)
-
-    # order matters: materialize everything reading OLD paths first.
-    # LAYOUT v6: runs ARE the postings — one cleaned shard-partitioned
-    # write replaces the old tf_runs spool + re-layout pair
-    swap(lambda d: (runs_clean
-                    .sortWithinPartitions("shard", "term", "first_doc")
-                    .write.mode("overwrite").partitionBy("shard")
-                    .parquet(d)),
-         storage.postings_dir)
-    swap(lambda d: doc_meta.write.mode("overwrite").parquet(d),
-         storage.doc_meta_dir)
-    swap(lambda d: field_lens.write.mode("overwrite").parquet(d),
-         storage.field_lens_dir)
-
-    # fresh per-field stats from the cleaned per-doc lengths
-    fl_rows = (storage.field_lens(spark).groupBy("field")
-               .agg(F.sum("dl").alias("tokens")).collect())
-    field_totals = {r["field"]: int(r["tokens"]) for r in fl_rows}
-    avgdl_by_field = {f: (t / n_docs if n_docs else 0.0)
-                      for f, t in field_totals.items()}
-    avgdl = avgdl_by_field.get("content", 0.0)
-    swap(lambda d: (spark.read.parquet(storage.postings_dir)
-                    .groupBy("term")
-                    .agg(F.sum("doc_count").alias("df"),
-                         F.sum("sum_tf").alias("cf"))
-                    .write.mode("overwrite").parquet(d)),
-         storage.term_stats_dir)
-    # refresh the per-partition partials too (future appends re-agg them)
-    swap(lambda d: spark.read.parquet(storage.term_stats_dir)
-         .write.mode("overwrite").parquet(d),
-         storage.term_stats_parts_dir)
-    # consolidate the per-partition field-stat partials to the
-    # post-delete truth (appends re-read these via _read_field_stats)
-    for name in storage.io.listdir(storage.manifest_dir):
-        if name.startswith("fields_part=") and name.endswith(".json"):
-            storage.io.delete_file(
-                os.path.join(storage.manifest_dir, name))
-    storage.io.write_bytes_atomic(
-        os.path.join(storage.manifest_dir, "fields_part=compacted.json"),
-        _json.dumps({fn: (n_docs, t)
-                     for fn, t in field_totals.items()}).encode())
-
+    aggregate_term_stats(spark, storage)
+    avgdl_by_field = _read_field_stats(storage)
     meta.update({
-        "n_docs": n_docs, "avgdl": avgdl,
+        "n_docs": sum(m["docs"]
+                      for m in storage.completed_partitions().values()),
+        "avgdl": avgdl_by_field.get("content", 0.0),
         "avgdl_by_field": avgdl_by_field,
     })
     storage.write_meta(meta)
     storage.io.delete_dir(tombstones_dir(storage), missing_ok=True)
+    return stats

@@ -14,19 +14,34 @@ Layout::
                            with_positions, analyzer version, n_docs, avgdl
       manifest/part=K.json per-source-partition checkpoint + lineage
                            (north_rule resumability)
+      manifest/fields_part=K.json  the part's per-field
+                           (docs, tokens) partial → per-field avgdl
       doc_meta/part=K.parquet
+      field_lens/part=K.parquet  per-doc per-field lengths
       postings/shard=S/part=K.parquet  SPIMI runs written straight
-                           into the final shard layout (LAYOUT v6)
-      term_stats/*.parquet
+                           into the final shard layout (S = K mod
+                           num_shards)
+      term_stats/*.parquet global df/cf, summed from the postings
+      tombstones/*.parquet deleted doc ids, until compact()
+
+Every data file of source part K is named ``part=K.parquet`` (the
+scatter query path depends on it), and every writer keeps that:
+build and append write new parts, and ``compact()`` (LAYOUT v7)
+rewrites only the parts that hold a tombstoned doc, in place, file by
+file, with the manifest last.
 """
 from __future__ import annotations
 
 import json
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .fsio import FsIO
+
+# the name of every data file of source part K: part=K.parquet
+PART_FILE = re.compile(r"part=(\d+)\.parquet")
 
 
 class IndexStorage:
@@ -40,11 +55,8 @@ class IndexStorage:
         self.meta_path = os.path.join(index_dir, "meta.json")
         self.manifest_dir = os.path.join(index_dir, "manifest")
         self.doc_meta_dir = os.path.join(index_dir, "doc_meta")
-        self.tf_runs_dir = os.path.join(index_dir, "tf_runs")
         self.postings_dir = os.path.join(index_dir, "postings")
         self.term_stats_dir = os.path.join(index_dir, "term_stats")
-        self.term_stats_parts_dir = os.path.join(index_dir,
-                                                 "term_stats_parts")
         self.field_lens_dir = os.path.join(index_dir, "field_lens")
 
     # -- meta ---------------------------------------------------------------
@@ -95,12 +107,6 @@ class IndexStorage:
     # -- table readers --------------------------------------------------------
     def doc_meta(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(os.path.join(self.doc_meta_dir, "*.parquet"))
-
-    def tf_runs(self, spark: SparkSession) -> DataFrame:
-        """LAYOUT v6: SPIMI tasks write the final shard layout
-        directly — the runs ARE the postings (shard from the hive
-        dir). Kept as an alias for the mutation/append paths."""
-        return self.postings(spark)
 
     def postings(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.postings_dir)

@@ -34,7 +34,6 @@ distributed, never collected to the driver.
 """
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 
 import numpy as np
@@ -45,7 +44,7 @@ from ..index.build import (BIGRAM_FIELD, DOC_ID_PART_SHIFT, FIELD_SEP,
                            field_of_term)
 from ..index.codec import (bm25_idf, bm25_tfnorm, decode_positions,
                            varint_decode)
-from ..index.storage import IndexStorage
+from ..index.storage import PART_FILE, IndexStorage
 from .ir import (Bool, DisMax, MatchAll, Node, PhraseLeaf, PrefixLeaf,
                  TermLeaf, WildcardLeaf)
 
@@ -1021,8 +1020,9 @@ class SearchExecutor:
     # is a valid evaluation group — per-group top-k unions to a
     # superset of the global top-k, scores are exact per doc (global
     # idf/avgdl live in ctx). The path only engages when the layout
-    # invariant (part=<int>.parquet naming) holds; compacted/rewritten
-    # indexes fall back to the legacy cogrouped plan.
+    # invariant (part=<int>.parquet naming) holds; every writer keeps
+    # it (compact() rewrites parts in place), so only a foreign or
+    # layout-6-compacted index falls back to the legacy cogrouped plan.
 
     def _scatter_layout(self) -> dict | None:
         if self._scatter is not False:
@@ -1034,7 +1034,7 @@ class SearchExecutor:
         for n in io.listdir(self.storage.doc_meta_dir):
             if not n.endswith(".parquet"):
                 continue
-            m = re.fullmatch(r"part=(\d+)\.parquet", n)
+            m = PART_FILE.fullmatch(n)
             if not m:
                 ok = False
                 break
@@ -1046,7 +1046,7 @@ class SearchExecutor:
         for s in range(S):
             sd = f"{self.storage.postings_dir}/shard={s}"
             for n in io.listdir(sd):
-                m = re.fullmatch(r"part=(\d+)\.parquet", n)
+                m = PART_FILE.fullmatch(n)
                 if m:
                     post[int(m.group(1))] = io.path(f"{sd}/{n}")
         from ..index.mutate import tombstones_dir

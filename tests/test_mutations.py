@@ -183,34 +183,179 @@ def test_append_preserves_field_config(spark, fixture_docs_df, tmp_path):
         IndexStorage(full).read_meta()["avgdl_by_field"].keys()
 
 
+def _facet(eng, args, field="lang"):
+    res = eng.search({**args, "facet": field, "limit": 0})
+    return sorted((r["value"], r["count"])
+                  for r in res.facets[field].collect())
+
+
+# the compaction tests delete repo r3 plus a/banana.txt: two source
+# parts at num_partitions=4, and blocks of the "banana" terms
+_DEAD = "repo = 'r3' OR path = 'a/banana.txt'"
+_QUERIES = ("banana", "path:banana", '"banana crime"',
+            '"banana crime syndicate"', "banana OR manafort", "lang:txt")
+
+
+def _assert_same_results(e_c, e_f):
+    for q in _QUERIES:
+        assert _hits(e_c, {"q": q}) == _hits(e_f, {"q": q}), q
+        assert e_c.count({"q": q}) == e_f.count({"q": q}), q
+    for q in ("banana", "banana OR kwazulu OR fruit"):
+        assert _facet(e_c, {"q": q}) == _facet(e_f, {"q": q}), q
+
+
+def _dead_parts(spark, path, pred):
+    from openaleph_search_spark.index.build import DOC_ID_PART_SHIFT
+    return sorted({r["doc_id"] >> DOC_ID_PART_SHIFT for r in
+                   IndexStorage(path).doc_meta(spark).filter(pred)
+                   .select("doc_id").collect()})
+
+
 def test_compact_refreshes_per_field_stats(spark, fixture_docs_df,
                                            tmp_path):
-    """Regression (ADVICE r1): compact must recompute avgdl_by_field and
-    re-fill every block bound, so post-compact results equal a fresh
-    build over the surviving docs (and pruning is re-enabled)."""
+    """Regression (ADVICE r1): compact must recompute avgdl_by_field,
+    so post-compact results (3-term phrase, count, lang facet) equal a
+    fresh build over the surviving docs; the rewritten parts keep the
+    per-part layout, so reads stay on the scatter path."""
     comp = str(tmp_path / "idx_comp")
     fresh = str(tmp_path / "idx_fresh")
     build_index(spark, fixture_docs_df, comp, num_partitions=4,
                 num_shards=2, bigrams=True)
     st = IndexStorage(comp)
-    delete_docs(spark, st, F.col("repo") == "r3")
-    compact(spark, st)
-    survivors = fixture_docs_df.filter(F.col("repo") != "r3")
+    parts = st.completed_partitions()
+    dead_parts = _dead_parts(spark, comp, _DEAD)
+    assert len(dead_parts) >= 2
+    n_dead = delete_docs(spark, st, _DEAD)
+    stats = compact(spark, st)
+    assert stats["parts_rewritten"] == len(dead_parts)
+    assert stats["parts_skipped"] == len(parts) - len(dead_parts)
+    assert stats["docs_dropped"] == n_dead == 3
+    assert stats["blocks_dropped"] > 0  # e.g. terms only r3 docs had
+    assert stats["tasks"] == min(len(dead_parts),
+                                 spark.sparkContext.defaultParallelism)
+    survivors = fixture_docs_df.filter(f"NOT ({_DEAD})")
     build_index(spark, survivors, fresh, num_partitions=4, num_shards=2,
                 bigrams=True)
     e_c, e_f = Engine(spark, comp), Engine(spark, fresh)
-    for q in ("banana", "path:banana", '"banana crime"',
-              "banana OR manafort", "lang:txt"):
-        assert _hits(e_c, {"q": q}) == _hits(e_f, {"q": q}), q
+    assert e_c.executor.scatter_ok()
+    assert e_c.explain({"q": "banana crime"})["scatter_tasks"] is not None
+    _assert_same_results(e_c, e_f)
     m_c = st.read_meta()
     m_f = IndexStorage(fresh).read_meta()
+    assert m_c["n_docs"] == m_f["n_docs"] == 7
+    assert m_c["avgdl_by_field"].keys() == m_f["avgdl_by_field"].keys()
     for f, a in m_f["avgdl_by_field"].items():
-        assert abs(m_c["avgdl_by_field"].get(f, 0.0) - a) < 1e-9, f
+        assert abs(m_c["avgdl_by_field"][f] - a) < 1e-9, f
     # impact bounds are live-derived from (max_tf, min_dl): the
     # compacted postings carry refreshed min_dl per modified block
     import pyspark.sql.functions as _F
     assert IndexStorage(comp).postings(spark).filter(
         _F.col("min_dl") <= 0).count() == 0
+    # the global term stats equal the fresh build's
+    ts = {r["term"]: (r["df"], r["cf"])
+          for r in st.term_stats(spark).collect()}
+    assert ts == {r["term"]: (r["df"], r["cf"]) for r in
+                  IndexStorage(fresh).term_stats(spark).collect()}
+
+
+def _part_files(st, part):
+    """Every file of one source part → bytes."""
+    name = f"part={part}.parquet"
+    paths = [os.path.join(st.doc_meta_dir, name),
+             os.path.join(st.field_lens_dir, name),
+             st.manifest_path(part),
+             os.path.join(st.manifest_dir, f"fields_part={part}.json")]
+    for shard in os.listdir(st.postings_dir):
+        p = os.path.join(st.postings_dir, shard, name)
+        if os.path.exists(p):
+            paths.append(p)
+    return {p: st.io.read_bytes(p) for p in paths}
+
+
+def test_compact_leaves_untouched_parts_alone(spark, mutable_index):
+    """Tombstones in one part: only that part is rewritten, and every
+    other part's files stay byte-identical."""
+    from openaleph_search_spark.index.build import DOC_ID_PART_SHIFT
+    st = IndexStorage(mutable_index)
+    parts = sorted(st.completed_partitions())
+    victim = st.doc_meta(spark).filter(
+        F.col("path") == "b/crime.go").collect()[0]["doc_id"]
+    hit = victim >> DOC_ID_PART_SHIFT
+    before = {p: _part_files(st, p) for p in parts if p != hit}
+    hit_before = _part_files(st, hit)
+    delete_by_ids(spark, st, [victim])
+    stats = compact(spark, st)
+    assert stats.pop("blocks_dropped") >= 0
+    assert stats == {"parts_rewritten": 1,
+                     "parts_skipped": len(parts) - 1,
+                     "docs_dropped": 1, "tasks": 1}
+    assert {p: _part_files(st, p) for p in before} == before
+    assert _part_files(st, hit) != hit_before
+    assert Engine(spark, mutable_index).count({"q": "banana"}) == 1
+
+
+def test_compact_crash_then_rerun(spark, fixture_docs_df, tmp_path,
+                                  monkeypatch):
+    """A compaction that dies after rewriting its first part leaves a
+    readable index: the tombstones and meta.json stay until the final
+    commit, so reads are unchanged. Re-running compact() then equals a
+    fresh build over the survivors."""
+    from openaleph_search_spark.index import mutate
+    comp = str(tmp_path / "idx_crash")
+    fresh = str(tmp_path / "idx_crash_fresh")
+    build_index(spark, fixture_docs_df, comp, num_partitions=4,
+                num_shards=2, bigrams=True)
+    st = IndexStorage(comp)
+    dead_parts = _dead_parts(spark, comp, _DEAD)
+    delete_docs(spark, st, _DEAD)
+    e_before = Engine(spark, comp)
+    want = {q: _hits(e_before, {"q": q}) for q in _QUERIES}
+    meta_before = st.io.read_bytes(st.meta_path)
+    manifests_before = st.completed_partitions()
+
+    real, done = mutate._rewrite_part, []
+
+    def crash_after_first(storage, part, *args):
+        if done:
+            raise RuntimeError("simulated crash")
+        done.append(part)
+        return real(storage, part, *args)
+    monkeypatch.setattr(mutate, "_rewrite_part", crash_after_first)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        # one compaction task's body, run in-process
+        mutate._compact_parts(st, dead_parts, mutate._tombstone_paths(st),
+                              2, True)
+    monkeypatch.undo()
+    assert done == dead_parts[:1]
+    first = st.completed_partitions()[done[0]]
+    assert first["docs"] < manifests_before[done[0]]["docs"]
+    assert read_tombstones(spark, st) is not None
+    assert st.io.read_bytes(st.meta_path) == meta_before
+    e_mid = Engine(spark, comp)
+    assert e_mid.executor.scatter_ok()
+    assert {q: _hits(e_mid, {"q": q}) for q in _QUERIES} == want
+
+    stats = compact(spark, st)
+    assert stats["parts_rewritten"] == len(dead_parts)
+    assert read_tombstones(spark, st) is None
+    build_index(spark, fixture_docs_df.filter(f"NOT ({_DEAD})"), fresh,
+                num_partitions=4, num_shards=2, bigrams=True)
+    _assert_same_results(Engine(spark, comp), Engine(spark, fresh))
+    assert st.read_meta()["n_docs"] == 7
+
+
+def test_compact_rejects_layout6_compaction(spark, mutable_index):
+    """A layout-6 compaction left Spark-named data files; compact()
+    refuses such an index by name and keeps its tombstones."""
+    st = IndexStorage(mutable_index)
+    delete_by_ids(spark, st, [0])
+    k = sorted(st.completed_partitions())[0]
+    st.io.move(os.path.join(st.doc_meta_dir, f"part={k}.parquet"),
+               os.path.join(st.doc_meta_dir,
+                            "part-00000-0000.c000.snappy.parquet"))
+    with pytest.raises(ValueError, match="layout"):
+        compact(spark, st)
+    assert read_tombstones(spark, st) is not None
 
 
 def test_append_grown_avgdl_disables_pruning_soundly(
@@ -360,7 +505,10 @@ def test_cli_export_compact_roundtrip(spark, fixture_docs_df, tmp_path):
     exported = spark.read.parquet(exp)
     assert "content_sha256" not in exported.columns
     run("delete", "--index", idx, "--filter", "lang=go")
-    run("compact", "--index", idx)
+    out_c = _json.loads(run("compact", "--index", idx)[-1])
+    assert out_c["n_docs"] == 9
+    assert out_c["compact"]["parts_rewritten"] == 1
+    assert out_c["compact"]["docs_dropped"] == 1
     out2 = run("export", "--index", idx, "--q", "banana",
                "--output", exp + "2")
     assert _json.loads(out2[-1])["exported"] == 1

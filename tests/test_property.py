@@ -443,6 +443,76 @@ def test_scatter_groups_partition_parts(parts, par, ests, frac):
     assert counts[0] <= counts[1]
 
 
+
+# --------------------------------------------------------------------------
+# compaction block kernel: drop dead docs from packed blocks
+# --------------------------------------------------------------------------
+
+@st.composite
+def _blocks_and_dead(draw):
+    """Block rows of 1-3 posting lists (a part's touched blocks span
+    terms), a dead-id set (members and strangers) and the positions
+    flag. Ids near 2^62 make the kernel's running sum wrap in uint64."""
+    base = draw(st.sampled_from([0, 5 << 33, 1 << 62]))
+    with_positions = draw(st.booleans())
+    rows, ids_all = [], []
+    for _ in range(draw(st.integers(1, 3))):
+        n = draw(st.integers(1, 40))
+        gaps = draw(st.lists(st.integers(1, 300), min_size=n, max_size=n))
+        ids = base + np.cumsum(np.asarray(gaps, dtype=np.int64))
+        tfs = draw(st.lists(st.integers(1, 5), min_size=n, max_size=n))
+        dls = draw(st.lists(st.integers(1, 5000), min_size=n,
+                            max_size=n))
+        pos = [np.sort(np.asarray(draw(st.lists(
+            st.integers(0, 400), min_size=tf, max_size=tf,
+            unique=True)), dtype=np.uint64)) for tf in tfs]
+        rows += encode_blocks(
+            ids.astype(np.uint64), np.asarray(tfs, dtype=np.uint64),
+            np.asarray(dls, dtype=np.uint64), None,
+            positions=pos if with_positions else None,
+            block_size=draw(st.integers(1, 9)))
+        ids_all += ids.tolist()
+    dead = set(draw(st.lists(st.sampled_from(ids_all), max_size=60)))
+    dead |= {base + g for g in draw(st.lists(st.integers(0, 13000),
+                                             max_size=5))}
+    return rows, np.unique(np.asarray(sorted(dead), dtype=np.int64)), \
+        with_positions
+
+
+@given(_blocks_and_dead())
+@settings(max_examples=200, deadline=None)
+def test_drop_docs_kernel_matches_per_block_reference(case):
+    """The vectorized compaction kernel equals, block by block, decode
+    → drop the dead docs → re-encode, and drops emptied blocks."""
+    from openaleph_search_spark.index.codec import (
+        decode_block, decode_positions, drop_docs)
+    rows, dead, with_positions = case
+    kept, cols = drop_docs(
+        *([r[c] for r in rows] for c in ("docs_payload", "tfs_payload",
+                                          "dls_payload", "pos_payload")),
+        np.asarray([r["doc_count"] for r in rows]), dead, with_positions)
+    want = []
+    for i, r in enumerate(rows):
+        d, t, l = decode_block(r)
+        keep = ~np.isin(d.astype(np.int64), dead)
+        if not keep.any():
+            continue
+        pp = ([encode_positions([p]) for p, k in zip(
+            decode_positions(r["pos_payload"], t), keep) if k]
+            if with_positions else None)
+        (blk,) = encode_blocks(d[keep], t[keep], l[keep], None,
+                               pos_payloads=pp, block_size=1 << 20)
+        want.append((i, blk))
+    assert kept.tolist() == [i for i, _ in want]
+    for j, (_, blk) in enumerate(want):
+        for c in ("first_doc", "last_doc", "doc_count", "sum_tf",
+                  "max_tf", "min_dl"):
+            assert int(cols[c][j]) == blk[c], c
+        for c in ("docs_payload", "tfs_payload", "dls_payload",
+                  "pos_payload"):
+            assert bytes(cols[c][j]) == blk[c], c
+
+
 _arg_keys = st.sampled_from([
     "q", "prefix", "offset", "limit", "facet", "sort", "filter:lang",
     "filter:gte:doc_len", "filter:lte:created", "exclude:repo",

@@ -14,12 +14,15 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import (DoubleType, LongType, StringType,
+                               StructField, StructType)
 
 from ..analysis.analyzer import analyze_text
 from ..index.storage import IndexStorage
 from ..index.build import FIELD_SEP
-from .executor import MetaSpec, SearchExecutor
+from .executor import MetaSpec, SearchExecutor, scatter_tasks
 from .facets import (cardinality, histogram_facet, metric_aggs,
                      significant_terms, terms_facet)
 from .parser import partial_date_bounds
@@ -66,6 +69,38 @@ def _facet_total_on(sa, auth, f: str) -> bool:
     if _anon(auth) and f not in SMALL_FACETS:
         return False
     return f in sa.facet_total
+
+
+# the final cut of gathered scatter output runs here in pandas: a Spark
+# sort on a LocalRelation would still cost a job per query
+def _top_k(pdf: pd.DataFrame | None, k: int,
+           by: str | None = None) -> pd.DataFrame | None:
+    """Global top-k of gathered per-group hits by (score desc, doc_id
+    asc); per ``by`` value (one query of a batch) when given."""
+    if pdf is None:
+        return None
+    if by is None:
+        return pdf.sort_values(["score", "doc_id"],
+                               ascending=[False, True]).head(k)
+    return (pdf.sort_values([by, "score", "doc_id"],
+                            ascending=[True, False, True])
+            .groupby(by, sort=False).head(k))
+
+
+FACET_SCHEMA = StructType([StructField("value", StringType()),
+                           StructField("count", LongType())])
+
+
+def _facet_cut(partials: pd.DataFrame | None, f: str,
+               size: int) -> pd.DataFrame | None:
+    """One terms facet from gathered per-group partials: counts summed
+    by value, ordered by (count desc, value asc), ``size`` buckets."""
+    if partials is None:
+        return None
+    sub = (partials[partials["field"] == f]
+           .groupby("value", as_index=False)["count"].sum())
+    return sub.sort_values(["count", "value"],
+                           ascending=[False, True]).head(size)
 
 
 class Engine:
@@ -115,9 +150,10 @@ class Engine:
         dictionary: the parsed IR, analyzed + dictionary-expanded
         terms, the physical strategy ``search()`` would pick, the
         query's ``est_postings`` (df summed over its terms) and
-        ``scatter_tasks``, the scatter job's task count (None when
-        ``search()`` runs no scatter job).
-        Mirrors search()'s branch conditions; a drift here breaks the
+        ``scatter_tasks``, the scatter job's task count (0 when the plan
+        evaluates in the driver, None when ``search()`` takes no scatter
+        path), and ``scatter_columns``, the postings columns the scatter
+        reads. Mirrors search()'s branch conditions; a drift here breaks the
         test that asserts strategy names against observed plans."""
         sa = args if isinstance(args, SearchArgs) else parse_args(args)
         tree = self._plan(sa)
@@ -168,11 +204,13 @@ class Engine:
         # takes a scatter job unless the tree is match-all, the layout
         # lost its per-part files, or a filter has no exact MetaSpec
         # (pure-negative queries scatter their banned set unfiltered)
-        _, _, _, _, est, groups = ex._scatter_plan([tree], sa.k)
+        _, _, _, read_cols, est, groups = ex._scatter_plan([tree], sa.k)
         scatter = (strategy != "match_all_meta_scan" and ex.scatter_ok()
                    and (pure_negative or self._meta_spec(
                        {f: v for f, v in sa.filters.items()
                         if f not in post_fields}, sa, None) is not None))
+        mode = {"topk_scatter_gather": "hydrate",
+                "facet_partials_cogroup": "facet"}.get(strategy, "scores")
         return {
             "query_tree": repr(tree),
             "strategy": strategy,
@@ -184,7 +222,9 @@ class Engine:
             "pruning_eligible": strategy == "topk_scatter_gather",
             "post_filter_fields": post_fields,
             "est_postings": est,
-            "scatter_tasks": len(groups) if scatter else None,
+            "scatter_tasks": (scatter_tasks(mode, sa.k, est, len(groups))
+                              if scatter else None),
+            "scatter_columns": read_cols if scatter else None,
         }
 
     def stats(self) -> dict:
@@ -313,23 +353,28 @@ class Engine:
                 and all(f not in sa.facet_interval
                         and dtypes.get(f) == "string"
                         for f in sa.facets)):
-            # scatter variant: per-shard tasks read their own doc_meta
-            # slice for the facet values — the meta table no longer
-            # shuffles into a cogroup on every facet query
+            # scatter variant: each group reads its own doc_meta slice
+            # for the facet values, and the partials of every facet are
+            # gathered ONCE; the per-facet cuts run in pandas
             spec = (self._meta_spec(pre_filters, sa, auth)
                     if self.executor.scatter_ok() else None)
             if spec is not None:
                 partials = self.executor.scatter_facet_counts(
                     tree, sa.facets, spec)
+                facets = {
+                    f: self.executor.local_frame(
+                        _facet_cut(partials, f, _facet_size(sa, auth, f)),
+                        FACET_SCHEMA)
+                    for f in sa.facets}
             else:
                 partials = self.executor.facet_counts(tree, sa.facets,
                                                       base_meta)
-            facets = {
-                f: (partials.filter(F.col("field") == f)
-                    .select("value", "count")
-                    .orderBy(F.desc("count"), F.asc("value"))
-                    .limit(_facet_size(sa, auth, f)))
-                for f in sa.facets}
+                facets = {
+                    f: (partials.filter(F.col("field") == f)
+                        .select("value", "count")
+                        .orderBy(F.desc("count"), F.asc("value"))
+                        .limit(_facet_size(sa, auth, f)))
+                    for f in sa.facets}
             hits = (self.doc_meta.withColumn("score", F.lit(0.0))
                     .limit(0))
             return SearchResult(hits=hits, facets=facets)
@@ -374,14 +419,15 @@ class Engine:
                 spec = (self._meta_spec(pre_filters, sa, auth)
                         if filter_needed else None)
                 if spec is not None or not filter_needed:
-                    # one single-stage job: per-group top-k evaluated
-                    # AND hydrated in-task; global cut on ≤ groups×k
-                    # rows — no exchange, no hydrate join
+                    # per-group top-k evaluated AND hydrated where the
+                    # group runs; the global cut on ≤ groups×k rows runs
+                    # here in pandas — no exchange, no hydrate join, and
+                    # the hits are a LocalRelation
+                    schema = self._hits_schema()
                     raw = self.executor.scatter_topk_hydrated(
-                        tree, sa.k, spec, self.doc_meta.schema.fields)
-                    hits = (raw.orderBy(F.desc("score"),
-                                        F.asc("doc_id"))
-                            .limit(sa.k))
+                        tree, sa.k, spec, self.doc_meta.columns)
+                    hits = self.executor.local_frame(
+                        _top_k(raw, sa.k), schema)
             if hits is None:
                 filter_df = base_meta if filter_needed else None
                 topk = self.executor.topk(tree, sa.k,
@@ -454,10 +500,10 @@ class Engine:
     def msearch(self, queries: dict[str, dict | SearchArgs],
                 k: int = 10, auth=None) -> DataFrame:
         """ES ``_msearch``, Spark-first: every query's tree evaluates in
-        ONE per-shard grouped-map pass (shared postings scan + decode
-        cache — executor.run_multi), then a per-query window keeps the
-        top-k. → DataFrame(query_id, doc_id, score, …doc_meta cols)
-        with ≤ k rows per query — the batch-native result shape (the
+        ONE scatter pass (shared postings read + decode cache per
+        group), hydrated in-group; the per-query top-k cut runs on the
+        gathered rows. → DataFrame(doc_id, score, query_id, …doc_meta
+        cols) with ≤ k rows per query — the batch-native result shape (the
         reference's msearch fans out N HTTP requests instead;
         openaleph_search uses it for checksum batch counts)."""
         from pyspark.sql import Window
@@ -475,7 +521,7 @@ class Engine:
         if not trees:
             return (self.doc_meta.withColumn("score", F.lit(0.0))
                     .withColumn("query_id", F.lit("")).limit(0))
-        # ACL/tombstones must be cogrouped INTO the per-shard top-k
+        # ACL/tombstones must restrict the per-group top-k itself
         # (filtering after the cut would drop hits without refill)
         dm = self.doc_meta if auth_pred is None \
             else self.doc_meta.filter(auth_pred)
@@ -484,10 +530,20 @@ class Engine:
         spec = None
         if fdf is not None and self.executor.scatter_ok():
             spec = self._auth_spec(auth)
-            if spec is not None:
-                fdf = None  # ACL/tombstones ride inside the scatter
-        res = self.executor.run_multi(trees, k, filter_df=fdf,
-                                      spec=spec)
+        if self.executor.scatter_ok() and (fdf is None or spec is not None):
+            # per-query top-k evaluated and hydrated in-group; the
+            # per-query cut runs here in pandas on ≤ groups×queries×k
+            # rows — no doc_meta join, no window
+            hit = self._hits_schema().fields
+            raw = self.executor.scatter_multi_hydrated(
+                trees, k, spec, self.doc_meta.columns)
+            if raw is not None:
+                raw = raw.rename(columns={"entity_id": "query_id"})
+            return self.executor.local_frame(
+                _top_k(raw, k, by="query_id"), StructType([
+                    *hit[:2], StructField("query_id", StringType()),
+                    *hit[2:]]))
+        res = self.executor.run_multi(trees, k, filter_df=fdf)
         return (res.withColumnRenamed("entity_id", "query_id")
                 .join(dm, "doc_id")
                 .withColumn("_rn", F.row_number().over(
@@ -621,6 +677,13 @@ class Engine:
         return pred
 
     # -- planning helpers -----------------------------------------------------
+    def _hits_schema(self) -> StructType:
+        """(doc_id, score, …doc_meta columns): the hit row shape."""
+        return StructType([
+            StructField("doc_id", LongType()),
+            StructField("score", DoubleType()),
+            *(f for f in self.doc_meta.schema.fields if f.name != "doc_id")])
+
     def _meta_spec(self, filters: dict[str, list[str]], sa: SearchArgs,
                    auth) -> MetaSpec | None:
         """Translate the doc_meta restriction (auth + filters +

@@ -4,12 +4,13 @@ The reference delegates retrieval to ES/Lucene (WAND + impacts,
 implicit; /root/reference/openaleph_search/query/base.py:515-533 just
 calls ``es.search``).  Here the physical strategy is Spark-native:
 
-  scatter:  postings filtered to the query's terms (parquet predicate
-            pushdown on ``term`` + partition pruning on ``shard``)
-            → per-shard grouped-map evaluator (one task per doc-range
-            shard ≈ one ES shard search)
-  gather:   each shard emits ≤ k rows → global orderBy().limit(k)
-            (tiny: shards × k rows)
+  scatter:  source parts split into evaluation groups sized by the
+            query's posting volume; each group reads its postings
+            (term-filtered) and evaluates — in the driver when the
+            work fits one group, else one task per group (≈ one ES
+            shard search)
+  gather:   each group emits ≤ k rows → one pandas merge and global
+            cut in the driver (tiny: groups × k rows)
 
 The per-shard evaluator is a vectorized **block-max term-at-a-time
 top-k** (MaxScore family, same skip machinery as block-max WAND):
@@ -28,17 +29,21 @@ Scores are exact float64 Lucene BM25 regardless of pruning (pruning
 only skips docs that provably cannot reach the top-k), so results are
 rank- AND score-identical across shard counts and parallelism levels.
 
-Filters (dataset/lang/… predicates) are pushed into the evaluator by
-cogrouping an allowed-doc_id DataFrame per shard — the filter stays
-distributed, never collected to the driver.
+Filters (dataset/lang/… predicates) are pushed into the evaluator:
+the scatter path applies a ``MetaSpec`` to each group's own doc_meta
+rows; the legacy path cogroups an allowed-doc_id DataFrame per shard.
+Either way the filter set is never collected to the driver.
 """
 from __future__ import annotations
 
+import pickle
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import (DoubleType, LongType, StringType,
+                               StructField, StructType)
 
 from ..index.build import (BIGRAM_FIELD, DOC_ID_PART_SHIFT, FIELD_SEP,
                            field_of_term)
@@ -551,11 +556,11 @@ def _scatter_eval_group(parts, fs, dm_paths, post_paths, tomb, items,
                         ctx, term_list, read_cols, need_pos, k,
                         spec, mode, meta_fields, facet_fields,
                         meta_read_cols):
-    """Evaluate one scatter group (a set of doc-disjoint source parts)
-    inside a task: pyarrow-read the group's postings (term-filtered) —
-    and, when restricting or faceting, its doc_meta slice — then run
-    the same _ShardEval kernel the cogrouped path uses. Returns one
-    pandas frame (mode-shaped) or None."""
+    """Evaluate one scatter group (a set of doc-disjoint source parts),
+    in a task or in the driver: pyarrow-read the group's postings
+    (term-filtered) — and, when restricting or faceting, its doc_meta
+    slice — then run the same _ShardEval kernel the cogrouped path
+    uses. Returns one pandas frame (mode-shaped) or None."""
     import pyarrow.dataset as ds
 
     ppaths = [post_paths[p] for p in parts if p in post_paths]
@@ -612,24 +617,7 @@ def _scatter_eval_group(parts, fs, dm_paths, post_paths, tomb, items,
         ids, _ = ev.eval(items[0][1], root=True)
         return pd.DataFrame({"n": [int(ids.size)]}) if ids.size else None
 
-    if mode == "hydrate":
-        ids, scores = ev.eval(items[0][1], root=True)
-        if k is not None and ids.size > k:
-            order = np.lexsort((ids, -scores))[:k]
-            ids, scores = ids[order], scores[order]
-        if ids.size == 0:
-            return None
-        mt = ds.dataset(gdm, filesystem=fs).to_table(
-            filter=ds.field("doc_id").isin([int(x) for x in ids]),
-            columns=meta_fields)
-        mpdf = mt.to_pandas().sort_values("doc_id")
-        order = np.argsort(ids)
-        sids, ssc = ids[order], scores[order]
-        pos = np.searchsorted(sids, mpdf["doc_id"].to_numpy(np.int64))
-        mpdf.insert(1, "score", ssc[pos])
-        return mpdf
-
-    # scores / multi
+    # scores | multi | hydrate: each tree's top-k (every match for k=None)
     rows = []
     for eid, tree in items:
         ids, scores = ev.eval(tree, root=True)
@@ -642,7 +630,18 @@ def _scatter_eval_group(parts, fs, dm_paths, post_paths, tomb, items,
         if mode == "multi":
             part["entity_id"] = eid
         rows.append(part)
-    return pd.concat(rows, ignore_index=True) if rows else None
+    if not rows:
+        return None
+    out = pd.concat(rows, ignore_index=True)
+    if meta_fields:
+        # hydrate in-group: the hits' doc_meta rows live in this group's
+        # own doc_meta files
+        mt = ds.dataset(gdm, filesystem=fs).to_table(
+            filter=ds.field("doc_id").isin(
+                np.unique(out["doc_id"].to_numpy()).tolist()),
+            columns=meta_fields)
+        out = out.merge(mt.to_pandas(), on="doc_id")
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -659,24 +658,49 @@ _POSTINGS_PER_TASK = 2_000_000
 
 def _scatter_groups(parts: list[int], par: int,
                     est_postings: int) -> list[list[int]]:
-    """Partition source parts into evaluation groups, one per task,
-    sized by the query's work: ``ceil(est_postings / _POSTINGS_PER_TASK)``
-    tasks, capped by the part count and ``par`` (defaultParallelism).
+    """Partition source parts into evaluation groups, sized by the
+    query's work: ``ceil(est_postings / _POSTINGS_PER_TASK)`` groups,
+    capped by the part count and ``par`` (defaultParallelism).
 
     A Python task is not cheap: each ``mapInPandas`` task costs
     0.19-0.26 s of CPU before it evaluates anything, even on a reused
     worker (4-vCPU host, pyspark 4.1.2). pyspark's ``setup_spark_files``
     calls ``importlib.invalidate_caches()`` on every task, and that makes
     each cached ``zipimporter`` re-read ``pyspark.zip``'s directory. So
-    a small query runs as one task, and a query only fans out once each
-    task carries as much eval work as that fixed cost. Round-robin
-    keeps groups balanced in part count."""
+    a query only fans out once each task carries as much eval work as
+    that fixed cost. A plan whose work fits one group has no
+    parallelism to buy: a bounded mode evaluates it in the driver, with
+    no job and no task (``scatter_tasks``); otherwise each group runs
+    as one task. Round-robin keeps groups balanced in part count."""
     n = max(1, min(len(parts), par,
                    -(-int(est_postings) // _POSTINGS_PER_TASK)))
     groups: list[list[int]] = [[] for _ in range(n)]
     for i, p in enumerate(parts):
         groups[i % n].append(p)
     return groups
+
+
+def scatter_gathers(mode: str, k: int | None) -> bool:
+    """Whether a scatter mode's output is bounded, so it is gathered to
+    the driver: count (≤ groups rows), facet (≤ groups × distinct
+    values), hydrate and multi with a k (≤ groups × trees × k). Scores
+    never gather: with k=None (full match, pure-NOT, export) they are
+    unbounded, so they stay a Spark DataFrame."""
+    return mode in ("count", "facet") or (
+        mode in ("hydrate", "multi") and k is not None)
+
+
+def scatter_tasks(mode: str, k: int | None, est_postings: int,
+                  n_groups: int) -> int:
+    """Spark tasks a scatter plan runs: 0 when it evaluates in the
+    driver — a bounded output whose work fits one group, where one task
+    would buy no parallelism — else one task per group. A plan held to
+    one group only by the part count or defaultParallelism keeps its
+    task, so the driver never evaluates more than _POSTINGS_PER_TASK."""
+    if (n_groups == 1 and est_postings <= _POSTINGS_PER_TASK
+            and scatter_gathers(mode, k)):
+        return 0
+    return n_groups
 
 
 # term dictionaries below this total parquet size are cached on the
@@ -700,7 +724,6 @@ class SearchExecutor:
         # scatter-path layout cache (same lifetime contract as the dict
         # cache: mutations construct fresh Engines); False = unprobed
         self._scatter: dict | None | bool = False
-        self._last_scatter: dict | None = None  # plan-shape test hook
         # the postings DataFrame handle is immutable lineage — re-doing
         # spark.read.parquet per query re-lists the dataset (~0.4 s of
         # driver time on a 16-shard index). Same lifetime contract as
@@ -1005,14 +1028,18 @@ class SearchExecutor:
         return pdf
 
     # -- scatter fast path ---------------------------------------------------
-    # One single-stage Spark job: tasks read their own slice of the
-    # index (postings + doc_meta + tombstones) directly through
-    # pyarrow against the SAME files Spark would scan, evaluate with
-    # the SAME _ShardEval kernel, and (for top-k) hydrate in-task.
-    # Replaces scan → Exchange → grouped-map (→ broadcast-join) with
-    # zero exchanges; measured 2-2.5× lower per-query latency, and at
-    # cluster scale it is the ES execution shape (one task per index
-    # slice, no shuffle of postings or the filter set).
+    # Each evaluation group reads its own slice of the index (postings
+    # + doc_meta + tombstones) directly through pyarrow against the
+    # SAME files Spark would scan, evaluates with the SAME _ShardEval
+    # kernel, and (for top-k) hydrates from its own doc_meta files.
+    # Where a group runs: a bounded plan whose work fits one group runs
+    # in the driver (zero Spark jobs), ≥2 groups run as one
+    # single-stage job (Range → MapInPandas, no exchange, one task per
+    # group ≈ one ES shard search) whose tasks send their frames back.
+    # The gather is a pandas merge of those frames (≤ groups × k rows);
+    # the engine makes the final cut there and wraps the result as a
+    # LocalRelation, so reading it runs no job either. Unbounded scores
+    # (k=None) stay a DataFrame.
     #
     # Correctness lever: every SPIMI source partition (doc_meta/part=K
     # ↔ postings/shard=K%S/part=K) is doc-disjoint and carries ALL
@@ -1067,56 +1094,80 @@ class SearchExecutor:
         return self._scatter_layout() is not None
 
     def _scatter_plan(self, trees: list[Node], k: int | None):
-        """Driver-side scatter planning → (terms, ctx, need_pos, cols,
-        est_postings, groups). The one place the fan-out is decided:
-        ``_scatter_exec`` runs it and ``Engine.explain`` reports it."""
+        """Driver-side scatter planning → (terms, ctx, need_pos,
+        read_cols, est_postings, groups). The one place the fan-out and
+        the projected postings columns are decided: ``_scatter_exec``
+        runs it and ``Engine.explain`` reports it."""
         terms, ctx, need_pos, cols, est = self._plan_ctx(trees, k)
         lay = self._scatter_layout()
         groups = (_scatter_groups(
             lay["parts"], self.spark.sparkContext.defaultParallelism, est)
             if terms and lay is not None else [])
-        return terms, ctx, need_pos, cols, est, groups
+        read_cols = [c for c in cols if c != "shard"]
+        return terms, ctx, need_pos, read_cols, est, groups
 
     def _scatter_exec(self, items: list[tuple], k: int | None,
                       spec: MetaSpec | None, mode: str,
-                      out_schema: str,
+                      out_schema: str | None = None,
                       meta_fields: list[str] | None = None,
-                      facet_fields: list[str] | None = None
-                      ) -> DataFrame:
-        """Run the scatter job. ``items`` = [(entity_id|None, tree)].
+                      facet_fields: list[str] | None = None):
+        """Run the scatter. ``items`` = [(entity_id|None, tree)].
 
         ``spec`` semantics: None → raw postings evaluation (matches the
         legacy ``filter_df=None``); a MetaSpec (possibly with zero
         conjuncts) → restrict to LIVE docs passing the conjuncts
         (tombstones subtracted), matching ``filter_df=base_meta``.
-        Modes: scores | multi | hydrate | facet | count.
+        Modes: scores | multi | hydrate | facet | count; ``meta_fields``
+        hydrates each group's hits from its own doc_meta files.
+
+        A bounded mode (``scatter_gathers``) returns the per-group
+        frames gathered into one pandas frame, or None when nothing
+        matched: a plan whose work fits one group evaluates in the
+        driver with no Spark job (``scatter_tasks``), a larger one runs
+        one job whose tasks send their frames back. ``scores`` returns
+        the job's DataFrame of ``out_schema``: with ``k=None`` its
+        output is unbounded, so it stays in Spark.
         """
         lay = self._scatter_layout()
-        terms, ctx, need_pos, cols, _, groups = self._scatter_plan(
+        terms, ctx, need_pos, read_cols, est, groups = self._scatter_plan(
             [t for _, t in items], k)
+        gather = scatter_gathers(mode, k)
         if not terms or (spec is not None and spec.match_none):
-            return self.spark.createDataFrame([], out_schema)
-        fn = self._scatter_fn(
+            return None if gather else self.spark.createDataFrame(
+                [], out_schema)
+        run = self._scatter_fn(
             groups, lay["fs"], lay["dm"], lay["post"],
             lay["tombs"] if spec is not None else [],
-            items, ctx, terms, cols, need_pos, k, spec, mode,
+            items, ctx, terms, read_cols, need_pos, k, spec, mode,
             meta_fields, facet_fields)
-        # record the planned read set for plan-shape tests (the pyarrow
-        # reads are invisible to Catalyst's explain)
-        self._last_scatter = {"cols": list(cols), "need_pos": need_pos,
-                              "mode": mode, "n_groups": len(groups),
-                              "terms": list(terms)}
-        return (self.spark.range(0, len(groups), 1, len(groups))
-                .mapInPandas(fn, out_schema))
+        if not gather:
+            return self._scatter_job(len(groups), run, out_schema)
+        if scatter_tasks(mode, k, est, len(groups)) == 0:
+            frames = list(run([0]))
+        else:
+            rows = self._scatter_job(
+                len(groups),
+                lambda gids: (pd.DataFrame({"frame": [pickle.dumps(f)]})
+                              for f in run(gids)),
+                "frame binary").collect()
+            frames = [pickle.loads(r["frame"]) for r in rows]
+        return pd.concat(frames, ignore_index=True) if frames else None
+
+    def _scatter_job(self, n: int, run, out_schema: str) -> DataFrame:
+        """One single-stage job of ``n`` tasks, task i running
+        ``run([i])``: Range → MapInPandas, no exchange."""
+        return (self.spark.range(0, n, 1, n)
+                .mapInPandas(lambda it: (out for pdf in it
+                                         for out in run(pdf["id"])),
+                             out_schema))
 
     @staticmethod
     def _scatter_fn(groups, fs, dm_paths, post_paths, tomb_paths,
-                    items, ctx, terms, cols, need_pos, k,
+                    items, ctx, terms, read_cols, need_pos, k,
                     spec: MetaSpec | None, mode: str,
                     meta_fields, facet_fields):
-        read_cols = [c for c in cols if c not in ("shard", "pos_payload")]
-        if need_pos:
-            read_cols.append("pos_payload")
+        """→ ``run(group ids)``, yielding each group's non-empty frame;
+        the same closure runs in the driver or inside a task."""
         term_list = [str(t) for t in terms]
         spec_cols = spec.cols() if spec is not None else []
         want_allowed = spec is not None and (
@@ -1129,7 +1180,7 @@ class SearchExecutor:
         elif want_allowed:
             meta_read_cols = ["doc_id"] + spec_cols
 
-        def fn(it):
+        def run(gids):
             import pyarrow.dataset as ds
             tomb = None
             if tomb_paths:
@@ -1137,44 +1188,63 @@ class SearchExecutor:
                     columns=["doc_id"])
                 tomb = np.unique(tt.column("doc_id").to_numpy(
                     zero_copy_only=False).astype(np.int64))
-            for pdf_in in it:
-                for gid in pdf_in["id"]:
-                    out = _scatter_eval_group(
-                        groups[int(gid)], fs, dm_paths, post_paths,
-                        tomb, items, ctx, term_list, read_cols,
-                        need_pos, k, spec, mode, meta_fields,
-                        facet_fields, meta_read_cols)
-                    if out is not None:
-                        yield out
-        return fn
+            for gid in gids:
+                out = _scatter_eval_group(
+                    groups[int(gid)], fs, dm_paths, post_paths,
+                    tomb, items, ctx, term_list, read_cols,
+                    need_pos, k, spec, mode, meta_fields,
+                    facet_fields, meta_read_cols)
+                if out is not None:
+                    yield out
+        return run
+
+    def local_frame(self, pdf: pd.DataFrame | None,
+                    schema: StructType) -> DataFrame:
+        """A bounded driver-side result (``None`` = no rows) as a
+        DataFrame over a LocalRelation: collect, limit, filter and
+        select on it run no Spark job. Built from an Arrow table, so
+        neither ``arrow.pyspark.enabled`` nor an empty result changes
+        that; the conversion treats timestamps like ``mapInPandas``
+        output does."""
+        import pyarrow as pa
+        if pdf is None:
+            pdf = pd.DataFrame(columns=schema.names)
+        return self.spark.createDataFrame(
+            pa.Table.from_pandas(pdf[schema.names], preserve_index=False),
+            schema)
 
     def scatter_topk_hydrated(self, tree: Node, k: int,
                               spec: MetaSpec | None,
-                              meta_schema: list) -> DataFrame:
-        """Per-group top-k, hydrated in-task from the group's own
-        doc_meta files → DataFrame(doc_id, score, …meta cols), ≤ k
-        rows per group, unsorted (caller applies the global cut)."""
-        fields = [f.name for f in meta_schema]
-        out_schema = "doc_id long, score double, " + ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in meta_schema if f.name != "doc_id")
+                              meta_fields: list[str]
+                              ) -> pd.DataFrame | None:
+        """Per-group top-k, hydrated from the group's own doc_meta
+        files → pandas (doc_id, score, …meta_fields), ≤ k rows per
+        group, unsorted (caller applies the global cut)."""
         return self._scatter_exec([(None, tree)], k, spec, "hydrate",
-                                  out_schema, meta_fields=fields)
+                                  meta_fields=meta_fields)
+
+    def scatter_multi_hydrated(self, trees: dict[str, Node], k: int,
+                               spec: MetaSpec | None,
+                               meta_fields: list[str]
+                               ) -> pd.DataFrame | None:
+        """Per-group, per-tree top-k, hydrated like
+        ``scatter_topk_hydrated`` → pandas (doc_id, score, entity_id,
+        …meta_fields), ≤ k rows per tree and group, unsorted."""
+        return self._scatter_exec(
+            [(str(eid), t) for eid, t in sorted(trees.items())], k, spec,
+            "multi", meta_fields=meta_fields)
 
     def scatter_count(self, tree: Node, spec: MetaSpec | None) -> int:
-        df = self._scatter_exec([(None, tree)], None, spec, "count",
-                                "n long")
-        row = df.agg(F.sum("n").alias("n")).collect()[0]
-        return int(row["n"] or 0)
+        out = self._scatter_exec([(None, tree)], None, spec, "count")
+        return 0 if out is None else int(out["n"].sum())
 
     def scatter_facet_counts(self, tree: Node, fields: list[str],
-                             spec: MetaSpec | None) -> DataFrame:
-        res = self._scatter_exec(
-            [(None, tree)], None, spec, "facet",
-            "field string, value string, count long",
-            facet_fields=list(fields))
-        return (res.groupBy("field", "value")
-                .agg(F.sum("count").alias("count")))
+                             spec: MetaSpec | None
+                             ) -> pd.DataFrame | None:
+        """Per-group (field, value, count) partials → one pandas frame,
+        not yet summed across groups (None when nothing matched)."""
+        return self._scatter_exec([(None, tree)], None, spec, "facet",
+                                  facet_fields=list(fields))
 
     def run(self, tree: Node, k: int | None,
             filter_df: DataFrame | None = None,
@@ -1307,12 +1377,18 @@ class SearchExecutor:
         jobs would explode the driver/planner; reference caps mention
         sources at 10k names, query/mentions.py:76-130)."""
         items = sorted(trees.items())
-        if filter_df is None and self.scatter_ok():
-            return self._scatter_exec(
-                [(str(eid), t) for eid, t in items], k, spec, "multi",
-                RESULT_SCHEMA + ", entity_id string")
-        terms, ctx, postings = self._prepare([t for _, t in items], k)
         schema = RESULT_SCHEMA + ", entity_id string"
+        if filter_df is None and self.scatter_ok():
+            out = self._scatter_exec(
+                [(str(eid), t) for eid, t in items], k, spec, "multi",
+                schema)
+            if not scatter_gathers("multi", k):
+                return out
+            return self.local_frame(out, StructType([
+                StructField("doc_id", LongType()),
+                StructField("score", DoubleType()),
+                StructField("entity_id", StringType())]))
+        terms, ctx, postings = self._prepare([t for _, t in items], k)
         if not terms:
             return self.spark.createDataFrame([], schema)
 

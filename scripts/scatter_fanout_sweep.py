@@ -9,14 +9,17 @@ the crossover that sets ``query.executor._POSTINGS_PER_TASK``.
    queries over the 1, 2, 4, ... most frequent content terms (so
    ``est_postings`` grows), each run as ``count`` (every posting read
    and decoded, no block-max pruning) with 1 .. defaultParallelism
-   scatter groups. The slope of 1-group CPU over ``est_postings`` is
-   the per-posting cost. Wall and CPU are printed for every
-   (query, groups) cell.
+   scatter groups. A one-group plan evaluates in the driver (0 tasks);
+   ≥2 groups run one Spark job with one task per group. The slope of
+   the driver rows' CPU over ``est_postings`` is the per-posting cost.
+   Wall and CPU are printed for every (query, groups) cell, with the
+   tasks ``explain()`` planned and the tasks Spark ran (status tracker).
 
 Splitting W postings into n tasks costs about n*task + W*posting CPU
-and, on free slots, task + W*posting/n wall. A task earns its fixed
-cost once its share of eval work is at least as large, so the
-crossover is ``task / posting`` postings per task.
+and, on free slots, task + W*posting/n wall; the driver evaluates the
+same W postings with no task at all. A task earns its fixed cost once
+its share of eval work is at least as large, so the crossover is
+``task / posting`` postings per task.
 
 Usage:
     python scripts/scatter_fanout_sweep.py --sf-dir <sf0.1 corpus dir>
@@ -29,6 +32,7 @@ directory holding ``documents.parquet``.
 from __future__ import annotations
 
 import argparse
+import itertools
 import os
 import shutil
 import statistics
@@ -127,9 +131,27 @@ def main():
           f"({ex.meta['n_docs']} docs, {len(ex._scatter_layout()['parts'])}"
           f" parts, {len(content)} content terms)")
 
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    probes = itertools.count()
+
+    def tasks_run(fn) -> int:
+        """Spark tasks one call of ``fn`` runs (0 = evaluated in the
+        driver), read through a fresh job group."""
+        group = f"sweep-{next(probes)}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return sum(st.getStageInfo(s).numTasks
+                   for j in st.getJobIdsForGroup(group)
+                   for s in st.getJobInfo(j).stageIds)
+
     default_ppt = xmod._POSTINGS_PER_TASK
     rows = []
-    print("count query: terms  est_postings  groups  wall_s  cpu_s")
+    print("count query: terms  est_postings  groups  tasks  wall_s  cpu_s"
+          "  (tasks 0 = evaluated in the driver)")
     sizes = sorted({min(1 << i, len(by_df))
                     for i in range(len(by_df).bit_length() + 1)})
     for n_terms in sizes:
@@ -138,15 +160,23 @@ def main():
         for g in range(1, par + 1):
             # the real planner, with the constant set so it picks g groups
             xmod._POSTINGS_PER_TASK = -(-est // g)
+            e = eng.explain({"q": q})
+            groups = e["scatter_tasks"] or 1
             w, c = measure(lambda: eng.count({"q": q}), args.reps)
-            got = ex._last_scatter["n_groups"]
-            rows.append((n_terms, est, got, w, c))
-            print(f"  {n_terms:5d}  {est:12d}  {got:6d}  {w:6.3f}  {c:6.3f}")
+            ran = tasks_run(lambda: eng.count({"q": q}))
+            assert ran == e["scatter_tasks"], (ran, e["scatter_tasks"])
+            rows.append((n_terms, est, groups, w, c))
+            print(f"  {n_terms:5d}  {est:12d}  {groups:6d}  {ran:5d}"
+                  f"  {w:6.3f}  {c:6.3f}")
     xmod._POSTINGS_PER_TASK = default_ppt
 
     one = [(est, c) for _, est, g, _, c in rows if g == 1]
     post_cpu = slope(*zip(*one))
-    print(f"eval CPU per posting (1 group): {post_cpu * 1e9:.0f} ns")
+    print(f"eval CPU per posting (1 group, driver): {post_cpu * 1e9:.0f} ns")
+    two = [(est, c) for _, est, g, _, c in rows if g == 2]
+    if len(two) > 1:
+        print(f"eval CPU per posting (2 tasks): "
+              f"{slope(*zip(*two)) * 1e9:.0f} ns")
     cross = task_cpu / post_cpu if post_cpu > 0 else float("inf")
     print(f"crossover: {task_cpu:.3f} s / {post_cpu * 1e9:.0f} ns = "
           f"{cross:,.0f} postings per task")

@@ -61,6 +61,28 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def spark_jobs(spark):
+    """``jobs(fn)`` → (fn(), [[tasks per stage] per job]): the Spark
+    jobs ``fn`` ran, read from the public status tracker through a
+    job group."""
+    import uuid
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        group = f"spark-jobs-probe-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        st = sc.statusTracker()
+        return out, [[st.getStageInfo(s).numTasks
+                      for s in st.getJobInfo(j).stageIds]
+                     for j in sorted(st.getJobIdsForGroup(group))]
+    return jobs
+
+
 @pytest.fixture(scope="session")
 def fixture_docs_df(spark):
     return spark.createDataFrame(

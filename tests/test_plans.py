@@ -44,18 +44,26 @@ def test_doc_meta_column_pruning(spark, fixture_index):
     assert "PushedFilters" in plan and "lang" in plan
 
 
-def test_positions_column_pruned_for_nonphrase(spark, fixture_engine):
+def test_positions_column_pruned_for_nonphrase(spark, fixture_engine,
+                                               monkeypatch, spark_jobs):
     """A term query must not read pos_payload — asserted on the
-    scatter path's planned read set AND on the legacy Catalyst scan."""
+    scatter read set explain() reports, on the scatter job it runs with
+    ≥2 groups, and on the legacy Catalyst scan."""
+    from openaleph_search_spark.query import executor as xmod
     from openaleph_search_spark.query.ir import TermLeaf
     ex = fixture_engine.executor
     assert ex.scatter_ok()
+    e = fixture_engine.explain({"q": "banana", "limit": 10})
+    assert "pos_payload" not in e["scatter_columns"]
+    assert "docs_payload" in e["scatter_columns"]
+    assert not e["needs_positions"]
+    monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK", 1)  # ≥2 groups
+    tasks = fixture_engine.explain({"q": "banana"})["scatter_tasks"]
+    assert tasks >= 2
     res = ex.run(TermLeaf("banana"), k=10)
-    assert "MapInPandas" in _plan(res)  # scatter path engaged
-    info = ex._last_scatter
-    assert "pos_payload" not in info["cols"]
-    assert "docs_payload" in info["cols"]
-    assert not info["need_pos"]
+    plan = _plan(res)
+    assert "MapInPandas" in plan and "Exchange" not in plan
+    assert spark_jobs(res.collect)[1] == [[tasks]]
     # legacy fallback keeps the pushed-down pruned scan
     ex._scatter = None
     try:
@@ -67,12 +75,20 @@ def test_positions_column_pruned_for_nonphrase(spark, fixture_engine):
         ex._scatter = False
 
 
-def test_positions_column_read_for_phrase(spark, fixture_engine):
+def test_positions_column_read_for_phrase(spark, fixture_engine,
+                                          monkeypatch, spark_jobs):
+    from openaleph_search_spark.query import executor as xmod
     from openaleph_search_spark.query.ir import PhraseLeaf
     ex = fixture_engine.executor
-    ex.run(PhraseLeaf(["banana", "crime"]), k=10)
-    assert "pos_payload" in ex._last_scatter["cols"]
-    assert ex._last_scatter["need_pos"]
+    e = fixture_engine.explain({"q": '"banana crime"', "limit": 10})
+    assert "pos_payload" in e["scatter_columns"]
+    assert e["needs_positions"]
+    monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK", 1)  # ≥2 groups
+    tasks = fixture_engine.explain({"q": '"banana crime"'})["scatter_tasks"]
+    assert tasks >= 2
+    res = ex.run(PhraseLeaf(["banana", "crime"]), k=10)
+    assert "MapInPandas" in _plan(res)
+    assert spark_jobs(res.collect)[1] == [[tasks]]
     ex._scatter = None
     try:
         plan = _plan(ex.run(PhraseLeaf(["banana", "crime"]), k=10))
@@ -116,29 +132,38 @@ def test_ann_bucket_filter_pushed_to_scan(spark, tmp_path):
     assert got == want
 
 
-def test_topk_hydrate_zero_exchange(spark, fixture_engine):
-    """The scatter top-k path must be ONE single-stage job: per-group
-    eval + in-task hydrate, global cut as TakeOrdered — no Exchange,
-    no join operator anywhere in the plan."""
-    res = fixture_engine.search({"q": "banana crime", "limit": 5})
+def test_topk_hydrate_zero_exchange(spark, fixture_engine, monkeypatch,
+                                    spark_jobs):
+    """With ≥2 groups the scatter top-k path is ONE single-stage job
+    (Range → MapInPandas: no Exchange, no join), one task per group,
+    each evaluating and hydrating its group. The global cut runs on the
+    gathered rows in the driver, so the hits are a LocalRelation that
+    reads with no further job."""
+    from openaleph_search_spark.query import executor as xmod
+    args = {"q": "banana crime", "limit": 5}
+    monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK", 1)  # ≥2 groups
+    tasks = fixture_engine.explain(args)["scatter_tasks"]
+    assert tasks >= 2
+    res, jobs = spark_jobs(lambda: fixture_engine.search(args))
+    assert jobs == [[tasks]]  # one job, one stage: no exchange
     plan = _plan(res.hits)
-    assert "MapInPandas" in plan
-    assert "Exchange" not in plan
-    assert "Join" not in plan
-    assert "TakeOrderedAndProject" in plan
+    assert "LocalTableScan" in plan
+    assert "Exchange" not in plan and "Join" not in plan
+    got, jobs = spark_jobs(lambda: [tuple(r) for r in res.hits.collect()])
+    assert jobs == []
     # schema order stays (doc_id, score, ...meta) — the entry/oracle
     # compare and SearchResult docstring both rely on it
     assert res.hits.columns[:2] == ["doc_id", "score"]
     # results identical to the legacy broadcast-hydrate plan, which
     # must keep broadcasting (doc_meta never shuffles for k ids)
-    got = [tuple(r) for r in res.hits.collect()]
     fixture_engine.executor._scatter = None
     try:
-        res2 = fixture_engine.search({"q": "banana crime", "limit": 5})
+        res2 = fixture_engine.search(args)
         plan2 = _plan(res2.hits)
         assert "BroadcastHashJoin" in plan2
         assert "SortMergeJoin" not in plan2
         assert got == [tuple(r) for r in res2.hits.collect()]
+        assert res.hits.dtypes == res2.hits.dtypes
     finally:
         fixture_engine.executor._scatter = False
 
@@ -158,22 +183,34 @@ def test_facet_fast_path_single_cogroup(spark, fixture_engine):
     assert "banana" in plan
 
 
-def test_run_multi_single_pass(spark, fixture_engine):
-    """N query trees → ONE grouped-map operator, not N unioned plans."""
+def test_run_multi_single_pass(spark, fixture_engine, monkeypatch,
+                               spark_jobs):
+    """N query trees → ONE scatter pass, not N unioned plans: with ≥2
+    groups, one single-stage job with one task per group, and the
+    gathered per-tree top-k come back as a LocalRelation."""
+    from openaleph_search_spark.query import executor as xmod
     from openaleph_search_spark.query.parser import parse_query_string
     trees = {f"q{i}": parse_query_string(t)
              for i, t in enumerate(["banana", "kwazulu", "crime wave"])}
-    df = fixture_engine.executor.run_multi(trees, k=5)
+    ex = fixture_engine.executor
+    monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK", 1)  # ≥2 groups
+    groups = ex._scatter_plan(list(trees.values()), 5)[-1]
+    assert len(groups) >= 2
+    df, jobs = spark_jobs(lambda: ex.run_multi(trees, k=5))
+    assert jobs == [[len(groups)]]
     plan = _plan(df)
-    assert plan.count("MapInPandas") == 1  # scatter: one operator
+    assert "LocalTableScan" in plan
     assert "Union" not in plan and "Exchange" not in plan
-    fixture_engine.executor._scatter = None
+    got = sorted(map(tuple, df.collect()))
+    ex._scatter = None
     try:
-        plan2 = _plan(fixture_engine.executor.run_multi(trees, k=5))
+        legacy = ex.run_multi(trees, k=5)
+        plan2 = _plan(legacy)
         assert plan2.count("FlatMapGroupsInPandas") == 1
         assert "Union" not in plan2
+        assert got == sorted(map(tuple, legacy.collect()))
     finally:
-        fixture_engine.executor._scatter = False
+        ex._scatter = False
 
 
 def test_scatter_matches_legacy_everywhere(spark, fixture_index,
@@ -184,7 +221,9 @@ def test_scatter_matches_legacy_everywhere(spark, fixture_index,
     top-k, filters/excludes/empties, facet fast path, count, msearch —
     and with tombstones present. Each case also runs with every part in
     ONE group and with one group PER part: any grouping of whole parts
-    is a valid evaluation group, so the fan-out never changes results."""
+    is a valid evaluation group, so the fan-out never changes results:
+    the planned fan-out and one group evaluate in the driver, one group
+    per part runs a Spark job and gathers its tasks' frames."""
     from openaleph_search_spark.index.mutate import delete_by_ids
     from openaleph_search_spark.index.storage import IndexStorage
     from openaleph_search_spark.query import executor as xmod
@@ -200,14 +239,16 @@ def test_scatter_matches_legacy_everywhere(spark, fixture_index,
     def results(eng, cases):
         out = []
         for a in cases.get("search", []):
-            out.append((a, [tuple(r) for r in eng.search(a).hits.collect()]))
+            hits = eng.search(a).hits
+            out.append((a, (hits.dtypes, [tuple(r) for r in hits.collect()])))
         for a in cases.get("facet", []):
-            out.append((a, eng.search(a).facets["lang"].collect()))
+            out.append((a, {f: (d.dtypes, d.collect())
+                            for f, d in eng.search(a).facets.items()}))
         for a in cases.get("count", []):
             out.append((a, eng.count(a)))
         for ms in cases.get("msearch", []):
-            out.append((ms, sorted(map(tuple,
-                                       eng.msearch(ms, k=3).collect()))))
+            res = eng.msearch(ms, k=3)
+            out.append((ms, (res.dtypes, sorted(map(tuple, res.collect())))))
         return out
 
     fanouts = {
@@ -236,7 +277,9 @@ def test_scatter_matches_legacy_everywhere(spark, fixture_index,
         ],
         "facet": [{"q": "banana", "facet": "lang", "limit": 0},
                   {"q": "banana OR kwazulu", "filter:repo": "r2",
-                   "facet": "lang", "limit": 0}],
+                   "facet": "lang", "limit": 0},
+                  {"q": "banana OR kwazulu", "facet": ["lang", "repo"],
+                   "facet_size:repo": "2", "limit": 0}],
         "count": [{"q": "banana"},
                   {"q": "banana OR kwazulu", "filter:lang": "txt"}],
         "msearch": [{"a": {"q": "banana"}, "b": {"q": "crime wave"}}],
@@ -264,33 +307,43 @@ def test_scatter_matches_legacy_everywhere(spark, fixture_index,
 
 
 def test_explain_reports_scatter_fanout(spark, fixture_engine,
-                                        monkeypatch):
-    """explain() reports the fan-out _scatter_exec would plan: one task
-    for a small query, min(parts, defaultParallelism) once est_postings
-    exceeds par × _POSTINGS_PER_TASK, None for non-scatter strategies."""
+                                        monkeypatch, spark_jobs):
+    """explain() reports the fan-out _scatter_exec would plan: 0 tasks
+    (driver evaluation) for a small bounded read, min(parts,
+    defaultParallelism) once est_postings exceeds par ×
+    _POSTINGS_PER_TASK, None for non-scatter strategies — and the
+    search runs exactly that many Spark tasks."""
     from openaleph_search_spark.query import executor as xmod
     ex = fixture_engine.executor
     parts = len(ex._scatter_layout()["parts"])
     par = spark.sparkContext.defaultParallelism
     tarr, dfarr = ex._term_dict()
     df = dict(zip(tarr.tolist(), dfarr.tolist()))
+    args = {"q": "banana crime", "limit": 10}
 
-    e = fixture_engine.explain({"q": "banana crime", "limit": 10})
+    e = fixture_engine.explain(args)
     assert e["strategy"] == "topk_scatter_gather"
     assert e["est_postings"] == df["banana"] + df["crime"]
-    assert e["scatter_tasks"] == 1
-    # the planned fan-out is the one the executed job runs
-    fixture_engine.search({"q": "banana crime", "limit": 10}).hits.collect()
-    assert ex._last_scatter["n_groups"] == 1
+    assert e["scatter_tasks"] == 0
+    # the planned fan-out is the one the search runs: no job at all
+    assert spark_jobs(
+        lambda: fixture_engine.search(args).hits.collect())[1] == []
+    # an unbounded full match keeps its one-task job
+    assert fixture_engine.explain(
+        {"q": "banana crime", "sort": "doc_len"})["scatter_tasks"] == 1
 
     # a query larger than par tasks' worth of postings fans out fully
     monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK",
                         max(1, e["est_postings"] // (par + 1)))
-    big = fixture_engine.explain({"q": "banana crime", "limit": 10})
+    big = fixture_engine.explain(args)
     assert big["scatter_tasks"] == min(parts, par)
+    assert spark_jobs(
+        lambda: fixture_engine.search(args).hits.collect())[1] \
+        == [[min(parts, par)]]
+    n = min(parts, par, -(-df["banana"] // xmod._POSTINGS_PER_TASK))
     assert fixture_engine.explain(
         {"q": "banana", "facet": "lang", "limit": 0})["scatter_tasks"] \
-        == min(parts, par, -(-df["banana"] // xmod._POSTINGS_PER_TASK))
+        == (0 if n == 1 else n)
     monkeypatch.undo()
 
     assert fixture_engine.explain({"limit": 10})["scatter_tasks"] is None
@@ -298,6 +351,104 @@ def test_explain_reports_scatter_fanout(spark, fixture_engine,
     assert fixture_engine.explain(
         {"q": "banana", "filter:gte:doc_len": "3",
          "limit": 10})["scatter_tasks"] is None
+
+
+def test_small_reads_run_zero_jobs(spark, fixture_index, tmp_path,
+                                   monkeypatch, spark_jobs):
+    """On a tombstoned index, a small top-k search, a filtered one,
+    count, a one-facet search and msearch evaluate in the driver: zero
+    Spark jobs from the call to the collected result. With
+    _POSTINGS_PER_TASK patched low each runs exactly ONE job of
+    min(parts, defaultParallelism) tasks — or of one task when the plan
+    is capped to one group — with the same results."""
+    import shutil
+    from openaleph_search_spark.index.mutate import delete_by_ids
+    from openaleph_search_spark.query import executor as xmod
+    from openaleph_search_spark.query.engine import Engine
+    mdir = str(tmp_path / "idx_tomb")
+    shutil.copytree(fixture_index, mdir)
+    victim = Engine(spark, mdir).search(
+        {"q": "banana", "limit": 1}).hits.collect()[0]["doc_id"]
+    delete_by_ids(spark, IndexStorage(mdir), [victim])
+    eng = Engine(spark, mdir)
+    wide = "banana OR kwazulu OR crime"
+    searches = [{"q": wide, "limit": 5},
+                {"q": wide, "filter:lang": "txt", "limit": 5},
+                {"q": wide, "facet": "lang", "limit": 0}]
+    reads = {
+        "search": lambda: eng.search(searches[0]).hits.collect(),
+        "filtered": lambda: eng.search(searches[1]).hits.collect(),
+        "facet": lambda: eng.search(searches[2]).facets["lang"].collect(),
+        "count": lambda: eng.count({"q": wide}),
+        "msearch": lambda: eng.msearch(
+            {"a": {"q": wide}, "b": {"q": "crime wave"}}, k=3).select(
+            "query_id", "doc_id", "score", "path").collect(),
+    }
+    for fn in reads.values():  # warm: doc_meta schema, tombstones
+        fn()
+    assert all(eng.explain(a)["scatter_tasks"] == 0 for a in searches)
+    want = {}
+    for name, fn in reads.items():
+        want[name], jobs = spark_jobs(fn)
+        assert jobs == [], name
+    assert all(r["doc_id"] != victim for r in want["search"])
+
+    monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK", 1)
+    n = min(len(eng.executor._scatter_layout()["parts"]),
+            spark.sparkContext.defaultParallelism)
+    assert n >= 2
+    for name, fn in reads.items():
+        got, jobs = spark_jobs(fn)
+        assert jobs == [[n]], name
+        assert got == want[name], name
+    # a plan held to one group by its caps, not by its work, keeps its
+    # task: the driver never evaluates more than _POSTINGS_PER_TASK
+    monkeypatch.setattr(xmod, "_scatter_groups",
+                        lambda parts, par, est: [list(parts)])
+    for name, fn in reads.items():
+        got, jobs = spark_jobs(fn)
+        assert jobs == [[1]], name
+        assert got == want[name], name
+
+
+def test_multi_facet_evaluates_query_once(spark, fixture_engine,
+                                          monkeypatch, spark_jobs):
+    """A facet-only search over two facets evaluates the query ONCE:
+    each group's kernel runs once in the driver, and with ≥2 groups
+    both facets come from ONE job. Results equal the legacy cogrouped
+    facet_counts path."""
+    from openaleph_search_spark.query import executor as xmod
+    from openaleph_search_spark.query.engine import Engine
+    from openaleph_search_spark.query.parser import parse_args
+    args = {"q": "banana OR kwazulu", "facet": ["lang", "repo"],
+            "limit": 0}
+    tree = fixture_engine._plan(parse_args(args))
+    groups = fixture_engine.executor._scatter_plan([tree], 0)[-1]
+    assert len(groups) == 1
+    calls = []
+    real = xmod._scatter_eval_group
+
+    def counting(parts, *rest):
+        calls.append(list(parts))
+        return real(parts, *rest)
+
+    monkeypatch.setattr(xmod, "_scatter_eval_group", counting)
+    res = fixture_engine.search(args)
+    got = {f: d.collect() for f, d in res.facets.items()}
+    assert calls == groups
+    monkeypatch.setattr(xmod, "_scatter_eval_group", real)
+
+    legacy = Engine(spark, fixture_engine.storage.root)
+    legacy.executor._scatter = None
+    want = {f: d.collect() for f, d in legacy.search(args).facets.items()}
+    assert got == want and set(got) == {"lang", "repo"}
+
+    monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK", 1)
+    again, jobs = spark_jobs(lambda: {
+        f: d.collect() for f, d in fixture_engine.search(args)
+        .facets.items()})
+    assert len(jobs) == 1 and len(jobs[0]) == 1 and jobs[0][0] >= 2
+    assert again == want
 
 
 def test_ivf_centroid_selection_is_bounded_topn(spark):
@@ -386,3 +537,54 @@ def test_split_and_mixture_stay_in_scan_stage(spark):
     p2 = _plan(mixture_sample(docs, {"x": 0.5}))
     assert "Exchange" not in p1
     assert "Exchange" not in p2
+
+
+def test_gathered_hits_keep_types(spark, fixture_docs_df, tmp_path,
+                                  monkeypatch):
+    """Gathered hits and msearch rows keep the legacy column order and
+    dtypes, timestamp/date and null meta values and empty results
+    included, whether the scatter evaluates in the driver or in a
+    job."""
+    from pyspark.sql import functions as F
+    from openaleph_search_spark.index.build import build_index
+    from openaleph_search_spark.query import executor as xmod
+    from openaleph_search_spark.query.engine import Engine
+    from pyspark.sql import Window
+    # null out one meta value per source part (of the parts holding ≥2
+    # docs): a part whose column is all-null would write a null-typed
+    # parquet column that Spark cannot read back
+    part = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(4))
+    w = Window.partitionBy(part)
+    kept = ~((F.row_number().over(w.orderBy("path")) == 1)
+             & (F.count("*").over(w) > 1))
+    docs = (fixture_docs_df
+            .withColumn("created", F.when(kept, F.expr(
+                "timestamp'2021-03-04 05:06:07' + make_interval(0, 0, 0, "
+                "cast(crc32(path) % 400 as int), 0, 0, 0)")))
+            .withColumn("day", F.when(kept, F.to_date(F.lit("2020-02-29"))))
+            .withColumn("stars", F.when(kept, F.length("path")))
+            .withColumn("owner", F.when(kept, F.col("repo"))))
+    out = str(tmp_path / "idx_typed")
+    build_index(spark, docs, out, num_partitions=4, num_shards=2,
+                meta_cols=["created", "day", "stars", "owner"])
+    new, old = Engine(spark, out), Engine(spark, out)
+    old.executor._scatter = None
+    searches = [{"q": "banana OR kwazulu OR crime", "limit": 10},
+                {"q": "banana OR kwazulu", "filter:lang": "txt",
+                 "limit": 10},
+                {"q": "kwazulu", "filter:lang": "go", "limit": 10}]
+    batch = {"a": {"q": "banana OR kwazulu"}, "b": {"q": "crime OR nana"}}
+
+    def results(eng):
+        out = [(h.dtypes, [tuple(r) for r in h.collect()])
+               for h in (eng.search(a).hits for a in searches)]
+        ms = eng.msearch(batch, k=3)
+        return out + [(ms.dtypes, sorted(map(tuple, ms.collect())))]
+
+    want = results(old)
+    assert any(None in r for r in want[0][1])  # null meta values
+    assert want[2][1] == []  # and an empty result are covered
+    assert results(new) == want
+    monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK", 1)
+    assert new.explain(searches[0])["scatter_tasks"] >= 2
+    assert results(new) == want

@@ -48,6 +48,7 @@ import time
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ..analysis.analyzer import tokenize_flat
 from .codec import (BLOCK_SIZE, K1, B, delta_restarting,
@@ -55,7 +56,7 @@ from .codec import (BLOCK_SIZE, K1, B, delta_restarting,
 from .storage import PART_FILE, IndexStorage
 
 DOC_ID_PART_SHIFT = 33  # doc_id = (src_part << 33) | local_row
-LAYOUT_VERSION = 7  # bump on any physical-layout / shard-map change
+LAYOUT_VERSION = 8  # bump on any physical-layout / shard-map change
 FIELD_SEP = "\x1f"  # term-dictionary field prefix: "path\x1ffoo"
 DEFAULT_FIELDS = {"path": "path", "repo": "repo", "lang": "lang"}
 BIGRAM_FIELD = "_bi"  # T16 index_phrases shingles (phrase fast path)
@@ -66,33 +67,65 @@ DOC_META_SCHEMA = ("doc_id long, repo string, path string, commit string, "
                    "src_part int")
 MANIFEST_SCHEMA = ("src_part int, status string, docs long, postings long, "
                    "tokens long, seconds double, attempt int")
-POSTINGS_SCHEMA = ("term string, shard int, first_doc long, "
-                   "last_doc long, doc_count int, sum_tf long, max_tf int, "
-                   "min_dl long, docs_payload binary, "
-                   "tfs_payload binary, dls_payload binary, "
-                   "pos_payload binary")
 _BLOCK_COLS = ["term", "shard", "first_doc", "last_doc", "doc_count",
                "sum_tf", "max_tf", "min_dl", "docs_payload",
                "tfs_payload", "dls_payload", "pos_payload"]
 
 
+def doc_meta_schema(docs: DataFrame, meta_cols: list[str]) -> StructType:
+    """doc_meta's Spark schema: DOC_META_SCHEMA, then each meta column
+    with the docs table's own type. Stored in meta.json, so every
+    reader opens doc_meta without an inference job, and every writer
+    casts to it."""
+    schema = StructType.fromDDL(DOC_META_SCHEMA)
+    for c in meta_cols:
+        if c not in schema.names:
+            schema.add(c, docs.schema[c].dataType, nullable=True)
+    return schema
+
+
+def _cast_doc_meta(tbl, schema, tz: str):
+    """A part's doc_meta table cast to the stored schema, so a column
+    that is all null in this part (pandas gives it no type) or whose
+    pandas dtype drifted (ints with nulls turn float) keeps its type.
+    Naive timestamps that belong to a zoned column are session-local
+    wall times (pandas UDF input), so they are placed in ``tz`` first."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    cols = []
+    for f in schema:
+        col = tbl.column(f.name)
+        if (pa.types.is_timestamp(f.type) and f.type.tz
+                and pa.types.is_timestamp(col.type) and not col.type.tz):
+            col = pc.assume_timezone(col, tz, ambiguous="earliest",
+                                     nonexistent="earliest")
+        cols.append(col.cast(f.type))
+    return pa.Table.from_arrays(cols, schema=schema)
+
+
 def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
                   shard_of_part, fields: dict[str, str] | None = None,
                   bigrams: bool = False,
-                  meta_cols: list[str] | None = None):
+                  meta_cols: list[str] | None = None, *,
+                  meta_schema: StructType, tz: str):
     """Grouped-map fn: one source partition → packed block run +
-    doc_meta + atomic manifest checkpoint.
+    doc_meta + atomic manifest checkpoint. ``append_batch`` runs the
+    same fn in the driver for a batch that fits one part.
 
     ``fields`` maps extra indexed field names → source columns; their
     terms are stored as ``field␟token`` (FIELD_SEP) with per-field
     lengths, so BM25 norms are per-field like Lucene. ``content`` is
     the unprefixed default field. ``meta_cols`` are UNANALYZED
     passthrough columns stored in doc_meta (filter/sort/facet targets —
-    the ES stored-field role for typed metadata like timestamps).
+    the ES stored-field role for typed metadata like timestamps);
+    doc_meta is written with ``meta_schema`` (the stored
+    ``doc_meta_schema``), ``tz`` being the session time zone.
     """
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
     fields = fields or {}
     meta_cols = meta_cols or []
+    meta_arrow = to_arrow_schema(meta_schema)
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         # one executor thread per task is the concurrency model here;
@@ -312,16 +345,9 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
                                  schema=run_schema,
                                  preserve_index=False),
             os.path.join(shard_dir, f"part={src_part}.parquet"))
-        meta_tbl = pa.Table.from_pandas(meta, preserve_index=False)
-        for i, fld in enumerate(meta_tbl.schema):
-            # Spark cannot read nanosecond parquet timestamps — coerce
-            # pandas' default ns unit to µs for meta_cols
-            if pa.types.is_timestamp(fld.type) and fld.type.unit == "ns":
-                meta_tbl = meta_tbl.set_column(
-                    i, fld.name, meta_tbl.column(i).cast(
-                        pa.timestamp("us", fld.type.tz)))
         storage.io.write_parquet_atomic(
-            meta_tbl,
+            _cast_doc_meta(pa.Table.from_pandas(meta, preserve_index=False),
+                           meta_arrow, tz),
             os.path.join(storage.doc_meta_dir, f"part={src_part}.parquet"))
         # per-doc per-field lengths (long format, zero rows skipped):
         # compact() needs these to recompute exact per-field avgdl
@@ -436,9 +462,14 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
          .cast("int").alias("src_part"),
     )
 
+    meta_schema = doc_meta_schema(prepared, meta_cols)
     done = storage.completed_partitions() if resume else {}
     if done:
         prepared = prepared.filter(~F.col("src_part").isin(list(done)))
+    # the tables exist (and read as empty) even when no part is written
+    for d in (storage.doc_meta_dir, storage.postings_dir,
+              storage.field_lens_dir):
+        storage.io.mkdirs(d)
     _mark("setup")
 
     # ---- step A: SPIMI packed-block runs, checkpointed per partition ----
@@ -449,7 +480,8 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
     manifests = prepared.groupBy("src_part").applyInPandas(
         _spimi_writer(storage, with_positions, attempt,
                       lambda sp: sp % num_shards, fields, bigrams,
-                      meta_cols),
+                      meta_cols, meta_schema=meta_schema,
+                      tz=spark.conf.get("spark.sql.session.timeZone")),
         MANIFEST_SCHEMA)
     # Pin this job's task granularity: AQE coalesces the grouped-map
     # shuffle by MAP-OUTPUT BYTES (text compresses ~4x, so the 64 MB
@@ -495,31 +527,6 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
     avgdl_by_field = _read_field_stats(storage)
     _mark("field_stats")
 
-    if n_docs == 0:
-        # empty corpus: materialize empty tables so readers work
-        # no partitionBy: an empty partitioned write leaves no schema
-        (spark.createDataFrame([], POSTINGS_SCHEMA).write
-         .mode("overwrite").parquet(storage.postings_dir))
-        (spark.createDataFrame([], "term string, df long, cf long")
-         .write.mode("overwrite").parquet(storage.term_stats_dir))
-        (spark.createDataFrame([], DOC_META_SCHEMA).write
-         .mode("overwrite").parquet(
-             os.path.join(storage.doc_meta_dir, "part=empty.parquet")))
-        storage.write_meta({
-            "num_partitions": P, "num_shards": num_shards,
-            "block_size": BLOCK_SIZE, "k1": K1, "b": B,
-        "b_by_field": b_by_field,
-            "with_positions": with_positions, "n_docs": 0, "avgdl": 0.0,
-            "avgdl_by_field": {}, "fields": sorted(["content", *fields]),
-            "field_map": fields,
-            "meta_cols": meta_cols,
-            "bigrams": bigrams,
-            "analyzer": "icu-default-v1",
-            "layout_version": LAYOUT_VERSION,
-            "built_partitions": 0, "resumed_from": 0,
-        })
-        return storage
-
     # ---- no step B: each SPIMI task wrote its (term, first_doc)-sorted
     # single-shard run STRAIGHT into postings/shard=K/ (LAYOUT v6) —
     # the former full read+rewrite re-layout job is gone from the build
@@ -544,6 +551,7 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
         "fields": sorted(["content", *fields]),
         "field_map": fields,
         "meta_cols": meta_cols,
+        "doc_meta_schema": meta_schema.jsonValue(),
         "bigrams": bigrams,
         "analyzer": "icu-default-v1",
         "layout_version": LAYOUT_VERSION,
@@ -571,6 +579,7 @@ def aggregate_term_stats(spark: SparkSession,
     is a driver-side pyarrow group_by over a projected read — no Spark
     job, no shuffle, no per-job fixed latency. Past a size threshold
     (100-TB builds) it stays a distributed groupBy."""
+    import pyarrow as pa
     import pyarrow.dataset as ds
     from pyarrow import fs as pafs
     io = storage.io
@@ -579,9 +588,11 @@ def aggregate_term_stats(spark: SparkSession,
     files = [i for i in io.fs.get_file_info(sel)
              if PART_FILE.fullmatch(i.base_name)]
     if sum(i.size for i in files) <= _TERM_STATS_DRIVER_BYTES:
-        merged = (ds.dataset([i.path for i in files], filesystem=io.fs,
-                             format="parquet")
-                  .to_table(columns=["term", "doc_count", "sum_tf"])
+        cols = pa.schema([("term", pa.string()),
+                          ("doc_count", pa.int32()), ("sum_tf", pa.int64())])
+        merged = (ds.dataset([i.path for i in files], schema=cols,
+                             filesystem=io.fs, format="parquet")
+                  .to_table()
                   .group_by("term")
                   .aggregate([("doc_count", "sum"), ("sum_tf", "sum")])
                   .rename_columns(["term", "df", "cf"]))

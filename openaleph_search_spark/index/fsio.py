@@ -14,9 +14,13 @@ carry it inside task closures.
 Write discipline: every file is written to a uniquely-suffixed temp
 name and ``move``d into place — atomic on local/HDFS, and safe under
 speculative task attempts (two attempts produce identical deterministic
-bytes; last rename wins)."""
+bytes; last rename wins). The temp name starts with ``.``, so a temp
+file a crash leaves behind is skipped by every reader: Spark and
+pyarrow datasets ignore hidden names, and the listings match on the
+``.parquet``/``.json`` suffix."""
 from __future__ import annotations
 
+import posixpath
 import uuid
 
 from pyarrow import fs as pafs
@@ -71,12 +75,20 @@ class FsIO:
         with self.fs.open_input_stream(self.path(uri)) as f:
             return f.read()
 
-    def write_bytes_atomic(self, uri: str, data: bytes) -> None:
+    def _write_atomic(self, uri: str, write) -> None:
+        """``write(tmp)`` writes the file under a hidden temp name in
+        the target's directory; one move then publishes it."""
         p = self.path(uri)
-        tmp = f"{p}.tmp-{uuid.uuid4().hex[:8]}"
-        with self.fs.open_output_stream(tmp) as f:
-            f.write(data)
+        d, name = posixpath.split(p)
+        tmp = posixpath.join(d, f".{name}.tmp-{uuid.uuid4().hex[:8]}")
+        write(tmp)
         self.fs.move(tmp, p)
+
+    def write_bytes_atomic(self, uri: str, data: bytes) -> None:
+        def write(tmp):
+            with self.fs.open_output_stream(tmp) as f:
+                f.write(data)
+        self._write_atomic(uri, write)
 
     def delete_file(self, uri: str) -> None:
         self.fs.delete_file(self.path(uri))
@@ -93,8 +105,5 @@ class FsIO:
         otherwise sit in every footer twice (raw and inside
         ``ARROW:schema``), and no reader uses it."""
         import pyarrow.parquet as pq
-        p = self.path(uri)
-        tmp = f"{p}.tmp-{uuid.uuid4().hex[:8]}"
-        pq.write_table(table.replace_schema_metadata(None), tmp,
-                       filesystem=self.fs)
-        self.fs.move(tmp, p)
+        self._write_atomic(uri, lambda tmp: pq.write_table(
+            table.replace_schema_metadata(None), tmp, filesystem=self.fs))

@@ -3,30 +3,36 @@ safety rules that keep query-time pruning correct afterwards.
 
 The reference's mutations are ES row-level ops
 (/root/reference/openaleph_search/index/indexer.py:36-51,181-189,
-index/entities.py:361-369). Columnar Spark-first equivalents:
+index/entities.py:361-369). Columnar Spark-first equivalents, each
+sized by its work (one Spark job at most, like a Delta Lake writer
+that adds one file and commits it):
 
 * **delete** = tombstones: a small doc_id table subtracted at query
-  time (Lucene's own soft-delete design). ``compact()`` folds them in
-  by rewriting, in place, only the source parts that hold a
-  tombstoned doc: each part's files are replaced one at a time under
-  their own ``part=<p>.parquet`` names, manifest last. No writer swaps
-  a live directory.
-* **append** = an incremental build of new source partitions into the
-  same layout. Appends change collection stats (N, avgdl) — harmless:
-  impact bounds are derived at query time from each block's stored
-  (max_tf, min_dl) against the live stats, so pruning stays provably
-  sound through any mutation.
+  time (Lucene's own soft-delete design). One Spark filter resolves
+  the victims; the driver subtracts the ids already tombstoned and
+  writes the rest as ONE ``tombstones/<uuid>.parquet``, atomically.
+  ``compact()`` folds them in by rewriting, in place, only the source
+  parts that hold a tombstoned doc: each part's files are replaced one
+  at a time under their own ``part=<p>.parquet`` names, manifest last.
+  No writer swaps a live directory.
+* **append** = one new source part per small batch (a larger batch
+  adds one part per build partition), same layout. Appends change
+  collection stats (N, avgdl) — harmless: impact bounds are derived at
+  query time from each block's stored (max_tf, min_dl) against the
+  live stats, so pruning stays provably sound through any mutation.
+* **upsert** = append, then tombstone the older versions.
 """
 from __future__ import annotations
 
 import json
 import os
+import uuid
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .storage import PART_FILE, IndexStorage
+from .storage import PART_FILE, TOMBSTONES_SCHEMA, IndexStorage
 
 
 def tombstones_dir(storage: IndexStorage) -> str:
@@ -35,24 +41,44 @@ def tombstones_dir(storage: IndexStorage) -> str:
 
 def read_tombstones(spark: SparkSession,
                     storage: IndexStorage) -> DataFrame | None:
-    d = tombstones_dir(storage)
-    if not any(f.endswith(".parquet") for f in storage.io.listdir(d)):
+    if not _tombstone_paths(storage):
         return None
-    return spark.read.parquet(d).select("doc_id").distinct()
+    return (spark.read.schema(TOMBSTONES_SCHEMA)
+            .parquet(tombstones_dir(storage)).select("doc_id").distinct())
+
+
+def _ids(victims: DataFrame) -> np.ndarray:
+    """The ``doc_id`` column of ``victims``, collected in one Spark job
+    as Arrow: 8 B per id in the driver."""
+    return victims.select("doc_id").toArrow().column("doc_id").to_numpy()
+
+
+def _add_tombstones(storage: IndexStorage, ids: np.ndarray) -> int:
+    """Tombstone ``ids``: the ids already tombstoned are read through
+    pyarrow and subtracted, and the new ones go into ONE
+    ``tombstones/<uuid>.parquet``, written atomically (a crash leaves
+    only a hidden temp file that no reader sees). → how many."""
+    import pyarrow as pa
+    new = np.setdiff1d(ids, _read_dead(storage.io.fs,
+                                       _tombstone_paths(storage)))
+    if new.size:
+        d = tombstones_dir(storage)
+        storage.io.mkdirs(d)
+        storage.io.write_parquet_atomic(
+            pa.table({"doc_id": pa.array(new, pa.int64())}),
+            os.path.join(d, f"{uuid.uuid4().hex}.parquet"))
+    return int(new.size)
 
 
 def delete_docs(spark: SparkSession, storage: IndexStorage,
                 predicate) -> int:
-    """S4 delete-by-query: append matching doc_ids to the tombstone
-    table. Returns the number of newly tombstoned docs."""
-    victims = storage.doc_meta(spark).filter(predicate).select("doc_id")
-    existing = read_tombstones(spark, storage)
-    if existing is not None:
-        victims = victims.join(existing, "doc_id", "left_anti")
-    n = victims.count()
-    if n:
-        victims.write.mode("append").parquet(tombstones_dir(storage))
-    return n
+    """S4 delete-by-query: tombstone the docs matching ``predicate`` (a
+    Column or SQL string over doc_meta). One Spark job: the filter,
+    whose matching ids are collected to the driver (8 B per id, so a
+    delete of N docs holds 8N bytes there). Returns the number of
+    newly tombstoned docs."""
+    return _add_tombstones(
+        storage, _ids(storage.doc_meta(spark).filter(predicate)))
 
 
 def delete_by_ids(spark: SparkSession, storage: IndexStorage,
@@ -63,18 +89,31 @@ def delete_by_ids(spark: SparkSession, storage: IndexStorage,
 
 def upsert_docs(spark: SparkSession, storage: IndexStorage,
                 docs: DataFrame) -> None:
-    """S3 upsert: tombstone any existing rows with the same
-    (repo, path, commit) identity, then append the new versions as an
-    incremental batch (delete + append ≈ ES index_safe)."""
+    """S3 upsert (≈ ES index_safe): append the new versions, then
+    tombstone the older rows with the same (repo, path, commit)
+    identity. A crash in between leaves both versions live, never
+    neither, and a re-run converges.
+
+    A batch that fits one part was collected by the append, so the
+    identity lookup is one filter job over doc_meta (the batch's paths
+    pushed down, exact keys matched in the driver): two jobs in all. A
+    larger batch is matched with a Spark semi-join."""
     from ..streaming.incremental import append_batch
-    keys = docs.select("repo", "path", "commit")
-    existing = (storage.doc_meta(spark)
-                .join(keys, ["repo", "path", "commit"], "left_semi")
-                .select("doc_id"))
-    n = existing.count()
-    if n:
-        existing.write.mode("append").parquet(tombstones_dir(storage))
-    append_batch(spark, docs, storage.root, epoch_id=-1)
+    keys = ["repo", "path", "commit"]
+    base_part, batch = append_batch(spark, docs, storage.root, epoch_id=-1)
+    older = storage.doc_meta(spark).filter(F.col("src_part") < base_part)
+    if batch is None:
+        ids = _ids(older.join(docs.select(keys), keys, "left_semi"))
+    else:
+        want = batch.select(keys).drop_null()
+        if not want.num_rows:
+            return
+        cand = (older.filter(F.col("path").isin(
+                    want.column("path").unique().to_pylist()))
+                .select("doc_id", *keys).toArrow())
+        ids = (cand.join(want, keys, join_type="left semi")
+               .column("doc_id").to_numpy())
+    _add_tombstones(storage, ids)
 
 
 def export_index(spark: SparkSession, storage: IndexStorage,
@@ -122,10 +161,12 @@ def _tombstone_paths(storage: IndexStorage) -> list[str]:
 
 def _read_dead(fs, tomb_paths: list[str]) -> np.ndarray:
     """Sorted unique tombstoned doc ids, read through pyarrow."""
+    import pyarrow as pa
     import pyarrow.dataset as ds
-    ids = ds.dataset(tomb_paths, filesystem=fs).to_table(
-        columns=["doc_id"]).column("doc_id")
-    return np.unique(ids.to_numpy().astype(np.int64))
+    ids = ds.dataset(tomb_paths, filesystem=fs,
+                     schema=pa.schema([("doc_id", pa.int64())])
+                     ).to_table().column("doc_id")
+    return np.unique(ids.to_numpy())
 
 
 def _rewrite_part(storage: IndexStorage, part: int, num_shards: int,

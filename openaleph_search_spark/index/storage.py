@@ -11,7 +11,10 @@ Layout::
 
     <index_dir>/
       meta.json            build config: P, num_shards, block_size, k1/b,
-                           with_positions, analyzer version, n_docs, avgdl
+                           with_positions, analyzer version, n_docs,
+                           avgdl, and ``doc_meta_schema`` (the Spark
+                           schema of doc_meta: the base columns plus
+                           the docs table's own types for meta_cols)
       manifest/part=K.json per-source-partition checkpoint + lineage
                            (north_rule resumability)
       manifest/fields_part=K.json  the part's per-field
@@ -22,13 +25,20 @@ Layout::
                            into the final shard layout (S = K mod
                            num_shards)
       term_stats/*.parquet global df/cf, summed from the postings
-      tombstones/*.parquet deleted doc ids, until compact()
+      tombstones/<uuid>.parquet  deleted doc ids, one file per delete
+                           or upsert call, written atomically and
+                           disjoint from the earlier files; until
+                           compact()
 
 Every data file of source part K is named ``part=K.parquet`` (the
 scatter query path depends on it), and every writer keeps that:
-build and append write new parts, and ``compact()`` (LAYOUT v7)
-rewrites only the parts that hold a tombstoned doc, in place, file by
-file, with the manifest last.
+build writes parts, an append adds one part per small batch, and
+``compact()`` rewrites only the parts that hold a tombstoned doc, in
+place, file by file, with the manifest last.
+
+Every table is opened with its schema (below, and doc_meta's from
+meta.json), never by inference: inferring a parquet schema costs a
+Spark job per read, so opening an ``Engine`` would not be free.
 """
 from __future__ import annotations
 
@@ -37,11 +47,22 @@ import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .fsio import FsIO
 
 # the name of every data file of source part K: part=K.parquet
 PART_FILE = re.compile(r"part=(\d+)\.parquet")
+
+# the stored columns of each table; postings end with the shard=S
+# directory column
+POSTINGS_SCHEMA = ("term string, first_doc long, last_doc long, "
+                   "doc_count int, sum_tf long, max_tf int, min_dl long, "
+                   "docs_payload binary, tfs_payload binary, "
+                   "dls_payload binary, pos_payload binary, shard int")
+TERM_STATS_SCHEMA = "term string, df long, cf long"
+FIELD_LENS_SCHEMA = "doc_id long, field string, dl int"
+TOMBSTONES_SCHEMA = "doc_id long"
 
 
 class IndexStorage:
@@ -104,18 +125,29 @@ class IndexStorage:
                                                 "part=")
                 if row.get("status") == "done" and "src_part" in row}
 
-    # -- table readers --------------------------------------------------------
+    # -- table readers (each with its schema: no inference job) -------------
+    def doc_meta_schema(self) -> StructType:
+        from .build import LAYOUT_VERSION
+        schema = self.read_meta().get("doc_meta_schema")
+        if schema is None:
+            raise ValueError(
+                f"{self.meta_path} has no doc_meta_schema: the index "
+                f"predates layout {LAYOUT_VERSION}, rebuild it")
+        return StructType.fromJson(schema)
+
     def doc_meta(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.doc_meta_dir, "*.parquet"))
+        return (spark.read.schema(self.doc_meta_schema())
+                .parquet(self.doc_meta_dir))
 
     def postings(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.postings_dir)
+        return spark.read.schema(POSTINGS_SCHEMA).parquet(self.postings_dir)
 
     def term_stats(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.term_stats_dir)
+        return (spark.read.schema(TERM_STATS_SCHEMA)
+                .parquet(self.term_stats_dir))
 
     def field_lens(self, spark: SparkSession) -> DataFrame:
         """Per-doc per-field lengths (doc_id, field, dl) — lets
         ``compact()`` recompute exact per-field avgdl after deletes."""
-        return spark.read.parquet(
-            os.path.join(self.field_lens_dir, "*.parquet"))
+        return (spark.read.schema(FIELD_LENS_SCHEMA)
+                .parquet(self.field_lens_dir))

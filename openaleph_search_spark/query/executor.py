@@ -724,8 +724,8 @@ class SearchExecutor:
         # scatter-path layout cache (same lifetime contract as the dict
         # cache: mutations construct fresh Engines); False = unprobed
         self._scatter: dict | None | bool = False
-        # the postings DataFrame handle is immutable lineage — re-doing
-        # spark.read.parquet per query re-lists the dataset (~0.4 s of
+        # the postings DataFrame handle is immutable lineage — opening
+        # the table per query re-lists the dataset (~0.4 s of
         # driver time on a 16-shard index). Same lifetime contract as
         # the dict cache: mutations construct fresh Engines.
         self._postings_df: DataFrame | None = None

@@ -150,6 +150,7 @@ def test_empty_corpus_build(spark, tmp_path):
     out = str(tmp_path / "idx_empty")
     st = build_index(spark, empty, out, num_partitions=2, num_shards=2)
     assert st.read_meta()["n_docs"] == 0
+    assert st.doc_meta_schema().names[0] == "doc_id"
     eng = Engine(spark, out)
     assert eng.search({"q": "anything", "limit": 5}).hits.count() == 0
     assert eng.count({}) == 0

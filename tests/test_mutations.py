@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from openaleph_search_spark.index.build import build_index
 from openaleph_search_spark.index.mutate import (
-    compact, delete_by_ids, delete_docs, read_tombstones)
+    compact, delete_by_ids, delete_docs, read_tombstones, upsert_docs)
 from openaleph_search_spark.index.storage import IndexStorage
 from openaleph_search_spark.query.engine import Engine
 
@@ -174,10 +174,14 @@ def test_append_preserves_field_config(spark, fixture_docs_df, tmp_path):
     # fielded query hits the APPENDED doc (c/long.rs has path tokens)
     assert ("c/long.rs", ) [0] in [p for p, _ in
                                    _hits(e_inc, {"q": "path:long"})]
-    # per-field scores identical to the from-scratch build
+    # per-field scores identical to the from-scratch build; tied hits
+    # are compared by path, since the appended part numbers its docs
+    # apart from the full build's parts
+    def ranked(eng, q):
+        return sorted(_hits(eng, {"q": q}), key=lambda h: (-h[1], h[0]))
     for q in ("path:long", "repo:r3", "lang:rs",
               '"kwazulu natal"', "banana OR kwazulu"):
-        assert _hits(e_inc, {"q": q}) == _hits(e_full, {"q": q}), q
+        assert ranked(e_inc, q) == ranked(e_full, q), q
     meta = IndexStorage(inc).read_meta()
     assert meta["avgdl_by_field"].keys() == \
         IndexStorage(full).read_meta()["avgdl_by_field"].keys()
@@ -573,3 +577,172 @@ def test_streaming_dedup_stateful(spark, tmp_path):
         assert flags.count(False) == 1
     # 'same text' appears 3x -> 2 dups; total dups = 3
     assert sum(r["is_duplicate"] for r in rows) == 3
+
+
+# -- writes sized by their work ------------------------------------------------
+def _batch_file(spark, docs, path, commit):
+    """``docs`` re-versioned as ``commit``, read back from ONE parquet
+    file: a one-partition micro-batch source."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    pq.write_table(pa.Table.from_pandas(
+        docs.withColumn("commit", F.lit(commit)).toPandas(),
+        preserve_index=False), path)
+    return spark.read.parquet(path)
+
+
+def _ranked(eng, q, n=50):
+    """Hits as (path, score), tied scores ordered by path."""
+    return sorted(_hits(eng, {"q": q}, n), key=lambda h: (-h[1], h[0]))
+
+
+def test_writes_run_at_most_one_job(spark, spark_jobs, fixture_docs_df,
+                                    sf_docs_df, tmp_path):
+    """append_batch, delete_docs and upsert_docs run as many Spark jobs
+    as their work needs (one; upsert two), also on an index that is
+    already tombstoned and appended, and however many tombstone files
+    it holds; opening an Engine and its first small search run none."""
+    from openaleph_search_spark.streaming.incremental import append_batch
+    out = str(tmp_path / "idx_jobs")
+    build_index(spark, fixture_docs_df, out, num_partitions=4,
+                num_shards=2)
+    st = IndexStorage(out)
+    n, jobs = spark_jobs(lambda: delete_docs(spark, st, "lang = 'go'"))
+    assert n == 1 and len(jobs) == 1
+    parts = len(st.completed_partitions())
+    for i, commit in enumerate(("v2", "v3")):
+        batch = _batch_file(spark, sf_docs_df,
+                            str(tmp_path / f"{commit}.parquet"), commit)
+        assert batch.count() == 500
+        _, jobs = spark_jobs(lambda: append_batch(spark, batch, out, i))
+        assert jobs == [[1]]  # one job of one task
+        # one new part per batch of ≤ TARGET_DOCS_PER_PARTITION docs
+        assert len(st.completed_partitions()) == parts + i + 1
+    assert st.read_meta()["n_docs"] == 10 + 2 * 500
+
+    # the tombstone bookkeeping does not grow with the tombstone files
+    paths = sorted(r["path"] for r in sf_docs_df.limit(40).collect())
+    for k in range(3):
+        delete_docs(spark, st, F.col("path") == paths[k])
+    n, jobs = spark_jobs(lambda: delete_docs(
+        spark, st, F.col("path").isin(paths[3:10])))
+    assert len(jobs) == 1 and n == 2 * 7
+    _, jobs = spark_jobs(lambda: delete_docs(spark, st, "lang = 'go'"))
+    assert len(jobs) == 1
+
+    # upsert re-versions 20 v2 docs, some of them deleted: afterwards
+    # each identity has one live row, and every upserted doc is live
+    up_paths = paths[20:37] + paths[:3]
+    up = _batch_file(spark, sf_docs_df.filter(F.col("path").isin(up_paths)),
+                     str(tmp_path / "up.parquet"), "v2")
+
+    def live_v2(eng):
+        return eng.doc_meta.filter((F.col("commit") == "v2")
+                                   & F.col("path").isin(up_paths))
+    before = Engine(spark, out)
+    n_live, n_up = before.doc_meta.count(), live_v2(before).count()
+    assert n_up < 20
+    _, jobs = spark_jobs(lambda: upsert_docs(spark, st, up))
+    assert len(jobs) <= 2
+    eng = Engine(spark, out)
+    assert eng.doc_meta.count() == n_live + 20 - n_up
+    assert live_v2(eng).count() == 20
+    assert eng.doc_meta.groupBy("repo", "path", "commit").count() \
+        .filter("count > 1").count() == 0
+
+    def open_and_search():
+        e = Engine(spark, out)
+        return e.search({"q": "banana OR the", "limit": 5}).hits.collect()
+    rows, jobs = spark_jobs(open_and_search)
+    assert jobs == [] and len(rows) == 5
+
+
+def test_append_job_path_matches_driver_path(spark, monkeypatch,
+                                             fixture_docs_df, sf_docs_df,
+                                             tmp_path):
+    """A batch larger than a part runs the grouped job; its index
+    answers like the one the driver path wrote."""
+    from openaleph_search_spark.streaming import incremental
+    batch = _batch_file(spark, sf_docs_df, str(tmp_path / "b.parquet"),
+                        "v2")
+    engines = []
+    for limit in (incremental.TARGET_DOCS_PER_PARTITION, 100):
+        monkeypatch.setattr(incremental, "TARGET_DOCS_PER_PARTITION", limit)
+        out = str(tmp_path / f"idx_{limit}")
+        build_index(spark, fixture_docs_df, out, num_partitions=4,
+                    num_shards=2, bigrams=True)
+        incremental.append_batch(spark, batch, out, 0)
+        engines.append(Engine(spark, out))
+    driver, job = engines
+    assert len(job.storage.completed_partitions()) == 8
+    assert len(driver.storage.completed_partitions()) == 5
+    assert job.storage.read_meta()["n_docs"] == \
+        driver.storage.read_meta()["n_docs"] == 510
+    for q in ("banana", "merge OR join", '"key order"', "lang:go",
+              "path:banana"):
+        assert _ranked(job, q) == _ranked(driver, q), q
+        assert job.count({"q": q}) == driver.count({"q": q}), q
+
+
+def test_delete_crash_leaves_no_tombstone(spark, mutable_index,
+                                          monkeypatch):
+    """A delete that dies after writing its tombstone's temp file
+    changes nothing a reader sees; the next delete counts from
+    scratch."""
+    from openaleph_search_spark.index.fsio import FsIO
+    st = IndexStorage(mutable_index)
+    delete_docs(spark, st, "lang = 'md'")
+    want = _hits(Engine(spark, mutable_index), {"q": "banana OR crime"})
+    real = FsIO._write_atomic
+
+    def crash_before_publish(self, uri, write):
+        def write_then_die(tmp):
+            write(tmp)
+            raise RuntimeError("simulated crash")
+        real(self, uri, write_then_die)
+    monkeypatch.setattr(FsIO, "_write_atomic", crash_before_publish)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        delete_docs(spark, st, "lang = 'go'")
+    monkeypatch.undo()
+    names = os.listdir(os.path.join(mutable_index, "tombstones"))
+    assert sum(n.endswith(".parquet") for n in names) == 1
+    assert any(n.startswith(".") for n in names)  # the temp file
+    assert read_tombstones(spark, st).count() == 1
+    eng = Engine(spark, mutable_index)
+    assert _hits(eng, {"q": "banana OR crime"}) == want
+    assert eng.stats()["tombstoned_docs"] == 1
+    assert delete_docs(spark, st, "lang = 'go'") == 1
+
+
+def test_all_null_meta_column_in_a_part(spark, fixture_docs_df, tmp_path):
+    """A part whose docs are all null in a meta column still writes the
+    column with its real type, so doc_meta, a hydrated search and the
+    export read every part; appends keep the type too."""
+    from openaleph_search_spark.index.mutate import export_index
+    from openaleph_search_spark.streaming.incremental import append_batch
+    part = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(4))
+    docs = (fixture_docs_df
+            .withColumn("owner", F.when(part != 0, F.col("repo")))
+            .withColumn("stars", F.when(part != 0, F.length("path")))
+            .withColumn("created", F.when(part != 0, F.expr(
+                "timestamp'2021-03-04 05:06:07'"))))
+    assert docs.filter(part == 0).count() >= 1
+    out = str(tmp_path / "idx_nulls")
+    build_index(spark, docs, out, num_partitions=4, num_shards=2,
+                meta_cols=["owner", "stars", "created"])
+    # an appended batch that is all null in every meta column
+    append_batch(spark, docs.filter(part == 0).withColumn(
+        "commit", F.lit("c9")), out, 0)
+    eng = Engine(spark, out)
+    types = dict(eng.doc_meta.dtypes)
+    assert (types["owner"], types["stars"], types["created"]) == \
+        ("string", "int", "timestamp")
+    n = 10 + docs.filter(part == 0).count()
+    assert len(eng.doc_meta.collect()) == n
+    assert len(export_index(spark, eng.storage).collect()) == n
+    hits = eng.search({"q": "banana OR kwazulu OR crime OR fruit",
+                       "limit": 20}).hits.collect()
+    assert any(h["owner"] is None for h in hits)
+    assert any(h["owner"] is not None for h in hits)
+    row = eng.doc_meta.filter(F.col("created").isNotNull()).first()
+    assert row["created"].isoformat() == "2021-03-04T05:06:07"

@@ -551,8 +551,7 @@ def test_gathered_hits_keep_types(spark, fixture_docs_df, tmp_path,
     from openaleph_search_spark.query.engine import Engine
     from pyspark.sql import Window
     # null out one meta value per source part (of the parts holding ≥2
-    # docs): a part whose column is all-null would write a null-typed
-    # parquet column that Spark cannot read back
+    # docs)
     part = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(4))
     w = Window.partitionBy(part)
     kept = ~((F.row_number().over(w.orderBy("path")) == 1)

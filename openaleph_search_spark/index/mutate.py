@@ -135,7 +135,8 @@ _PAYLOADS = ("docs_payload", "tfs_payload", "dls_payload", "pos_payload")
 def _source_parts(storage: IndexStorage) -> list[int]:
     """Source parts of the index, from ``doc_meta/part=<p>.parquet``.
     Raises ValueError when a data file breaks that naming (what a
-    layout-6 compaction left behind): such an index must be rebuilt."""
+    layout-6 compaction or a foreign writer left behind): neither
+    compact() nor a query can read such an index, it must be rebuilt."""
     from .build import LAYOUT_VERSION
     parts = []
     for name in storage.io.listdir(storage.doc_meta_dir):
@@ -144,10 +145,10 @@ def _source_parts(storage: IndexStorage) -> list[int]:
         m = PART_FILE.fullmatch(name)
         if m is None:
             raise ValueError(
-                f"compact() needs the layout-{LAYOUT_VERSION} per-part "
+                f"the index needs the layout-{LAYOUT_VERSION} per-part "
                 f"files, but doc_meta/{name} is not part=<int>.parquet "
-                "(an index compacted under layout 6 or older): rebuild "
-                "the index")
+                "(an index compacted under layout 6 or older, or a "
+                "foreign file): rebuild the index")
         parts.append(int(m.group(1)))
     return sorted(parts)
 

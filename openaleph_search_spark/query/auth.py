@@ -9,16 +9,15 @@ the dataset field is ``repo``.
 * empty dataset set → match_none (an unauthenticated user sees nothing)
 * otherwise        → mandatory terms filter ``repo IN datasets``
 
-The filter is injected by ``Engine.search``/``count`` BEFORE any
-user-supplied filters, so an explicit ``filter:repo`` can never widen
-visibility. With ``Engine(require_auth=True)`` a search without an
-auth object raises (reference OPENALEPH_SEARCH_AUTH=true behavior).
+The filter is one conjunct of every read's doc_meta restriction
+(``query/filters.py``, where its rule lives), so an explicit
+``filter:repo`` can never widen visibility. With
+``Engine(require_auth=True)`` a search without an auth object raises
+(reference OPENALEPH_SEARCH_AUTH=true behavior).
 """
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -27,11 +26,3 @@ class SearchAuth:
     logged_in: bool = False
     is_admin: bool = False
     role: str | None = None
-
-    def predicate(self, auth_field: str = "repo"):
-        """→ Spark Column predicate, or None for the admin bypass."""
-        if self.is_admin:
-            return None  # match_all
-        if not self.datasets:
-            return F.lit(False)  # match_none
-        return F.col(auth_field).isin(sorted(self.datasets))

@@ -3,8 +3,9 @@
 (/root/reference/openaleph_search/search/logic.py:25-33 →
 query/queries.py:111 → query/base.py:469-533), Spark-first.
 
-Lifecycle: parse (driver) → plan (IR + filter split) → execute
-(per-shard grouped-map scatter, tiny gather) → hydrate (join doc_meta).
+Lifecycle: parse (driver) → plan (IR + filter split into a MetaSpec)
+→ execute (the scatter: per-group evaluation in the driver or one task
+per group, tiny gather) → hydrate (in-group, from doc_meta).
 Facet/post_filter interplay (Q10/A8): each facet is computed with every
 *other* facet's filter applied; hits get all filters — the match set is
 computed once and the branches reuse it
@@ -22,10 +23,10 @@ from pyspark.sql.types import (DoubleType, LongType, StringType,
 from ..analysis.analyzer import analyze_text
 from ..index.storage import IndexStorage
 from ..index.build import FIELD_SEP
-from .executor import MetaSpec, SearchExecutor, scatter_tasks
+from .executor import SearchExecutor, scatter_tasks, top_k
 from .facets import (cardinality, histogram_facet, metric_aggs,
                      significant_terms, terms_facet)
-from .parser import partial_date_bounds
+from .filters import MetaSpec, meta_spec
 from .ir import (Bool, DisMax, MatchAll, Node, PhraseLeaf, PrefixLeaf,
                  TermLeaf, WildcardLeaf)
 from .parser import SearchArgs, parse_args, parse_query_string
@@ -65,26 +66,15 @@ def _facet_size(sa, auth, f: str) -> int:
     return size
 
 
+def _pure_negative(tree: Node) -> bool:
+    return bool(isinstance(tree, Bool) and tree.must_not
+                and not tree.must and not tree.should)
+
+
 def _facet_total_on(sa, auth, f: str) -> bool:
     if _anon(auth) and f not in SMALL_FACETS:
         return False
     return f in sa.facet_total
-
-
-# the final cut of gathered scatter output runs here in pandas: a Spark
-# sort on a LocalRelation would still cost a job per query
-def _top_k(pdf: pd.DataFrame | None, k: int,
-           by: str | None = None) -> pd.DataFrame | None:
-    """Global top-k of gathered per-group hits by (score desc, doc_id
-    asc); per ``by`` value (one query of a batch) when given."""
-    if pdf is None:
-        return None
-    if by is None:
-        return pdf.sort_values(["score", "doc_id"],
-                               ascending=[False, True]).head(k)
-    return (pdf.sort_values([by, "score", "doc_id"],
-                            ascending=[True, False, True])
-            .groupby(by, sort=False).head(k))
 
 
 FACET_SCHEMA = StructType([StructField("value", StringType()),
@@ -120,7 +110,6 @@ class Engine:
             spark, self.storage,
             allow_leading_wildcard=allow_leading_wildcard)
         self._doc_meta: DataFrame | None = None
-        self._has_tombstones = False
         self.source_docs = source_docs
         self.require_auth = require_auth
         self.auth_field = auth_field
@@ -129,15 +118,19 @@ class Engine:
             synonyms = SynonymTable.from_file(synonyms)
         self.synonyms = synonyms
 
-    def _auth_pred(self, auth):
-        """Mandatory session ACL conjunct (query/auth.py semantics)."""
-        if auth is None:
-            if self.require_auth:
-                raise RuntimeError(
-                    "auth required: pass auth=SearchAuth(...) "
-                    "(reference model.py:11-28)")
-            return None
-        return auth.predicate(self.auth_field)
+    def _spec(self, auth, filters: dict | None = None,
+              sa: SearchArgs | None = None) -> MetaSpec:
+        """The read's doc_meta restriction: the session ACL, then
+        ``filters`` and ``sa``'s excludes, empties and ranges
+        (query/filters.py holds every rule)."""
+        if auth is None and self.require_auth:
+            raise RuntimeError(
+                "auth required: pass auth=SearchAuth(...) "
+                "(reference model.py:11-28)")
+        sa = sa or SearchArgs()
+        return meta_spec(self.spark, self.doc_meta.schema, filters,
+                         sa.excludes, sa.empties, sa.ranges, auth,
+                         self.auth_field)
 
     # -- public surface -------------------------------------------------------
     def analyze(self, text: str) -> list[tuple[str, int]]:
@@ -148,13 +141,12 @@ class Engine:
         """Planner debug (the ES ``_validate_query``/explain role),
         driver-only — zero Spark jobs beyond the cached term
         dictionary: the parsed IR, analyzed + dictionary-expanded
-        terms, the physical strategy ``search()`` would pick, the
-        query's ``est_postings`` (df summed over its terms) and
-        ``scatter_tasks``, the scatter job's task count (0 when the plan
-        evaluates in the driver, None when ``search()`` takes no scatter
-        path), and ``scatter_columns``, the postings columns the scatter
-        reads. Mirrors search()'s branch conditions; a drift here breaks the
-        test that asserts strategy names against observed plans."""
+        terms, the physical strategy ``search()`` takes (both read it
+        from ``_strategy``), the query's ``est_postings`` (df summed
+        over its terms), ``scatter_tasks``, the scatter's task count
+        (0 when the plan evaluates in the driver, None only for a
+        match-all doc_meta scan, which runs no scatter), and
+        ``scatter_columns``, the postings columns the scatter reads."""
         sa = args if isinstance(args, SearchArgs) else parse_args(args)
         tree = self._plan(sa)
         ex = self.executor
@@ -170,47 +162,12 @@ class Engine:
             " ".join(l.terms) for l in tree.leaves()
             if isinstance(l, PhraseLeaf)
             and ex._phrase_uses_bigrams(l, bigrams_on)]
-        need_pos = any(
-            isinstance(l, PhraseLeaf)
-            and not (ex._phrase_uses_bigrams(l, bigrams_on)
-                     and len(l.terms) == 2)
-            for l in tree.leaves())
-        pure_negative = (isinstance(tree, Bool) and tree.must_not
-                         and not tree.must and not tree.should)
-        post_fields = [f for f in sa.facets if f in sa.filters]
-        need_full = bool(sa.facets or sa.facet_total or sa.metrics
-                         or sa.facet_significant or sa.sort
-                         or sa.function_score or sa.search_after)
-        dtypes = dict(self.doc_meta.dtypes)
-        if (sa.facets and sa.k == 0 and not post_fields
-                and not sa.facet_total and not sa.metrics
-                and not sa.facet_significant and not sa.sort
-                and not sa.function_score and not sa.highlight
-                and not sa.search_after
-                and not isinstance(tree, MatchAll) and not pure_negative
-                and all(f not in sa.facet_interval
-                        and dtypes.get(f) == "string"
-                        for f in sa.facets)):
-            strategy = "facet_partials_cogroup"
-        elif isinstance(tree, MatchAll):
-            strategy = "match_all_meta_scan"
-        elif pure_negative:
-            strategy = "anti_join_scan"
-        elif need_full:
-            strategy = "full_match_then_branches"
-        else:
-            strategy = "topk_scatter_gather"
-        # the fan-out comes from the helper _scatter_exec runs; search()
-        # takes a scatter job unless the tree is match-all, the layout
-        # lost its per-part files, or a filter has no exact MetaSpec
-        # (pure-negative queries scatter their banned set unfiltered)
-        _, _, _, read_cols, est, groups = ex._scatter_plan([tree], sa.k)
-        scatter = (strategy != "match_all_meta_scan" and ex.scatter_ok()
-                   and (pure_negative or self._meta_spec(
-                       {f: v for f, v in sa.filters.items()
-                        if f not in post_fields}, sa, None) is not None))
-        mode = {"topk_scatter_gather": "hydrate",
-                "facet_partials_cogroup": "facet"}.get(strategy, "scores")
+        strategy = self._strategy(sa, tree)
+        _, _, need_pos, read_cols, est, groups = ex._scatter_plan(
+            [tree], sa.k)
+        scatter = strategy != "match_all_meta_scan"
+        mode = {"topk_scatter_gather": "topk",
+                "facet_partials_scatter": "facet"}.get(strategy, "scores")
         return {
             "query_tree": repr(tree),
             "strategy": strategy,
@@ -220,7 +177,8 @@ class Engine:
             "phrase_bigram_fast_path": phrase_fast,
             "k": sa.k,
             "pruning_eligible": strategy == "topk_scatter_gather",
-            "post_filter_fields": post_fields,
+            "post_filter_fields": [f for f in sa.facets
+                                   if f in sa.filters],
             "est_postings": est,
             "scatter_tasks": (scatter_tasks(mode, sa.k, est, len(groups))
                               if scatter else None),
@@ -232,33 +190,33 @@ class Engine:
         collection stats from meta, live/tombstoned doc counts, term
         dictionary size, and per-shard posting-block balance — the
         numbers an operator checks before blaming a slow query on
-        skew. One tiny Spark agg over block metadata columns."""
+        skew. Read through pyarrow over the scatter layout: blocks from
+        each postings file's Parquet footer, postings from its
+        ``doc_count`` column — no Spark job."""
+        import pyarrow.parquet as pq
+        from ..index.mutate import _read_dead
         meta = dict(self.executor.meta)
-        tombs = 0
-        from ..index.mutate import read_tombstones
-        t = read_tombstones(self.spark, self.storage)
-        if t is not None:
-            tombs = t.count()
-        shard_rows = (self.executor._postings()
-                      .groupBy("shard")
-                      .agg(F.count("*").alias("blocks"),
-                           F.sum("doc_count").alias("postings"))
-                      .collect())
-        shards = {int(r["shard"]): {"blocks": int(r["blocks"]),
-                                    "postings": int(r["postings"])}
-                  for r in shard_rows}
-        # iterate the FULL shard range: a completely empty shard emits
-        # no groupBy row, and skipping it would report balance 1.0 for
-        # maximal skew — the opposite of what the metric signals
-        for sid in range(int(meta.get("num_shards") or 0)):
-            shards.setdefault(sid, {"blocks": 0, "postings": 0})
+        lay = self.executor._scatter_layout()
+        S = int(meta.get("num_shards") or 0)
+        # the FULL shard range: a completely empty shard must report 0,
+        # or balance would read 1.0 for maximal skew
+        shards = {sid: {"blocks": 0, "postings": 0} for sid in range(S)}
+        for p, path in lay["post"].items():
+            with lay["fs"].open_input_file(path) as f:
+                pf = pq.ParquetFile(f)
+                sh = shards[p % S]
+                sh["blocks"] += pf.metadata.num_rows
+                sh["postings"] += int(pf.read(columns=["doc_count"])
+                                      .column(0).to_numpy().sum())
         post_counts = [s["postings"] for s in shards.values()] or [0]
         cache = self.executor._term_dict()
         n_terms = (int(cache[0].size) if cache is not None
                    else self.storage.term_stats(self.spark).count())
         return {
             "n_docs": meta.get("n_docs"),
-            "tombstoned_docs": tombs,
+            "tombstoned_docs": (int(_read_dead(lay["fs"],
+                                               lay["tombs"]).size)
+                                if lay["tombs"] else 0),
             "avgdl": meta.get("avgdl"),
             "num_shards": meta.get("num_shards"),
             "num_partitions": meta.get("num_partitions"),
@@ -277,11 +235,36 @@ class Engine:
             dm = self.storage.doc_meta(self.spark)
             from ..index.mutate import read_tombstones
             tombs = read_tombstones(self.spark, self.storage)
-            self._has_tombstones = tombs is not None
             if tombs is not None:
                 dm = dm.join(tombs, "doc_id", "left_anti")
             self._doc_meta = dm
         return self._doc_meta
+
+    def _strategy(self, sa: SearchArgs, tree: Node,
+                  with_total: bool = False) -> str:
+        """The physical strategy of a search: a match-all scans
+        doc_meta; pure NOT anti-joins its banned set; plain terms
+        facets over string meta columns with no hits, total or facet
+        interplay wanted take one scatter pass of per-group (value,
+        count) partials; anything else needing every match runs the
+        full match, then its branches; the rest is the gathered top-k."""
+        if isinstance(tree, MatchAll):
+            return "match_all_meta_scan"
+        if _pure_negative(tree):
+            return "anti_join_scan"
+        need_all = bool(sa.facet_total or sa.metrics or sa.facet_significant
+                        or sa.sort or with_total or sa.function_score
+                        or sa.search_after)
+        dtypes = dict(self.doc_meta.dtypes)
+        if (sa.facets and sa.k == 0 and not need_all and not sa.highlight
+                and not any(f in sa.filters for f in sa.facets)
+                and all(f not in sa.facet_interval
+                        and dtypes.get(f) == "string"
+                        for f in sa.facets)):
+            return "facet_partials_scatter"
+        if sa.facets or need_all:
+            return "full_match_then_branches"
+        return "topk_scatter_gather"
 
     def search(self, args: dict | SearchArgs, with_total: bool = False,
                auth=None) -> SearchResult:
@@ -318,90 +301,49 @@ class Engine:
 
         # split filters: filters on faceted fields become post-filters
         # (reference base.py:99-123) so each facet excludes its own.
+        # The ACL rides in the pre-filter spec, so facets and
+        # post-filters all run inside the visibility set; an explicit
+        # filter: can never widen it.
         post_fields = [f for f in sa.facets if f in sa.filters]
-        pre_filters = {f: v for f, v in sa.filters.items()
-                       if f not in post_fields}
-        pre_pred = self._predicate(pre_filters, sa)
-        auth_pred = self._auth_pred(auth)
-        if auth_pred is not None:
-            # injected BEFORE user filters — facets and post-filters all
-            # run inside the visibility set; never widened by filter:
-            pre_pred = auth_pred if pre_pred is None \
-                else (auth_pred & pre_pred)
-        base_meta = self.doc_meta.filter(pre_pred) if pre_pred is not None \
-            else self.doc_meta
+        spec = self._spec(auth, {f: v for f, v in sa.filters.items()
+                                 if f not in post_fields}, sa)
+        strategy = self._strategy(sa, tree, with_total)
 
-        need_full_match = bool(sa.facets or sa.facet_total or sa.metrics
-                               or sa.facet_significant
-                               or sa.sort or with_total
-                               or sa.function_score or sa.search_after)
-        pure_negative = (isinstance(tree, Bool) and tree.must_not
-                         and not tree.must and not tree.should)
-
-        # facet-only fast path: plain terms facets over string meta
-        # columns with no hits/total/interplay wanted → ONE cogrouped
-        # pass emitting per-shard (value, count) partials; the match
-        # set never shuffles (executor.facet_counts)
-        dtypes = dict(self.doc_meta.dtypes)
-        if (sa.facets and sa.k == 0 and not post_fields
-                and not sa.facet_total and not sa.metrics
-                and not sa.facet_significant and not sa.sort
-                and not with_total and not sa.function_score
-                and not sa.highlight and not sa.search_after
-                and not isinstance(tree, MatchAll)
-                and not pure_negative
-                and all(f not in sa.facet_interval
-                        and dtypes.get(f) == "string"
-                        for f in sa.facets)):
-            # scatter variant: each group reads its own doc_meta slice
-            # for the facet values, and the partials of every facet are
-            # gathered ONCE; the per-facet cuts run in pandas
-            spec = (self._meta_spec(pre_filters, sa, auth)
-                    if self.executor.scatter_ok() else None)
-            if spec is not None:
-                partials = self.executor.scatter_facet_counts(
-                    tree, sa.facets, spec)
-                facets = {
-                    f: self.executor.local_frame(
-                        _facet_cut(partials, f, _facet_size(sa, auth, f)),
-                        FACET_SCHEMA)
-                    for f in sa.facets}
-            else:
-                partials = self.executor.facet_counts(tree, sa.facets,
-                                                      base_meta)
-                facets = {
-                    f: (partials.filter(F.col("field") == f)
-                        .select("value", "count")
-                        .orderBy(F.desc("count"), F.asc("value"))
-                        .limit(_facet_size(sa, auth, f)))
-                    for f in sa.facets}
+        if strategy == "facet_partials_scatter":
+            # each group reads its own doc_meta slice for the facet
+            # values, and the partials of every facet are gathered
+            # ONCE; the per-facet cuts run in pandas
+            partials = self.executor.scatter_facets(
+                tree, sa.facets, spec)
+            facets = {
+                f: self.executor.local_frame(
+                    _facet_cut(partials, f, _facet_size(sa, auth, f)),
+                    FACET_SCHEMA)
+                for f in sa.facets}
             hits = (self.doc_meta.withColumn("score", F.lit(0.0))
                     .limit(0))
             return SearchResult(hits=hits, facets=facets)
-        if isinstance(tree, MatchAll):
+        if strategy == "topk_scatter_gather":
+            # per-group top-k evaluated AND hydrated where the group
+            # runs; the global cut on ≤ groups×k rows runs here in
+            # pandas — no exchange, no hydrate join, and the hits are a
+            # LocalRelation
+            raw = self.executor.scatter_topk_hydrated(
+                tree, sa.k, spec, self.doc_meta.columns)
+            hits = self.executor.local_frame(top_k(raw, sa.k),
+                                             self._hits_schema())
+            if sa.highlight:
+                hits = self._highlight(hits, tree, sa)
+            return SearchResult(hits=self._dehydrate(hits, sa))
+
+        base_meta = self.doc_meta.filter(spec.column())
+        if strategy == "match_all_meta_scan":
             matched = base_meta.withColumn("score", F.lit(0.0))
-        elif pure_negative:
-            # "NOT x" = match_all minus the negated set (ES lenient
-            # query_string semantics); unscored, _doc order
-            banned = self.executor.run(
-                Bool(should=tree.must_not), k=None)
-            matched = (base_meta.join(banned.select("doc_id"),
-                                      "doc_id", "left_anti")
-                       .withColumn("score", F.lit(0.0)))
-        elif need_full_match:
-            # only cogroup the doc_meta filter set into the executor
-            # when a predicate/ACL/tombstone actually restricts it —
-            # otherwise the full doc_meta would shuffle for nothing
-            self.doc_meta  # resolve tombstone state
-            fdf = base_meta if (pre_pred is not None
-                                or self._has_tombstones) else None
-            spec = None
-            if fdf is not None and self.executor.scatter_ok():
-                spec = self._meta_spec(pre_filters, sa, auth)
-                if spec is not None:
-                    fdf = None  # restriction rides inside the scatter
-            ids = self.executor.run(tree, k=None, filter_df=fdf,
-                                    spec=spec)
+        elif strategy == "anti_join_scan":
+            matched = self._anti_join(base_meta, tree) \
+                .withColumn("score", F.lit(0.0))
+        else:
+            ids = self.executor.run(tree, k=None, spec=spec)
             matched = base_meta.join(ids, "doc_id")
             if sa.function_score:
                 # Q21 function_score (queries.py:227-277): additive
@@ -410,50 +352,10 @@ class Engine:
                 matched = matched.withColumn(
                     "score",
                     F.col("score") + F.sqrt(0.5 * F.col("doc_len")))
-        else:
-            self.doc_meta  # ensure tombstone state resolved
-            filter_needed = (pre_pred is not None or bool(post_fields)
-                             or self._has_tombstones)
-            hits = None
-            if self.executor.scatter_ok():
-                spec = (self._meta_spec(pre_filters, sa, auth)
-                        if filter_needed else None)
-                if spec is not None or not filter_needed:
-                    # per-group top-k evaluated AND hydrated where the
-                    # group runs; the global cut on ≤ groups×k rows runs
-                    # here in pandas — no exchange, no hydrate join, and
-                    # the hits are a LocalRelation
-                    schema = self._hits_schema()
-                    raw = self.executor.scatter_topk_hydrated(
-                        tree, sa.k, spec, self.doc_meta.columns)
-                    hits = self.executor.local_frame(
-                        _top_k(raw, sa.k), schema)
-            if hits is None:
-                filter_df = base_meta if filter_needed else None
-                topk = self.executor.topk(tree, sa.k,
-                                          filter_df=filter_df)
-                # hydrate: the top-k side is bounded (≤ shards × k
-                # rows) — broadcast it so doc_meta never shuffles for
-                # a lookup of a few hundred ids (without the hint,
-                # Catalyst plans a sort-merge join until AQE maybe
-                # converts it at runtime)
-                meta_cols = [c for c in self.doc_meta.columns
-                             if c != "doc_id"]
-                hits = (self.doc_meta.join(F.broadcast(topk), "doc_id")
-                        .select("doc_id", "score", *meta_cols)
-                        .orderBy(F.desc("score"), F.asc("doc_id")))
-            if post_fields:
-                hits = hits.filter(self._post_pred(sa, post_fields))
-            hits = hits.limit(sa.k)
-            if sa.highlight:
-                hits = self._highlight(hits, tree, sa)
-            return SearchResult(hits=self._dehydrate(hits, sa))
 
         facets, facet_totals, significant = {}, {}, {}
         for f in sa.facets:
-            others = [g for g in post_fields if g != f]
-            branch = matched.filter(self._post_pred(sa, others)) \
-                if others else matched
+            branch = self._post_filter(matched, sa, post_fields, f)
             if f in sa.facet_interval:
                 # A3 through the arg dialect: calendar buckets for
                 # date/timestamp fields, width buckets for numerics
@@ -467,14 +369,11 @@ class Engine:
         for f in sa.facet_significant:
             # A5 through the arg dialect: matched docs as foreground,
             # the whole (live) collection as background
-            others = [g for g in post_fields if g != f]
-            branch = matched.filter(self._post_pred(sa, others)) \
-                if others else matched
+            branch = self._post_filter(matched, sa, post_fields, f)
             significant[f] = significant_terms(
                 branch, self.doc_meta, f, _facet_size(sa, auth, f))
 
-        fully = matched.filter(self._post_pred(sa, post_fields)) \
-            if post_fields else matched
+        fully = self._post_filter(matched, sa, post_fields)
         metrics_df = metric_aggs(fully, sa.metrics) if sa.metrics else None
         total = fully.count() if with_total else None
 
@@ -502,11 +401,11 @@ class Engine:
         """ES ``_msearch``, Spark-first: every query's tree evaluates in
         ONE scatter pass (shared postings read + decode cache per
         group), hydrated in-group; the per-query top-k cut runs on the
-        gathered rows. → DataFrame(doc_id, score, query_id, …doc_meta
-        cols) with ≤ k rows per query — the batch-native result shape (the
+        gathered rows in pandas — no doc_meta join, no window. →
+        DataFrame(doc_id, score, query_id, …doc_meta cols) with ≤ k
+        rows per query — the batch-native result shape (the
         reference's msearch fans out N HTTP requests instead;
         openaleph_search uses it for checksum batch counts)."""
-        from pyspark.sql import Window
         trees = {}
         for qid, a in queries.items():
             sa = a if isinstance(a, SearchArgs) else parse_args(a)
@@ -517,39 +416,18 @@ class Engine:
             tree = self._plan(sa)
             if not isinstance(tree, MatchAll):
                 trees[str(qid)] = tree
-        auth_pred = self._auth_pred(auth)
-        if not trees:
-            return (self.doc_meta.withColumn("score", F.lit(0.0))
-                    .withColumn("query_id", F.lit("")).limit(0))
-        # ACL/tombstones must restrict the per-group top-k itself
+        # ACL/tombstones restrict the per-group top-k itself
         # (filtering after the cut would drop hits without refill)
-        dm = self.doc_meta if auth_pred is None \
-            else self.doc_meta.filter(auth_pred)
-        fdf = dm if (auth_pred is not None
-                     or self._has_tombstones) else None
-        spec = None
-        if fdf is not None and self.executor.scatter_ok():
-            spec = self._auth_spec(auth)
-        if self.executor.scatter_ok() and (fdf is None or spec is not None):
-            # per-query top-k evaluated and hydrated in-group; the
-            # per-query cut runs here in pandas on ≤ groups×queries×k
-            # rows — no doc_meta join, no window
-            hit = self._hits_schema().fields
-            raw = self.executor.scatter_multi_hydrated(
-                trees, k, spec, self.doc_meta.columns)
-            if raw is not None:
-                raw = raw.rename(columns={"entity_id": "query_id"})
-            return self.executor.local_frame(
-                _top_k(raw, k, by="query_id"), StructType([
-                    *hit[:2], StructField("query_id", StringType()),
-                    *hit[2:]]))
-        res = self.executor.run_multi(trees, k, filter_df=fdf)
-        return (res.withColumnRenamed("entity_id", "query_id")
-                .join(dm, "doc_id")
-                .withColumn("_rn", F.row_number().over(
-                    Window.partitionBy("query_id").orderBy(
-                        F.desc("score"), F.asc("doc_id"))))
-                .filter(F.col("_rn") <= k).drop("_rn"))
+        spec = self._spec(auth)
+        hit = self._hits_schema().fields
+        raw = (self.executor.scatter_multi_hydrated(
+            trees, k, spec, self.doc_meta.columns) if trees else None)
+        if raw is not None:
+            raw = raw.rename(columns={"entity_id": "query_id"})
+        return self.executor.local_frame(
+            top_k(raw, k, by="query_id"), StructType([
+                *hit[:2], StructField("query_id", StringType()),
+                *hit[2:]]))
 
     def export(self, args: dict | SearchArgs | None = None, auth=None,
                include_fields: list[str] | None = None,
@@ -562,24 +440,14 @@ class Engine:
         sa = (args if isinstance(args, SearchArgs)
               else parse_args(args or {}))
         tree = self._plan(sa)
-        pred = self._predicate(sa.filters, sa)
-        auth_pred = self._auth_pred(auth)
-        if auth_pred is not None:
-            pred = auth_pred if pred is None else (auth_pred & pred)
-        base = self.doc_meta.filter(pred) if pred is not None \
-            else self.doc_meta
+        spec = self._spec(auth, sa.filters, sa)
+        base = self.doc_meta.filter(spec.column())
         if isinstance(tree, MatchAll):
             out = base
-        elif isinstance(tree, Bool) and tree.must_not and not tree.must \
-                and not tree.should:
-            banned = self.executor.run(Bool(should=tree.must_not), k=None)
-            out = base.join(banned.select("doc_id"), "doc_id",
-                            "left_anti")
+        elif _pure_negative(tree):
+            out = self._anti_join(base, tree)
         else:
-            self.doc_meta  # resolve tombstone state
-            fdf = base if (pred is not None
-                           or self._has_tombstones) else None
-            ids = self.executor.run(tree, k=None, filter_df=fdf)
+            ids = self.executor.run(tree, k=None, spec=spec)
             out = base.join(ids.select("doc_id"), "doc_id")
         cols = list(out.columns)
         if include_fields:
@@ -593,23 +461,32 @@ class Engine:
         """Q31: filtered match count without hits."""
         sa = args if isinstance(args, SearchArgs) else parse_args(args)
         tree = self._plan(sa)
-        pred = self._predicate(sa.filters, sa)
-        auth_pred = self._auth_pred(auth)
-        if auth_pred is not None:
-            pred = auth_pred if pred is None else (auth_pred & pred)
-        base = self.doc_meta.filter(pred) if pred is not None else self.doc_meta
+        spec = self._spec(auth, sa.filters, sa)
         if isinstance(tree, MatchAll):
-            return base.count()
-        if isinstance(tree, Bool) and tree.must_not and not tree.must \
-                and not tree.should:
-            banned = self.executor.run(Bool(should=tree.must_not), k=None)
-            return base.join(banned.select("doc_id"), "doc_id",
-                             "left_anti").count()
-        if self.executor.scatter_ok():
-            spec = self._meta_spec(sa.filters, sa, auth)
-            if spec is not None:
-                return self.executor.scatter_count(tree, spec)
-        return self.executor.run(tree, k=None, filter_df=base).count()
+            return self.doc_meta.filter(spec.column()).count()
+        if _pure_negative(tree):
+            return self._anti_join(
+                self.doc_meta.filter(spec.column()), tree).count()
+        return self.executor.scatter_count(tree, spec)
+
+    def _anti_join(self, base: DataFrame, tree: Bool) -> DataFrame:
+        """"NOT x" = ``base`` minus the negated set (ES lenient
+        query_string semantics); unscored, _doc order. The banned set
+        is the raw postings' match: ``base`` is live already."""
+        banned = self.executor.run(Bool(should=tree.must_not), k=None)
+        return base.join(banned.select("doc_id"), "doc_id", "left_anti")
+
+    def _post_filter(self, matched: DataFrame, sa: SearchArgs,
+                     post_fields: list[str],
+                     facet: str | None = None) -> DataFrame:
+        """``matched`` under the post-filters of every faceted field
+        but ``facet`` (each facet excludes its own filter)."""
+        fields = [f for f in post_fields if f != facet]
+        if not fields:
+            return matched
+        return matched.filter(meta_spec(
+            self.spark, self.doc_meta.schema,
+            {f: sa.filters[f] for f in fields}).column())
 
     @staticmethod
     def _cursor_literal(cv, dtype: str):
@@ -683,53 +560,6 @@ class Engine:
             StructField("doc_id", LongType()),
             StructField("score", DoubleType()),
             *(f for f in self.doc_meta.schema.fields if f.name != "doc_id")])
-
-    def _meta_spec(self, filters: dict[str, list[str]], sa: SearchArgs,
-                   auth) -> MetaSpec | None:
-        """Translate the doc_meta restriction (auth + filters +
-        excludes + empties) into a :class:`MetaSpec` for the scatter
-        path — ONLY when the translation is provably exact (string
-        equality/isin and null checks). Ranges, casts and non-string
-        columns return None → the legacy cogrouped plan runs."""
-        if sa.ranges:
-            return None
-        dtypes = dict(self.doc_meta.dtypes)
-        conj: list[tuple] = []
-        if auth is not None and not auth.is_admin:
-            if not auth.datasets:
-                return MetaSpec(match_none=True)
-            if dtypes.get(self.auth_field) != "string":
-                return None
-            conj.append(("in", self.auth_field,
-                         tuple(sorted(auth.datasets))))
-        for f, vals in filters.items():
-            if dtypes.get(f) != "string" or not all(
-                    isinstance(v, str) for v in vals):
-                return None
-            conj.append(("in", f, tuple(vals)))
-        for f, vals in sa.excludes.items():
-            if dtypes.get(f) != "string" or not all(
-                    isinstance(v, str) for v in vals):
-                return None
-            conj.append(("notin_or_null", f, tuple(vals)))
-        for f in sa.empties:
-            if f not in dtypes:
-                return None
-            conj.append(("isnull", f, ()))
-        return MetaSpec(conjuncts=tuple(conj))
-
-    def _auth_spec(self, auth) -> MetaSpec | None:
-        """Auth-only MetaSpec (msearch path — no user filters there)."""
-        if auth is None:
-            return MetaSpec()
-        if auth.is_admin:
-            return MetaSpec()
-        if not auth.datasets:
-            return MetaSpec(match_none=True)
-        if dict(self.doc_meta.dtypes).get(self.auth_field) != "string":
-            return None
-        return MetaSpec(conjuncts=(
-            ("in", self.auth_field, tuple(sorted(auth.datasets))),))
 
     def _plan(self, sa: SearchArgs) -> Node:
         tree = parse_query_string(sa.q)
@@ -834,49 +664,6 @@ class Engine:
             return n
         return walk(node)
 
-    def _predicate(self, filters: dict[str, list[str]], sa: SearchArgs):
-        pred = None
-
-        def conj(p):
-            nonlocal pred
-            pred = p if pred is None else (pred & p)
-
-        for f, vals in filters.items():
-            conj(F.col(f) == vals[0] if len(vals) == 1
-                 else F.col(f).isin(vals))
-        for f, vals in sa.excludes.items():
-            conj(~(F.col(f).isin(vals)) | F.col(f).isNull())
-        for f in sa.empties:
-            conj(F.col(f).isNull())
-        for f, ops in sa.ranges.items():
-            dtype = (self.doc_meta.schema[f].dataType
-                     if f in self.doc_meta.columns else None)
-            dateish = dtype is not None and dtype.typeName() in (
-                "timestamp", "date", "timestamp_ntz")
-            for op, v in ops.items():
-                col = F.col(f)
-                if dateish:
-                    bounds = partial_date_bounds(v)
-                    if bounds is not None:
-                        start, end = bounds
-                        s_lit = F.lit(start).cast(dtype)
-                        e_lit = F.lit(end).cast(dtype)
-                        if start == end:  # full timestamp → exact point
-                            conj({"gte": col >= s_lit, "lte": col <= s_lit,
-                                  "gt": col > s_lit,
-                                  "lt": col < s_lit}[op])
-                        else:
-                            # ES partial-date semantics: the value names
-                            # a whole period (mapping.py:35,47)
-                            conj({"gte": col >= s_lit, "gt": col >= e_lit,
-                                  "lte": col < e_lit,
-                                  "lt": col < s_lit}[op])
-                        continue
-                lit = F.lit(v).cast(dtype) if dtype is not None else F.lit(v)
-                conj({"gte": col >= lit, "lte": col <= lit,
-                      "gt": col > lit, "lt": col < lit}[op])
-        return pred
-
     # short-code filter groups are never highlighted (reference
     # base.py:414-423: "es" for Spain would match German text)
     HIGHLIGHT_SKIP_FILTERS = {"lang"}
@@ -958,12 +745,3 @@ class Engine:
                 if c in hits.columns and c not in cols:
                     cols.append(c)
         return hits.select(*cols)
-
-    def _post_pred(self, sa: SearchArgs, fields: list[str]):
-        pred = F.lit(True)
-        for f in fields:
-            vals = sa.filters.get(f, [])
-            if vals:
-                pred = pred & (F.col(f) == vals[0] if len(vals) == 1
-                               else F.col(f).isin(vals))
-        return pred

@@ -2,13 +2,15 @@
 
 The reference delegates retrieval to ES/Lucene (WAND + impacts,
 implicit; /root/reference/openaleph_search/query/base.py:515-533 just
-calls ``es.search``).  Here the physical strategy is Spark-native:
+calls ``es.search``).  Here every query runs through ONE physical
+strategy, the scatter:
 
   scatter:  source parts split into evaluation groups sized by the
             query's posting volume; each group reads its postings
-            (term-filtered) and evaluates — in the driver when the
-            work fits one group, else one task per group (≈ one ES
-            shard search)
+            (term-filtered) and, when restricting or faceting, its own
+            doc_meta rows, and evaluates — in the driver when the work
+            fits one group, else one task per group (≈ one ES shard
+            search)
   gather:   each group emits ≤ k rows → one pandas merge and global
             cut in the driver (tiny: groups × k rows)
 
@@ -29,15 +31,14 @@ Scores are exact float64 Lucene BM25 regardless of pruning (pruning
 only skips docs that provably cannot reach the top-k), so results are
 rank- AND score-identical across shard counts and parallelism levels.
 
-Filters (dataset/lang/… predicates) are pushed into the evaluator:
-the scatter path applies a ``MetaSpec`` to each group's own doc_meta
-rows; the legacy path cogroups an allowed-doc_id DataFrame per shard.
-Either way the filter set is never collected to the driver.
+Filters (auth/dataset/lang/range … predicates) are pushed into the
+evaluator: each group applies a ``MetaSpec`` (query/filters.py) to the
+doc_meta rows it reads itself and subtracts tombstones, so the filter
+set is never shuffled or collected to the driver.
 """
 from __future__ import annotations
 
 import pickle
-from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -45,50 +46,35 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
 
-from ..index.build import (BIGRAM_FIELD, DOC_ID_PART_SHIFT, FIELD_SEP,
-                           field_of_term)
+from ..index.build import BIGRAM_FIELD, FIELD_SEP, field_of_term
 from ..index.codec import (bm25_idf, bm25_tfnorm, decode_positions,
                            varint_decode)
+from ..index.mutate import _read_dead, _source_parts, _tombstone_paths
 from ..index.storage import PART_FILE, IndexStorage
+from .filters import MetaSpec
 from .ir import (Bool, DisMax, MatchAll, Node, PhraseLeaf, PrefixLeaf,
                  TermLeaf, WildcardLeaf)
 
-RESULT_SCHEMA = "doc_id long, score double"
+RESULT_TYPE = StructType([StructField("doc_id", LongType()),
+                          StructField("score", DoubleType())])
+MULTI_TYPE = StructType([*RESULT_TYPE.fields,
+                         StructField("entity_id", StringType())])
 
 
-@dataclass(frozen=True)
-class MetaSpec:
-    """Driver-translatable doc_meta restriction for the scatter path.
-
-    Carries the SAME semantics as the engine's Column predicate for the
-    filter subset it supports — string equality/isin (``in``), excludes
-    with null-widening (``notin_or_null``), and is-null (``isnull``) —
-    so per-shard tasks can evaluate it on the doc_meta rows they read
-    themselves (no cogroup shuffle of the filter set). Anything richer
-    (ranges, casts, non-string comparisons) keeps the legacy cogrouped
-    path; the engine only builds a MetaSpec when translation is exact.
-    """
-    conjuncts: tuple = ()          # (op, column, tuple(values))
-    match_none: bool = False
-
-    def cols(self) -> list[str]:
-        return sorted({c[1] for c in self.conjuncts})
-
-    def mask(self, pdf: pd.DataFrame) -> np.ndarray:
-        m = np.ones(len(pdf), dtype=bool)
-        for op, col, vals in self.conjuncts:
-            s = pdf[col]
-            if op == "in":
-                # Spark `col == v` / `col.isin(vals)` is null-rejecting;
-                # pandas isin is False for nulls — identical outcome
-                m &= s.isin(vals).to_numpy()
-            elif op == "notin_or_null":
-                m &= (~s.isin(vals) | s.isna()).to_numpy()
-            elif op == "isnull":
-                m &= s.isna().to_numpy()
-            else:  # pragma: no cover - guarded at construction
-                raise ValueError(f"unknown MetaSpec op {op!r}")
-        return m
+# the final cut of gathered scatter output runs here in pandas: a Spark
+# sort on a LocalRelation would still cost a job per query
+def top_k(pdf: pd.DataFrame | None, k: int,
+          by: str | None = None) -> pd.DataFrame | None:
+    """Global top-k of gathered per-group hits by (score desc, doc_id
+    asc); per ``by`` value (one query of a batch) when given."""
+    if pdf is None:
+        return None
+    if by is None:
+        return pdf.sort_values(["score", "doc_id"],
+                               ascending=[False, True]).head(k)
+    return (pdf.sort_values([by, "score", "doc_id"],
+                            ascending=[True, False, True])
+            .groupby(by, sort=False).head(k))
 
 
 # ---------------------------------------------------------------------------
@@ -383,7 +369,7 @@ class _ShardEval:
                 # phrase tf ≤ each unigram tf and tfnorm is monotone in
                 # tf at fixed dl, so Σ idf_t·max_tfnorm_t bounds the
                 # Lucene PhraseQuery score (unigram blocks are always
-                # fetched for phrases — see _prepare/_leaf_terms)
+                # fetched for phrases — see _collect_terms)
                 return (sum(term_bound(t) for t in set(n.terms))
                         * n.boost)
             if isinstance(n, Bool):
@@ -559,8 +545,10 @@ def _scatter_eval_group(parts, fs, dm_paths, post_paths, tomb, items,
     """Evaluate one scatter group (a set of doc-disjoint source parts),
     in a task or in the driver: pyarrow-read the group's postings
     (term-filtered) — and, when restricting or faceting, its doc_meta
-    slice — then run the same _ShardEval kernel the cogrouped path
-    uses. Returns one pandas frame (mode-shaped) or None."""
+    slice, kept where ``spec.mask`` holds and the doc is live — then run
+    the _ShardEval kernel. Returns one pandas frame (mode-shaped) or
+    None."""
+    import pyarrow as pa
     import pyarrow.dataset as ds
 
     ppaths = [post_paths[p] for p in parts if p in post_paths]
@@ -573,16 +561,15 @@ def _scatter_eval_group(parts, fs, dm_paths, post_paths, tomb, items,
     if meta_read_cols is not None:
         mt = ds.dataset(gdm, filesystem=fs).to_table(
             columns=meta_read_cols)
-        meta_pdf = mt.to_pandas()
-        if spec is not None and spec.conjuncts:
-            meta_pdf = meta_pdf[spec.mask(meta_pdf)]
-        if tomb is not None and len(meta_pdf):
-            ids_m = meta_pdf["doc_id"].to_numpy(np.int64)
-            meta_pdf = meta_pdf[~np.isin(ids_m, tomb)]
-        meta_pdf = meta_pdf.sort_values("doc_id")
-        allowed = meta_pdf["doc_id"].to_numpy(np.int64)
+        keep = spec.mask(mt)
+        if tomb is not None:
+            keep &= ~_in_sorted(mt.column("doc_id").to_numpy(), tomb)
+        mt = mt.filter(pa.array(keep)).select(
+            ["doc_id", *(facet_fields or [])]).sort_by("doc_id")
+        allowed = mt.column("doc_id").to_numpy()
         if allowed.size == 0:
             return None
+        meta_pdf = mt.to_pandas()
 
     blocks = ds.dataset(ppaths, filesystem=fs).to_table(
         filter=ds.field("term").isin(term_list),
@@ -617,7 +604,7 @@ def _scatter_eval_group(parts, fs, dm_paths, post_paths, tomb, items,
         ids, _ = ev.eval(items[0][1], root=True)
         return pd.DataFrame({"n": [int(ids.size)]}) if ids.size else None
 
-    # scores | multi | hydrate: each tree's top-k (every match for k=None)
+    # scores | multi | topk: each tree's top-k (every match for k=None)
     rows = []
     for eid, tree in items:
         ids, scores = ev.eval(tree, root=True)
@@ -683,11 +670,11 @@ def _scatter_groups(parts: list[int], par: int,
 def scatter_gathers(mode: str, k: int | None) -> bool:
     """Whether a scatter mode's output is bounded, so it is gathered to
     the driver: count (≤ groups rows), facet (≤ groups × distinct
-    values), hydrate and multi with a k (≤ groups × trees × k). Scores
+    values), topk and multi with a k (≤ groups × trees × k). Scores
     never gather: with k=None (full match, pure-NOT, export) they are
     unbounded, so they stay a Spark DataFrame."""
     return mode in ("count", "facet") or (
-        mode in ("hydrate", "multi") and k is not None)
+        mode in ("topk", "multi") and k is not None)
 
 
 def scatter_tasks(mode: str, k: int | None, est_postings: int,
@@ -721,19 +708,9 @@ class SearchExecutor:
         # term dictionary, off unless the deployment opts in
         self.allow_leading_wildcard = allow_leading_wildcard
         self._dict_cache: tuple | None | bool = False  # False=unprobed
-        # scatter-path layout cache (same lifetime contract as the dict
-        # cache: mutations construct fresh Engines); False = unprobed
-        self._scatter: dict | None | bool = False
-        # the postings DataFrame handle is immutable lineage — opening
-        # the table per query re-lists the dataset (~0.4 s of
-        # driver time on a 16-shard index). Same lifetime contract as
-        # the dict cache: mutations construct fresh Engines.
-        self._postings_df: DataFrame | None = None
-
-    def _postings(self) -> DataFrame:
-        if self._postings_df is None:
-            self._postings_df = self.storage.postings(self.spark)
-        return self._postings_df
+        # scatter layout cache (same lifetime contract as the dict
+        # cache: mutations construct fresh Engines); None = unprobed
+        self._scatter: dict | None = None
 
     def _term_dict(self) -> tuple | None:
         """(sorted term ndarray, df ndarray) driver cache, or None when
@@ -920,29 +897,9 @@ class SearchExecutor:
                      and len(l.terms) == 2)
             for t in trees for l in t.leaves())
 
-    def shard_col(self, doc_id_col):
-        S = self.meta["num_shards"]
-        return F.pmod(F.shiftright(doc_id_col, DOC_ID_PART_SHIFT),
-                      F.lit(S)).cast("int")
-
-    def _prepare(self, trees: list[Node], k: int | None):
-        """Shared driver-side planning: prefix expansion, term stats →
-        idf, pruning-soundness guard, postings scan with term filter +
-        positions-column pruning. → (terms, ctx dict, postings)."""
-        terms, ctx, need_pos, cols, _ = self._plan_ctx(trees, k)
-        if not terms:
-            return terms, None, None
-        postings = (self._postings()
-                    .select(*cols)
-                    .filter(F.col("term").isin(terms)))
-        if not need_pos:
-            postings = postings.withColumn("pos_payload",
-                                           F.lit(b"").cast("binary"))
-        return terms, ctx, postings
-
     def _plan_ctx(self, trees: list[Node], k: int | None):
-        """Driver-side planning shared by the Catalyst and scatter
-        paths → (terms, ctx, need_pos, scan column list, est_postings).
+        """Driver-side planning → (terms, ctx, need_pos, postings read
+        columns, est_postings).
 
         ``est_postings`` is the sum of df over the resolved terms (the
         union across ``trees``): the query's posting volume, read from
@@ -977,14 +934,14 @@ class SearchExecutor:
         idf = {t: float(bm25_idf(float(d), n_docs)) for t, d in dfs.items()}
 
         # column pruning: positions are the fattest payload — only
-        # phrase queries read them (the parquet scan skips the column
+        # phrase queries read them (the scatter read skips the column
         # entirely otherwise; verified in tests/test_plans.py). With
         # bigram shingles a 2-term slop-0 phrase needs NO positions at
         # all (the bigram tf IS the phrase tf).
         bigrams_on = bool(self.meta.get("bigrams"))
         need_pos = self._need_positions(trees)
         # sum_tf intentionally absent: the evaluator never reads it
-        cols = ["term", "shard", "first_doc", "last_doc", "doc_count",
+        cols = ["term", "first_doc", "last_doc", "doc_count",
                 "max_tf", "min_dl", "docs_payload",
                 "tfs_payload", "dls_payload"]
         if need_pos:
@@ -1027,17 +984,17 @@ class SearchExecutor:
         pdf["block_max_tfnorm"] = tfm / (tfm + norm)
         return pdf
 
-    # -- scatter fast path ---------------------------------------------------
+    # -- the scatter ---------------------------------------------------------
     # Each evaluation group reads its own slice of the index (postings
-    # + doc_meta + tombstones) directly through pyarrow against the
-    # SAME files Spark would scan, evaluates with the SAME _ShardEval
-    # kernel, and (for top-k) hydrates from its own doc_meta files.
+    # + doc_meta + tombstones) directly through pyarrow, evaluates with
+    # the _ShardEval kernel, and (for top-k) hydrates from its own
+    # doc_meta files.
     # Where a group runs: a bounded plan whose work fits one group runs
     # in the driver (zero Spark jobs), ≥2 groups run as one
     # single-stage job (Range → MapInPandas, no exchange, one task per
     # group ≈ one ES shard search) whose tasks send their frames back.
     # The gather is a pandas merge of those frames (≤ groups × k rows);
-    # the engine makes the final cut there and wraps the result as a
+    # the final cut runs there and the result is wrapped as a
     # LocalRelation, so reading it runs no job either. Unbounded scores
     # (k=None) stay a DataFrame.
     #
@@ -1046,78 +1003,63 @@ class SearchExecutor:
     # terms for its docs, so any grouping of WHOLE source partitions
     # is a valid evaluation group — per-group top-k unions to a
     # superset of the global top-k, scores are exact per doc (global
-    # idf/avgdl live in ctx). The path only engages when the layout
-    # invariant (part=<int>.parquet naming) holds; every writer keeps
-    # it (compact() rewrites parts in place), so only a foreign or
-    # layout-6-compacted index falls back to the legacy cogrouped plan.
+    # idf/avgdl live in ctx). Every writer keeps the part=<int>.parquet
+    # naming (compact() rewrites parts in place). A doc_meta data file
+    # that breaks it raises ValueError: the index must be rebuilt. An
+    # empty index has no parts, and every read of it is empty.
 
-    def _scatter_layout(self) -> dict | None:
-        if self._scatter is not False:
-            return self._scatter
-        io = self.storage.io
-        S = int(self.meta.get("num_shards") or 0)
-        parts: list[int] = []
-        ok = S > 0
-        for n in io.listdir(self.storage.doc_meta_dir):
-            if not n.endswith(".parquet"):
-                continue
-            m = PART_FILE.fullmatch(n)
-            if not m:
-                ok = False
-                break
-            parts.append(int(m.group(1)))
-        if not ok or not parts:
-            self._scatter = None
-            return None
-        post: dict[int, str] = {}
-        for s in range(S):
-            sd = f"{self.storage.postings_dir}/shard={s}"
-            for n in io.listdir(sd):
-                m = PART_FILE.fullmatch(n)
-                if m:
-                    post[int(m.group(1))] = io.path(f"{sd}/{n}")
-        from ..index.mutate import tombstones_dir
-        td = tombstones_dir(self.storage)
-        tombs = [io.path(f"{td}/{n}") for n in io.listdir(td)
-                 if n.endswith(".parquet")]
-        self._scatter = {
-            "parts": sorted(parts),
-            "dm": {p: io.path(f"{self.storage.doc_meta_dir}"
-                              f"/part={p}.parquet") for p in parts},
-            "post": post,
-            "tombs": tombs,
-            "fs": io.fs,
-        }
+    def _scatter_layout(self) -> dict:
+        if self._scatter is None:
+            io = self.storage.io
+            parts = _source_parts(self.storage)
+            post: dict[int, str] = {}
+            for s in range(int(self.meta.get("num_shards") or 0)):
+                sd = f"{self.storage.postings_dir}/shard={s}"
+                for n in io.listdir(sd):
+                    m = PART_FILE.fullmatch(n)
+                    if m:
+                        post[int(m.group(1))] = io.path(f"{sd}/{n}")
+            self._scatter = {
+                "parts": parts,
+                "dm": {p: io.path(f"{self.storage.doc_meta_dir}"
+                                  f"/part={p}.parquet") for p in parts},
+                "post": post,
+                "tombs": _tombstone_paths(self.storage),
+                "fs": io.fs,
+            }
         return self._scatter
 
     def scatter_ok(self) -> bool:
-        return self._scatter_layout() is not None
+        """True for every index that opens (a layout the scatter cannot
+        read raises ValueError instead): the scatter is the only query
+        path."""
+        self._scatter_layout()
+        return True
 
     def _scatter_plan(self, trees: list[Node], k: int | None):
         """Driver-side scatter planning → (terms, ctx, need_pos,
         read_cols, est_postings, groups). The one place the fan-out and
         the projected postings columns are decided: ``_scatter_exec``
         runs it and ``Engine.explain`` reports it."""
-        terms, ctx, need_pos, cols, est = self._plan_ctx(trees, k)
-        lay = self._scatter_layout()
+        terms, ctx, need_pos, read_cols, est = self._plan_ctx(trees, k)
+        parts = self._scatter_layout()["parts"]
         groups = (_scatter_groups(
-            lay["parts"], self.spark.sparkContext.defaultParallelism, est)
-            if terms and lay is not None else [])
-        read_cols = [c for c in cols if c != "shard"]
+            parts, self.spark.sparkContext.defaultParallelism, est)
+            if terms and parts else [])
         return terms, ctx, need_pos, read_cols, est, groups
 
     def _scatter_exec(self, items: list[tuple], k: int | None,
                       spec: MetaSpec | None, mode: str,
-                      out_schema: str | None = None,
+                      out_schema: StructType | None = None,
                       meta_fields: list[str] | None = None,
                       facet_fields: list[str] | None = None):
         """Run the scatter. ``items`` = [(entity_id|None, tree)].
 
-        ``spec`` semantics: None → raw postings evaluation (matches the
-        legacy ``filter_df=None``); a MetaSpec (possibly with zero
-        conjuncts) → restrict to LIVE docs passing the conjuncts
-        (tombstones subtracted), matching ``filter_df=base_meta``.
-        Modes: scores | multi | hydrate | facet | count; ``meta_fields``
+        ``spec`` semantics: None → raw postings evaluation, tombstoned
+        docs included (for callers that anti-join the result against
+        live doc_meta); a MetaSpec (possibly with zero conjuncts) →
+        restrict to LIVE docs passing it (tombstones subtracted).
+        Modes: scores | multi | topk | facet | count; ``meta_fields``
         hydrates each group's hits from its own doc_meta files.
 
         A bounded mode (``scatter_gathers``) returns the per-group
@@ -1132,7 +1074,7 @@ class SearchExecutor:
         terms, ctx, need_pos, read_cols, est, groups = self._scatter_plan(
             [t for _, t in items], k)
         gather = scatter_gathers(mode, k)
-        if not terms or (spec is not None and spec.match_none):
+        if not groups or (spec is not None and spec.match_none):
             return None if gather else self.spark.createDataFrame(
                 [], out_schema)
         run = self._scatter_fn(
@@ -1153,7 +1095,7 @@ class SearchExecutor:
             frames = [pickle.loads(r["frame"]) for r in rows]
         return pd.concat(frames, ignore_index=True) if frames else None
 
-    def _scatter_job(self, n: int, run, out_schema: str) -> DataFrame:
+    def _scatter_job(self, n: int, run, out_schema) -> DataFrame:
         """One single-stage job of ``n`` tasks, task i running
         ``run([i])``: Range → MapInPandas, no exchange."""
         return (self.spark.range(0, n, 1, n)
@@ -1181,13 +1123,9 @@ class SearchExecutor:
             meta_read_cols = ["doc_id"] + spec_cols
 
         def run(gids):
-            import pyarrow.dataset as ds
             tomb = None
             if tomb_paths:
-                tt = ds.dataset(tomb_paths, filesystem=fs).to_table(
-                    columns=["doc_id"])
-                tomb = np.unique(tt.column("doc_id").to_numpy(
-                    zero_copy_only=False).astype(np.int64))
+                tomb = _read_dead(fs, tomb_paths)
             for gid in gids:
                 out = _scatter_eval_group(
                     groups[int(gid)], fs, dm_paths, post_paths,
@@ -1220,7 +1158,7 @@ class SearchExecutor:
         """Per-group top-k, hydrated from the group's own doc_meta
         files → pandas (doc_id, score, …meta_fields), ≤ k rows per
         group, unsorted (caller applies the global cut)."""
-        return self._scatter_exec([(None, tree)], k, spec, "hydrate",
+        return self._scatter_exec([(None, tree)], k, spec, "topk",
                                   meta_fields=meta_fields)
 
     def scatter_multi_hydrated(self, trees: dict[str, Node], k: int,
@@ -1238,206 +1176,42 @@ class SearchExecutor:
         out = self._scatter_exec([(None, tree)], None, spec, "count")
         return 0 if out is None else int(out["n"].sum())
 
-    def scatter_facet_counts(self, tree: Node, fields: list[str],
-                             spec: MetaSpec | None
-                             ) -> pd.DataFrame | None:
+    def scatter_facets(self, tree: Node, fields: list[str],
+                       spec: MetaSpec) -> pd.DataFrame | None:
         """Per-group (field, value, count) partials → one pandas frame,
         not yet summed across groups (None when nothing matched)."""
         return self._scatter_exec([(None, tree)], None, spec, "facet",
                                   facet_fields=list(fields))
 
     def run(self, tree: Node, k: int | None,
-            filter_df: DataFrame | None = None,
             spec: MetaSpec | None = None) -> DataFrame:
-        """Execute a scored query → DataFrame(doc_id, score).
+        """Execute a scored query → DataFrame(doc_id, score): each
+        group's ≤ k rows (every match for ``k=None``), unsorted — the
+        caller applies the global cut. Its output is unbounded, so it
+        stays a Spark DataFrame (one single-stage job)."""
+        return self._scatter_exec([(None, tree)], k, spec, "scores",
+                                  RESULT_TYPE)
 
-        ``k=None`` returns ALL matching docs (facet/count path);
-        otherwise each shard emits ≤ k rows and the caller applies the
-        global orderBy/limit (the gather phase is shards × k rows).
-        ``filter_df`` is a DataFrame with a ``doc_id`` column; it is
-        cogrouped per shard (stays distributed). When no filter_df is
-        given (or the engine translated it to a ``spec``) and the
-        layout invariant holds, execution takes the zero-exchange
-        scatter path instead of the Catalyst scan+cogroup plan.
-        """
-        if filter_df is None and self.scatter_ok():
-            return self._scatter_exec([(None, tree)], k, spec,
-                                      "scores", RESULT_SCHEMA)
-        terms, ctx, postings = self._prepare([tree], k)
-        if not terms:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
-
-        def make_eval(blocks_pdf: pd.DataFrame,
-                      allowed: np.ndarray | None) -> pd.DataFrame:
-            if blocks_pdf.empty:
-                return pd.DataFrame({"doc_id": pd.Series(dtype=np.int64),
-                                     "score": pd.Series(dtype=np.float64)})
-            blocks_pdf = SearchExecutor._attach_bounds(blocks_pdf, ctx)
-            by_term = {
-                t: g.sort_values(["first_doc"])
-                for t, g in blocks_pdf.groupby("term", sort=False)}
-            ev = _ShardEval(by_term, ctx["idf"], ctx["k_prune"], allowed,
-                            ctx["k1"], ctx["b"], ctx["avgdl_by_field"],
-                            bigrams=ctx["bigrams"],
-                            b_by_field=ctx["b_by_field"])
-            ids, scores = ev.eval(tree, root=True)
-            if k is not None and ids.size > k:
-                # per-shard top-k: exact selection incl. doc_id tiebreak
-                order = np.lexsort((ids, -scores))[:k]
-                ids, scores = ids[order], scores[order]
-            return pd.DataFrame({"doc_id": ids, "score": scores})
-
-        if filter_df is not None:
-            fdf = (filter_df.select("doc_id")
-                   .withColumn("shard", self.shard_col(F.col("doc_id"))))
-
-            def cg(pkey, posting_pdf: pd.DataFrame,
-                   allow_pdf: pd.DataFrame) -> pd.DataFrame:
-                allowed = np.sort(allow_pdf["doc_id"].to_numpy(np.int64))
-                if allowed.size == 0 or posting_pdf.empty:
-                    return pd.DataFrame({
-                        "doc_id": pd.Series(dtype=np.int64),
-                        "score": pd.Series(dtype=np.float64)})
-                return make_eval(posting_pdf, allowed)
-
-            res = (postings.groupBy("shard")
-                   .cogroup(fdf.groupBy("shard"))
-                   .applyInPandas(lambda key, l, r: cg(key, l, r),
-                                  RESULT_SCHEMA))
-        else:
-            res = postings.groupBy("shard").applyInPandas(
-                lambda key, pdf: make_eval(pdf, None), RESULT_SCHEMA)
-        return res
-
-    def facet_counts(self, tree: Node, fields: list[str],
-                     meta_df: DataFrame) -> DataFrame:
-        """One-pass terms-facet partials: cogroup postings with the
-        (projected) doc_meta per shard, evaluate the query inside the
-        shard, count facet values of the matching docs there, and emit
-        only (field, value, count) partials — the match set never
-        shuffles and doc_meta never joins on doc_id. The meta side
-        doubles as the filter (tombstones/ACL already subtracted).
-        → DataFrame(field, value, count) summed across shards."""
-        terms, ctx, postings = self._prepare([tree], None)
-        out_schema = "field string, value string, count long"
-        if not terms:
-            return self.spark.createDataFrame([], out_schema)
-        fdf = (meta_df.select("doc_id", *fields)
-               .withColumn("shard", self.shard_col(F.col("doc_id"))))
-
-        def cg(posting_pdf: pd.DataFrame,
-               meta_pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame({"field": pd.Series(dtype=object),
-                                  "value": pd.Series(dtype=object),
-                                  "count": pd.Series(dtype=np.int64)})
-            if posting_pdf.empty or meta_pdf.empty:
-                return empty
-            posting_pdf = SearchExecutor._attach_bounds(posting_pdf, ctx)
-            by_term = {
-                t: g.sort_values(["first_doc"])
-                for t, g in posting_pdf.groupby("term", sort=False)}
-            m_ids = meta_pdf["doc_id"].to_numpy(np.int64)
-            order = np.argsort(m_ids)
-            allowed = m_ids[order]
-            ev = _ShardEval(by_term, ctx["idf"], None, allowed,
-                            ctx["k1"], ctx["b"], ctx["avgdl_by_field"],
-                            bigrams=ctx["bigrams"],
-                            b_by_field=ctx["b_by_field"])
-            ids, _ = ev.eval(tree, root=True)
-            if ids.size == 0:
-                return empty
-            pos = np.searchsorted(allowed, ids)
-            parts = []
-            for f in fields:
-                vals = meta_pdf[f].to_numpy()[order][pos]
-                vc = pd.Series(vals).value_counts(dropna=True)
-                parts.append(pd.DataFrame({
-                    "field": f, "value": vc.index.astype(object),
-                    "count": vc.to_numpy(np.int64)}))
-            return pd.concat(parts, ignore_index=True)
-
-        res = (postings.groupBy("shard")
-               .cogroup(fdf.groupBy("shard"))
-               .applyInPandas(lambda key, l, r: cg(l, r), out_schema))
-        return (res.groupBy("field", "value")
-                .agg(F.sum("count").alias("count")))
-
-    def run_multi(self, trees: dict[str, Node],
-                  k: int | None,
-                  filter_df: DataFrame | None = None,
+    def run_multi(self, trees: dict[str, Node], k: int | None,
                   spec: MetaSpec | None = None) -> DataFrame:
-        """Evaluate MANY query trees in ONE per-shard pass with
-        attribution → DataFrame(doc_id, score, entity_id).
+        """Evaluate MANY query trees in ONE scatter pass with
+        attribution → DataFrame(doc_id, score, entity_id), ≤ k rows per
+        tree and group. The per-term decode cache is shared across
+        trees inside a group, so entities with overlapping vocabularies
+        decode each term once. This replaces the per-entity plan-union
+        shape (10k entities = 10k unioned jobs would explode the
+        driver/planner; reference caps mention sources at 10k names,
+        query/mentions.py:76-130). With a k the rows are gathered into
+        a LocalRelation."""
+        out = self._scatter_exec(
+            [(str(eid), t) for eid, t in sorted(trees.items())], k, spec,
+            "multi", MULTI_TYPE)
+        return out if k is None else self.local_frame(out, MULTI_TYPE)
 
-        One postings scan (union of all trees' terms), one grouped-map
-        job; each shard emits ≤ k rows PER tree. The per-term decode
-        cache is shared across trees inside a shard, so entities with
-        overlapping vocabularies decode each term once. This replaces
-        the per-entity plan-union shape (10k entities = 10k unioned
-        jobs would explode the driver/planner; reference caps mention
-        sources at 10k names, query/mentions.py:76-130)."""
-        items = sorted(trees.items())
-        schema = RESULT_SCHEMA + ", entity_id string"
-        if filter_df is None and self.scatter_ok():
-            out = self._scatter_exec(
-                [(str(eid), t) for eid, t in items], k, spec, "multi",
-                schema)
-            if not scatter_gathers("multi", k):
-                return out
-            return self.local_frame(out, StructType([
-                StructField("doc_id", LongType()),
-                StructField("score", DoubleType()),
-                StructField("entity_id", StringType())]))
-        terms, ctx, postings = self._prepare([t for _, t in items], k)
-        if not terms:
-            return self.spark.createDataFrame([], schema)
-
-        def make_eval(blocks_pdf: pd.DataFrame,
-                      allowed: np.ndarray | None) -> pd.DataFrame:
-            empty = pd.DataFrame({
-                "doc_id": pd.Series(dtype=np.int64),
-                "score": pd.Series(dtype=np.float64),
-                "entity_id": pd.Series(dtype=object)})
-            if blocks_pdf.empty:
-                return empty
-            blocks_pdf = SearchExecutor._attach_bounds(blocks_pdf, ctx)
-            by_term = {
-                t: g.sort_values(["first_doc"])
-                for t, g in blocks_pdf.groupby("term", sort=False)}
-            ev = _ShardEval(by_term, ctx["idf"], ctx["k_prune"], allowed,
-                            ctx["k1"], ctx["b"], ctx["avgdl_by_field"],
-                            bigrams=ctx["bigrams"],
-                            b_by_field=ctx["b_by_field"])
-            parts = []
-            for eid, tree in items:
-                ids, scores = ev.eval(tree, root=True)
-                if k is not None and ids.size > k:
-                    order = np.lexsort((ids, -scores))[:k]
-                    ids, scores = ids[order], scores[order]
-                if ids.size:
-                    parts.append(pd.DataFrame({
-                        "doc_id": ids, "score": scores,
-                        "entity_id": eid}))
-            return pd.concat(parts, ignore_index=True) if parts else empty
-
-        if filter_df is not None:
-            fdf = (filter_df.select("doc_id")
-                   .withColumn("shard", self.shard_col(F.col("doc_id"))))
-
-            def cg(posting_pdf, allow_pdf):
-                allowed = np.sort(allow_pdf["doc_id"].to_numpy(np.int64))
-                if allowed.size == 0:
-                    return make_eval(posting_pdf.iloc[0:0], None)
-                return make_eval(posting_pdf, allowed)
-
-            return (postings.groupBy("shard")
-                    .cogroup(fdf.groupBy("shard"))
-                    .applyInPandas(lambda key, l, r: cg(l, r), schema))
-        return postings.groupBy("shard").applyInPandas(
-            lambda key, pdf: make_eval(pdf, None), schema)
-
-    def topk(self, tree: Node, k: int,
-             filter_df: DataFrame | None = None) -> DataFrame:
-        """Global top-k: per-shard heaps → tiny global sort-limit."""
-        res = self.run(tree, k, filter_df)
-        return res.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    def topk(self, tree: Node, k: int) -> DataFrame:
+        """Global top-k → DataFrame(doc_id, score) ordered by (score
+        desc, doc_id asc): the per-group top-k are gathered and cut in
+        pandas, and the result is a LocalRelation."""
+        return self.local_frame(
+            top_k(self._scatter_exec([(None, tree)], k, None, "topk"), k),
+            RESULT_TYPE)

@@ -12,6 +12,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..index.build import DOC_ID_PART_SHIFT
 from ..index.codec import bm25_idf
 from ..index.storage import IndexStorage
 from .ir import Bool, TermLeaf
@@ -47,6 +48,13 @@ REFERENCE_DEFAULTS = dict(min_tf=1, min_df=1, max_df=500, min_len=5,
                           max_terms=200, min_should_pct=0.1)
 
 
+def shard_col(doc_id_col, num_shards: int):
+    """The postings shard holding a doc: its source part mod
+    ``num_shards``."""
+    return F.pmod(F.shiftright(doc_id_col, DOC_ID_PART_SHIFT),
+                  F.lit(num_shards)).cast("int")
+
+
 def doc_term_vector(spark: SparkSession, storage: IndexStorage,
                     doc_id: int) -> list[tuple[str, int]]:
     """(term, tf) pairs of one doc, decoded from its shard's blocks —
@@ -54,13 +62,12 @@ def doc_term_vector(spark: SparkSession, storage: IndexStorage,
     scan to the doc's own partition's vocabulary."""
     import numpy as np
     import pandas as pd
-    from .executor import SearchExecutor
     from ..index.codec import varint_decode
-    ex = SearchExecutor(spark, storage)
     blocks = (storage.postings(spark)
               .select("term", "shard", "first_doc", "last_doc",
                       "doc_count", "docs_payload", "tfs_payload")
-              .filter((F.col("shard") == ex.shard_col(F.lit(doc_id)))
+              .filter((F.col("shard") == shard_col(
+                  F.lit(doc_id), storage.read_meta()["num_shards"]))
                       & (F.col("first_doc") <= doc_id)
                       & (F.col("last_doc") >= doc_id)))
 

@@ -141,7 +141,10 @@ def test_name_signals_dataframe(spark):
     assert len(a["name_phonetic"]) == 2
 
 
-def test_empty_corpus_build(spark, tmp_path):
+def test_empty_corpus_build(spark, tmp_path, spark_jobs):
+    """An empty corpus builds an index with no parts: a search, count,
+    facet and msearch over it return empty results with zero Spark
+    jobs."""
     from openaleph_search_spark.index.build import build_index
     from openaleph_search_spark.query.engine import Engine
     empty = spark.createDataFrame(
@@ -152,7 +155,18 @@ def test_empty_corpus_build(spark, tmp_path):
     assert st.read_meta()["n_docs"] == 0
     assert st.doc_meta_schema().names[0] == "doc_id"
     eng = Engine(spark, out)
-    assert eng.search({"q": "anything", "limit": 5}).hits.count() == 0
+    assert eng.executor.scatter_ok()
+    reads = {
+        "search": lambda: eng.search({"q": "anything", "limit": 5})
+        .hits.collect(),
+        "count": lambda: eng.count({"q": "anything OR else"}),
+        "facet": lambda: eng.search({"q": "anything", "facet": "lang",
+                                     "limit": 0}).facets["lang"].collect(),
+        "msearch": lambda: eng.msearch({"a": {"q": "anything"}}).collect(),
+    }
+    for name, fn in reads.items():
+        got, jobs = spark_jobs(fn)
+        assert jobs == [] and not got, name
     assert eng.count({}) == 0
 
 

@@ -223,14 +223,27 @@ def test_percolate_docs_large_var_types(spark, fixture_docs_df):
 
 
 # ------------------------------------------------------------- mentions --
-def test_mentions_query(fixture_engine):
+def test_mentions_query(fixture_engine, spark_jobs, monkeypatch):
+    """topk() runs the bounded gather: a one-group mentions query runs
+    no Spark job, and its LocalRelation holds the global top-k by
+    (score desc, doc_id asc) — the same rows a ≥2-group job returns."""
+    from openaleph_search_spark.query import executor as xmod
     from openaleph_search_spark.query.percolate import mentions_query
-    out = mentions_query(fixture_engine, ["Paul Manafort", "KwaZulu"],
-                         k=10)
+    names = ["Paul Manafort", "KwaZulu"]
+    out, jobs = spark_jobs(lambda: mentions_query(
+        fixture_engine, names, k=10).collect())
+    assert jobs == []
     metas = {r["doc_id"]: r["path"]
              for r in fixture_engine.doc_meta.collect()}
-    paths = {metas[r["doc_id"]] for r in out.collect()}
+    paths = {metas[r["doc_id"]] for r in out}
     assert paths == {"b/manafort.js", "a/kwazulu.txt", "c/long.rs"}
+    got = [tuple(r) for r in mentions_query(fixture_engine, names, k=2)
+           .collect()]
+    assert len(got) == 2 and got == sorted(got, key=lambda r: (-r[1], r[0]))
+    monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK", 1)
+    again, jobs = spark_jobs(lambda: [tuple(r) for r in mentions_query(
+        fixture_engine, names, k=2).collect()])
+    assert len(jobs) == 1 and again == got
 
 
 def test_multi_mentions_attribution(fixture_engine):

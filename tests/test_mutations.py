@@ -350,7 +350,8 @@ def test_compact_crash_then_rerun(spark, fixture_docs_df, tmp_path,
 
 def test_compact_rejects_layout6_compaction(spark, mutable_index):
     """A layout-6 compaction left Spark-named data files; compact()
-    refuses such an index by name and keeps its tombstones."""
+    refuses such an index by name and keeps its tombstones, and a query
+    raises instead of falling back to another plan."""
     st = IndexStorage(mutable_index)
     delete_by_ids(spark, st, [0])
     k = sorted(st.completed_partitions())[0]
@@ -360,6 +361,8 @@ def test_compact_rejects_layout6_compaction(spark, mutable_index):
     with pytest.raises(ValueError, match="layout"):
         compact(spark, st)
     assert read_tombstones(spark, st) is not None
+    with pytest.raises(ValueError, match="part=<int>.parquet"):
+        Engine(spark, mutable_index).search({"q": "banana", "limit": 5})
 
 
 def test_append_grown_avgdl_disables_pruning_soundly(
@@ -746,3 +749,36 @@ def test_all_null_meta_column_in_a_part(spark, fixture_docs_df, tmp_path):
     assert any(h["owner"] is not None for h in hits)
     row = eng.doc_meta.filter(F.col("created").isNotNull()).first()
     assert row["created"].isoformat() == "2021-03-04T05:06:07"
+
+
+def test_stats_reads_the_layout_with_zero_jobs(spark, mutable_index,
+                                               spark_jobs):
+    """Engine.stats() on a compacted, then tombstoned index runs no
+    Spark job, and its per-shard blocks/postings equal a Spark
+    aggregate over the postings table and its tombstone count the
+    distinct tombstoned ids."""
+    st = IndexStorage(mutable_index)
+    delete_docs(spark, st, F.col("repo") == "r3")
+    compact(spark, st)
+    delete_docs(spark, st, F.col("lang") == "go")
+    eng = Engine(spark, mutable_index)
+    got, jobs = spark_jobs(eng.stats)
+    assert jobs == []
+    shards = {s: {"blocks": 0, "postings": 0} for s in range(2)}
+    for r in (st.postings(spark).groupBy("shard")
+              .agg(F.count("*").alias("blocks"),
+                   F.sum("doc_count").alias("postings")).collect()):
+        shards[r["shard"]] = {"blocks": r["blocks"],
+                              "postings": r["postings"]}
+    posts = [s["postings"] for s in shards.values()]
+    meta = st.read_meta()
+    assert got == {
+        "n_docs": meta["n_docs"], "avgdl": meta["avgdl"],
+        "tombstoned_docs": read_tombstones(spark, st).count(),
+        "num_shards": 2, "num_partitions": meta["num_partitions"],
+        "layout_version": meta["layout_version"],
+        "bigrams": bool(meta.get("bigrams")),
+        "n_terms": st.term_stats(spark).count(),
+        "shards": shards,
+        "postings_balance": min(posts) / max(max(posts), 1)}
+    assert got["tombstoned_docs"] == 1 and got["n_docs"] == 8

@@ -1,9 +1,44 @@
 """Physical-plan assertions: the things `.explain` must show for the
 engine to be scan-efficient at 100 TB (filter pushdown, column pruning,
-partition pruning) — SURVEY.md §4.2."""
+partition pruning) — SURVEY.md §4.2 — and the job counts and results
+of the scatter, the one query executor, against the pure-Python BM25
+oracle and the doc_meta rows."""
+import pytest
 from pyspark.sql import functions as F
 
 from openaleph_search_spark.index.storage import IndexStorage
+from tests.conftest import FIXTURE_DOCS
+from tests.oracle import OracleIndex
+
+TOL = 1e-9
+
+
+def _oracle(eng, docs=FIXTURE_DOCS) -> OracleIndex:
+    """The BM25 oracle over ``docs`` (conftest row shape), keyed by the
+    doc ids ``eng``'s index assigned (tombstoned docs included)."""
+    ids = {r["path"]: r["doc_id"] for r in eng.storage.doc_meta(
+        eng.spark).select("doc_id", "path").collect()}
+    return OracleIndex({ids[d[1]]: d[4] for d in docs if d[1] in ids})
+
+
+def _assert_scores(rows, want: dict):
+    """(doc_id, score) rows hold exactly ``want``'s docs and scores."""
+    got = {r[0]: r[1] for r in rows}
+    assert got.keys() == want.keys(), (got, want)
+    assert all(abs(got[d] - want[d]) < TOL for d in want), (got, want)
+
+
+def _assert_hits(rows, want: list, meta: dict):
+    """Hit rows (doc_id, score, …meta) equal the oracle's ranked
+    (doc_id, score) list, each hydrated with its doc_meta row."""
+    assert [r[0] for r in rows] == [d for d, _ in want], (rows, want)
+    for r, (d, sc) in zip(rows, want):
+        assert abs(r[1] - sc) < TOL and tuple(r[2:]) == meta[d], (r, d)
+
+
+@pytest.fixture(scope="module")
+def oracle(fixture_engine):
+    return _oracle(fixture_engine)
 
 
 def _plan(df) -> str:
@@ -45,10 +80,11 @@ def test_doc_meta_column_pruning(spark, fixture_index):
 
 
 def test_positions_column_pruned_for_nonphrase(spark, fixture_engine,
-                                               monkeypatch, spark_jobs):
+                                               monkeypatch, spark_jobs,
+                                               oracle):
     """A term query must not read pos_payload — asserted on the
-    scatter read set explain() reports, on the scatter job it runs with
-    ≥2 groups, and on the legacy Catalyst scan."""
+    scatter read set explain() reports and on the scatter job it runs
+    with ≥2 groups, whose scores are the oracle's."""
     from openaleph_search_spark.query import executor as xmod
     from openaleph_search_spark.query.ir import TermLeaf
     ex = fixture_engine.executor
@@ -63,20 +99,13 @@ def test_positions_column_pruned_for_nonphrase(spark, fixture_engine,
     res = ex.run(TermLeaf("banana"), k=10)
     plan = _plan(res)
     assert "MapInPandas" in plan and "Exchange" not in plan
-    assert spark_jobs(res.collect)[1] == [[tasks]]
-    # legacy fallback keeps the pushed-down pruned scan
-    ex._scatter = None
-    try:
-        plan = _plan(ex.run(TermLeaf("banana"), k=10))
-        scan = [ln for ln in plan.split("\n") if "FileScan" in ln][0]
-        assert "pos_payload" not in scan
-        assert "docs_payload" in scan
-    finally:
-        ex._scatter = False
+    rows, jobs = spark_jobs(res.collect)
+    assert jobs == [[tasks]]
+    _assert_scores(rows, oracle.or_query(["banana"]))
 
 
 def test_positions_column_read_for_phrase(spark, fixture_engine,
-                                          monkeypatch, spark_jobs):
+                                          monkeypatch, spark_jobs, oracle):
     from openaleph_search_spark.query import executor as xmod
     from openaleph_search_spark.query.ir import PhraseLeaf
     ex = fixture_engine.executor
@@ -88,14 +117,9 @@ def test_positions_column_read_for_phrase(spark, fixture_engine,
     assert tasks >= 2
     res = ex.run(PhraseLeaf(["banana", "crime"]), k=10)
     assert "MapInPandas" in _plan(res)
-    assert spark_jobs(res.collect)[1] == [[tasks]]
-    ex._scatter = None
-    try:
-        plan = _plan(ex.run(PhraseLeaf(["banana", "crime"]), k=10))
-        scan = [ln for ln in plan.split("\n") if "FileScan" in ln][0]
-        assert "pos_payload" in scan
-    finally:
-        ex._scatter = False
+    rows, jobs = spark_jobs(res.collect)
+    assert jobs == [[tasks]]
+    _assert_scores(rows, oracle.phrase_query(["banana", "crime"]))
 
 
 def test_ann_bucket_filter_pushed_to_scan(spark, tmp_path):
@@ -133,7 +157,7 @@ def test_ann_bucket_filter_pushed_to_scan(spark, tmp_path):
 
 
 def test_topk_hydrate_zero_exchange(spark, fixture_engine, monkeypatch,
-                                    spark_jobs):
+                                    spark_jobs, oracle):
     """With ≥2 groups the scatter top-k path is ONE single-stage job
     (Range → MapInPandas: no Exchange, no join), one task per group,
     each evaluating and hydrating its group. The global cut runs on the
@@ -152,39 +176,18 @@ def test_topk_hydrate_zero_exchange(spark, fixture_engine, monkeypatch,
     got, jobs = spark_jobs(lambda: [tuple(r) for r in res.hits.collect()])
     assert jobs == []
     # schema order stays (doc_id, score, ...meta) — the entry/oracle
-    # compare and SearchResult docstring both rely on it
-    assert res.hits.columns[:2] == ["doc_id", "score"]
-    # results identical to the legacy broadcast-hydrate plan, which
-    # must keep broadcasting (doc_meta never shuffles for k ids)
-    fixture_engine.executor._scatter = None
-    try:
-        res2 = fixture_engine.search(args)
-        plan2 = _plan(res2.hits)
-        assert "BroadcastHashJoin" in plan2
-        assert "SortMergeJoin" not in plan2
-        assert got == [tuple(r) for r in res2.hits.collect()]
-        assert res.hits.dtypes == res2.hits.dtypes
-    finally:
-        fixture_engine.executor._scatter = False
-
-
-def test_facet_fast_path_single_cogroup(spark, fixture_engine):
-    """Facet-only queries must plan as ONE cogrouped pass + tiny agg:
-    no doc_id join, no second wide shuffle of the match set."""
-    from openaleph_search_spark.query.parser import parse_query_string
-    tree = parse_query_string("banana")
-    fixture_engine.executor._expand_prefixes(tree)
-    df = fixture_engine.executor.facet_counts(
-        tree, ["lang"], fixture_engine.doc_meta)
-    plan = _plan(df)
-    assert plan.count("FlatMapCoGroupsInPandas") == 1
-    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
-    # postings scan still term-filtered
-    assert "banana" in plan
+    # compare and SearchResult docstring both rely on it — with
+    # doc_meta's types, and each hit carries its doc_meta row
+    dm = fixture_engine.doc_meta
+    assert res.hits.dtypes == [("doc_id", "bigint"), ("score", "double"),
+                               *dm.dtypes[1:]]
+    meta = {r[0]: tuple(r[1:]) for r in dm.collect()}
+    _assert_hits(got, oracle.topk(oracle.and_query(["banana", "crime"]),
+                                  5), meta)
 
 
 def test_run_multi_single_pass(spark, fixture_engine, monkeypatch,
-                               spark_jobs):
+                               spark_jobs, oracle):
     """N query trees → ONE scatter pass, not N unioned plans: with ≥2
     groups, one single-stage job with one task per group, and the
     gathered per-tree top-k come back as a LocalRelation."""
@@ -201,109 +204,138 @@ def test_run_multi_single_pass(spark, fixture_engine, monkeypatch,
     plan = _plan(df)
     assert "LocalTableScan" in plan
     assert "Union" not in plan and "Exchange" not in plan
-    got = sorted(map(tuple, df.collect()))
-    ex._scatter = None
-    try:
-        legacy = ex.run_multi(trees, k=5)
-        plan2 = _plan(legacy)
-        assert plan2.count("FlatMapGroupsInPandas") == 1
-        assert "Union" not in plan2
-        assert got == sorted(map(tuple, legacy.collect()))
-    finally:
-        ex._scatter = False
+    # every tree matches < 5 fixture docs: each returns all its matches
+    rows = df.collect()
+    for eid, want in {"q0": oracle.or_query(["banana"]),
+                      "q1": oracle.or_query(["kwazulu"]),
+                      "q2": oracle.and_query(["crime", "wave"])}.items():
+        _assert_scores([r for r in rows if r["entity_id"] == eid], want)
 
 
-def test_scatter_matches_legacy_everywhere(spark, fixture_index,
-                                           fixture_docs_df, tmp_path,
-                                           monkeypatch):
-    """The zero-exchange scatter path must be row- and score-identical
-    to the legacy Catalyst path across every engine branch it serves:
-    top-k, filters/excludes/empties, facet fast path, count, msearch —
-    and with tombstones present. Each case also runs with every part in
-    ONE group and with one group PER part: any grouping of whole parts
-    is a valid evaluation group, so the fan-out never changes results:
-    the planned fan-out and one group evaluate in the driver, one group
-    per part runs a Spark job and gathers its tasks' frames."""
-    from openaleph_search_spark.index.mutate import delete_by_ids
-    from openaleph_search_spark.index.storage import IndexStorage
+def test_scatter_matches_oracle_everywhere(spark, fixture_docs_df,
+                                           tmp_path, monkeypatch):
+    """Every read the scatter serves — top-k, count, facets and msearch,
+    with string filters, excludes, an int range and a partial-date
+    range — equals an independent reference: the BM25 oracle, with the
+    filters and facet values applied in pandas to the fixture rows. The
+    index is built, compacted, then tombstoned again. compact()
+    refreshes df/N/avgdl and a delete does not, so the oracle holds the
+    docs live at the compaction and the later victim is dropped from
+    its results. Each case also runs with every part in ONE group and
+    with one group PER part: the planned fan-out and one group evaluate
+    in the driver, one group per part runs a Spark job."""
+    import datetime as dt
+    import zlib
+
+    import pandas as pd
+    from openaleph_search_spark.index.build import build_index
+    from openaleph_search_spark.index.mutate import compact, delete_docs
     from openaleph_search_spark.query import executor as xmod
     from openaleph_search_spark.query.engine import Engine
 
-    def pair(idx):
-        new = Engine(spark, idx)
-        old = Engine(spark, idx)
-        old.executor._scatter = None  # force legacy plans
-        assert new.executor.scatter_ok()
-        return new, old
+    utc = dt.timezone.utc
 
-    def results(eng, cases):
-        out = []
-        for a in cases.get("search", []):
-            hits = eng.search(a).hits
-            out.append((a, (hits.dtypes, [tuple(r) for r in hits.collect()])))
-        for a in cases.get("facet", []):
-            out.append((a, {f: (d.dtypes, d.collect())
-                            for f, d in eng.search(a).facets.items()}))
-        for a in cases.get("count", []):
-            out.append((a, eng.count(a)))
-        for ms in cases.get("msearch", []):
-            res = eng.msearch(ms, k=3)
-            out.append((ms, (res.dtypes, sorted(map(tuple, res.collect())))))
-        return out
+    def created(path):
+        if path.endswith("empty.txt"):
+            return None
+        return (dt.datetime(2021, 3, 4, 5, 6, 7, tzinfo=utc)
+                + dt.timedelta(days=zlib.crc32(path.encode()) % 400))
 
+    rows = [(*d, created(d[1])) for d in FIXTURE_DOCS]
+    docs = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, "
+              "content string, created timestamp")
+    idx = str(tmp_path / "idx_oracle")
+    st = build_index(spark, docs, idx, num_partitions=4, num_shards=2,
+                     meta_cols=["created"])
+    delete_docs(spark, st, F.col("path") == "a/banana.txt")
+    compact(spark, st)
+    delete_docs(spark, st, F.col("path") == "a/kwazulu.txt")
+    eng = Engine(spark, idx)
+    assert len(eng.executor._scatter_layout()["parts"]) > 1
+    assert eng.stats()["tombstoned_docs"] == 1
+
+    live_at_compact = [r for r in rows if r[1] != "a/banana.txt"]
+    o = _oracle(eng, live_at_compact)
+    ids = {r["path"]: r["doc_id"] for r in
+           eng.doc_meta.select("doc_id", "path").collect()}
+    fx = pd.DataFrame(
+        [(ids[r[1]], r[0], r[3], o.doc_len[ids[r[1]]], r[5])
+         for r in live_at_compact if r[1] in ids],
+        columns=["doc_id", "repo", "lang", "doc_len", "created"]
+    ).set_index("doc_id")
+    assert "a/kwazulu.txt" not in ids and len(fx) == len(ids) == 8
+
+    def live(scores):  # the oracle's matches minus the later victim
+        return {d: v for d, v in scores.items() if d in fx.index}
+
+    W = "banana OR kwazulu OR crime OR chairman OR igumnov"
+    wide = live(o.or_query(["banana", "kwazulu", "crime", "chairman",
+                            "igumnov"]))
+    scores = {"banana crime": live(o.and_query(["banana", "crime"])),
+              '"banana crime"': live(o.phrase_query(["banana", "crime"])),
+              W: wide}
+    ts = lambda s: pd.Timestamp(s, tz="UTC")  # noqa: E731
+    filtered = [  # (args, the filter applied in pandas)
+        ({"q": "banana crime"}, lambda m: m.lang.notna()),
+        ({"q": '"banana crime"'}, lambda m: m.lang.notna()),
+        ({"q": W, "filter:lang": "txt"}, lambda m: m.lang == "txt"),
+        ({"q": W, "filter:repo": ["r1", "r2"], "exclude:lang": "txt"},
+         lambda m: m.repo.isin(["r1", "r2"]) & (m.lang != "txt")),
+        ({"q": W, "filter:gte:doc_len": "5"}, lambda m: m.doc_len >= 5),
+        ({"q": W, "filter:gte:created": "2021-06",
+          "filter:lte:created": "2021-12"},
+         lambda m: (m.created >= ts("2021-06-01"))
+         & (m.created < ts("2022-01-01"))),
+    ]
+
+    def matches(args, pred):
+        keep = set(fx.index[pred(fx).fillna(False).to_numpy(bool)])
+        return {d: v for d, v in scores[args["q"]].items() if d in keep}
+
+    def counts(ids_, field):
+        vc = fx.loc[sorted(ids_), field].dropna().value_counts()
+        return sorted(vc.items(), key=lambda x: (-x[1], x[0]))
+
+    meta = {r[0]: tuple(r[1:]) for r in eng.doc_meta.collect()}
     fanouts = {
         "planned": xmod._scatter_groups,
         "one_group": lambda parts, par, est: [list(parts)],
         "group_per_part": lambda parts, par, est: [[p] for p in parts],
     }
-
-    def check(new, old, cases):
-        want = results(old, cases)
-        assert len(new.executor._scatter_layout()["parts"]) > 1
-        for name, fn in fanouts.items():
-            monkeypatch.setattr(xmod, "_scatter_groups", fn)
-            for (case, got), (_, exp) in zip(results(new, cases), want):
-                assert got == exp, (name, case)
-        monkeypatch.undo()
-
-    new, old = pair(fixture_index)
-    check(new, old, {
-        "search": [
-            {"q": "banana crime", "limit": 5},
-            {"q": "banana", "filter:lang": "go", "limit": 5},
-            {"q": "banana OR kwazulu", "exclude:lang": "txt", "limit": 5},
-            {"q": '"banana crime"', "limit": 5},
-            {"q": "crime", "qfields": "content,path^2", "limit": 5},
-        ],
-        "facet": [{"q": "banana", "facet": "lang", "limit": 0},
-                  {"q": "banana OR kwazulu", "filter:repo": "r2",
-                   "facet": "lang", "limit": 0},
-                  {"q": "banana OR kwazulu", "facet": ["lang", "repo"],
-                   "facet_size:repo": "2", "limit": 0}],
-        "count": [{"q": "banana"},
-                  {"q": "banana OR kwazulu", "filter:lang": "txt"}],
-        "msearch": [{"a": {"q": "banana"}, "b": {"q": "crime wave"}}],
-    })
-
-    # tombstoned index: scatter must subtract deletes identically
-    import shutil
-    mdir = str(tmp_path / "idx_tomb")
-    shutil.copytree(fixture_index, mdir)
-    st = IndexStorage(mdir)
-    victim = old.search({"q": "banana", "limit": 1}).hits.collect()[0]
-    delete_by_ids(spark, st, [victim["doc_id"]])
-    tnew, told = pair(mdir)
-    check(tnew, told, {
-        "search": [{"q": "banana crime", "limit": 5},
-                   {"q": "banana", "filter:lang": "go", "limit": 5}],
-        "facet": [{"q": "banana", "facet": "lang", "limit": 0}],
-        "count": [{"q": "banana"},
-                  {"q": "banana", "filter:lang": "go"}],
-        "msearch": [{"a": {"q": "banana"}, "b": {"q": "crime wave"}}],
-    })
-    assert all(r["doc_id"] != victim["doc_id"]
-               for r in tnew.search({"q": "banana", "limit": 5})
-               .hits.collect())
+    for name, fn in fanouts.items():
+        monkeypatch.setattr(xmod, "_scatter_groups", fn)
+        for args, pred in filtered:
+            want = matches(args, pred)
+            hits = eng.search({**args, "limit": 3}).hits.collect()
+            _assert_hits(hits, o.topk(want, 3), meta)
+            assert eng.count(args) == len(want), (name, args)
+            f = "repo" if "filter:lang" in args else "lang"
+            got = eng.search({**args, "facet": f, "limit": 0})
+            assert [tuple(r) for r in got.facets[f].collect()] \
+                == counts(want, f), (name, args)
+        # the facet-interplay branch: each facet sees the OTHER facets'
+        # filters only, the hits see all of them
+        res = eng.search({"q": W, "facet": ["lang", "repo"],
+                          "filter:repo": "r2", "limit": 10},
+                         with_total=True)
+        r2 = {d for d in wide if fx.repo[d] == "r2"}
+        assert [tuple(r) for r in res.facets["lang"].collect()] \
+            == counts(r2, "lang"), name
+        assert [tuple(r) for r in res.facets["repo"].collect()] \
+            == counts(wide, "repo"), name
+        assert res.total == len(r2)
+        _assert_hits(res.hits.select("doc_id", "score",
+                                     *eng.doc_meta.columns[1:]).collect(),
+                     o.topk({d: wide[d] for d in r2}, 10), meta)
+        ms = eng.msearch({"a": {"q": "banana"}, "b": {"q": W}}, k=3)
+        for qid, want in {"a": live(o.or_query(["banana"])),
+                          "b": wide}.items():
+            got = [(r[0], r[1], *r[3:]) for r in ms.collect()
+                   if r["query_id"] == qid]
+            _assert_hits(sorted(got, key=lambda r: (-r[1], r[0])),
+                         o.topk(want, 3), meta)
+    monkeypatch.undo()
 
 
 def test_explain_reports_scatter_fanout(spark, fixture_engine,
@@ -311,7 +343,7 @@ def test_explain_reports_scatter_fanout(spark, fixture_engine,
     """explain() reports the fan-out _scatter_exec would plan: 0 tasks
     (driver evaluation) for a small bounded read, min(parts,
     defaultParallelism) once est_postings exceeds par ×
-    _POSTINGS_PER_TASK, None for non-scatter strategies — and the
+    _POSTINGS_PER_TASK, None only for a match-all — and the
     search runs exactly that many Spark tasks."""
     from openaleph_search_spark.query import executor as xmod
     ex = fixture_engine.executor
@@ -347,17 +379,18 @@ def test_explain_reports_scatter_fanout(spark, fixture_engine,
     monkeypatch.undo()
 
     assert fixture_engine.explain({"limit": 10})["scatter_tasks"] is None
-    # a range filter has no exact MetaSpec → legacy cogrouped plan
+    # a range filter evaluates in the groups like any other filter
     assert fixture_engine.explain(
         {"q": "banana", "filter:gte:doc_len": "3",
-         "limit": 10})["scatter_tasks"] is None
+         "limit": 10})["scatter_tasks"] == 0
 
 
 def test_small_reads_run_zero_jobs(spark, fixture_index, tmp_path,
                                    monkeypatch, spark_jobs):
     """On a tombstoned index, a small top-k search, a filtered one,
-    count, a one-facet search and msearch evaluate in the driver: zero
-    Spark jobs from the call to the collected result. With
+    count, a one-facet search and msearch — and range-filtered top-k,
+    count and facet reads — evaluate in the driver: zero Spark jobs
+    from the call to the collected result. With
     _POSTINGS_PER_TASK patched low each runs exactly ONE job of
     min(parts, defaultParallelism) tasks — or of one task when the plan
     is capped to one group — with the same results."""
@@ -372,14 +405,21 @@ def test_small_reads_run_zero_jobs(spark, fixture_index, tmp_path,
     delete_by_ids(spark, IndexStorage(mdir), [victim])
     eng = Engine(spark, mdir)
     wide = "banana OR kwazulu OR crime"
+    ranged = {"q": wide, "filter:gte:doc_len": "3"}
     searches = [{"q": wide, "limit": 5},
                 {"q": wide, "filter:lang": "txt", "limit": 5},
-                {"q": wide, "facet": "lang", "limit": 0}]
+                {"q": wide, "facet": "lang", "limit": 0},
+                {**ranged, "limit": 10},
+                {**ranged, "facet": "lang", "limit": 0}]
     reads = {
         "search": lambda: eng.search(searches[0]).hits.collect(),
         "filtered": lambda: eng.search(searches[1]).hits.collect(),
         "facet": lambda: eng.search(searches[2]).facets["lang"].collect(),
         "count": lambda: eng.count({"q": wide}),
+        "range_search": lambda: eng.search(searches[3]).hits.collect(),
+        "range_facet": lambda: eng.search(
+            searches[4]).facets["lang"].collect(),
+        "range_count": lambda: eng.count(ranged),
         "msearch": lambda: eng.msearch(
             {"a": {"q": wide}, "b": {"q": "crime wave"}}, k=3).select(
             "query_id", "doc_id", "score", "path").collect(),
@@ -412,13 +452,13 @@ def test_small_reads_run_zero_jobs(spark, fixture_index, tmp_path,
 
 
 def test_multi_facet_evaluates_query_once(spark, fixture_engine,
-                                          monkeypatch, spark_jobs):
+                                          monkeypatch, spark_jobs, oracle):
     """A facet-only search over two facets evaluates the query ONCE:
     each group's kernel runs once in the driver, and with ≥2 groups
-    both facets come from ONE job. Results equal the legacy cogrouped
-    facet_counts path."""
+    both facets come from ONE job. The counts are the doc_meta values
+    of the oracle's matches."""
+    from collections import Counter
     from openaleph_search_spark.query import executor as xmod
-    from openaleph_search_spark.query.engine import Engine
     from openaleph_search_spark.query.parser import parse_args
     args = {"q": "banana OR kwazulu", "facet": ["lang", "repo"],
             "limit": 0}
@@ -438,15 +478,18 @@ def test_multi_facet_evaluates_query_once(spark, fixture_engine,
     assert calls == groups
     monkeypatch.setattr(xmod, "_scatter_eval_group", real)
 
-    legacy = Engine(spark, fixture_engine.storage.root)
-    legacy.executor._scatter = None
-    want = {f: d.collect() for f, d in legacy.search(args).facets.items()}
-    assert got == want and set(got) == {"lang", "repo"}
+    hit = set(oracle.or_query(["banana", "kwazulu"]))
+    dm = fixture_engine.doc_meta.collect()
+    want = {f: sorted(Counter(r[f] for r in dm if r["doc_id"] in hit)
+                      .items(), key=lambda x: (-x[1], x[0]))
+            for f in ("lang", "repo")}
+    got = {f: [tuple(r) for r in rows] for f, rows in got.items()}
+    assert got == want
 
     monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK", 1)
     again, jobs = spark_jobs(lambda: {
-        f: d.collect() for f, d in fixture_engine.search(args)
-        .facets.items()})
+        f: [tuple(r) for r in d.collect()]
+        for f, d in fixture_engine.search(args).facets.items()})
     assert len(jobs) == 1 and len(jobs[0]) == 1 and jobs[0][0] >= 2
     assert again == want
 
@@ -541,10 +584,10 @@ def test_split_and_mixture_stay_in_scan_stage(spark):
 
 def test_gathered_hits_keep_types(spark, fixture_docs_df, tmp_path,
                                   monkeypatch):
-    """Gathered hits and msearch rows keep the legacy column order and
+    """Gathered hits and msearch rows keep doc_meta's column order and
     dtypes, timestamp/date and null meta values and empty results
     included, whether the scatter evaluates in the driver or in a
-    job."""
+    job: each row is the oracle's hit carrying its doc_meta row."""
     from pyspark.sql import functions as F
     from openaleph_search_spark.index.build import build_index
     from openaleph_search_spark.query import executor as xmod
@@ -566,24 +609,40 @@ def test_gathered_hits_keep_types(spark, fixture_docs_df, tmp_path,
     out = str(tmp_path / "idx_typed")
     build_index(spark, docs, out, num_partitions=4, num_shards=2,
                 meta_cols=["created", "day", "stars", "owner"])
-    new, old = Engine(spark, out), Engine(spark, out)
-    old.executor._scatter = None
-    searches = [{"q": "banana OR kwazulu OR crime", "limit": 10},
-                {"q": "banana OR kwazulu", "filter:lang": "txt",
-                 "limit": 10},
-                {"q": "kwazulu", "filter:lang": "go", "limit": 10}]
+    eng = Engine(spark, out)
+    o = _oracle(eng)
+    dm = eng.doc_meta
+    meta = {r[0]: tuple(r[1:]) for r in dm.collect()}
+    hit_types = [("doc_id", "bigint"), ("score", "double"), *dm.dtypes[1:]]
+    lang = {d: m[dm.columns.index("lang") - 1] for d, m in meta.items()}
+    wide = o.or_query(["banana", "kwazulu", "crime"])
+    searches = [({"q": "banana OR kwazulu OR crime", "limit": 10}, wide),
+                ({"q": "banana OR kwazulu", "filter:lang": "txt",
+                  "limit": 10}, {d: v for d, v in o.or_query(
+                      ["banana", "kwazulu"]).items() if lang[d] == "txt"}),
+                ({"q": "kwazulu", "filter:lang": "go", "limit": 10}, {})]
     batch = {"a": {"q": "banana OR kwazulu"}, "b": {"q": "crime OR nana"}}
 
-    def results(eng):
-        out = [(h.dtypes, [tuple(r) for r in h.collect()])
-               for h in (eng.search(a).hits for a in searches)]
+    def results():
+        out = [[tuple(r) for r in eng.search(a).hits.collect()]
+               for a, _ in searches]
+        assert all(eng.search(a).hits.dtypes == hit_types
+                   for a, _ in searches)
         ms = eng.msearch(batch, k=3)
-        return out + [(ms.dtypes, sorted(map(tuple, ms.collect())))]
+        assert ms.dtypes == [*hit_types[:2], ("query_id", "string"),
+                             *hit_types[2:]]
+        return out + [sorted(map(tuple, ms.collect()))]
 
-    want = results(old)
-    assert any(None in r for r in want[0][1])  # null meta values
-    assert want[2][1] == []  # and an empty result are covered
-    assert results(new) == want
+    got = results()
+    for rows, (_, want) in zip(got, searches):
+        _assert_hits(rows, o.topk(want, 10), meta)
+    for qid, want in {"a": o.or_query(["banana", "kwazulu"]),
+                      "b": o.or_query(["crime", "nana"])}.items():
+        rows = sorted(((r[0], r[1], *r[3:]) for r in got[3]
+                       if r[2] == qid), key=lambda r: (-r[1], r[0]))
+        _assert_hits(rows, o.topk(want, 3), meta)
+    assert any(None in r for r in got[0])  # null meta values
+    assert got[2] == []  # and an empty result are covered
     monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK", 1)
-    assert new.explain(searches[0])["scatter_tasks"] >= 2
-    assert results(new) == want
+    assert eng.explain(searches[0][0])["scatter_tasks"] >= 2
+    assert results() == got

@@ -6,6 +6,7 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import example, given, settings, strategies as st
 
 from openaleph_search_spark.analysis.analyzer import analyze_text
@@ -697,3 +698,115 @@ def test_jpeg_progressive_parity_property(h, w, seed, mode, kind, ri):
             decode_jpeg(encode_jpeg_color(
                 img, subsampling=mode, restart_interval=ri)),
             decode_jpeg(encode_jpeg_color(img, subsampling=mode)))
+
+
+# --------------------------------------------------------------------------
+# doc_meta filters: the scatter mask vs the Spark predicate of one spec
+# --------------------------------------------------------------------------
+
+_BIG = 2 ** 53
+_META_POOLS = {  # column → literals a filter may name
+    "s": ["a", "b", "zz"],
+    "i": ["-2", "0", "1", "7"],
+    "b": [str(_BIG), str(_BIG + 1), str(-(2 ** 60)), "3"],
+    "d": ["-0.0", "2.5", "-1.5", "NaN", "Infinity"],
+    "dt": ["2020-02-29", "2020-03-01", "2020", "2020-02", "2019-12-31"],
+    "ts": ["2020-03-01 00:00:00", "2020-03-01T08:00:00", "2020-03-01",
+           "2020-02", "2020", "2020-03-01 07:59:59.999999"],
+    "wall": ["2020-03-01 00:00:00", "2020-03-01", "2020-02"],
+}
+
+
+@pytest.fixture(scope="module")
+def meta_index(spark, tmp_path_factory):
+    """An index whose doc_meta has string, int, bigint above 2^53,
+    double (with NaN and infinities), date, timestamp and timestamp_ntz
+    columns, with nulls in each."""
+    import datetime as dt
+    from openaleph_search_spark.index.build import build_index
+    rng = np.random.RandomState(11)
+    utc = dt.timezone.utc
+    t0 = dt.datetime(2020, 3, 1, tzinfo=utc)
+
+    def pick(vals):
+        return None if rng.rand() < 0.2 else vals[rng.randint(len(vals))]
+    rows = [(f"r{n % 3}", f"p{n}", "c", "txt", "alpha beta",
+             pick(["a", "b", "c", "zz"]), pick([-2, 0, 1, 5, 7]),
+             pick([_BIG, _BIG + 1, _BIG + 2, -(2 ** 60), 3]),
+             pick([-0.0, 0.0, 2.5, -1.5, float("nan"), float("inf")]),
+             pick([dt.date(2020, 2, 29), dt.date(2020, 3, 1),
+                   dt.date(2019, 12, 31), dt.date(2021, 1, 1)]),
+             pick([t0 + dt.timedelta(hours=h)
+                   for h in (-9, -8, -1, 0, 7.99999, 8, 30)]),
+             pick([t0.replace(tzinfo=None) + dt.timedelta(hours=h)
+                   for h in (-1, 0, 5)]))
+            for n in range(48)]
+    docs = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, "
+              "content string, s string, i int, b bigint, d double, "
+              "dt date, ts timestamp, wall timestamp_ntz")
+    out = str(tmp_path_factory.mktemp("idx_meta"))
+    build_index(spark, docs, out, num_partitions=3, num_shards=2,
+                meta_cols=list(_META_POOLS))
+    return out
+
+
+@st.composite
+def _filter_args(draw):
+    cols = list(_META_POOLS)
+    args = {}
+    for col in draw(st.lists(st.sampled_from(cols), max_size=3)):
+        kind = draw(st.sampled_from(["filter", "exclude", "empty",
+                                     "gte", "gt", "lte", "lt"]))
+        vals = draw(st.lists(st.sampled_from(_META_POOLS[col]),
+                             min_size=1, max_size=2))
+        if kind in ("filter", "exclude"):
+            args[f"{kind}:{col}"] = vals
+        elif kind == "empty":
+            args[f"empty:{col}"] = "true"
+        else:
+            args[f"filter:{kind}:{col}"] = vals[0]
+    datasets = draw(st.one_of(st.none(), st.sets(st.sampled_from(
+        ["a", "b", "zz"]), max_size=2)))
+    return args, datasets
+
+
+@given(case=_filter_args())
+@example(case=({"filter:gte:wall": "2020-03-01"}, None))
+@example(case=({"filter:lt:ts": "2020-03-01", "exclude:d": "NaN"}, None))
+@example(case=({"filter:gt:dt": "2020-02", "filter:b": str(_BIG + 1)},
+               {"a", "zz"}))
+@settings(max_examples=40, deadline=None)
+def test_meta_spec_mask_matches_column(spark, meta_index, case):
+    """One MetaSpec, two evaluators: the ids ``spec.mask`` keeps over
+    the doc_meta parts equal the ids ``doc_meta.filter(spec.column())``
+    keeps — for random filter, exclude, empty and range args (partial
+    dates included) and an optional auth conjunct, under a UTC and a
+    non-UTC session time zone."""
+    import pyarrow.dataset as ds
+    from openaleph_search_spark.index.storage import IndexStorage
+    from openaleph_search_spark.query.auth import SearchAuth
+    from openaleph_search_spark.query.filters import meta_spec
+    from openaleph_search_spark.query.parser import parse_args
+    args, datasets = case
+    sa = parse_args(args)
+    auth = None if datasets is None else SearchAuth(datasets=datasets)
+    st_ = IndexStorage(meta_index)
+    dm = st_.doc_meta(spark)
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for zone in ("UTC", "America/Los_Angeles"):
+            spark.conf.set("spark.sql.session.timeZone", zone)
+            spec = meta_spec(spark, dm.schema, sa.filters, sa.excludes,
+                             sa.empties, sa.ranges, auth, "s")
+            got = set()
+            for name in st_.io.listdir(st_.doc_meta_dir):
+                t = ds.dataset(st_.io.path(f"{st_.doc_meta_dir}/{name}"),
+                               filesystem=st_.io.fs).to_table()
+                got |= set(t.column("doc_id").to_numpy()[spec.mask(t)]
+                           .tolist())
+            want = {r[0] for r in dm.filter(spec.column())
+                    .select("doc_id").collect()}
+            assert got == want, (zone, args, datasets, spec)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)

@@ -278,7 +278,7 @@ def test_explain_strategies(fixture_engine):
     assert e["strategy"] == "match_all_meta_scan"
     e = fixture_engine.explain({"q": "banana", "facet": "lang",
                                 "limit": 0})
-    assert e["strategy"] == "facet_partials_cogroup"
+    assert e["strategy"] == "facet_partials_scatter"
     e = fixture_engine.explain({"q": "-banana", "limit": 10})
     assert e["strategy"] == "anti_join_scan"
     e = fixture_engine.explain({"q": '"banana crime"', "limit": 5})

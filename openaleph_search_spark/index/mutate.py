@@ -130,6 +130,10 @@ def export_index(spark: SparkSession, storage: IndexStorage,
 
 
 _PAYLOADS = ("docs_payload", "tfs_payload", "dls_payload", "pos_payload")
+# docs a compaction task must rewrite before compact() fans out to
+# another: a Python task's fixed CPU over the rewrite CPU per doc
+# (0.28-0.30 s / 32-34 us = 8.2k-9.6k docs, 4-vCPU host, local[2])
+DOCS_PER_COMPACT_TASK = 10_000
 
 
 def _source_parts(storage: IndexStorage) -> list[int]:
@@ -231,15 +235,15 @@ def _rewrite_part(storage: IndexStorage, part: int, num_shards: int,
                tokens=int(pc.sum(dm["doc_len"]).as_py() or 0))
     io.write_bytes_atomic(storage.manifest_path(part),
                           json.dumps(man).encode())
-    return {"part": part, "docs_dropped": int(live.size - n),
+    return {"part": part, "docs": n, "docs_dropped": int(live.size - n),
             "blocks_dropped": blocks_dropped}
 
 
 def _compact_parts(storage: IndexStorage, parts: list[int],
                    tomb_paths: list[str], num_shards: int,
                    with_positions: bool) -> list[dict]:
-    """One compaction task: read the tombstones, keep the dead ids of
-    its own parts, rewrite those parts one by one."""
+    """One compaction group, in the driver or a task: read the
+    tombstones, keep the dead ids of its parts, rewrite them one by one."""
     from .build import DOC_ID_PART_SHIFT
     dead = _read_dead(storage.io.fs, tomb_paths)
     part_of = dead >> DOC_ID_PART_SHIFT
@@ -250,17 +254,20 @@ def _compact_parts(storage: IndexStorage, parts: list[int],
 def compact(spark: SparkSession, storage: IndexStorage) -> dict:
     """Fold the tombstones into the index and refresh its statistics.
 
-    One ``spark.range(n).mapInPandas`` job over the source parts that
-    hold a tombstoned id (the scatter query path's shape, no shuffle):
-    each task rewrites its parts in place (``_rewrite_part``), and parts
-    without a dead id are not touched. Every file keeps its
-    ``part=<p>.parquet`` name, so reads stay on the scatter path. Then
-    the driver finishes like build and append: global term stats from
-    the postings, per-field avgdl from the per-part partials, meta.json,
-    and last the tombstones go. A crash before that leaves the
-    tombstones in place (readers keep subtracting them) and a re-run
-    finishes the job. Impact bounds need no refill: they are derived
-    live at query time from each block's (max_tf, min_dl).
+    Only the source parts that hold a tombstoned id are rewritten, each
+    in place (``_rewrite_part``), so every file keeps its
+    ``part=<p>.parquet`` name and reads stay on the scatter path. Sized
+    by the work, like a read: ``n = min(targets, cores, ceil(docs /
+    DOCS_PER_COMPACT_TASK))``, the docs taken from the target parts'
+    manifests. For ``n == 1`` the driver rewrites them with no Spark job
+    (``tasks == 0``); otherwise one ``spark.range(n).mapInPandas`` job
+    of ``n`` tasks does (no shuffle). Then the driver finishes like
+    build and append: global term stats from the postings, per-field
+    avgdl from the per-part partials, meta.json, and last the
+    tombstones go. A crash before that leaves the tombstones in place
+    (readers keep subtracting them) and a re-run finishes the job.
+    Impact bounds need no refill: they are derived live at query time
+    from each block's (max_tf, min_dl).
 
     → ``{"parts_rewritten", "parts_skipped", "docs_dropped",
     "blocks_dropped", "tasks"}``."""
@@ -272,38 +279,40 @@ def compact(spark: SparkSession, storage: IndexStorage) -> dict:
     if not tomb_paths:
         return stats
     parts = _source_parts(storage)
+    manifests = storage.completed_partitions()
     dead = _read_dead(storage.io.fs, tomb_paths)
     targets = sorted(set((dead >> DOC_ID_PART_SHIFT).tolist())
                      & set(parts))
     meta = storage.read_meta()
-    if targets:
-        # one task per part up to the cluster's parallelism: each
-        # Python task has a fixed cost, so size the fan-out by the work
-        n = min(len(targets), spark.sparkContext.defaultParallelism)
+    args = (tomb_paths, int(meta["num_shards"]), bool(meta["with_positions"]))
+    docs = sum(manifests[p]["docs"] for p in targets if p in manifests)
+    n = min(len(targets), spark.sparkContext.defaultParallelism,
+            -(-docs // DOCS_PER_COMPACT_TASK))
+    if n <= 1:
+        rows = _compact_parts(storage, targets, *args)
+    else:
         groups = [targets[i::n] for i in range(n)]
-        args = (tomb_paths, int(meta["num_shards"]),
-                bool(meta["with_positions"]))
 
         def fn(it):
             for pdf in it:
                 for gid in pdf["id"]:
                     yield pd.DataFrame(_compact_parts(
                         storage, groups[int(gid)], *args))
-        rows = (spark.range(0, n, 1, n)
-                .mapInPandas(fn, "part int, docs_dropped long, "
-                                 "blocks_dropped long")
-                .collect())
-        stats.update(
-            parts_rewritten=len(rows), tasks=n,
-            docs_dropped=sum(r["docs_dropped"] for r in rows),
-            blocks_dropped=sum(r["blocks_dropped"] for r in rows))
-    stats["parts_skipped"] = len(parts) - stats["parts_rewritten"]
+        rows = [r.asDict() for r in spark.range(0, n, 1, n).mapInPandas(
+            fn, "part int, docs long, docs_dropped long, blocks_dropped long"
+        ).collect()]
+        stats["tasks"] = n
+    stats.update(parts_rewritten=len(rows),
+                 parts_skipped=len(parts) - len(rows),
+                 docs_dropped=sum(r["docs_dropped"] for r in rows),
+                 blocks_dropped=sum(r["blocks_dropped"] for r in rows))
 
     aggregate_term_stats(spark, storage)
     avgdl_by_field = _read_field_stats(storage)
+    docs_now = {r["part"]: r["docs"] for r in rows}
     meta.update({
-        "n_docs": sum(m["docs"]
-                      for m in storage.completed_partitions().values()),
+        "n_docs": sum(docs_now.get(p, m["docs"])
+                      for p, m in manifests.items()),
         "avgdl": avgdl_by_field.get("content", 0.0),
         "avgdl_by_field": avgdl_by_field,
     })

@@ -20,7 +20,6 @@ from __future__ import annotations
 import hashlib
 import re
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 

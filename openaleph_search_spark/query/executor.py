@@ -1195,23 +1195,26 @@ class SearchExecutor:
     def run_multi(self, trees: dict[str, Node], k: int | None,
                   spec: MetaSpec | None = None) -> DataFrame:
         """Evaluate MANY query trees in ONE scatter pass with
-        attribution → DataFrame(doc_id, score, entity_id), ≤ k rows per
-        tree and group. The per-term decode cache is shared across
-        trees inside a group, so entities with overlapping vocabularies
-        decode each term once. This replaces the per-entity plan-union
-        shape (10k entities = 10k unioned jobs would explode the
-        driver/planner; reference caps mention sources at 10k names,
-        query/mentions.py:76-130). With a k the rows are gathered into
-        a LocalRelation."""
+        attribution → DataFrame(doc_id, score, entity_id). The per-term
+        decode cache is shared across trees inside a group, so entities
+        with overlapping vocabularies decode each term once (one plan
+        per entity, unioned, would explode the driver at the
+        reference's 10k-name mention cap, query/mentions.py:76-130).
+        With ``k=None`` every match stays in Spark; with a k the groups'
+        rows are cut to each tree's top-k in pandas, into a
+        LocalRelation."""
         out = self._scatter_exec(
             [(str(eid), t) for eid, t in sorted(trees.items())], k, spec,
             "multi", MULTI_TYPE)
-        return out if k is None else self.local_frame(out, MULTI_TYPE)
+        return out if k is None else self.local_frame(
+            top_k(out, k, by="entity_id"), MULTI_TYPE)
 
-    def topk(self, tree: Node, k: int) -> DataFrame:
+    def topk(self, tree: Node, k: int,
+             spec: MetaSpec | None = None) -> DataFrame:
         """Global top-k → DataFrame(doc_id, score) ordered by (score
         desc, doc_id asc): the per-group top-k are gathered and cut in
-        pandas, and the result is a LocalRelation."""
+        pandas, and the result is a LocalRelation. ``spec`` as in
+        ``_scatter_exec`` (None: tombstoned docs included)."""
         return self.local_frame(
-            top_k(self._scatter_exec([(None, tree)], k, None, "topk"), k),
+            top_k(self._scatter_exec([(None, tree)], k, spec, "topk"), k),
             RESULT_TYPE)

@@ -79,6 +79,18 @@ def _hits(arr, op: str, dtype: str, vals: tuple) -> np.ndarray:
     return np.isin(x, list(vals))
 
 
+def _isin(c, dtype: str, vals: tuple):
+    """``c IN vals`` read alike by Spark and by a pushed-down Parquet
+    filter. Parquet row-group statistics order -0.0 below 0.0, while
+    Spark compares them equal (and folds the two literals into one), so
+    a zero literal alone lets the scan skip a row group whose zeros all
+    have the other sign: a float zero is matched as [-0.0, 0.0]."""
+    if dtype not in ("float", "double") or all(v != 0 for v in vals):
+        return c.isin([_lit(dtype, v) for v in vals])
+    return (c.isin([_lit(dtype, v) for v in vals if v != 0])
+            | c.between(_lit(dtype, -0.0), _lit(dtype, 0.0)))
+
+
 def _lit(dtype: str, v):
     """The Spark literal of a stored comparison value."""
     if dtype == "string":
@@ -123,16 +135,20 @@ class MetaSpec:
         pred = F.lit(True)
         for op, col, dtype, vals in self.conjuncts:
             c = F.col(col)
-            lits = [_lit(dtype, v) for v in vals]
             if op == "isnull":
                 p = c.isNull()
             elif op == "in":
-                p = c.isin(lits)
+                p = _isin(c, dtype, vals)
             elif op == "notin_or_null":
-                p = ~c.isin(lits) | c.isNull()
+                p = ~_isin(c, dtype, vals) | c.isNull()
             else:
-                p = {"gte": c >= lits[0], "gt": c > lits[0],
-                     "lte": c <= lits[0], "lt": c < lits[0]}[op]
+                v = vals[0]
+                if dtype in ("float", "double") and v == 0:
+                    # the inclusive bound keeps both zeros (see _isin)
+                    v = {"gte": -0.0, "lte": 0.0}.get(op, v)
+                lit = _lit(dtype, v)
+                p = {"gte": c >= lit, "gt": c > lit,
+                     "lte": c <= lit, "lt": c < lit}[op]
             pred = pred & p
         return pred
 

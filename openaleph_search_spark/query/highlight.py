@@ -11,7 +11,6 @@ top-k hit set with the same analyzer chain.
 from __future__ import annotations
 
 import html
-import re
 
 import pandas as pd
 

@@ -7,7 +7,7 @@ query/queries.py:373-528, docs/percolation.md) and asks ES which stored
 queries match a document. Spark-first this inverts into a **broadcast
 watchlist join**: analyze each document once (vectorized), then check
 every entity's phrase clauses against the token-position map inside one
-``mapInPandas`` pass — no index round-trip, embarrassingly parallel
+``mapInArrow`` pass — no index round-trip, embarrassingly parallel
 over the docs table.
 
 Name cleaning (T9, transform/util.py:98-156 + settings.py:122,131):
@@ -20,13 +20,16 @@ names 0.8 (reference T10 boosts).
 """
 from __future__ import annotations
 
+import json
+import os
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..analysis.analyzer import analyze_query_terms, tokenize_flat
+from .filters import MetaSpec
 from .ir import Bool, PhraseLeaf, TermLeaf
 
 SINGLE_TOKEN_MIN_LENGTH = 7  # reference pytest env pins 7
@@ -35,6 +38,11 @@ OTHER_NAME_BOOST = 0.8
 DEFAULT_SLOP = 2
 MAX_PICKED_NAMES = 5   # reference pick_names budget (matching.py:31-69)
 MAX_CLAUSES = 500      # reference MAX_CLAUSES (matching.py:28)
+# docs per kernel chunk: bounds the per-chunk working set (the
+# lexsort/searchsorted intermediates grow with docs x clause hits, and
+# ~1k docs keeps them cache-sized), and the docs one batch task is
+# sized for (_spread)
+CHUNK_DOCS = 1024
 
 
 def _levenshtein(a: str, b: str) -> int:
@@ -215,13 +223,9 @@ class _PercPlan:
                 gid += 1
         self.c_gid_arr = np.asarray(c_gid, dtype=np.int64)
         self.c_slot_arr = np.asarray(c_slot, dtype=np.int64)
-        # term → clause-entry lookup (replaces a per-chunk pandas merge
-        # of the full token table against the clause table: the merge
-        # hashed every token string into a DataFrame join — the dominant
-        # kernel cost. factorize + this LUT hashes each term once and
-        # gathers entries with pure integer numpy; row order differs
-        # from the merge but every consumer below sorts/uniques its
-        # keys)
+        # term → clause-entry lookup: factorize + this LUT hashes each
+        # term once and gathers entries with pure integer numpy (a pandas
+        # merge of every token against the clause table cost the most)
         _lut: dict[str, list[int]] = {}
         for i, t in enumerate(c_tok):
             _lut.setdefault(t, []).append(i)
@@ -250,8 +254,8 @@ class _PercPlan:
 
 
 def _percolate_chunk(P: _PercPlan, texts: pd.Series, slop: int):
-    """Evaluate one ≤1k-doc chunk. Returns ``None`` (no hits) or
-    ``(m_doc_grp, ent_idx, scores, m_gid, grp)`` where ``m_doc_grp``
+    """Evaluate one chunk of ≤ ``CHUNK_DOCS`` docs. Returns ``None`` (no
+    hits) or ``(m_doc_grp, ent_idx, scores, m_gid, grp)`` where ``m_doc_grp``
     indexes rows of the chunk, ``ent_idx = m_gid[grp]`` indexes
     ``P.g_entity``/group starts, and matched names per group are
     ``P.g_name[m_gid][grp[i]:grp[i+1]]``."""
@@ -329,60 +333,20 @@ def _percolate_chunk(P: _PercPlan, texts: pd.Series, slop: int):
     return m_doc[grp], m_gid[grp], scores, m_gid, grp
 
 
-def _percolate_batch_fn(stored: list[StoredQuery], id_cols: list[str],
-                        text_col: str, slop: int):
-    """The mapInPandas body of :func:`percolate_docs` (module-level so
-    the property suite can fuzz it directly against the per-doc
-    ``percolate_text`` reference path). Streaming sources use this
-    path; batch goes through :func:`_percolate_batch_arrow_fn`, which
-    shares :func:`_percolate_chunk` verbatim."""
-    P = _PercPlan(stored)
-
-    def fn(it):
-        empty = pd.DataFrame({
-            **{c: pd.Series(dtype=object) for c in id_cols},
-            "entity_id": pd.Series(dtype=object),
-            "score": pd.Series(dtype=np.float64),
-            "matched_names": pd.Series(dtype=object)})
-        # bound the per-chunk working set (same lesson as the build's
-        # bounded tasks): the merge/lexsort intermediates grow with
-        # docs x clause-hits, and oversized fresh allocations hit the
-        # memory regime where shared-host throughput collapses; ~1k
-        # docs keeps them cache-friendly. Chunk loop is O(batches).
-        for whole in it:
-            for lo in range(0, len(whole), 1024):
-                pdf = whole.iloc[lo:lo + 1024]
-                hit = _percolate_chunk(P, pdf[text_col], slop)
-                if hit is None:
-                    yield empty
-                    continue
-                m_doc_grp, ent_idx, scores, m_gid, grp = hit
-                res = pd.DataFrame(
-                    {c: pdf[c].to_numpy()[m_doc_grp] for c in id_cols})
-                res["entity_id"] = P.g_entity[ent_idx]
-                res["score"] = scores
-                # plain slice views instead of np.split: array_split
-                # pays a python swapaxes per piece — profiled at ~60%
-                # of the whole kernel on match-heavy batches
-                nv = P.g_name[m_gid]
-                bounds = np.r_[grp, m_gid.size]
-                res["matched_names"] = [
-                    nv[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
-                yield res
-
-    return fn
-
-
 def _percolate_batch_arrow_fn(stored: list[StoredQuery],
                               id_cols: list[str], text_col: str,
                               slop: int, large_var_types: bool = False):
-    """mapInArrow body: same :func:`_percolate_chunk` kernel, but the
-    output batch is built directly in Arrow — the name dictionary is
-    converted ONCE per task and every output column is an integer
-    ``take`` on it (or on the input batch), instead of a per-row
-    pandas→Arrow object conversion of ~100k rows/task. Measured 3-7×
-    cheaper on the result shape (guide §4: shrink the Python boundary,
-    not just the kernel). ``large_var_types`` mirrors the session's
+    """The mapInArrow body of :func:`percolate_docs`, batch and
+    streaming alike (module-level so the property suite can fuzz it
+    directly against the per-doc ``percolate_text`` reference path).
+    Each ≤ ``CHUNK_DOCS`` slice of an input batch runs the
+    :func:`_percolate_chunk` kernel, and its output batch is built
+    directly in Arrow — the name dictionary is converted ONCE per task
+    and every output column is an integer ``take`` on it (or on the
+    input batch), instead of a per-row pandas→Arrow object conversion
+    of ~100k rows/task. Measured 3-7× cheaper on the result shape
+    (shrink the Python boundary, not just the kernel).
+    ``large_var_types`` mirrors the session's
     ``spark.sql.execution.arrow.useLargeVarTypes``, under which Spark
     declares ``large_string`` for every string of the result schema; the
     emitted batches match that declared schema (pyspark 4.1.2 happens
@@ -402,10 +366,8 @@ def _percolate_batch_arrow_fn(stored: list[StoredQuery],
                        pa.field("score", pa.float64()),
                        pa.field("matched_names", pa.list_(str_t))])
             schema = pa.schema(fields)
-            # same 1k-doc chunk bound as the pandas path (cache-sized
-            # intermediates)
-            for lo in range(0, rb.num_rows, 1024):
-                chunk = rb.slice(lo, 1024)
+            for lo in range(0, rb.num_rows, CHUNK_DOCS):
+                chunk = rb.slice(lo, CHUNK_DOCS)
                 hit = _percolate_chunk(
                     P, chunk.column(t_i).to_pandas(), slop)
                 if hit is None:
@@ -424,23 +386,51 @@ def _percolate_batch_arrow_fn(stored: list[StoredQuery],
     return fn
 
 
+def _spread(src: DataFrame) -> DataFrame:
+    """Fan a batch input with fewer partitions than cores (one parquet
+    file, a LocalRelation) out to ``min(cores, ceil(rows / CHUNK_DOCS))``
+    tasks: each Python task has a fixed cost, so a micro-batch of one
+    chunk keeps its scan's split and takes no Exchange. The rows come
+    from the parquet footers of the input files (no job); when they
+    can't be read, spread to every core. At corpus scale partitions >=
+    cores, so no footer is opened and doc text takes no extra shuffle."""
+    import pyarrow.parquet as pq
+    from ..index.fsio import resolve
+    par = src.sparkSession.sparkContext.defaultParallelism
+    have = src.rdd.getNumPartitions()
+    if have >= par:
+        return src
+    files, n = src.inputFiles(), par
+    try:
+        if files:
+            rows = sum(pq.read_metadata(p, filesystem=fs).num_rows
+                       for fs, p in map(resolve, files))
+            n = min(par, -(-rows // CHUNK_DOCS))
+    except (OSError, ValueError):  # unreadable, or not parquet
+        pass
+    return src.repartition(n) if n > have else src
+
+
 def percolate_docs(docs: DataFrame, stored: list[StoredQuery],
                    id_cols: list[str] | None = None,
                    text_col: str = "content",
                    slop: int = DEFAULT_SLOP) -> DataFrame:
-    """Batch percolation: broadcast the compiled watchlist, analyze each
-    partition's docs once, emit (doc ids..., entity_id, score, matched).
+    """Percolate a batch or streaming docs DataFrame against a compiled
+    watchlist → (doc ids..., entity_id, score, matched_names).
 
-    Fully vectorized trigger + verify: the batch's (doc, token, pos)
-    table hash-joins against a (token, clause, slot) table (pandas
-    merge), then each phrase length class runs ONE composite-key
+    One ``mapInArrow`` pass (:func:`_percolate_batch_arrow_fn`) analyzes
+    each doc once. Trigger + verify are vectorized: every token is
+    mapped to the clause entries it can fill through a term lookup
+    table, then each phrase length class runs ONE composite-key
     searchsorted nearest-neighbor chain over every (doc, clause) pair
     at once — existence, not tf, is all percolation needs. No per-doc
     or per-clause Python in the hot path.
 
-    Scale shape: watchlist is driver-compiled & closure-broadcast (the
-    reference caps percolator candidates per shard the same way); docs
-    stream through mapInPandas with constant memory.
+    Scale shape: the watchlist is driver-compiled and closure-broadcast
+    (the reference caps percolator candidates per shard the same way);
+    docs stream through in ≤ ``CHUNK_DOCS`` chunks with constant memory.
+    A batch input is sized by its rows (:func:`_spread`); a streaming
+    micro-batch keeps its source's splits.
     """
     id_cols = id_cols or ["repo", "path", "commit"]
     id_schema = ", ".join(
@@ -448,17 +438,8 @@ def percolate_docs(docs: DataFrame, stored: list[StoredQuery],
     out_schema = (f"{id_schema}, entity_id string, score double, "
                   f"matched_names array<string>")
     src = docs.select(*id_cols, text_col)
-    if src.isStreaming:  # .rdd / mapInArrow paths are batch-only
-        return src.mapInPandas(
-            _percolate_batch_fn(stored, id_cols, text_col, slop),
-            out_schema)
-    # a small input (fewer partitions than cores — e.g. one parquet
-    # file) would run the whole kernel on one task; rebalance so every
-    # core percolates. At corpus scale partitions >> cores, so this
-    # never fires and doc text never takes an extra shuffle.
-    par = src.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
+    if not src.isStreaming:  # a streaming plan has no .rdd
+        src = _spread(src)
     large = src.sparkSession.conf.get(
         "spark.sql.execution.arrow.useLargeVarTypes", "false")
     return src.mapInArrow(
@@ -491,7 +472,6 @@ def _registry_schema():
 
 
 def _registry_batches(storage) -> list[str]:
-    import os
     reg_dir = _registry_dir(storage)
     return sorted(n for n in storage.io.listdir(reg_dir)
                   if n.startswith("batch-") and n.endswith(".parquet"))
@@ -503,7 +483,6 @@ def _write_registry_batch(storage, rows: list[dict]) -> None:
     persists 156k percolator queries per index (indexes.py:119-124);
     a rewrite-the-world JSON blob would make every registration a full
     registry read+write and an unbounded driver allocation."""
-    import os
     import pyarrow as pa
     reg_dir = _registry_dir(storage)
     storage.io.mkdirs(reg_dir)
@@ -560,7 +539,6 @@ def compact_registry(storage) -> int:
     the folded batch's seq and be silently overwritten. Serialize
     registry WRITES externally (reads are always safe).
     → number of live stored queries kept."""
-    import os
     stored = load_watchlist(storage)
     reg_dir = _registry_dir(storage)
     old = _registry_batches(storage)
@@ -578,8 +556,6 @@ def compact_registry(storage) -> int:
 
 
 def load_watchlist(storage) -> list[StoredQuery]:
-    import json
-    import os
     reg_dir = _registry_dir(storage)
     by_id: dict[str, StoredQuery | None] = {}
     # legacy single-JSON registry (pre-parquet layout) seeds the state
@@ -612,7 +588,6 @@ def percolate_index(storage, docs: DataFrame,
 
 
 def _registry_dir(storage) -> str:
-    import os
     return os.path.join(storage.root, "percolator")
 
 
@@ -635,20 +610,22 @@ def mentions_tree(names: list[str], slop: int = DEFAULT_SLOP,
 
 def mentions_query(engine, names: list[str], k: int = 10,
                    slop: int = DEFAULT_SLOP) -> DataFrame:
+    """Q19: the global top-k live docs mentioning any of ``names``."""
     tree = mentions_tree(names, slop)
     if tree is None:
         return engine.spark.createDataFrame([], "doc_id long, score double")
-    return engine.executor.topk(tree, k)
+    return engine.executor.topk(tree, k, MetaSpec())
 
 
 def multi_mentions(engine, entities: dict[str, list[str]], k: int = 10,
                    slop: int = DEFAULT_SLOP) -> DataFrame:
-    """Per-entity attribution in ONE Spark job: every entity's phrase
-    tree is evaluated in a single per-shard grouped-map pass (shared
-    postings scan + per-term decode cache), then a per-entity window
-    keeps the global top-k. The previous shape — one topk() plan per
-    entity unioned together — was a driver/planner explosion at the
-    reference's 10k-entity cap (query/mentions.py:76-130)."""
+    """Per-entity attribution in ONE scatter pass: every entity's phrase
+    tree is evaluated in the same groups (shared postings scan +
+    per-term decode cache), and the gathered rows are cut to each
+    entity's top-k live docs in pandas — a plan of one group runs no
+    Spark job. The previous shape — one topk() plan per entity unioned
+    together — was a driver/planner explosion at the reference's
+    10k-entity cap (query/mentions.py:76-130)."""
     trees = {}
     for eid, names in sorted(entities.items()):
         tree = mentions_tree(names, slop)
@@ -657,9 +634,4 @@ def multi_mentions(engine, entities: dict[str, list[str]], k: int = 10,
     if not trees:
         return engine.spark.createDataFrame(
             [], "doc_id long, score double, entity_id string")
-    from pyspark.sql import Window
-    res = engine.executor.run_multi(trees, k)
-    w = Window.partitionBy("entity_id").orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    return (res.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k).drop("_rn"))
+    return engine.executor.run_multi(trees, k, MetaSpec())

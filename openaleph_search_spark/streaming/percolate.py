@@ -4,10 +4,11 @@ The reference's percolation is operationally a streaming concern —
 every NEW document is matched against the stored watchlist queries as
 it arrives (/root/reference/docs/percolation.md: ingest-time alerting
 against 2.1M registered entities). The batch operator
-(``query/percolate.percolate_docs``) is a pure ``mapInPandas``
+(``query/percolate.percolate_docs``) is one ``mapInArrow``
 transformation with a driver-compiled, closure-broadcast watchlist —
 stateless per batch — so it lifts onto Structured Streaming unchanged:
-the SAME vectorized trigger+verify kernel runs over each micro-batch.
+the SAME emitter and vectorized trigger+verify kernel run over each
+micro-batch, on the source's own splits.
 
 Two entry points:
 

@@ -156,32 +156,27 @@ def test_percolate_docs_batch(spark, fixture_docs_df):
     assert all(r["score"] == 2.0 for r in out)
 
 
-def test_percolate_arrow_emitter_matches_pandas_body(spark,
-                                                     fixture_docs_df):
-    """Batch percolation emits through the mapInArrow body while
-    streaming keeps the pandas body; both wrap the same
-    _percolate_chunk kernel and must produce identical result sets
-    (guards the round-6 Arrow-out rewrite)."""
+def test_percolate_arrow_emitter_matches_percolate_text(
+        spark, fixture_docs_df):
+    """percolate_docs emits through the one mapInArrow body, batch and
+    streaming alike; its rows must equal the per-doc percolate_text
+    reference on every (doc, entity, score, matched_names)."""
     from openaleph_search_spark.query.percolate import (
-        _percolate_batch_fn, compile_watchlist, percolate_docs)
+        compile_watchlist, percolate_docs, percolate_text)
     stored = compile_watchlist([
         {"entity_id": "e1", "names": ["Paul Manafort"],
          "other_names": ["Manafort"]},
         {"entity_id": "e3", "names": ["Владимир Путин"]},
     ])
-    id_cols = ["repo", "path", "commit"]
-    arrow = percolate_docs(fixture_docs_df, stored, slop=2).collect()
-    pandas_rows = (fixture_docs_df.select(*id_cols, "content")
-                   .mapInPandas(
-                       _percolate_batch_fn(stored, id_cols,
-                                           "content", 2),
-                       "repo string, path string, commit string, "
-                       "entity_id string, score double, "
-                       "matched_names array<string>").collect())
-    key = lambda r: (r["repo"], r["path"], r["commit"], r["entity_id"],
-                     round(r["score"], 9), tuple(r["matched_names"]))
-    assert len(arrow) > 0
-    assert sorted(map(key, arrow)) == sorted(map(key, pandas_rows))
+    got = sorted((r["path"], r["entity_id"], round(r["score"], 9),
+                  tuple(r["matched_names"]))
+                 for r in percolate_docs(fixture_docs_df, stored,
+                                         slop=2).collect())
+    want = sorted((r["path"], h["entity_id"], round(h["score"], 9),
+                   tuple(h["matched_names"]))
+                  for r in fixture_docs_df.collect()
+                  for h in percolate_text(r["content"], stored, slop=2))
+    assert got and got == want
 
 
 def test_percolate_docs_large_var_types(spark, fixture_docs_df):
@@ -246,16 +241,34 @@ def test_mentions_query(fixture_engine, spark_jobs, monkeypatch):
     assert len(jobs) == 1 and again == got
 
 
-def test_multi_mentions_attribution(fixture_engine):
+def test_multi_mentions_attribution(fixture_engine, spark_jobs,
+                                    monkeypatch):
+    """A one-group multi_mentions plan runs no Spark job: the gathered
+    rows are cut to each entity's top-k in pandas, and a ≥2-group job
+    returns the same rows."""
+    from openaleph_search_spark.query import executor as xmod
     from openaleph_search_spark.query.percolate import multi_mentions
-    out = multi_mentions(fixture_engine,
-                         {"e1": ["Paul Manafort"], "e2": ["KwaZulu"]},
-                         k=10).collect()
+    entities = {"e1": ["Paul Manafort"], "e2": ["KwaZulu"],
+                "e3": ["banana crime"]}
+    out, jobs = spark_jobs(lambda: multi_mentions(
+        fixture_engine, entities, k=10).collect())
+    assert jobs == []
     by_entity = {}
     for r in out:
         by_entity.setdefault(r["entity_id"], set()).add(r["doc_id"])
     assert len(by_entity["e1"]) == 1
     assert len(by_entity["e2"]) == 2
+    best = {}
+    for r in sorted(out, key=lambda r: (-r["score"], r["doc_id"])):
+        best.setdefault(r["entity_id"], tuple(r))
+    cut = sorted(map(tuple, multi_mentions(fixture_engine, entities,
+                                           k=1).collect()))
+    assert cut == sorted(best.values()) and len(cut) == 3
+    monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK", 1)  # ≥2 groups
+    again, jobs = spark_jobs(lambda: multi_mentions(
+        fixture_engine, entities, k=1).collect())
+    assert len(jobs) == 1 and jobs[0][0] >= 2
+    assert sorted(map(tuple, again)) == cut
 
 
 def test_synonyms_preserve_field(spark, fixture_index, syn_table):

@@ -235,8 +235,7 @@ def test_compact_refreshes_per_field_stats(spark, fixture_docs_df,
     assert stats["parts_skipped"] == len(parts) - len(dead_parts)
     assert stats["docs_dropped"] == n_dead == 3
     assert stats["blocks_dropped"] > 0  # e.g. terms only r3 docs had
-    assert stats["tasks"] == min(len(dead_parts),
-                                 spark.sparkContext.defaultParallelism)
+    assert stats["tasks"] == 0  # a few docs: rewritten in the driver
     survivors = fixture_docs_df.filter(f"NOT ({_DEAD})")
     build_index(spark, survivors, fresh, num_partitions=4, num_shards=2,
                 bigrams=True)
@@ -292,10 +291,89 @@ def test_compact_leaves_untouched_parts_alone(spark, mutable_index):
     assert stats.pop("blocks_dropped") >= 0
     assert stats == {"parts_rewritten": 1,
                      "parts_skipped": len(parts) - 1,
-                     "docs_dropped": 1, "tasks": 1}
+                     "docs_dropped": 1, "tasks": 0}
     assert {p: _part_files(st, p) for p in before} == before
     assert _part_files(st, hit) != hit_before
     assert Engine(spark, mutable_index).count({"q": "banana"}) == 1
+
+
+def _tree_files(root):
+    """Every file under an index root except the tombstones → bytes,
+    keyed by path relative to the root."""
+    out = {}
+    for d, _, names in os.walk(root):
+        rel = os.path.relpath(d, root)
+        if rel.split(os.sep)[0] == "tombstones":
+            continue
+        for n in names:
+            with open(os.path.join(d, n), "rb") as f:
+                out[os.path.join(rel, n)] = f.read()
+    return out
+
+
+def test_compact_small_runs_in_driver(spark, mutable_index, spark_jobs):
+    """A compaction whose target parts fit one group rewrites them in
+    the driver: no Spark job, ``tasks == 0``."""
+    st = IndexStorage(mutable_index)
+    delete_docs(spark, st, _DEAD)
+    stats, jobs = spark_jobs(lambda: compact(spark, st))
+    assert jobs == []
+    assert stats["tasks"] == 0 and stats["parts_rewritten"] >= 2
+    assert read_tombstones(spark, st) is None
+    assert Engine(spark, mutable_index).count({"q": "banana"}) == 1
+
+
+def test_compact_job_path_matches_driver_path(spark, mutable_index,
+                                              tmp_path, monkeypatch,
+                                              spark_jobs):
+    """Forced onto the job path (one task per target part), compact()
+    runs one single-stage job and leaves every part file byte-identical
+    to the driver path's on a copy of the same index (the term
+    dictionary's row order follows pyarrow's group_by, so its rows are
+    compared)."""
+    import shutil
+    from openaleph_search_spark.index import mutate
+    st = IndexStorage(mutable_index)
+    delete_docs(spark, st, _DEAD)
+    copy = str(tmp_path / "idx_job_path")
+    shutil.copytree(mutable_index, copy)
+    by_driver = compact(spark, st)
+    monkeypatch.setattr(mutate, "DOCS_PER_COMPACT_TASK", 1)
+    by_job, jobs = spark_jobs(lambda: compact(spark, IndexStorage(copy)))
+    n = by_driver["parts_rewritten"]
+    assert n >= 2 and by_driver["tasks"] == 0
+    assert jobs == [[n]] and by_job.pop("tasks") == n
+    by_driver.pop("tasks")
+    assert by_job == by_driver
+    driver_files, job_files = _tree_files(mutable_index), _tree_files(copy)
+    assert driver_files.keys() == job_files.keys()
+    terms = os.path.join("term_stats", "part=all.parquet")
+    assert {k for k in driver_files
+            if driver_files[k] != job_files[k]} <= {terms}
+    key = lambda st: sorted(tuple(r) for r in st.term_stats(spark).collect())
+    assert key(st) == key(IndexStorage(copy))
+
+
+def test_mentions_skip_tombstoned_docs(spark, mutable_index):
+    """mentions_query and multi_mentions return live docs only: a
+    deleted doc's id never comes back."""
+    from openaleph_search_spark.query.percolate import (mentions_query,
+                                                        multi_mentions)
+    st = IndexStorage(mutable_index)
+    victim = st.doc_meta(spark).filter(
+        F.col("path") == "b/manafort.js").collect()[0]["doc_id"]
+    names = ["Paul Manafort", "KwaZulu"]
+    before = {r["doc_id"] for r in mentions_query(
+        Engine(spark, mutable_index), names).collect()}
+    assert victim in before
+    delete_by_ids(spark, st, [victim])
+    eng = Engine(spark, mutable_index)
+    got = {r["doc_id"] for r in mentions_query(eng, names).collect()}
+    assert got == before - {victim}
+    multi = multi_mentions(eng, {"e1": ["Paul Manafort"],
+                                 "e2": ["KwaZulu"]}).collect()
+    assert {r["entity_id"] for r in multi} == {"e2"}
+    assert victim not in {r["doc_id"] for r in multi}
 
 
 def test_compact_crash_then_rerun(spark, fixture_docs_df, tmp_path,

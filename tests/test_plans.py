@@ -646,3 +646,78 @@ def test_gathered_hits_keep_types(spark, fixture_docs_df, tmp_path,
     monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK", 1)
     assert eng.explain(searches[0][0])["scatter_tasks"] >= 2
     assert results() == got
+
+
+# ---------------------------------------------------------- percolation --
+def _single_file_docs(spark, tmp_path, rows):
+    """``rows`` (conftest row shape) written as ONE parquet file and
+    read back: a scan of one partition."""
+    out = str(tmp_path / "perc_docs")
+    (spark.createDataFrame(rows, "repo string, path string, "
+                                 "commit string, lang string, "
+                                 "content string")
+     .coalesce(1).write.parquet(out))
+    df = spark.read.parquet(out)
+    assert df.rdd.getNumPartitions() == 1
+    return df
+
+
+def _perc_key(r):
+    return (r["path"], r["entity_id"], round(r["score"], 9),
+            tuple(r["matched_names"]))
+
+
+def _perc_want(rows, stored):
+    from openaleph_search_spark.query.percolate import percolate_text
+    return sorted((r[1], h["entity_id"], round(h["score"], 9),
+                   tuple(h["matched_names"]))
+                  for r in rows for h in percolate_text(r[4], stored))
+
+
+_WATCH = [{"entity_id": "e1", "names": ["Paul Manafort"]},
+          {"entity_id": "e2", "names": ["banana crime"],
+           "other_names": ["KwaZulu Natal"]}]
+
+
+def test_percolate_small_batch_takes_no_exchange(spark, tmp_path,
+                                                 spark_jobs):
+    """A single-file batch of ≤ CHUNK_DOCS rows percolates on its scan's
+    one split: no Exchange in the plan, one job of one task. Input
+    files whose row count can't be read (not parquet) spread to every
+    core."""
+    from openaleph_search_spark.query.percolate import (
+        load_watchlist, percolate_index, register_watchlist)
+    st = IndexStorage(str(tmp_path / "idx_perc"))
+    register_watchlist(st, _WATCH)
+    docs = _single_file_docs(spark, tmp_path, FIXTURE_DOCS)
+    df = percolate_index(st, docs)
+    assert "Exchange" not in _plan(df)
+    rows, jobs = spark_jobs(df.collect)
+    assert jobs == [[1]]
+    assert sorted(map(_perc_key, rows)) == _perc_want(
+        FIXTURE_DOCS, load_watchlist(st))
+    js = str(tmp_path / "perc_json")
+    docs.coalesce(1).write.json(js)
+    par = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({par})" in _plan(percolate_index(
+        st, spark.read.schema(docs.schema).json(js)))
+
+
+def test_percolate_large_file_fans_out_by_rows(spark, tmp_path,
+                                               spark_jobs):
+    """A single-file input of more than CHUNK_DOCS rows still spreads
+    over min(cores, ceil(rows / CHUNK_DOCS)) tasks, with the same rows
+    as the per-doc reference."""
+    from openaleph_search_spark.query.percolate import (
+        CHUNK_DOCS, compile_watchlist, percolate_docs)
+    rows = [(d[0], f"{i}/{d[1]}", d[2], d[3], d[4])
+            for i in range(260) for d in FIXTURE_DOCS]
+    stored = compile_watchlist(_WATCH)
+    n = min(spark.sparkContext.defaultParallelism,
+            -(-len(rows) // CHUNK_DOCS))
+    assert n >= 2
+    df = percolate_docs(_single_file_docs(spark, tmp_path, rows), stored)
+    assert f"RoundRobinPartitioning({n})" in _plan(df)
+    got, jobs = spark_jobs(df.collect)
+    assert max(t for job in jobs for t in job) == n
+    assert sorted(map(_perc_key, got)) == _perc_want(rows, stored)

@@ -384,12 +384,13 @@ _clause = st.lists(_vocab, min_size=1, max_size=3)
        clauses=st.lists(_clause, min_size=1, max_size=6),
        slop=st.integers(min_value=0, max_value=3))
 def test_percolate_batch_matches_per_doc_reference(docs, clauses, slop):
-    """The vectorized composite-key percolation (join + searchsorted
+    """The production mapInArrow emitter (term lookup + searchsorted
     chains + segment reduce) must agree exactly with percolate_text's
     per-doc _phrase_hits evaluation on every (doc, entity, score,
     matched_names)."""
+    import pyarrow as pa
     from openaleph_search_spark.query.percolate import (
-        StoredQuery, _percolate_batch_fn, percolate_text)
+        StoredQuery, _percolate_batch_arrow_fn, percolate_text)
     stored = [StoredQuery(f"e{i}", [(toks, 2.0 if i % 2 == 0 else 0.8)])
               for i, toks in enumerate(clauses)]
     # merge multi-clause entities too: attach every third clause to e0
@@ -399,12 +400,11 @@ def test_percolate_batch_matches_per_doc_reference(docs, clauses, slop):
         del stored[2]
     pdf = pd.DataFrame({"doc_id": range(len(docs)),
                         "content": [" ".join(d) for d in docs]})
-    fn = _percolate_batch_fn(stored, ["doc_id"], "content", slop)
+    fn = _percolate_batch_arrow_fn(stored, ["doc_id"], "content", slop)
     got = set()
-    for out in fn(iter([pdf])):
-        for _, r in out.iterrows():
-            got.add((int(r["doc_id"]), r["entity_id"],
-                     round(float(r["score"]), 9),
+    for out in fn(iter([pa.RecordBatch.from_pandas(pdf)])):
+        for r in out.to_pylist():
+            got.add((r["doc_id"], r["entity_id"], round(r["score"], 9),
                      tuple(r["matched_names"])))
     want = set()
     for i, text in enumerate(pdf["content"]):
@@ -776,6 +776,8 @@ def _filter_args(draw):
 @example(case=({"filter:lt:ts": "2020-03-01", "exclude:d": "NaN"}, None))
 @example(case=({"filter:gt:dt": "2020-02", "filter:b": str(_BIG + 1)},
                {"a", "zz"}))
+@example(case=({"filter:d": ["-0.0"]}, None))
+@example(case=({"filter:gte:d": "0.0", "exclude:d": "0"}, None))
 @settings(max_examples=40, deadline=None)
 def test_meta_spec_mask_matches_column(spark, meta_index, case):
     """One MetaSpec, two evaluators: the ids ``spec.mask`` keeps over

@@ -577,8 +577,10 @@ def aggregate_term_stats(spark: SparkSession,
     compaction all stay exact with no per-part partial to keep in step.
     Adaptive execution: at small-to-medium scale the whole aggregation
     is a driver-side pyarrow group_by over a projected read — no Spark
-    job, no shuffle, no per-job fixed latency. Past a size threshold
-    (100-TB builds) it stays a distributed groupBy."""
+    job, no shuffle, no per-job fixed latency, written sorted by term
+    through ``write_parquet_atomic``. Past a size threshold (100-TB
+    builds) it stays a distributed groupBy, written with ZSTD level 1
+    pages like every other index file."""
     import pyarrow as pa
     import pyarrow.dataset as ds
     from pyarrow import fs as pafs
@@ -595,7 +597,9 @@ def aggregate_term_stats(spark: SparkSession,
                   .to_table()
                   .group_by("term")
                   .aggregate([("doc_count", "sum"), ("sum_tf", "sum")])
-                  .rename_columns(["term", "df", "cf"]))
+                  .rename_columns(["term", "df", "cf"])
+                  # group_by's row order changes from run to run
+                  .sort_by("term"))
         # replace the file first, then drop stale ones (a Spark-path
         # write's), so readers never see an empty term dictionary
         io.mkdirs(storage.term_stats_dir)
@@ -609,7 +613,10 @@ def aggregate_term_stats(spark: SparkSession,
     (storage.postings(spark)
         .groupBy("term")
         .agg(F.sum("doc_count").alias("df"), F.sum("sum_tf").alias("cf"))
-        .write.mode("overwrite").parquet(storage.term_stats_dir))
+        .write.mode("overwrite")
+        .option("compression", "zstd")
+        .option("parquet.compression.codec.zstd.level", "1")
+        .parquet(storage.term_stats_dir))
 
 
 def _read_field_stats(storage: IndexStorage) -> dict[str, float]:

@@ -180,17 +180,17 @@ def encode_positions_grouped(flat_positions: np.ndarray,
     return varint_encode_sliced(d, group_starts)
 
 
-def decode_positions(buf: bytes, tfs: np.ndarray) -> list[np.ndarray]:
-    """Inverse of :func:`encode_positions`; splits by tf counts."""
-    flat = varint_decode(buf)
-    out: list[np.ndarray] = []
-    off = 0
-    for tf in tfs:
-        tf = int(tf)
-        d = flat[off:off + tf]
-        out.append(np.cumsum(d, dtype=np.uint64))
-        off += tf
-    return out
+def decode_positions(buf: bytes, tfs: np.ndarray) -> np.ndarray:
+    """Inverse of :func:`encode_positions`: the absolute positions of
+    every doc as ONE flat int64 array, doc after doc, ``tfs[i]`` of
+    them for doc ``i`` (split with ``np.split(out, np.cumsum(tfs)[:-1])``
+    for per-doc arrays). The deltas restart at each doc head, so one
+    segmented cumsum restores them, as for the doc ids."""
+    deltas = varint_decode(buf).astype(np.int64)
+    counts = np.asarray(tfs, dtype=np.int64)  # tf >= 1 for every doc
+    run = np.cumsum(deltas)
+    heads = np.cumsum(counts) - counts
+    return run - np.repeat(run[heads] - deltas[heads], counts)
 
 
 def encode_blocks(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,

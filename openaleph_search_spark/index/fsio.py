@@ -101,9 +101,25 @@ class FsIO:
         return pq.read_table(self.path(uri), filesystem=self.fs)
 
     def write_parquet_atomic(self, table, uri: str) -> None:
-        """Written without schema metadata: pandas' metadata would
-        otherwise sit in every footer twice (raw and inside
-        ``ARROW:schema``), and no reader uses it."""
+        """The one writer of pyarrow-written index files. It encodes
+        each column by its type: ZSTD level 1 pages (level 3 wrote no
+        smaller index files, and wrote them slower); a dictionary for
+        the string columns only, since unique doc ids and varint
+        payloads only grow by one; integer columns
+        ``DELTA_BINARY_PACKED``. Every Parquet reader decodes these, so
+        files written with pyarrow's defaults (SNAPPY, every column
+        dictionary-encoded) stay valid beside them. Written without
+        schema metadata: pandas' metadata would otherwise sit in every
+        footer twice (raw and inside ``ARROW:schema``), and no reader
+        uses it."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
+        schema = table.schema
         self._write_atomic(uri, lambda tmp: pq.write_table(
-            table.replace_schema_metadata(None), tmp, filesystem=self.fs))
+            table.replace_schema_metadata(None), tmp, filesystem=self.fs,
+            compression="zstd", compression_level=1,
+            use_dictionary=[f.name for f in schema
+                            if pa.types.is_string(f.type)
+                            or pa.types.is_large_string(f.type)],
+            column_encoding={f.name: "DELTA_BINARY_PACKED" for f in schema
+                             if pa.types.is_integer(f.type)}))

@@ -240,12 +240,11 @@ def _rewrite_part(storage: IndexStorage, part: int, num_shards: int,
 
 
 def _compact_parts(storage: IndexStorage, parts: list[int],
-                   tomb_paths: list[str], num_shards: int,
+                   dead: np.ndarray, num_shards: int,
                    with_positions: bool) -> list[dict]:
-    """One compaction group, in the driver or a task: read the
-    tombstones, keep the dead ids of its parts, rewrite them one by one."""
+    """One compaction group, in the driver or a task: keep the dead ids
+    (sorted, every tombstoned id) of its parts, rewrite them one by one."""
     from .build import DOC_ID_PART_SHIFT
-    dead = _read_dead(storage.io.fs, tomb_paths)
     part_of = dead >> DOC_ID_PART_SHIFT
     return [_rewrite_part(storage, p, num_shards, dead[part_of == p],
                           with_positions) for p in parts]
@@ -284,20 +283,23 @@ def compact(spark: SparkSession, storage: IndexStorage) -> dict:
     targets = sorted(set((dead >> DOC_ID_PART_SHIFT).tolist())
                      & set(parts))
     meta = storage.read_meta()
-    args = (tomb_paths, int(meta["num_shards"]), bool(meta["with_positions"]))
+    args = (int(meta["num_shards"]), bool(meta["with_positions"]))
     docs = sum(manifests[p]["docs"] for p in targets if p in manifests)
     n = min(len(targets), spark.sparkContext.defaultParallelism,
             -(-docs // DOCS_PER_COMPACT_TASK))
     if n <= 1:
-        rows = _compact_parts(storage, targets, *args)
+        rows = _compact_parts(storage, targets, dead, *args)
     else:
         groups = [targets[i::n] for i in range(n)]
 
         def fn(it):
+            # each task reads the tombstones itself: the ids do not
+            # ride in the closure
+            dead = _read_dead(storage.io.fs, tomb_paths)
             for pdf in it:
                 for gid in pdf["id"]:
                     yield pd.DataFrame(_compact_parts(
-                        storage, groups[int(gid)], *args))
+                        storage, groups[int(gid)], dead, *args))
         rows = [r.asDict() for r in spark.range(0, n, 1, n).mapInPandas(
             fn, "part int, docs long, docs_dropped long, blocks_dropped long"
         ).collect()]

@@ -321,7 +321,7 @@ class Engine:
                     FACET_SCHEMA)
                 for f in sa.facets}
             hits = (self.doc_meta.withColumn("score", F.lit(0.0))
-                    .limit(0))
+                    .select(*self._hits_schema().names).limit(0))
             return SearchResult(hits=hits, facets=facets)
         if strategy == "topk_scatter_gather":
             # per-group top-k evaluated AND hydrated where the group
@@ -352,6 +352,8 @@ class Engine:
                 matched = matched.withColumn(
                     "score",
                     F.col("score") + F.sqrt(0.5 * F.col("doc_len")))
+        # the gathered top-k's column order, on every branch
+        matched = matched.select(*self._hits_schema().names)
 
         facets, facet_totals, significant = {}, {}, {}
         for f in sa.facets:

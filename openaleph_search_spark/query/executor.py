@@ -200,7 +200,8 @@ class _ShardEval:
                      want_positions: bool = False):
         """→ (doc_ids, scores, tfs, dls, positions) sorted by doc_id,
         restricted to ``allowed`` and optionally to ``candidates``.
-        ``positions`` is a list of per-doc arrays (empty unless asked).
+        ``positions`` is one flat int64 array, ``tfs[i]`` absolute
+        positions per doc (empty unless asked).
 
         Batched decode: ONE varint pass per payload type over all kept
         blocks (segmented cumsum restores absolute doc ids), then one
@@ -211,7 +212,8 @@ class _ShardEval:
             return self._decode_cache[term]
         pdf = self._term_blocks(term, candidates)
         empty = (np.empty(0, np.int64), np.empty(0, np.float64),
-                 np.empty(0, np.uint64), np.empty(0, np.float64), [])
+                 np.empty(0, np.uint64), np.empty(0, np.float64),
+                 np.empty(0, np.int64))
         if pdf is None:
             if cacheable:
                 self._decode_cache[term] = empty
@@ -229,8 +231,12 @@ class _ShardEval:
         ids = total - np.repeat(base, counts)
         tfs = varint_decode(b"".join(pdf["tfs_payload"])) + np.uint64(1)
         dls = varint_decode(b"".join(pdf["dls_payload"]))
-        pos_l = (decode_positions(b"".join(pdf["pos_payload"]), tfs)
-                 if want_positions else None)
+        pos = None
+        if want_positions:
+            buf = b"".join(pdf["pos_payload"])
+            if not buf:  # an index built without positions
+                return empty
+            pos = decode_positions(buf, tfs)
 
         keep = None
         if candidates is not None:
@@ -239,15 +245,15 @@ class _ShardEval:
             m2 = _in_sorted(ids, self.allowed)
             keep = m2 if keep is None else (keep & m2)
         if keep is not None:
+            if pos is not None:
+                pos = pos[np.repeat(keep, tfs.astype(np.int64))]
             ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-            if pos_l is not None:
-                pos_l = [p for p, kf in zip(pos_l, keep) if kf]
         if ids.size == 0:
             return empty
         dls = dls.astype(np.float64)
         scores = self.idf.get(term, 0.0) * bm25_tfnorm(
             tfs, dls, self._avgdl(term), self.k1, self._b(term))
-        out = (ids, scores, tfs, dls, pos_l if pos_l is not None else [])
+        out = (ids, scores, tfs, dls, pos if pos is not None else empty[4])
         if cacheable:
             self._decode_cache[term] = out
         return out
@@ -478,14 +484,11 @@ class _ShardEval:
         per_uterm: dict[str, tuple] = {}
         dl_of = np.zeros(inter.size, dtype=np.float64)
         for t in uniq:
-            ids, _, _, dls, pos_list = self._decode_term(
+            ids, _, tfs, dls, flat_pos = self._decode_term(
                 t, inter, want_positions=True)
-            counts = np.array([len(p) for p in pos_list], dtype=np.int64)
-            flat_pos = (np.concatenate(pos_list).astype(np.int64)
-                        if counts.size and counts.sum()
-                        else np.empty(0, np.int64))
             ranks = np.searchsorted(inter, ids)
-            per_uterm[t] = (np.repeat(ranks, counts), flat_pos)
+            per_uterm[t] = (np.repeat(ranks, tfs.astype(np.int64)),
+                            flat_pos)
             dl_of[ranks] = dls
 
         # composite key (doc_rank << 31) + adjusted position: doc ranks

@@ -109,9 +109,12 @@ def summary(rows: list[dict], bench: dict) -> list[str]:
                      + (f"not correct or with failed ops: {', '.join(bad)}"
                         if bad else "every run correct, 0 failed ops"))
         first = True
-        for spec in bench["end_to_end"]:
+        # a traced run reports the per-layer metrics and no end-to-end
+        # ones: print whichever every paired run has
+        for spec in bench["end_to_end"] + bench["per_layer"]:
             name = spec["name"]
-            if not seeds:
+            if not seeds or not all(name in runs[s, side]["metrics"]
+                                    for s in seeds for side in SIDES):
                 continue
             val = {side: np.array([runs[s, side]["metrics"][name]["value"]
                                    for s in seeds], float) for side in SIDES}
@@ -128,8 +131,10 @@ def summary(rows: list[dict], bench: dict) -> list[str]:
                      for s in SIDES]
             lines.append(
                 f"| {label} | `{name}` | {cells[0]} | {cells[1]} | "
-                f"{wins}/{len(seeds)} ({shift:+.1f}%, bound "
-                f"{spec['bound'] * 100:.0f}%; gap {_fmt(abs(med_c - med_p))}"
+                f"{wins}/{len(seeds)} ({shift:+.1f}%"
+                + (f", bound {spec['bound'] * 100:.0f}%" if "bound" in spec
+                   else "")
+                + f"; gap {_fmt(abs(med_c - med_p))}"
                 f" vs parent IQR {_fmt(q['parent'][2] - q['parent'][0])}) |")
     return lines + [""] + notes
 

@@ -105,7 +105,8 @@ def test_term_stats_spark_path_matches_driver_path(
         spark, fixture_docs_df, tmp_path, monkeypatch):
     """Past _TERM_STATS_DRIVER_BYTES of postings, the global term stats
     come from a Spark groupBy instead of a driver-side pyarrow one;
-    both give the same df/cf."""
+    both give the same df/cf, and both write ZSTD pages."""
+    import pyarrow.parquet as pq
     from openaleph_search_spark.index import build as bmod
     st = build_index(spark, fixture_docs_df, str(tmp_path / "idx_ts"),
                      num_partitions=4, num_shards=2)
@@ -113,10 +114,22 @@ def test_term_stats_spark_path_matches_driver_path(
     def stats():
         return {r["term"]: (r["df"], r["cf"])
                 for r in st.term_stats(spark).collect()}
+
+    def codecs():
+        files = [os.path.join(st.term_stats_dir, n)
+                 for n in os.listdir(st.term_stats_dir)
+                 if n.endswith(".parquet")]
+        assert files
+        mds = [pq.read_metadata(f) for f in files]
+        return {md.row_group(g).column(j).compression for md in mds
+                for g in range(md.num_row_groups) for j in range(3)}
     driver = stats()
+    assert codecs() == {"ZSTD"}
     monkeypatch.setattr(bmod, "_TERM_STATS_DRIVER_BYTES", -1)
     bmod.aggregate_term_stats(spark, st)
     assert stats() == driver and driver
+    assert "part=all.parquet" not in os.listdir(st.term_stats_dir)
+    assert codecs() == {"ZSTD"}
 
 
 def test_build_and_search_over_file_uri(spark, fixture_docs_df, tmp_path):

@@ -55,7 +55,9 @@ def test_positions_roundtrip(poslists):
     pos = [np.sort(np.array(p, dtype=np.uint64)) for p in poslists]
     tfs = np.array([len(p) for p in pos], dtype=np.uint64)
     buf = encode_positions(pos)
-    out = decode_positions(buf, tfs)
+    flat = decode_positions(buf, tfs)
+    assert flat.dtype == np.int64 and flat.size == int(tfs.sum())
+    out = np.split(flat, np.cumsum(tfs.astype(np.int64))[:-1])
     for a, b in zip(pos, out):
         assert (a == b).all()
 

@@ -327,10 +327,9 @@ def test_compact_job_path_matches_driver_path(spark, mutable_index,
                                               tmp_path, monkeypatch,
                                               spark_jobs):
     """Forced onto the job path (one task per target part), compact()
-    runs one single-stage job and leaves every part file byte-identical
-    to the driver path's on a copy of the same index (the term
-    dictionary's row order follows pyarrow's group_by, so its rows are
-    compared)."""
+    runs one single-stage job and leaves every index file
+    byte-identical to the driver path's on a copy of the same index,
+    the term dictionary included."""
     import shutil
     from openaleph_search_spark.index import mutate
     st = IndexStorage(mutable_index)
@@ -346,12 +345,8 @@ def test_compact_job_path_matches_driver_path(spark, mutable_index,
     by_driver.pop("tasks")
     assert by_job == by_driver
     driver_files, job_files = _tree_files(mutable_index), _tree_files(copy)
-    assert driver_files.keys() == job_files.keys()
-    terms = os.path.join("term_stats", "part=all.parquet")
-    assert {k for k in driver_files
-            if driver_files[k] != job_files[k]} <= {terms}
-    key = lambda st: sorted(tuple(r) for r in st.term_stats(spark).collect())
-    assert key(st) == key(IndexStorage(copy))
+    assert os.path.join("term_stats", "part=all.parquet") in driver_files
+    assert driver_files == job_files
 
 
 def test_mentions_skip_tombstoned_docs(spark, mutable_index):
@@ -405,8 +400,10 @@ def test_compact_crash_then_rerun(spark, fixture_docs_df, tmp_path,
     monkeypatch.setattr(mutate, "_rewrite_part", crash_after_first)
     with pytest.raises(RuntimeError, match="simulated crash"):
         # one compaction task's body, run in-process
-        mutate._compact_parts(st, dead_parts, mutate._tombstone_paths(st),
-                              2, True)
+        mutate._compact_parts(
+            st, dead_parts,
+            mutate._read_dead(st.io.fs, mutate._tombstone_paths(st)),
+            2, True)
     monkeypatch.undo()
     assert done == dead_parts[:1]
     first = st.completed_partitions()[done[0]]

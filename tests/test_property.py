@@ -499,7 +499,8 @@ def test_drop_docs_kernel_matches_per_block_reference(case):
         if not keep.any():
             continue
         pp = ([encode_positions([p]) for p, k in zip(
-            decode_positions(r["pos_payload"], t), keep) if k]
+            np.split(decode_positions(r["pos_payload"], t),
+                     np.cumsum(t.astype(np.int64))[:-1]), keep) if k]
             if with_positions else None)
         (blk,) = encode_blocks(d[keep], t[keep], l[keep], None,
                                pos_payloads=pp, block_size=1 << 20)

@@ -286,6 +286,45 @@ def test_explain_strategies(fixture_engine):
         is False  # config-dependent: fixture index may lack bigrams
 
 
+def test_hit_columns_same_on_every_branch(fixture_engine):
+    """Every search branch returns its hits as (doc_id, score,
+    …doc_meta), the gathered top-k's order, so rows compare by
+    position: sort, facets, with_total, search_after and
+    function_score (the full match), match-all, pure NOT and the
+    facet partials."""
+    gathered = fixture_engine.search({"q": "banana", "limit": 5})
+    want = gathered.hits.columns
+    assert want[:2] == ["doc_id", "score"]
+    by_id = {r["doc_id"]: tuple(r) for r in gathered.hit_rows(0, 5)}
+    q = {"q": "banana OR kwazulu", "limit": 10}
+    first = fixture_engine.search(
+        {**q, "sort": "path"}).hit_rows(0, 1)[0]
+    cases = [
+        ({**q, "sort": "doc_len"}, False, "full_match_then_branches"),
+        ({**q, "facet": "lang"}, False, "full_match_then_branches"),
+        (q, True, None),  # explain() takes no with_total
+        ({**q, "sort": "path", "search_after": [
+            first["path"], str(first["doc_id"])]}, False,
+         "full_match_then_branches"),
+        ({**q, "function_score": "true"}, False,
+         "full_match_then_branches"),
+        ({"limit": 10}, False, "match_all_meta_scan"),
+        ({"q": "-banana", "limit": 10}, False, "anti_join_scan"),
+        ({"q": "banana", "facet": "lang", "limit": 0}, False,
+         "facet_partials_scatter"),
+    ]
+    for args, with_total, strategy in cases:
+        if strategy:
+            assert fixture_engine.explain(args)["strategy"] == strategy
+        res = fixture_engine.search(args, with_total=with_total)
+        assert res.hits.columns == want, args
+    # the same rows, position for position (no function_score boost)
+    full = fixture_engine.search({"q": "banana", "limit": 5},
+                                 with_total=True)
+    assert full.total == len(by_id)
+    assert {r["doc_id"]: tuple(r) for r in full.hit_rows(0, 5)} == by_id
+
+
 def test_limit_zero(fixture_engine):
     res = fixture_engine.search({"q": "banana", "limit": 0},
                                 with_total=True)

@@ -107,10 +107,11 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
                   shard_of_part, fields: dict[str, str] | None = None,
                   bigrams: bool = False,
                   meta_cols: list[str] | None = None, *,
-                  meta_schema: StructType, tz: str):
+                  meta_schema: StructType, tz: str, epoch: int = -1):
     """Grouped-map fn: one source partition → packed block run +
     doc_meta + atomic manifest checkpoint. ``append_batch`` runs the
-    same fn in the driver for a batch that fits one part.
+    same fn in the driver for a batch that fits one part, and records
+    its streaming ``epoch`` in the manifest (-1: not a stream batch).
 
     ``fields`` maps extra indexed field names → source columns; their
     terms are stored as ``field␟token`` (FIELD_SEP) with per-field
@@ -386,8 +387,9 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
             "seconds": time.time() - t0, "attempt": attempt,
         }
         # JSON manifest written LAST = the atomic per-partition commit.
-        storage.io.write_bytes_atomic(storage.manifest_path(src_part),
-                                      json.dumps(row).encode())
+        storage.io.write_bytes_atomic(
+            storage.manifest_path(src_part),
+            json.dumps({**row, "epoch": epoch}).encode())
         return pd.DataFrame([row])
 
     return fn

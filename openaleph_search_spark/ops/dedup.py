@@ -111,15 +111,19 @@ def _base_hash64(flat: np.ndarray, key: str, hash_fn: str) -> np.ndarray:
     return pd.util.hash_array(flat, hash_key=key)
 
 
-def _band_hash_batches(num_hashes: int, bands: int, seed: int = 7,
-                       hash_fn: str = "fast"):
-    """mapInPandas fn: (doc_id, _toks) → (doc_id, band, bh) rows.
+def _minhash_bands(num_hashes: int, bands: int, seed: int = 7,
+                   hash_fn: str = "fast"):
+    """The one MinHash signature routine: → fn(toks) over a Series of
+    shingle arrays → (nz mask of the docs with shingles, their
+    flattened shingles, their shingle counts, uint64 band hashes
+    docs×bands), or None when no doc has a shingle.
 
-    Vectorized MinHash: one base-hash pass over the flattened shingles,
-    64 universal hashes via odd-multiplier affine maps (natural uint64
-    wraparound), per-doc minima via ``np.minimum.reduceat``, FNV-style
-    band folding. (A nested JVM higher-order-function formulation is
-    ~50× slower — HOF lambdas are interpreted, not codegen'd.)
+    Vectorized: one base-hash pass over the flattened shingles,
+    ``num_hashes`` universal hashes via odd-multiplier affine maps
+    (natural uint64 wraparound), per-doc minima via
+    ``np.minimum.reduceat``, FNV-style band folding. (A nested JVM
+    higher-order-function formulation is ~50× slower — HOF lambdas are
+    interpreted, not codegen'd.)
     """
     rows = num_hashes // bands
     rs = np.random.RandomState(seed)
@@ -127,32 +131,45 @@ def _band_hash_batches(num_hashes: int, bands: int, seed: int = 7,
          | np.uint64(1))
     Bv = rs.randint(0, 2**62, size=num_hashes).astype(np.uint64)
 
-    def fn(it):
+    def band_hashes(toks: pd.Series):
+        counts = toks.str.len().fillna(0).astype(np.int64).to_numpy()
+        nz = counts > 0
+        if not nz.any():
+            return None
+        cnz = counts[nz]
+        flat = np.concatenate(
+            [np.asarray(t, dtype=object) for t in toks[nz]])
         with np.errstate(over="ignore"):
-            for pdf in it:
-                counts = pdf["_toks"].str.len().fillna(0).astype(
-                    np.int64).to_numpy()
-                nz = counts > 0
-                if not nz.any():
-                    yield pd.DataFrame({"doc_id": [], "band": [], "bh": []})
-                    continue
-                flat = np.concatenate(
-                    [np.asarray(t, dtype=object) for t in pdf["_toks"][nz]])
-                base = _base_hash64(flat, "minhash000000000", hash_fn)
-                H = base[:, None] * A[None, :] + Bv[None, :]
-                starts = np.cumsum(counts[nz]) - counts[nz]
-                sig = np.minimum.reduceat(H, starts, axis=0)  # docs×hashes
-                bv = sig.reshape(-1, bands, rows)
-                bh = np.full(bv.shape[:2], 14695981039346656037,
-                             dtype=np.uint64)
-                for r in range(rows):
-                    bh = (bh ^ bv[:, :, r]) * np.uint64(1099511628211)
-                n = int(nz.sum())
-                yield pd.DataFrame({
-                    "doc_id": np.repeat(
-                        pdf["doc_id"].to_numpy()[nz], bands),
-                    "band": np.tile(np.arange(bands, dtype=np.int32), n),
-                    "bh": bh.reshape(-1).astype(np.int64)})
+            base = _base_hash64(flat, "minhash000000000", hash_fn)
+            H = base[:, None] * A[None, :] + Bv[None, :]
+            sig = np.minimum.reduceat(H, np.cumsum(cnz) - cnz, axis=0)
+            bv = sig.reshape(-1, bands, rows)
+            bh = np.full(bv.shape[:2], 14695981039346656037,
+                         dtype=np.uint64)
+            for r in range(rows):
+                bh = (bh ^ bv[:, :, r]) * np.uint64(1099511628211)
+        return nz, flat, cnz, bh
+    return band_hashes
+
+
+def _band_hash_batches(num_hashes: int, bands: int, seed: int = 7,
+                       hash_fn: str = "fast"):
+    """mapInPandas fn: (doc_id, _toks) → (doc_id, band, bh) rows, the
+    band hashes of :func:`_minhash_bands`."""
+    band_hashes = _minhash_bands(num_hashes, bands, seed, hash_fn)
+
+    def fn(it):
+        for pdf in it:
+            got = band_hashes(pdf["_toks"])
+            if got is None:
+                yield pd.DataFrame({"doc_id": [], "band": [], "bh": []})
+                continue
+            nz, _, _, bh = got
+            yield pd.DataFrame({
+                "doc_id": np.repeat(pdf["doc_id"].to_numpy()[nz], bands),
+                "band": np.tile(np.arange(bands, dtype=np.int32),
+                                int(nz.sum())),
+                "bh": bh.reshape(-1).astype(np.int64)})
     return fn
 
 
@@ -160,52 +177,32 @@ def _minhash_doc_batches(num_hashes: int, bands: int, seed: int = 7,
                          hash_fn: str = "fast"):
     """mapInPandas fn: (doc_id, _toks) → ONE row per doc carrying both
     LSH products — (doc_id, bh array<long>[bands], _h sorted digest
-    array<long>). Band semantics are bit-identical to
-    :func:`_band_hash_batches` (same affine maps, same FNV fold); the
-    verify digests are engine-internal 64-bit hashes of the shingles
-    (the oracle compares JACCARD VALUES, which are hash-invariant).
-    Fusing both products into one kernel means the shingle strings are
-    flattened/hashed in one task and NEVER persist — only the compact
-    int products do."""
-    rows = num_hashes // bands
-    rs = np.random.RandomState(seed)
-    A = ((rs.randint(1, 2**62, size=num_hashes).astype(np.uint64) << 1)
-         | np.uint64(1))
-    Bv = rs.randint(0, 2**62, size=num_hashes).astype(np.uint64)
+    array<long>). The band hashes come from :func:`_minhash_bands`,
+    as :func:`_band_hash_batches`'s do; the verify digests are
+    engine-internal 64-bit hashes of the shingles (the oracle compares
+    JACCARD VALUES, which are hash-invariant). Fusing both products
+    into one kernel means the shingle strings are flattened/hashed in
+    one task and NEVER persist — only the compact int products do."""
+    band_hashes = _minhash_bands(num_hashes, bands, seed, hash_fn)
 
     def fn(it):
-        with np.errstate(over="ignore"):
-            for pdf in it:
-                counts = pdf["_toks"].str.len().fillna(0).astype(
-                    np.int64).to_numpy()
-                nz = counts > 0
-                if not nz.any():
-                    yield pd.DataFrame({
-                        "doc_id": pd.Series(dtype=np.int64),
-                        "bh": pd.Series(dtype=object),
-                        "_h": pd.Series(dtype=object)})
-                    continue
-                flat = np.concatenate(
-                    [np.asarray(t, dtype=object) for t in pdf["_toks"][nz]])
-                cnz = counts[nz]
-                starts = np.cumsum(cnz) - cnz
-                base = _base_hash64(flat, "minhash000000000", hash_fn)
-                H = base[:, None] * A[None, :] + Bv[None, :]
-                sig = np.minimum.reduceat(H, starts, axis=0)
-                bv = sig.reshape(-1, bands, rows)
-                bh = np.full(bv.shape[:2], 14695981039346656037,
-                             dtype=np.uint64)
-                for r in range(rows):
-                    bh = (bh ^ bv[:, :, r]) * np.uint64(1099511628211)
-                bh = bh.astype(np.int64)
-                dig = pd.util.hash_array(
-                    flat, hash_key="verify0000000000").view(np.int64)
-                parts = np.split(dig, np.cumsum(cnz)[:-1])
+        for pdf in it:
+            got = band_hashes(pdf["_toks"])
+            if got is None:
                 yield pd.DataFrame({
-                    "doc_id": pdf["doc_id"].to_numpy(np.int64)[nz],
-                    "bh": pd.Series(list(bh), dtype=object),
-                    "_h": pd.Series([np.sort(p) for p in parts],
-                                    dtype=object)})
+                    "doc_id": pd.Series(dtype=np.int64),
+                    "bh": pd.Series(dtype=object),
+                    "_h": pd.Series(dtype=object)})
+                continue
+            nz, flat, cnz, bh = got
+            dig = pd.util.hash_array(
+                flat, hash_key="verify0000000000").view(np.int64)
+            parts = np.split(dig, np.cumsum(cnz)[:-1])
+            yield pd.DataFrame({
+                "doc_id": pdf["doc_id"].to_numpy(np.int64)[nz],
+                "bh": pd.Series(list(bh.astype(np.int64)), dtype=object),
+                "_h": pd.Series([np.sort(p) for p in parts],
+                                dtype=object)})
     return fn
 
 

@@ -906,7 +906,15 @@ class SearchExecutor:
 
         ``est_postings`` is the sum of df over the resolved terms (the
         union across ``trees``): the query's posting volume, read from
-        the same dictionary lookup that yields idf — no extra job."""
+        the same dictionary lookup that yields idf — no extra job.
+        Raises ``ValueError`` for a phrase the index cannot answer: one
+        that needs positions on an index built without them."""
+        need_pos = self._need_positions(trees)
+        if need_pos and not self.meta["with_positions"]:
+            raise ValueError(
+                "phrase query needs positions, but this index was built "
+                "with with_positions=False (bigrams=True answers only "
+                "exact phrases)")
         for t in trees:
             self._expand_prefixes(t)
             self._expand_wildcards(t)
@@ -942,7 +950,6 @@ class SearchExecutor:
         # bigram shingles a 2-term slop-0 phrase needs NO positions at
         # all (the bigram tf IS the phrase tf).
         bigrams_on = bool(self.meta.get("bigrams"))
-        need_pos = self._need_positions(trees)
         # sum_tf intentionally absent: the evaluator never reads it
         cols = ["term", "first_doc", "last_doc", "doc_count",
                 "max_tf", "min_dl", "docs_payload",

@@ -20,7 +20,6 @@ names 0.8 (reference T10 boosts).
 """
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -521,17 +520,14 @@ def unregister_watchlist(storage, entity_ids: list[str]) -> int:
 
 
 def compact_registry(storage) -> int:
-    """Fold the append-only registry (every register/unregister batch
-    plus any legacy JSON) into ONE batch holding the last-wins
-    survivors — keeps load time O(live queries) after heavy
-    registration churn (the reference holds 156k percolator queries;
-    unbounded batch accumulation would make every load a history
-    replay). Readers racing the compaction see a batch set whose
-    last-wins result is identical at every intermediate state: the
-    folded batch (highest seq) lands first, then the LEGACY JSON file
-    is deleted BEFORE the old batches — deleting old batches first
-    would let a reader re-seed legacy entities whose tombstone batches
-    just vanished (brief resurrection of deleted queries).
+    """Fold the append-only registry (every register/unregister batch)
+    into ONE batch holding the last-wins survivors — keeps load time
+    O(live queries) after heavy registration churn (the reference
+    holds 156k percolator queries; unbounded batch accumulation would
+    make every load a history replay). Readers racing the compaction
+    see a batch set whose last-wins result is identical at every
+    intermediate state: the folded batch (highest seq) lands first,
+    then the old batches are deleted.
 
     Single-writer assumption: compaction must not run concurrently
     with register/unregister — both allocate the next batch seq from a
@@ -547,9 +543,6 @@ def compact_registry(storage) -> int:
          "clauses": [{"tokens": list(toks), "boost": float(boost)}
                      for toks, boost in sq.clauses]}
         for sq in stored])
-    legacy = os.path.join(reg_dir, "queries.json")
-    if storage.io.exists(legacy):
-        storage.io.delete_file(legacy)
     for name in old:
         storage.io.delete_file(os.path.join(reg_dir, name))
     return len(stored)
@@ -558,13 +551,6 @@ def compact_registry(storage) -> int:
 def load_watchlist(storage) -> list[StoredQuery]:
     reg_dir = _registry_dir(storage)
     by_id: dict[str, StoredQuery | None] = {}
-    # legacy single-JSON registry (pre-parquet layout) seeds the state
-    legacy = os.path.join(reg_dir, "queries.json")
-    if storage.io.exists(legacy):
-        for r in json.loads(storage.io.read_bytes(legacy)):
-            by_id[r["entity_id"]] = StoredQuery(
-                r["entity_id"], [(list(t), float(b))
-                                 for t, b in r["clauses"]])
     for name in _registry_batches(storage):  # ascending seq: later wins
         tbl = storage.io.read_parquet(os.path.join(reg_dir, name))
         for r in tbl.to_pylist():

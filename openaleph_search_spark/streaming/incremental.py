@@ -39,7 +39,15 @@ def append_batch(spark: SparkSession, docs: DataFrame, index_dir: str,
     running the same ``_spimi_writer`` body as a build task; a larger
     batch keeps the grouped job, hashed over ``num_partitions`` parts.
     Then the driver refreshes term stats and meta.json (``n_docs``
-    summed from the part manifests)."""
+    summed from the part manifests).
+
+    Idempotent per stream epoch: each part's manifest records the
+    ``epoch_id`` that wrote it. A ``foreachBatch`` re-delivery of that
+    epoch writes only the parts its first delivery did not commit
+    (none, for a one-part batch), then refreshes the stats, which a
+    crash may have cut off; an epoch below the last recorded one
+    writes nothing. ``epoch_id=-1`` (not a stream batch) always
+    appends."""
     storage = IndexStorage(index_dir)
     meta = storage.read_meta()
     P = meta["num_partitions"]
@@ -50,12 +58,20 @@ def append_batch(spark: SparkSession, docs: DataFrame, index_dir: str,
         f: f for f in meta.get("fields", []) if f != "content"}
     bigrams = bool(meta.get("bigrams", False))
     meta_cols: list[str] = meta.get("meta_cols") or []
-    # new parts live above every existing one → doc ids stay unique
-    base_part = (max(storage.completed_partitions(), default=P - 1) + 1)
+    done = storage.completed_partitions()
+    redone = {p for p, m in done.items()
+              if epoch_id >= 0 and m.get("epoch", -1) == epoch_id}
+    # new parts live above every existing one → doc ids stay unique; a
+    # re-delivery keeps its first delivery's base, below its parts
+    top = min(redone, default=float("inf"))
+    base_part = max((p for p in done if p < top), default=P - 1) + 1
+    if epoch_id >= 0 and epoch_id < max(
+            (m.get("epoch", -1) for m in done.values()), default=-1):
+        return base_part, None
     writer = _spimi_writer(
         storage, meta["with_positions"], 1, lambda sp: sp % S, fields,
         bigrams, meta_cols, meta_schema=storage.doc_meta_schema(),
-        tz=spark.conf.get("spark.sql.session.timeZone"))
+        tz=spark.conf.get("spark.sql.session.timeZone"), epoch=epoch_id)
 
     base_cols = ["repo", "path", "commit", "lang", "content"]
     extra_cols = [c for c in {*fields.values(), *meta_cols}
@@ -68,9 +84,10 @@ def append_batch(spark: SparkSession, docs: DataFrame, index_dir: str,
         batch = None
         (prepared.withColumn("src_part", (F.lit(base_part) + F.pmod(
             F.xxhash64("repo", "path", "commit"), F.lit(P))).cast("int"))
+         .filter(~F.col("src_part").isin(sorted(redone)))
          .groupBy("src_part")
          .applyInPandas(writer, MANIFEST_SCHEMA)).collect()
-    elif batch.num_rows:
+    elif batch.num_rows and base_part not in redone:
         # the writer casts doc_meta to its stored schema, so zoned
         # timestamps keep their instant here too
         pdf = batch.to_pandas()

@@ -111,6 +111,31 @@ def test_bigram_phrase_fast_path(spark, fixture_docs_df, tmp_path):
     from pyspark.sql import functions as F
     p = IndexStorage(out).postings(spark)
     assert p.filter(F.length("pos_payload") > 0).count() == 0
+    # a sloppy phrase needs positions: rejected, not answered with 0 hits
+    with pytest.raises(ValueError, match="with_positions=False"):
+        eng.count({"q": '"banana crime"~2'})
+
+
+def test_phrase_without_positions_rejected(spark, fixture_docs_df,
+                                           tmp_path):
+    """An index without positions or bigrams cannot answer a phrase:
+    search, count, msearch, explain and mentions raise instead of 0
+    hits."""
+    from openaleph_search_spark.index.build import build_index
+    from openaleph_search_spark.query.engine import Engine
+    from openaleph_search_spark.query.percolate import mentions_query
+    out = str(tmp_path / "idx_nopos")
+    build_index(spark, fixture_docs_df, out, num_partitions=4,
+                num_shards=2, with_positions=False)
+    eng = Engine(spark, out)
+    assert eng.count({"q": "banana crime"}) == 1
+    for run in (lambda: eng.count({"q": '"banana crime"'}),
+                lambda: eng.search({"q": '"banana crime"', "limit": 5}),
+                lambda: eng.msearch({"a": {"q": '"banana crime"'}}),
+                lambda: eng.explain({"q": '"banana crime"'}),
+                lambda: mentions_query(eng, ["Banana Crime"])):
+        with pytest.raises(ValueError, match="with_positions=False"):
+            run()
 
 
 def test_name_signals():

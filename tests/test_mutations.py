@@ -136,19 +136,42 @@ def test_streaming_percolation_e2e(spark, fixture_docs_df, tmp_path):
     assert any(e == "e-kwazulu" for *_, e in got_rows)
 
 
+_FROM_ZIP = """
+import importlib, runpy, sys, zipfile
+cli, z = sys.argv[1:]
+sys.argv = [cli, "analyze", "Félix café"]
+try:
+    runpy.run_path(cli, run_name="__main__")
+except SystemExit as e:
+    if e.code:
+        raise
+names = [n for n in zipfile.ZipFile(z).namelist() if n.endswith(".py")]
+for n in names:
+    mod = importlib.import_module(
+        n[:-3].replace("/", ".").removesuffix(".__init__"))
+    assert mod.__file__.startswith(z), mod.__file__
+print("imported", len(names))
+"""
+
+
 def test_spark_submit_packaging(tmp_path):
-    """north_rule: runs via spark-submit --py-files <zip>."""
-    sys.path.insert(0, "/root/repo/scripts")
+    """north_rule: runs via spark-submit --py-files <zip>; every package
+    module imports from the zip alone (none imports a deleted one)."""
+    import openaleph_search_spark
+    pkg = os.path.dirname(os.path.abspath(openaleph_search_spark.__file__))
+    sys.path.insert(0, os.path.join(os.path.dirname(pkg), "scripts"))
     from package import build_zip
     z = build_zip(str(tmp_path / "pkg.zip"))
     assert os.path.exists(z)
     env = {**os.environ, "PYTHONPATH": z}
     out = subprocess.run(
-        [sys.executable, "/root/repo/openaleph_search_spark/cli.py",
-         "analyze", "Félix café"],
+        [sys.executable, "-c", _FROM_ZIP, os.path.join(pkg, "cli.py"), z],
         capture_output=True, text=True, env=env, cwd=str(tmp_path))
     assert out.returncode == 0, out.stderr
     assert '["felix", 0]' in out.stdout
+    n_modules = sum(f.endswith(".py") for _, _, fs in os.walk(pkg)
+                    for f in fs)
+    assert n_modules > 30 and f"imported {n_modules}" in out.stdout
 
 
 def _hits(eng, args, n=20):
@@ -459,70 +482,6 @@ def test_append_grown_avgdl_disables_pruning_soundly(
         assert _hits(e_inc, {"q": q}) == _hits(e_full, {"q": q}), q
 
 
-def test_streaming_windowed_counts(spark, tmp_path):
-    """Watermarked windowed aggregation over a streaming source equals
-    the batch computation of the same frame."""
-    from openaleph_search_spark.streaming.windows import (
-        windowed_event_counts)
-    ev = (spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-          .select("ts", "event_type").limit(500))
-    src = str(tmp_path / "ev_src")
-    ev.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    out = windowed_event_counts(stream, window="1 hour",
-                                watermark="2 hours")
-    q = (out.writeStream.format("memory").queryName("winagg")
-         .outputMode("complete")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {(r["window_start"], r["event_type"]): r["count"]
-           for r in spark.sql("select * from winagg").collect()}
-    want = {(r["window_start"], r["event_type"]): r["count"]
-            for r in windowed_event_counts(
-                spark.read.parquet(src), window="1 hour").collect()}
-    assert got == want and got
-
-
-def test_streaming_sessionize_stateful(spark, tmp_path):
-    """Custom stateful operator (applyInPandasWithState): gap-based
-    sessions — events ≤ gap apart share a session, larger gaps split."""
-    import datetime as dt
-    from openaleph_search_spark.streaming.windows import sessionize
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    rows = [("u1", t0), ("u1", t0 + dt.timedelta(minutes=5)),
-            ("u1", t0 + dt.timedelta(minutes=90)),   # new session
-            ("u2", t0 + dt.timedelta(minutes=1))]
-    src_df = spark.createDataFrame(rows, "user_id string, ts timestamp")
-    src = str(tmp_path / "sess_src")
-    src_df.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(src_df.schema).parquet(src)
-    out = sessionize(stream, gap="30 minutes", idle_timeout="1 hour")
-    q = (out.writeStream.format("memory").queryName("sess")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ck2"))
-         .start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql("select * from sess").collect()
-    by_key = {}
-    for r in rows:
-        by_key.setdefault(r["key"], []).append(
-            (r["session_start"], r["session_end"], r["n_events"],
-             r["closed"]))
-    # u1: first session (2 events) closed by the 90-min gap; second
-    # session (1 event) still open; u2: one open session
-    u1 = sorted(by_key["u1"])
-    assert any(n == 2 and closed for _, _, n, closed in u1)
-    assert any(n == 1 and not closed for _, _, n, closed in u1)
-    assert len(by_key["u2"]) == 1 and by_key["u2"][0][2] == 1
-
-
 def test_engine_export_filtered_projected(spark, fixture_docs_df,
                                           tmp_path):
     """S6 enrichment (reference test_export.py shapes): query-filtered
@@ -616,45 +575,6 @@ def test_cli_export_compact_roundtrip(spark, fixture_docs_df, tmp_path):
     alerts = spark.read.parquet(alerts_dir)
     assert ("w1", "b/crime.go") in {
         (r["entity_id"], r["path"]) for r in alerts.collect()}
-
-
-def test_streaming_dedup_stateful(spark, tmp_path):
-    """Streaming exact dedup: one copy per distinct hash ever emitted
-    non-duplicate, across micro-batches (maxFilesPerTrigger=1 forces
-    the state to carry between batches)."""
-    from openaleph_search_spark.streaming.windows import dedup_stream
-    a = spark.createDataFrame(
-        [(1, "same text"), (2, "other text"), (3, "same text")],
-        "doc_id long, text string")
-    b = spark.createDataFrame(
-        [(4, "same text"), (5, "third text"), (6, "other text")],
-        "doc_id long, text string")
-    src = str(tmp_path / "dd_src")
-    a.repartition(1).write.mode("overwrite").parquet(src)
-    # second file lands before the stream starts; one file per trigger
-    b.repartition(1).write.mode("append").parquet(src)
-    stream = (spark.readStream.schema(a.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = (dedup_stream(stream).writeStream.format("memory")
-         .queryName("ddstream").outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck3"))
-         .start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql("select * from ddstream").collect()
-    assert len(rows) == 6
-    by_hash = {}
-    for r in rows:
-        by_hash.setdefault(r["content_hash"], []).append(
-            r["is_duplicate"])
-    # 3 distinct texts; per hash exactly one False, rest True
-    assert len(by_hash) == 3
-    for flags in by_hash.values():
-        assert flags.count(False) == 1
-    # 'same text' appears 3x -> 2 dups; total dups = 3
-    assert sum(r["is_duplicate"] for r in rows) == 3
 
 
 # -- writes sized by their work ------------------------------------------------
@@ -760,6 +680,54 @@ def test_append_job_path_matches_driver_path(spark, monkeypatch,
               "path:banana"):
         assert _ranked(job, q) == _ranked(driver, q), q
         assert job.count({"q": q}) == driver.count({"q": q}), q
+
+
+@pytest.mark.parametrize("limit", [None, 100])
+def test_append_redelivered_epoch_is_idempotent(spark, monkeypatch, limit,
+                                                fixture_docs_df,
+                                                sf_docs_df, tmp_path):
+    """A foreachBatch re-delivery of a committed epoch adds no docs,
+    also after a crash before meta.json, for a grouped job before one
+    of its parts committed, and after a later upsert; an older epoch
+    writes nothing and a higher one appends."""
+    from openaleph_search_spark.streaming import incremental
+    if limit:  # 500 docs > limit: the grouped job, one part per hash
+        monkeypatch.setattr(incremental, "TARGET_DOCS_PER_PARTITION", limit)
+    out = str(tmp_path / "idx_epoch")
+    build_index(spark, fixture_docs_df, out, num_partitions=4,
+                num_shards=2)
+    st = IndexStorage(out)
+    batch = _batch_file(spark, sf_docs_df, str(tmp_path / "v2.parquet"),
+                        "v2")
+
+    def state():
+        eng = Engine(spark, out)
+        ids = sorted((r["repo"], r["path"], r["commit"])
+                     for r in eng.export().collect())
+        return ids, st.read_meta()["n_docs"], _ranked(eng, "merge OR join")
+
+    meta0 = st.read_meta()
+    incremental.append_batch(spark, batch, out, 7)
+    once, parts = state(), sorted(st.completed_partitions())
+    assert len(set(once[0])) == len(once[0]) == once[1] == 510
+    new = parts[4:]
+    assert len(new) == (4 if limit else 1)
+    if limit:
+        os.remove(st.manifest_path(new[-1]))
+    st.write_meta(meta0)
+    incremental.append_batch(spark, batch, out, 7)
+    assert state() == once
+    assert sorted(st.completed_partitions()) == parts
+    incremental.append_batch(spark, batch, out, 6)
+    assert state() == once
+    v3 = _batch_file(spark, sf_docs_df, str(tmp_path / "v3.parquet"), "v3")
+    incremental.append_batch(spark, v3, out, 8)
+    upsert_docs(spark, st,
+                fixture_docs_df.filter(F.col("path") == "b/crime.go"))
+    after = state()
+    assert len(after[0]) == 1010
+    incremental.append_batch(spark, v3, out, 8)
+    assert state() == after
 
 
 def test_delete_crash_leaves_no_tombstone(spark, mutable_index,

@@ -1,4 +1,4 @@
-"""Training-data ops tests: dedup / similarity / textstats / multimodal,
+"""Training-data ops tests: dedup / similarity / textstats,
 checked against independent numpy or DuckDB computations."""
 import numpy as np
 import pytest
@@ -219,78 +219,6 @@ def test_fingerprint_stability(spark):
     assert out[1] != out[3]
 
 
-# ----------------------------------------------------------- multimodal --
-def test_multimodal_features(spark):
-    """Image (PPM) + audio (WAV) decode/featurize are REAL (stdlib +
-    numpy); video container decode requires an external codec and must
-    raise without a decoder= hook."""
-    import numpy as np
-    import pytest
-    from pyspark.sql import functions as F
-    from openaleph_search_spark.ops.multimodal import (
-        audio_features, decode_ppm, decode_wav, extract_features,
-        frame_sample_plan, image_features, resize_images,
-        synthesize_media)
-    media = synthesize_media(spark, 30)
-    av = media.filter(F.col("kind") != "video")
-    feats = extract_features(av)
-    rows = feats.collect()
-    assert len(rows) == av.count()
-    assert all(len(r["features"]) == 16 for r in rows)
-    # spark-side features == direct decode+featurize of the same bytes
-    one = (media.filter(F.col("mime") == "image/x-portable-pixmap")
-           .orderBy("media_id").limit(1).collect()[0])
-    img = decode_ppm(bytes(one["payload"]))
-    assert img.shape == (one["height"], one["width"], 3)
-    want = image_features(img)
-    got = dict((r["media_id"], r["features"]) for r in rows)[
-        one["media_id"]]
-    assert np.allclose(got, want, atol=1e-6)
-    wav = media.filter(F.col("kind") == "audio").limit(1).collect()[0]
-    samples, rate = decode_wav(bytes(wav["payload"]))
-    assert rate == 8000 and samples.size > 0
-    assert np.allclose(
-        dict((r["media_id"], r["features"]) for r in rows)[
-            wav["media_id"]],
-        audio_features(samples, rate), atol=1e-6)
-    # G.711 telephony WAVs (format tags 7/6) decode natively and the
-    # synth rotation emits both; quantization stays ≥30 dB SNR
-    from openaleph_search_spark.ops.multimodal import encode_wav_g711
-    t = np.arange(4000) / 8000.0
-    tone = 0.5 * np.sin(2 * np.pi * 440 * t)
-    n_g711 = 0
-    for r in media.filter(F.col("kind") == "audio").collect():
-        if bytes(r["payload"])[20:22] in (b"\x07\x00", b"\x06\x00"):
-            n_g711 += 1
-    assert n_g711 > 0
-    for law in ("ulaw", "alaw"):
-        got, r2 = decode_wav(encode_wav_g711(tone, law=law))
-        assert r2 == 8000 and len(got) == len(tone)
-        snr = 10 * np.log10(np.mean(tone ** 2)
-                            / np.mean((got - tone) ** 2))
-        assert snr > 30, (law, snr)
-    # unknown format tags keep the decoder= hint
-    bad = bytearray(encode_wav_g711(tone))
-    bad[20] = 0x55
-    with pytest.raises(NotImplementedError, match="decoder"):
-        decode_wav(bytes(bad))
-    # video: no stdlib codec → explicit NotImplementedError w/o hook
-    with pytest.raises(Exception, match="decoder"):
-        extract_features(media.filter(F.col("kind") == "video")).collect()
-    # custom decoder hook handles it (the deploy-time swap point)
-    hooked = extract_features(
-        media, decoder=lambda p, k: np.zeros(16, dtype=np.float32))
-    assert hooked.count() == 30
-    plan = frame_sample_plan(media, every_ms=1000)
-    assert plan.count() > 0
-    # real nearest-neighbor resize: output decodes to the target shape
-    # (covers BOTH the PPM and the real-JPEG image rows)
-    rz = resize_images(media, 12, 10).collect()
-    assert rz and all(r["width"] == 12 and r["height"] == 10 for r in rz)
-    out_img = decode_ppm(bytes(rz[0]["payload"]))
-    assert out_img.shape == (10, 12, 3)
-
-
 def test_repetition_stats(spark):
     """Gopher repetition signals: hand-computed goldens incl. the
     overlap clamp, short docs, empty text, and a duplicated 5-gram."""
@@ -485,220 +413,6 @@ def test_pii_scrub(spark):
     row = {r["doc_id"]: r for r in custom.collect()}
     assert "pii_ssn_count" in custom.columns
     assert row[0]["pii_ssn_count"] == 0
-
-
-def test_jpeg_codec_parity(spark):
-    """Baseline grayscale JPEG (ops/jpeg.py) is a REAL codec: encoded
-    payloads round-trip within DCT rounding error, decode through the
-    default multimodal path (no decoder= hook), and the Spark-side
-    features match direct decode+featurize of the same bytes."""
-    import numpy as np
-    from pyspark.sql import functions as F
-    from openaleph_search_spark.ops.jpeg import (decode_jpeg,
-                                                 decode_jpeg_gray,
-                                                 encode_jpeg_gray)
-    from openaleph_search_spark.ops.multimodal import (
-        decode_image, extract_features, image_features, synthesize_media)
-    # decode parity: unity quant table → error is DCT rounding only
-    rs = np.random.RandomState(7)
-    for shape in [(8, 8), (24, 16), (33, 41), (7, 9)]:
-        src = rs.randint(0, 256, shape).astype(np.uint8)
-        dec = decode_jpeg_gray(encode_jpeg_gray(src))
-        assert dec.shape == src.shape
-        assert int(np.abs(dec.astype(int) - src.astype(int)).max()) <= 2
-    # structural validity: JFIF magic + EOI, dispatched by decode_image
-    payload = encode_jpeg_gray(rs.randint(0, 256, (16, 24), np.int64)
-                               .astype(np.uint8))
-    assert payload[:3] == b"\xff\xd8\xff" and payload[-2:] == b"\xff\xd9"
-    assert decode_image(payload).shape == (16, 24, 3)
-    # end-to-end: the synthesized media table carries real JPEG rows
-    media = synthesize_media(spark, 30)
-    jpgs = media.filter(F.col("mime") == "image/jpeg")
-    n_jpg = jpgs.count()
-    assert n_jpg > 0
-    feats = {r["media_id"]: r["features"]
-             for r in extract_features(jpgs).collect()}
-    assert len(feats) == n_jpg
-    one = jpgs.orderBy("media_id").limit(1).collect()[0]
-    want = image_features(decode_jpeg(bytes(one["payload"])))
-    assert np.allclose(feats[one["media_id"]], want, atol=1e-6)
-    # malformed payloads raise promptly (no hangs on bad lengths /
-    # truncated streams) — the decode UDF surfaces them as task errors
-    import pytest
-    good = encode_jpeg_gray(np.arange(64, dtype=np.uint8).reshape(8, 8))
-    sos = good.index(b"\xff\xda")
-    for bad in (b"hello world", b"\xff\xd8",
-                b"\xff\xd8\xff\xdb\x00\x00\xff\xd9",  # zero seglen
-                good[:sos + 10],                       # truncated scan
-                b"\xff\xd8" + b"\x00" * 20):
-        with pytest.raises(Exception):
-            decode_jpeg_gray(bad)
-
-
-def test_jpeg_color_codec(spark):
-    """3-component YCbCr baseline JPEG: 4:4:4 round-trips within
-    DCT+colorspace rounding on arbitrary images; 4:2:2/4:2:0 stay
-    faithful on chroma-smooth content; payloads decode through the
-    default multimodal path and feed feature extraction."""
-    import numpy as np
-    import pytest
-    from pyspark.sql import functions as F
-    from openaleph_search_spark.ops.jpeg import (decode_jpeg,
-                                                 decode_jpeg_gray,
-                                                 encode_jpeg_color)
-    from openaleph_search_spark.ops.multimodal import (
-        decode_image, extract_features, image_features, synthesize_media)
-    rs = np.random.RandomState(11)
-    # 4:4:4: every pixel within a few levels even on random noise
-    for shape in [(8, 8), (24, 17), (33, 41), (7, 9)]:
-        src = rs.randint(0, 256, (*shape, 3)).astype(np.uint8)
-        pay = encode_jpeg_color(src, subsampling="4:4:4")
-        dec = decode_jpeg(pay)
-        assert dec.shape == src.shape
-        assert int(np.abs(dec.astype(int) - src.astype(int)).max()) <= 4
-    # subsampled variants: smooth gradient survives chroma decimation
-    yy, xx = np.mgrid[0:33, 0:41]
-    grad = np.stack([xx * 255 // 40, yy * 255 // 32,
-                     (xx + yy) * 255 // 72], axis=-1).astype(np.uint8)
-    for sub in ("4:2:2", "4:2:0"):
-        pay = encode_jpeg_color(grad, subsampling=sub)
-        dec = decode_jpeg(pay)
-        assert dec.shape == grad.shape
-        err = np.abs(dec.astype(int) - grad.astype(int))
-        assert err.mean() < 3 and err.max() <= 16, (sub, err.max())
-    # 4:2:0 payload is smaller than 4:4:4 on the same image (headers
-    # are fixed-size, so compare whole payloads only directionally)
-    assert len(encode_jpeg_color(grad, "4:2:0")) < \
-        len(encode_jpeg_color(grad, "4:4:4"))
-    # color payload through the generic dispatch + luma projection
-    pay = encode_jpeg_color(grad, "4:2:0")
-    assert pay[:3] == b"\xff\xd8\xff" and pay[-2:] == b"\xff\xd9"
-    assert decode_image(pay).shape == (33, 41, 3)
-    lum = decode_jpeg_gray(pay)
-    want = np.round(grad.astype(np.float64) @ [0.299, 0.587, 0.114])
-    assert np.abs(lum.astype(np.float64) - want).mean() < 3
-    # unsupported component counts stay gated with the decoder= hint
-    # (4-component CMYK is now a real decode path — see the
-    # progressive/CMYK test below)
-    sof = pay.index(b"\xff\xc0")
-    bad = bytearray(pay)
-    bad[sof + 9] = 2  # ncomp byte of SOF0
-    with pytest.raises(NotImplementedError):
-        decode_jpeg(bytes(bad))
-    # synthesized media now carries color JPEG rows; features flow
-    media = synthesize_media(spark, 40)
-    jpgs = media.filter(F.col("mime") == "image/jpeg").collect()
-    n_color = 0
-    for r in jpgs:
-        img = decode_jpeg(bytes(r["payload"]))
-        if not (img[..., 0] == img[..., 1]).all():
-            n_color += 1
-    assert n_color > 0  # at least one payload decodes as true color
-    feats = {r["media_id"]: r["features"] for r in extract_features(
-        media.filter(F.col("mime") == "image/jpeg")).collect()}
-    for r in jpgs:
-        want = image_features(decode_jpeg(bytes(r["payload"])))
-        assert np.allclose(feats[r["media_id"]], want, atol=1e-6)
-
-
-def test_jpeg_progressive_codec(spark):
-    """Progressive (SOF2) JPEG: same coefficients as the baseline
-    encoders, different entropy stage — so decoding the progressive
-    encoding must be BIT-IDENTICAL to decoding the baseline encoding
-    of the same image. Covers DC first/refine (interleaved and not),
-    AC first/refine with cross-block EOB runs and ZRL, all chroma
-    subsamplings, and the synthesized-media path."""
-    import numpy as np
-    import pytest
-    from pyspark.sql import functions as F
-    from openaleph_search_spark.ops.jpeg import (
-        decode_jpeg, decode_jpeg_gray, encode_jpeg_color,
-        encode_jpeg_gray, encode_jpeg_progressive)
-    from openaleph_search_spark.ops.multimodal import (
-        extract_features, image_features, synthesize_media)
-    rs = np.random.RandomState(7)
-    # grayscale: random + odd sizes (padding) + flat (long EOB runs)
-    for src in [rs.randint(0, 256, (17, 23)).astype(np.uint8),
-                rs.randint(0, 256, (8, 8)).astype(np.uint8),
-                np.full((64, 80), 128, np.uint8)]:
-        pay = encode_jpeg_progressive(src)
-        assert b"\xff\xc2" in pay[:256]  # really SOF2
-        assert pay.count(b"\xff\xda") >= 6  # multi-scan script
-        assert np.array_equal(decode_jpeg_gray(pay),
-                              decode_jpeg_gray(encode_jpeg_gray(src)))
-    # color: every subsampling, exact parity with the baseline path
-    col = rs.randint(0, 256, (21, 19, 3)).astype(np.uint8)
-    for sub in ("4:4:4", "4:2:2", "4:2:0"):
-        assert np.array_equal(
-            decode_jpeg(encode_jpeg_progressive(col, subsampling=sub)),
-            decode_jpeg(encode_jpeg_color(col, subsampling=sub))), sub
-    # custom scan script: single-component DC scans + narrow bands
-    script = (((0,), 0, 0, 0, 0), ((0,), 1, 1, 0, 0),
-              ((0,), 2, 63, 0, 0))
-    g = rs.randint(0, 256, (16, 16)).astype(np.uint8)
-    assert np.array_equal(
-        decode_jpeg_gray(encode_jpeg_progressive(g, scans=script)),
-        decode_jpeg_gray(encode_jpeg_gray(g)))
-    # restart markers (DRI/RSTn): decode parity holds with restarts
-    # every 1 / 2 / 5 MCUs, baseline and progressive, gray and color
-    big = rs.randint(0, 256, (40, 56)).astype(np.uint8)
-    want_g = decode_jpeg_gray(encode_jpeg_gray(big))
-    want_c = decode_jpeg(encode_jpeg_color(col))
-    for ri in (1, 2, 5):
-        pay = encode_jpeg_gray(big, restart_interval=ri)
-        assert b"\xff\xdd" in pay and b"\xff\xd0" in pay
-        assert np.array_equal(decode_jpeg_gray(pay), want_g)
-        assert np.array_equal(decode_jpeg_gray(
-            encode_jpeg_progressive(big, restart_interval=ri)), want_g)
-        assert np.array_equal(decode_jpeg(
-            encode_jpeg_color(col, restart_interval=ri)), want_c)
-        assert np.array_equal(decode_jpeg(
-            encode_jpeg_progressive(col, restart_interval=ri)), want_c)
-    # a stray restart marker mid-block is still rejected
-    pay = encode_jpeg_progressive(g)
-    sos = pay.index(b"\xff\xda")  # header is 10 bytes; DC entropy ≥ 4
-    broken = pay[:sos + 12] + b"\xff\xd0" + pay[sos + 12:]
-    with pytest.raises(ValueError):
-        decode_jpeg_gray(broken)
-    # sequential non-interleaved baseline (one scan per component)
-    for sub in ("4:4:4", "4:2:0"):
-        want = decode_jpeg(encode_jpeg_color(col, subsampling=sub))
-        seq = encode_jpeg_color(col, subsampling=sub,
-                                interleaved=False)
-        assert seq.count(b"\xff\xda") == 3
-        assert np.array_equal(decode_jpeg(seq), want)
-        assert np.array_equal(decode_jpeg(encode_jpeg_color(
-            col, subsampling=sub, interleaved=False,
-            restart_interval=2)), want)
-    # Adobe CMYK / YCCK (APP14 transforms 0 / 2, inverted storage):
-    # the PDF-extract shape — decodes through the ink model
-    from openaleph_search_spark.ops.jpeg import encode_jpeg_cmyk
-    for tr in (0, 2):
-        pay = encode_jpeg_cmyk(col, transform=tr)
-        assert b"Adobe" in pay[:64]
-        dec = decode_jpeg(pay)
-        assert dec.shape == col.shape
-        assert int(np.abs(dec.astype(int) - col.astype(int)).max()) <= 4
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg_cmyk(col, restart_interval=2)),
-        decode_jpeg(encode_jpeg_cmyk(col)))
-    # luma projection flows through the 4-component path too
-    assert decode_jpeg_gray(encode_jpeg_cmyk(col)).shape == col.shape[:2]
-    # synthesized media rotates progressive + CMYK payloads in;
-    # features flow for every variant
-    media = synthesize_media(spark, 40).filter(
-        F.col("mime") == "image/jpeg")
-    rows = media.collect()
-    n_prog = sum(1 for r in rows
-                 if b"\xff\xc2" in bytes(r["payload"])[:256])
-    assert n_prog > 0
-    n_cmyk = sum(1 for r in rows if b"Adobe" in bytes(r["payload"])[:64])
-    assert n_cmyk > 0
-    feats = {r["media_id"]: r["features"]
-             for r in extract_features(media).collect()}
-    for r in rows:
-        want = image_features(decode_jpeg(bytes(r["payload"])))
-        assert np.allclose(feats[r["media_id"]], want, atol=1e-6)
 
 
 def test_embedding_near_dup_pairs(spark):

@@ -642,65 +642,6 @@ def test_bpe_roundtrip_property(vocab, n_merges, words):
         assert joined == w + EOW
 
 
-@given(st.integers(1, 40), st.integers(1, 40), st.integers(0, 2 ** 31),
-       st.sampled_from(["gray", "4:4:4", "4:2:2", "4:2:0"]),
-       st.sampled_from(["noise", "flat", "gradient"]),
-       st.sampled_from([0, 1, 3]))
-@settings(max_examples=40, deadline=None)
-def test_jpeg_progressive_parity_property(h, w, seed, mode, kind, ri):
-    """For ANY size/content/subsampling/restart-interval, decoding
-    the progressive (SOF2) encoding is BIT-IDENTICAL to decoding the
-    baseline (SOF0) encoding — the two entropy stages must be
-    lossless over the same DCT coefficients. Covers ragged MCU
-    padding, long EOB runs (flat content), refinement bits on dense
-    spectra (noise), and RSTn predictor/EOB-run resets."""
-    import numpy as np
-    from openaleph_search_spark.ops.jpeg import (
-        decode_jpeg, decode_jpeg_gray, encode_jpeg_color,
-        encode_jpeg_gray, encode_jpeg_progressive)
-    rs = np.random.RandomState(seed % (2 ** 32))
-    if kind == "noise":
-        img = rs.randint(0, 256, (h, w, 3))
-    elif kind == "flat":
-        img = np.full((h, w, 3), int(rs.randint(0, 256)))
-        img[0, 0] = rs.randint(0, 256)
-    else:
-        yy, xx = np.mgrid[0:h, 0:w]
-        img = np.stack([(xx * 7) % 256, (yy * 5) % 256,
-                        (xx + yy) % 256], axis=-1)
-    img = img.astype(np.uint8)
-    if mode == "gray":
-        g = img[..., 0]
-        assert np.array_equal(
-            decode_jpeg_gray(encode_jpeg_progressive(
-                g, restart_interval=ri)),
-            decode_jpeg_gray(encode_jpeg_gray(g)))
-        assert np.array_equal(
-            decode_jpeg_gray(encode_jpeg_gray(g, restart_interval=ri)),
-            decode_jpeg_gray(encode_jpeg_gray(g)))
-        # CMYK path: restart variant is bit-identical to plain, and
-        # both transforms reconstruct within codec rounding
-        from openaleph_search_spark.ops.jpeg import encode_jpeg_cmyk
-        for tr in (0, 2):
-            plain = decode_jpeg(encode_jpeg_cmyk(img, transform=tr))
-            assert np.abs(plain.astype(int)
-                          - img.astype(int)).max() <= 4
-            if ri:
-                assert np.array_equal(
-                    decode_jpeg(encode_jpeg_cmyk(
-                        img, transform=tr, restart_interval=ri)),
-                    plain)
-    else:
-        assert np.array_equal(
-            decode_jpeg(encode_jpeg_progressive(
-                img, subsampling=mode, restart_interval=ri)),
-            decode_jpeg(encode_jpeg_color(img, subsampling=mode)))
-        assert np.array_equal(
-            decode_jpeg(encode_jpeg_color(
-                img, subsampling=mode, restart_interval=ri)),
-            decode_jpeg(encode_jpeg_color(img, subsampling=mode)))
-
-
 # --------------------------------------------------------------------------
 # doc_meta filters: the scatter mask vs the Spark predicate of one spec
 # --------------------------------------------------------------------------

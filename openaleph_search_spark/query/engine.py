@@ -146,7 +146,10 @@ class Engine:
         over its terms), ``scatter_tasks``, the scatter's task count
         (0 when the plan evaluates in the driver, None only for a
         match-all doc_meta scan, which runs no scatter), and
-        ``scatter_columns``, the postings columns the scatter reads."""
+        ``scatter_columns``, the postings columns the scatter reads,
+        and ``part_cache``, the driver's decoded parts: ``parts``,
+        ``bytes``, and its ``hits`` and ``misses`` so far (a miss read
+        an index file; a warm driver-evaluated read only hits)."""
         sa = args if isinstance(args, SearchArgs) else parse_args(args)
         tree = self._plan(sa)
         ex = self.executor
@@ -183,6 +186,7 @@ class Engine:
             "scatter_tasks": (scatter_tasks(mode, sa.k, est, len(groups))
                               if scatter else None),
             "scatter_columns": read_cols if scatter else None,
+            "part_cache": ex._scatter_layout()["cache"].stats(),
         }
 
     def stats(self) -> dict:
@@ -194,7 +198,6 @@ class Engine:
         each postings file's Parquet footer, postings from its
         ``doc_count`` column — no Spark job."""
         import pyarrow.parquet as pq
-        from ..index.mutate import _read_dead
         meta = dict(self.executor.meta)
         lay = self.executor._scatter_layout()
         S = int(meta.get("num_shards") or 0)
@@ -214,8 +217,7 @@ class Engine:
                    else self.storage.term_stats(self.spark).count())
         return {
             "n_docs": meta.get("n_docs"),
-            "tombstoned_docs": (int(_read_dead(lay["fs"],
-                                               lay["tombs"]).size)
+            "tombstoned_docs": (int(lay["cache"].dead().size)
                                 if lay["tombs"] else 0),
             "avgdl": meta.get("avgdl"),
             "num_shards": meta.get("num_shards"),

@@ -6,11 +6,12 @@ calls ``es.search``).  Here every query runs through ONE physical
 strategy, the scatter:
 
   scatter:  source parts split into evaluation groups sized by the
-            query's posting volume; each group reads its postings
-            (term-filtered) and, when restricting or faceting, its own
-            doc_meta rows, and evaluates — in the driver when the work
-            fits one group, else one task per group (≈ one ES shard
-            search)
+            query's posting volume; each group slices its parts'
+            postings for the query terms and, when restricting or
+            faceting, its own doc_meta rows, and evaluates — in the
+            driver when the work fits one group (over the part cache,
+            decoded once per Engine), else one task per group (≈ one
+            ES shard search, reading its own part files)
   gather:   each group emits ≤ k rows → one pandas merge and global
             cut in the driver (tiny: groups × k rows)
 
@@ -39,6 +40,7 @@ set is never shuffled or collected to the driver.
 from __future__ import annotations
 
 import pickle
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -541,49 +543,275 @@ class _ShardEval:
 
 
 
-def _scatter_eval_group(parts, fs, dm_paths, post_paths, tomb, items,
-                        ctx, term_list, read_cols, need_pos, k,
-                        spec, mode, meta_fields, facet_fields,
-                        meta_read_cols):
-    """Evaluate one scatter group (a set of doc-disjoint source parts),
-    in a task or in the driver: pyarrow-read the group's postings
-    (term-filtered) — and, when restricting or faceting, its doc_meta
-    slice, kept where ``spec.mask`` holds and the doc is live — then run
-    the _ShardEval kernel. Returns one pandas frame (mode-shaped) or
-    None."""
-    import pyarrow as pa
-    import pyarrow.dataset as ds
+class _Postings(NamedTuple):
+    """One source part's postings columns: rows sorted by (term,
+    first_doc), the term column replaced by a directory of its distinct
+    terms (sorted) and the row each one starts at (``starts`` ends with
+    the row count)."""
+    table: "pa.Table"
+    terms: np.ndarray
+    starts: np.ndarray
+    dir_bytes: int  # the directory's memory: arrays and str objects
 
-    ppaths = [post_paths[p] for p in parts if p in post_paths]
-    if not ppaths:
+    @property
+    def nbytes(self) -> int:
+        return self.table.nbytes + self.dir_bytes
+
+    @property
+    def column_names(self) -> list[str]:
+        return self.table.column_names
+
+    def rows(self, qterms: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """→ (row indices of ``qterms``' blocks, grouped by term in
+        ``qterms`` order; the row count of each term)."""
+        if not self.terms.size:
+            return np.empty(0, np.int64), np.zeros(qterms.size, np.int64)
+        i = np.minimum(np.searchsorted(self.terms, qterms),
+                       self.terms.size - 1)
+        n = np.where(self.terms[i] == qterms,
+                     self.starts[i + 1] - self.starts[i], 0)
+        head = np.repeat(self.starts[i] - (np.cumsum(n) - n), n)
+        return head + np.arange(head.size), n
+
+
+def _order_error(path: str, order: str) -> ValueError:
+    """Slicing part tables relies on every writer's row order."""
+    return ValueError(f"{path} is not sorted by {order}, the order every "
+                      "index writer keeps: rebuild the index")
+
+
+class _PartFiles:
+    """The source parts of an index, read from their files: each read
+    returns the columns it is asked for. Spark tasks read their group's
+    parts this way (a closure cannot ship the driver's cache), and
+    ``_PartCache`` keeps what it reads."""
+
+    def __init__(self, fs, dm_paths: dict, post_paths: dict,
+                 tomb_paths: list[str]):
+        self.fs = fs
+        self.dm_paths = dm_paths
+        self.post_paths = post_paths
+        self.tomb_paths = tomb_paths
+
+    def _read(self, path: str, cols: list[str]):
+        import pyarrow.parquet as pq
+        with self.fs.open_input_file(path) as f:
+            return pq.ParquetFile(f).read(columns=cols)
+
+    def postings(self, p: int, cols: list[str],
+                 qterms: np.ndarray | None = None) -> _Postings:
+        """Part ``p``'s postings ``cols``; only the rows of ``qterms``
+        when given (a one-shot read: a directory of the whole part
+        would cost more than the read)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        path = self.post_paths[p]
+        tbl = self._read(path, ["term", *cols])  # cols hold first_doc
+        if qterms is not None:
+            tbl = tbl.filter(pc.is_in(tbl.column("term"), pa.array(
+                qterms, tbl.schema.field("term").type)))
+        col = tbl.column("term").combine_chunks()
+        n = len(col)
+        new = np.ones(n, dtype=bool)
+        ordered = True
+        if n > 1:
+            a, b = col.slice(0, n - 1), col.slice(1)
+            new[1:] = pc.not_equal(a, b).to_numpy(zero_copy_only=False)
+            ordered = pc.all(pc.less_equal(a, b)).as_py()
+        fd = tbl.column("first_doc").to_numpy()
+        if not ordered or (np.diff(fd)[~new[1:]] < 0).any():
+            raise _order_error(path, "(term, first_doc)")
+        starts = np.flatnonzero(new)
+        heads = col.take(pa.array(starts))
+        terms = heads.to_numpy(zero_copy_only=False)
+        starts = np.append(starts, n)
+        # a str object costs ~49 bytes beside its characters
+        return _Postings(tbl.drop_columns(["term"]), terms, starts,
+                         terms.nbytes + 49 * terms.size + heads.nbytes
+                         + starts.nbytes)
+
+    def doc_meta(self, p: int, cols: list[str]):
+        path = self.dm_paths[p]
+        tbl = self._read(path, cols)  # cols hold doc_id
+        if (np.diff(tbl.column("doc_id").to_numpy()) <= 0).any():
+            raise _order_error(path, "doc_id")
+        return tbl
+
+    def dead(self) -> np.ndarray:
+        return _read_dead(self.fs, self.tomb_paths)
+
+
+class _PartCache(_PartFiles):
+    """The driver's decoded source parts, kept for the Engine's
+    lifetime (mutations construct fresh Engines, and the files behind
+    an Engine never change): each part's postings and doc_meta columns
+    and the tombstone ids, read once and then sliced by every
+    driver-evaluated read. A read adds the columns it needs and the
+    cache lacks, so a cold read decodes what it would decode without
+    the cache. The held bytes stay under ``_DRIVER_CACHE_BYTES``: past
+    it the least recently used entries are dropped, to be read again.
+    ``stats()`` counts the lookups served from memory (hits) and those
+    that read a file (misses)."""
+
+    def __init__(self, *args):
+        import threading
+        from collections import OrderedDict
+        super().__init__(*args)
+        self._lru: OrderedDict = OrderedDict()  # key → (value, bytes)
+        self._lock = threading.Lock()
+        self.bytes = self.hits = self.misses = 0
+
+    def stats(self) -> dict:
+        with self._lock:
+            return {"parts": len({p for p, _ in self._lru
+                                  if p is not None}),
+                    "bytes": self.bytes, "hits": self.hits,
+                    "misses": self.misses}
+
+    def _get(self, key, cols: list[str], load):
+        """``key``'s value holding ``cols``: from memory, or read
+        (``load(old value or None, missing cols)``) and kept."""
+        with self._lock:
+            old, old_bytes = self._lru.get(key, (None, 0))
+            held = set(old.column_names) if old is not None and cols else ()
+            missing = [c for c in cols if c not in held]
+            if old is not None and not missing:
+                self.hits += 1
+                self._lru.move_to_end(key)
+                return old
+            self.misses += 1
+            value = load(old, missing)
+            nbytes = value.nbytes
+            self._lru[key] = (value, nbytes)
+            self._lru.move_to_end(key)
+            self.bytes += nbytes - old_bytes
+            while self.bytes > _DRIVER_CACHE_BYTES and self._lru:
+                self.bytes -= self._lru.popitem(last=False)[1][1]
+            return value
+
+    def postings(self, p: int, cols: list[str],
+                 qterms: np.ndarray | None = None) -> _Postings:
+        """The whole part, whatever ``qterms``: later reads slice it."""
+        def load(old, missing):
+            if old is None:
+                return _PartFiles.postings(self, p, missing)
+            return old._replace(table=_with_columns(
+                old.table, self._read(self.post_paths[p], missing)))
+        return self._get((p, "postings"), cols, load)
+
+    def doc_meta(self, p: int, cols: list[str]):
+        def load(old, missing):
+            if old is None:
+                return _PartFiles.doc_meta(self, p, missing)
+            return _with_columns(old, self._read(self.dm_paths[p],
+                                                 missing))
+        return self._get((p, "doc_meta"), cols, load)
+
+    def dead(self) -> np.ndarray:
+        return self._get((None, "tombstones"), [],
+                         lambda old, missing: _PartFiles.dead(self))
+
+
+def _with_columns(tbl, more):
+    for name in more.column_names:
+        tbl = tbl.append_column(name, more.column(name))
+    return tbl
+
+
+def _group_blocks(tables: _PartFiles, parts: list[int],
+                  qterms: np.ndarray, cols: list[str]
+                  ) -> pd.DataFrame | None:
+    """The blocks of ``qterms`` in ``parts`` as one frame, term-major
+    and, within a term, in first_doc order: parts ascend and every doc
+    id carries its part as a prefix. ``term`` is the last column."""
+    import pyarrow as pa
+    pieces, tix = [], []
+    for p in parts:
+        if p not in tables.post_paths:
+            continue
+        post = tables.postings(p, cols, qterms)
+        idx, n = post.rows(qterms)
+        if idx.size:
+            pieces.append(post.table.select(cols).take(pa.array(idx)))
+            tix.append(np.repeat(np.arange(qterms.size), n))
+    if not pieces:
         return None
-    gdm = [dm_paths[p] for p in parts]
+    tix = np.concatenate(tix)
+    order = np.argsort(tix, kind="stable")
+    blocks = pa.concat_tables(pieces).take(pa.array(order)).to_pandas()
+    blocks["term"] = qterms[tix[order]]
+    return blocks
+
+
+def _hydrate(out: pd.DataFrame, tables: _PartFiles, parts: list[int],
+             meta_fields: list[str]) -> pd.DataFrame:
+    """``out`` (one row per hit) joined with each hit's doc_meta row:
+    a binary search of the hit ids in each part's doc_id column and a
+    take. Rows keep ``out``'s order; a hit with no doc_meta row drops
+    out (an inner join)."""
+    import pyarrow as pa
+    fields = ["doc_id", *(f for f in meta_fields if f != "doc_id")]
+    ids = out["doc_id"].to_numpy()
+    pieces, rows = [], []
+    for p in parts:
+        mt = tables.doc_meta(p, fields)
+        pid = mt.column("doc_id").to_numpy()
+        if not pid.size:
+            continue
+        pos = np.minimum(np.searchsorted(pid, ids), pid.size - 1)
+        found = np.flatnonzero(pid[pos] == ids)
+        if found.size:
+            pieces.append(mt.select(fields).take(pa.array(pos[found])))
+            rows.append(found)
+    if not pieces:
+        return out.iloc[:0].assign(**{f: [] for f in fields[1:]})
+    rows = np.concatenate(rows)
+    order = np.argsort(rows, kind="stable")
+    meta = (pa.concat_tables(pieces, promote_options="permissive")
+            .take(pa.array(order)).to_pandas().drop(columns="doc_id"))
+    return pd.concat([out.iloc[rows[order]].reset_index(drop=True), meta],
+                     axis=1)
+
+
+def _scatter_eval_group(parts, tables, tomb, items, ctx, qterms,
+                        read_cols, need_pos, k, spec, mode, meta_fields,
+                        facet_fields, meta_read_cols):
+    """Evaluate one scatter group (a set of doc-disjoint source parts),
+    in a task or in the driver: slice the group's part tables
+    (``tables``: the driver's ``_PartCache`` or a task's
+    ``_PartFiles``) for the query terms' postings blocks, and, when
+    restricting or faceting, for the doc_meta rows where ``spec.mask``
+    holds and the doc is live (not in ``tomb``); then run the
+    _ShardEval kernel. Returns one pandas frame (mode-shaped) or None."""
+    import pyarrow as pa
 
     allowed = None
-    meta_pdf = None
+    meta = None
     if meta_read_cols is not None:
-        mt = ds.dataset(gdm, filesystem=fs).to_table(
-            columns=meta_read_cols)
-        keep = spec.mask(mt)
-        if tomb is not None:
-            keep &= ~_in_sorted(mt.column("doc_id").to_numpy(), tomb)
-        mt = mt.filter(pa.array(keep)).select(
-            ["doc_id", *(facet_fields or [])]).sort_by("doc_id")
-        allowed = mt.column("doc_id").to_numpy()
+        pieces = []
+        for p in parts:
+            mt = tables.doc_meta(p, meta_read_cols)
+            keep = spec.mask(mt)
+            if tomb is not None:
+                keep &= ~_in_sorted(mt.column("doc_id").to_numpy(), tomb)
+            pieces.append(mt.select(["doc_id", *(facet_fields or [])])
+                          .filter(pa.array(keep)))
+        meta = pa.concat_tables(pieces, promote_options="permissive")
+        allowed = meta.column("doc_id").to_numpy()
         if allowed.size == 0:
             return None
-        meta_pdf = mt.to_pandas()
 
-    blocks = ds.dataset(ppaths, filesystem=fs).to_table(
-        filter=ds.field("term").isin(term_list),
-        columns=read_cols).to_pandas()
-    if blocks.empty:
+    cols = [c for c in read_cols if c != "term"]
+    blocks = _group_blocks(tables, parts, qterms, cols)
+    if blocks is None:
         return None
     if not need_pos:
         blocks["pos_payload"] = b""
     blocks = SearchExecutor._attach_bounds(blocks, ctx)
-    by_term = {t: g.sort_values(["first_doc"])
-               for t, g in blocks.groupby("term", sort=False)}
+    edges = np.searchsorted(blocks["term"].to_numpy(), qterms)
+    edges = np.append(edges, len(blocks))
+    by_term = {t: blocks.iloc[a:b] for t, a, b in
+               zip(qterms, edges[:-1], edges[1:]) if b > a}
     ev = _ShardEval(by_term, ctx["idf"], ctx["k_prune"], allowed,
                     ctx["k1"], ctx["b"], ctx["avgdl_by_field"],
                     bigrams=ctx["bigrams"],
@@ -596,7 +824,7 @@ def _scatter_eval_group(parts, fs, dm_paths, post_paths, tomb, items,
         pos = np.searchsorted(allowed, ids)
         out = []
         for f in facet_fields:
-            vals = meta_pdf[f].to_numpy()[pos]
+            vals = meta.column(f).to_pandas().to_numpy()[pos]
             vc = pd.Series(vals).value_counts(dropna=True)
             out.append(pd.DataFrame({
                 "field": f, "value": vc.index.astype(object),
@@ -625,12 +853,8 @@ def _scatter_eval_group(parts, fs, dm_paths, post_paths, tomb, items,
     out = pd.concat(rows, ignore_index=True)
     if meta_fields:
         # hydrate in-group: the hits' doc_meta rows live in this group's
-        # own doc_meta files
-        mt = ds.dataset(gdm, filesystem=fs).to_table(
-            filter=ds.field("doc_id").isin(
-                np.unique(out["doc_id"].to_numpy()).tolist()),
-            columns=meta_fields)
-        out = out.merge(mt.to_pandas(), on="doc_id")
+        # own parts
+        out = _hydrate(out, tables, parts, meta_fields)
     return out
 
 
@@ -693,12 +917,13 @@ def scatter_tasks(mode: str, k: int | None, est_postings: int,
     return n_groups
 
 
-# term dictionaries below this total parquet size are cached on the
-# driver once per executor: idf lookups and prefix/wildcard expansion
-# then cost zero Spark jobs per query (ES keeps the terms dict in the
-# node's heap/FS cache the same way). Larger dictionaries keep the
-# distributed filtered-collect path.
-_DICT_CACHE_BYTES = 64 * 1024 * 1024
+# the bytes each driver cache of an executor may hold. The term
+# dictionary is cached when its parquet files fit: idf lookups and
+# prefix/wildcard expansion then cost zero Spark jobs per query (ES
+# keeps the terms dict in the node's heap/FS cache the same way), and a
+# larger dictionary keeps the distributed filtered-collect path. The
+# part cache (_PartCache) drops its least recently used parts past it.
+_DRIVER_CACHE_BYTES = 64 * 1024 * 1024
 
 
 class SearchExecutor:
@@ -711,8 +936,9 @@ class SearchExecutor:
         # term dictionary, off unless the deployment opts in
         self.allow_leading_wildcard = allow_leading_wildcard
         self._dict_cache: tuple | None | bool = False  # False=unprobed
-        # scatter layout cache (same lifetime contract as the dict
-        # cache: mutations construct fresh Engines); None = unprobed
+        # scatter layout and the part cache (same lifetime contract as
+        # the dict cache: mutations construct fresh Engines); None =
+        # unprobed
         self._scatter: dict | None = None
 
     def _term_dict(self) -> tuple | None:
@@ -726,7 +952,7 @@ class SearchExecutor:
                      if n.endswith(".parquet")]
             paths = [_os.path.join(d, n) for n in names]
             if sum(self.storage.io.file_size(p) for p in paths) \
-                    > _DICT_CACHE_BYTES:
+                    > _DRIVER_CACHE_BYTES:
                 self._dict_cache = None
             else:
                 import pyarrow as pa
@@ -974,20 +1200,18 @@ class SearchExecutor:
         if pdf.empty:
             return pdf
         avg_map = ctx["avgdl_by_field"]
+        b_map = ctx.get("b_by_field") or {}
         tfm = pdf["max_tf"].to_numpy(np.float64)
         dlm = pdf["min_dl"].to_numpy(np.float64)
-        avg = pdf["term"].map(
-            lambda t: avg_map.get(field_of_term(t), 1.0)
-        ).to_numpy(np.float64)
-        b_map = ctx.get("b_by_field") or {}
-        if b_map:
-            # per-field b: the bound must use the SAME b as scoring or
-            # pruning loses soundness for weakened (b<B) fields
-            bs = pdf["term"].map(
-                lambda t: b_map.get(field_of_term(t), ctx["b"])
-            ).to_numpy(np.float64)
-        else:
-            bs = ctx["b"]
+        # per-field b: the bound must use the SAME b as scoring or
+        # pruning loses soundness for weakened (b<B) fields
+        fields = {t: field_of_term(t) for t in pdf["term"].unique()}
+        avg = pdf["term"].map({t: avg_map.get(f, 1.0)
+                               for t, f in fields.items()}
+                              ).to_numpy(np.float64)
+        bs = pdf["term"].map({t: b_map.get(f, ctx["b"])
+                              for t, f in fields.items()}
+                             ).to_numpy(np.float64)
         norm = ctx["k1"] * (1.0 - bs + bs * dlm
                             / np.maximum(avg, 1e-12))
         pdf = pdf.copy()
@@ -995,10 +1219,9 @@ class SearchExecutor:
         return pdf
 
     # -- the scatter ---------------------------------------------------------
-    # Each evaluation group reads its own slice of the index (postings
-    # + doc_meta + tombstones) directly through pyarrow, evaluates with
-    # the _ShardEval kernel, and (for top-k) hydrates from its own
-    # doc_meta files.
+    # Each evaluation group slices its own source parts (postings +
+    # doc_meta + tombstones), evaluates with the _ShardEval kernel, and
+    # (for top-k) hydrates from its own doc_meta rows.
     # Where a group runs: a bounded plan whose work fits one group runs
     # in the driver (zero Spark jobs), ≥2 groups run as one
     # single-stage job (Range → MapInPandas, no exchange, one task per
@@ -1007,6 +1230,15 @@ class SearchExecutor:
     # the final cut runs there and the result is wrapped as a
     # LocalRelation, so reading it runs no job either. Unbounded scores
     # (k=None) stay a DataFrame.
+    #
+    # What a group reads: in the driver, the executor's _PartCache,
+    # which decodes each part file once per Engine and keeps it under
+    # _DRIVER_CACHE_BYTES; a warm read opens no index file. A task
+    # reads its group's files itself (_PartFiles). Either way the
+    # query's blocks are a binary search of each part's term directory
+    # (postings rows are sorted by (term, first_doc)) and a hit's
+    # doc_meta row is a binary search of its part's doc_id column
+    # (sorted): the same slicing code serves both.
     #
     # Correctness lever: every SPIMI source partition (doc_meta/part=K
     # ↔ postings/shard=K%S/part=K) is doc-disjoint and carries ALL
@@ -1029,14 +1261,13 @@ class SearchExecutor:
                     m = PART_FILE.fullmatch(n)
                     if m:
                         post[int(m.group(1))] = io.path(f"{sd}/{n}")
-            self._scatter = {
-                "parts": parts,
-                "dm": {p: io.path(f"{self.storage.doc_meta_dir}"
-                                  f"/part={p}.parquet") for p in parts},
-                "post": post,
-                "tombs": _tombstone_paths(self.storage),
-                "fs": io.fs,
-            }
+            dm = {p: io.path(f"{self.storage.doc_meta_dir}"
+                             f"/part={p}.parquet") for p in parts}
+            tombs = _tombstone_paths(self.storage)
+            self._scatter = {"parts": parts, "post": post, "tombs": tombs,
+                             "fs": io.fs,
+                             "files": _PartFiles(io.fs, dm, post, tombs),
+                             "cache": _PartCache(io.fs, dm, post, tombs)}
         return self._scatter
 
     def scatter_ok(self) -> bool:
@@ -1087,14 +1318,14 @@ class SearchExecutor:
         if not groups or (spec is not None and spec.match_none):
             return None if gather else self.spark.createDataFrame(
                 [], out_schema)
+        local = gather and scatter_tasks(mode, k, est, len(groups)) == 0
         run = self._scatter_fn(
-            groups, lay["fs"], lay["dm"], lay["post"],
-            lay["tombs"] if spec is not None else [],
-            items, ctx, terms, read_cols, need_pos, k, spec, mode,
-            meta_fields, facet_fields)
+            groups, lay["cache"] if local else lay["files"], items, ctx,
+            terms, read_cols, need_pos, k, spec, mode, meta_fields,
+            facet_fields)
         if not gather:
             return self._scatter_job(len(groups), run, out_schema)
-        if scatter_tasks(mode, k, est, len(groups)) == 0:
+        if local:
             frames = list(run([0]))
         else:
             rows = self._scatter_job(
@@ -1114,33 +1345,30 @@ class SearchExecutor:
                              out_schema))
 
     @staticmethod
-    def _scatter_fn(groups, fs, dm_paths, post_paths, tomb_paths,
-                    items, ctx, terms, read_cols, need_pos, k,
-                    spec: MetaSpec | None, mode: str,
-                    meta_fields, facet_fields):
+    def _scatter_fn(groups, tables: _PartFiles, items, ctx, terms,
+                    read_cols, need_pos, k, spec: MetaSpec | None,
+                    mode: str, meta_fields, facet_fields):
         """→ ``run(group ids)``, yielding each group's non-empty frame;
-        the same closure runs in the driver or inside a task."""
-        term_list = [str(t) for t in terms]
+        the same closure runs in the driver (over the part cache) or
+        inside a task (over the part files)."""
+        qterms = np.asarray([str(t) for t in terms], dtype=object)
         spec_cols = spec.cols() if spec is not None else []
-        want_allowed = spec is not None and (
-            bool(spec_cols) or bool(tomb_paths))
+        # spec None: raw evaluation, tombstoned docs included
+        tombs = spec is not None and bool(tables.tomb_paths)
         # facet mode always needs the meta read (values of matched docs)
         meta_read_cols = None
         if mode == "facet":
             meta_read_cols = ["doc_id"] + sorted(
                 set(spec_cols) | set(facet_fields))
-        elif want_allowed:
+        elif spec_cols or tombs:
             meta_read_cols = ["doc_id"] + spec_cols
 
         def run(gids):
-            tomb = None
-            if tomb_paths:
-                tomb = _read_dead(fs, tomb_paths)
+            tomb = tables.dead() if tombs else None
             for gid in gids:
                 out = _scatter_eval_group(
-                    groups[int(gid)], fs, dm_paths, post_paths,
-                    tomb, items, ctx, term_list, read_cols,
-                    need_pos, k, spec, mode, meta_fields,
+                    groups[int(gid)], tables, tomb, items, ctx, qterms,
+                    read_cols, need_pos, k, spec, mode, meta_fields,
                     facet_fields, meta_read_cols)
                 if out is not None:
                     yield out

@@ -825,3 +825,68 @@ def test_stats_reads_the_layout_with_zero_jobs(spark, mutable_index,
         "shards": shards,
         "postings_balance": min(posts) / max(max(posts), 1)}
     assert got["tombstoned_docs"] == 1 and got["n_docs"] == 8
+
+
+def _assert_part_order(root):
+    """Every postings part file is sorted by (term, first_doc) and every
+    doc_meta part file by doc_id: the driver's part cache slices both
+    by binary search."""
+    import pyarrow.parquet as pq
+    seen = {"postings": 0, "doc_meta": 0}
+    for table in seen:
+        for base, _, names in os.walk(os.path.join(root, table)):
+            for n in names:
+                if not (n.startswith("part=") and n.endswith(".parquet")):
+                    continue
+                path = os.path.join(base, n)
+                seen[table] += 1
+                if table == "postings":
+                    t = pq.read_table(path, columns=["term", "first_doc"])
+                    keys = list(zip(t["term"].to_pylist(),
+                                    t["first_doc"].to_pylist()))
+                else:
+                    keys = pq.read_table(path, columns=["doc_id"]
+                                         )["doc_id"].to_pylist()
+                assert keys == sorted(set(keys)), path
+    assert seen["postings"] and seen["doc_meta"]
+
+
+def test_writers_keep_part_order(spark, monkeypatch, fixture_docs_df,
+                                 sf_docs_df, tmp_path):
+    """Every writer leaves postings sorted by (term, first_doc) and
+    doc_meta by doc_id: a build, an append on the driver path and on
+    the grouped-job path, an upsert, and compaction's driver and job
+    paths (``_rewrite_part``). The Engine answers the same on each
+    compacted copy."""
+    import shutil
+    from openaleph_search_spark.index import mutate
+    from openaleph_search_spark.streaming import incremental
+    out = str(tmp_path / "idx_order")
+    build_index(spark, fixture_docs_df, out, num_partitions=4,
+                num_shards=2, bigrams=True)
+    _assert_part_order(out)
+    docs = sf_docs_df.orderBy("path").limit(300)
+    batch = _batch_file(spark, docs, str(tmp_path / "b.parquet"), "v2")
+    incremental.append_batch(spark, batch, out, 0)  # one driver part
+    _assert_part_order(out)
+    monkeypatch.setattr(incremental, "TARGET_DOCS_PER_PARTITION", 100)
+    batch = _batch_file(spark, docs, str(tmp_path / "c.parquet"), "v3")
+    parts = len(IndexStorage(out).completed_partitions())
+    incremental.append_batch(spark, batch, out, 1)  # the grouped job
+    assert len(IndexStorage(out).completed_partitions()) >= parts + 2
+    _assert_part_order(out)
+    up = _batch_file(spark, docs.limit(40), str(tmp_path / "u.parquet"),
+                     "v2")
+    upsert_docs(spark, IndexStorage(out), up)
+    _assert_part_order(out)
+    delete_docs(spark, IndexStorage(out), _DEAD)
+    copy = str(tmp_path / "idx_order_job")
+    shutil.copytree(out, copy)
+    assert compact(spark, IndexStorage(out))["tasks"] == 0
+    monkeypatch.setattr(mutate, "DOCS_PER_COMPACT_TASK", 1)
+    assert compact(spark, IndexStorage(copy))["tasks"] >= 2
+    for root in (out, copy):
+        _assert_part_order(root)
+    for q in ("banana", "merge OR join", '"key order"'):
+        assert _ranked(Engine(spark, out), q) == \
+            _ranked(Engine(spark, copy), q), q

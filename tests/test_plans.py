@@ -451,6 +451,79 @@ def test_small_reads_run_zero_jobs(spark, fixture_index, tmp_path,
         assert got == want[name], name
 
 
+def _cache_reads(eng):
+    """One of each driver-evaluated read, results collected."""
+    w = "banana OR kwazulu OR crime"
+    return {
+        "search": lambda: eng.search({"q": w, "limit": 5}).hits.collect(),
+        "filtered": lambda: eng.search(
+            {"q": w, "filter:lang": "txt", "limit": 5}).hits.collect(),
+        "phrase": lambda: eng.search(
+            {"q": '"banana crime"', "limit": 5}).hits.collect(),
+        "facet": lambda: eng.search(
+            {"q": w, "facet": "lang", "limit": 0}).facets["lang"].collect(),
+        "count": lambda: eng.count({"q": w}),
+        "msearch": lambda: eng.msearch(
+            {"a": {"q": w}, "b": {"q": "crime wave"}}, k=3).collect(),
+    }
+
+
+def test_warm_read_opens_no_index_file(spark, fixture_index, tmp_path):
+    """The driver decodes each part once per Engine: on a tombstoned
+    index, the first read of each kind reads files (misses; a phrase
+    adds the positions column to parts already held), and running it
+    again reads none (only hits), with the same result. A fresh Engine
+    starts with an empty cache."""
+    import shutil
+    from openaleph_search_spark.index.mutate import delete_by_ids
+    from openaleph_search_spark.query.engine import Engine
+    idx = str(tmp_path / "idx_cache")
+    shutil.copytree(fixture_index, idx)
+    victim = Engine(spark, idx).search(
+        {"q": "banana", "limit": 1}).hits.collect()[0]["doc_id"]
+    delete_by_ids(spark, IndexStorage(idx), [victim])
+    eng = Engine(spark, idx)
+    cache = lambda: eng.explain({"q": "banana"})["part_cache"]  # noqa: E731
+    assert cache() == {"parts": 0, "bytes": 0, "hits": 0, "misses": 0}
+    for name, fn in _cache_reads(eng).items():
+        before = cache()
+        cold = fn()
+        mid = cache()
+        if name in ("search", "phrase"):
+            assert mid["misses"] > before["misses"], name
+        warm = fn()
+        after = cache()
+        assert after["misses"] == mid["misses"], name
+        assert after["hits"] > mid["hits"] and warm == cold, name
+    parts = len(eng.executor._scatter_layout()["parts"])
+    assert after["parts"] == parts and after["bytes"] > 0
+    assert Engine(spark, idx).explain({"q": "banana"})["part_cache"][
+        "misses"] == 0
+
+
+def test_part_cache_budget(spark, fixture_index, monkeypatch):
+    """With the driver-cache budget below the index's decoded size,
+    ``part_cache.bytes`` stays under it after every read: the least
+    recently used parts are dropped and read again (misses on a second
+    pass), and every result equals the unbounded cache's."""
+    from openaleph_search_spark.query import executor as xmod
+    from openaleph_search_spark.query.engine import Engine
+    full = Engine(spark, fixture_index)
+    want = {n: fn() for n, fn in _cache_reads(full).items()}
+    size = full.explain({"q": "banana"})["part_cache"]
+    budget = size["bytes"] // 3
+    monkeypatch.setattr(xmod, "_DRIVER_CACHE_BYTES", budget)
+    eng = Engine(spark, fixture_index)
+    misses = []
+    for _ in range(2):
+        for name, fn in _cache_reads(eng).items():
+            assert fn() == want[name], name
+            got = eng.explain({"q": "banana"})["part_cache"]
+            assert 0 < got["bytes"] <= budget, name
+        misses.append(got["misses"])
+    assert misses[1] > misses[0] > 0
+
+
 def test_multi_facet_evaluates_query_once(spark, fixture_engine,
                                           monkeypatch, spark_jobs, oracle):
     """A facet-only search over two facets evaluates the query ONCE:

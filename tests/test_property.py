@@ -754,3 +754,84 @@ def test_meta_spec_mask_matches_column(spark, meta_index, case):
             assert got == want, (zone, args, datasets, spec)
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+# -- the driver's part cache against the task path ---------------------------
+_CACHE_WORDS = ["alpha", "beta", "gamma", "delta", "eps"]
+
+
+@st.composite
+def _cache_case(draw):
+    docs = draw(st.lists(st.lists(st.sampled_from(_CACHE_WORDS),
+                                  min_size=1, max_size=14),
+                         min_size=3, max_size=18))
+    victim = draw(st.integers(0, len(docs) - 1))
+    a, b, c = draw(st.permutations(_CACHE_WORDS))[:3]
+    return docs, victim, (a, b, c)
+
+
+def _cache_paths_reads(a: str, b: str, c: str) -> dict:
+    """One read of every class the scatter serves: name → fn(engine)."""
+    def hits(args):
+        return lambda e: [tuple(r) for r in e.search(
+            {**args, "limit": 4}).hits.select(
+            "doc_id", "score", "path").collect()]
+    return {
+        "and": hits({"q": f"{a} {b}"}),
+        "or": hits({"q": f"{a} OR {b}"}),
+        "not": hits({"q": f"{a} -{b}"}),
+        "phrase2": hits({"q": f'"{a} {b}"'}),
+        "phrase3": hits({"q": f'"{a} {b} {c}"'}),
+        "sloppy": hits({"q": f'"{a} {b}"~2'}),
+        "prefix": hits({"q": f"{a[:2]}* {c}"}),
+        "filter_lang": hits({"q": f"{a} OR {c}", "filter:lang": "en"}),
+        "facet": lambda e: [tuple(r) for r in e.search(
+            {"q": f"{a} OR {b}", "facet": "lang", "limit": 0}
+        ).facets["lang"].collect()],
+        "count": lambda e: e.count({"q": f"{b} OR {c}"}),
+        "msearch": lambda e: sorted(tuple(r) for r in e.msearch(
+            {"x": {"q": a}, "y": {"q": f"{b} {c}"}}, k=3).select(
+            "query_id", "doc_id", "score", "path").collect()),
+    }
+
+
+@given(_cache_case())
+@settings(max_examples=5, deadline=None)
+def test_part_cache_paths_agree(spark, tmp_path_factory, case):
+    """On a random corpus with one deleted doc, every read class gives
+    the same rows, ranks and scores from a cold Engine (each read its
+    Engine's first: the part cache fills), a warm Engine (each read
+    run before: only cache hits, no index file opened) and the task
+    path (``_POSTINGS_PER_TASK`` = 1: one Spark task per group, each
+    reading its own part files)."""
+    from unittest import mock
+
+    from openaleph_search_spark.index.build import build_index
+    from openaleph_search_spark.index.mutate import delete_docs
+    from openaleph_search_spark.index.storage import IndexStorage
+    from openaleph_search_spark.query import executor as xmod
+    from openaleph_search_spark.query.engine import Engine
+    from pyspark.sql import functions as F
+    docs, victim, words = case
+    rows = [(f"r{i % 2}", f"d{i}.txt", "c", ("en", "fr")[i % 3 == 0],
+             " ".join(toks)) for i, toks in enumerate(docs)]
+    idx = str(tmp_path_factory.mktemp("idx_cache_paths"))
+    build_index(spark, spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, "
+              "content string"), idx, num_partitions=3, num_shards=2,
+        bigrams=True)
+    delete_docs(spark, IndexStorage(idx), F.col("path") == f"d{victim}.txt")
+    reads = _cache_paths_reads(*words)
+    cold = {n: fn(Engine(spark, idx)) for n, fn in reads.items()}
+    eng = Engine(spark, idx)
+    for fn in reads.values():
+        fn(eng)
+    misses = eng.explain({"q": words[0]})["part_cache"]["misses"]
+    warm = {n: fn(eng) for n, fn in reads.items()}
+    assert eng.explain({"q": words[0]})["part_cache"]["misses"] == misses
+    with mock.patch.object(xmod, "_POSTINGS_PER_TASK", 1):
+        task = {n: fn(Engine(spark, idx)) for n, fn in reads.items()}
+    assert warm == cold
+    assert task == cold
+    assert not any(f"d{victim}.txt" in r for v in cold.values()
+                   if isinstance(v, list) for r in v)

@@ -149,7 +149,9 @@ class Engine:
         ``scatter_columns``, the postings columns the scatter reads,
         and ``part_cache``, the driver's decoded parts: ``parts``,
         ``bytes``, and its ``hits`` and ``misses`` so far (a miss read
-        an index file; a warm driver-evaluated read only hits)."""
+        an index file; a warm driver-evaluated read only hits), or None
+        when the index's files exceed the driver cache budget and
+        driver reads read them each time."""
         sa = args if isinstance(args, SearchArgs) else parse_args(args)
         tree = self._plan(sa)
         ex = self.executor
@@ -169,6 +171,7 @@ class Engine:
         _, _, need_pos, read_cols, est, groups = ex._scatter_plan(
             [tree], sa.k)
         scatter = strategy != "match_all_meta_scan"
+        cache = ex._scatter_layout()["cache"]
         mode = {"topk_scatter_gather": "topk",
                 "facet_partials_scatter": "facet"}.get(strategy, "scores")
         return {
@@ -186,7 +189,7 @@ class Engine:
             "scatter_tasks": (scatter_tasks(mode, sa.k, est, len(groups))
                               if scatter else None),
             "scatter_columns": read_cols if scatter else None,
-            "part_cache": ex._scatter_layout()["cache"].stats(),
+            "part_cache": cache.stats() if cache is not None else None,
         }
 
     def stats(self) -> dict:
@@ -204,8 +207,9 @@ class Engine:
         # the FULL shard range: a completely empty shard must report 0,
         # or balance would read 1.0 for maximal skew
         shards = {sid: {"blocks": 0, "postings": 0} for sid in range(S)}
-        for p, path in lay["post"].items():
-            with lay["fs"].open_input_file(path) as f:
+        files = lay["files"]
+        for p, path in files.post_paths.items():
+            with files.fs.open_input_file(path) as f:
                 pf = pq.ParquetFile(f)
                 sh = shards[p % S]
                 sh["blocks"] += pf.metadata.num_rows
@@ -217,8 +221,9 @@ class Engine:
                    else self.storage.term_stats(self.spark).count())
         return {
             "n_docs": meta.get("n_docs"),
-            "tombstoned_docs": (int(lay["cache"].dead().size)
-                                if lay["tombs"] else 0),
+            "tombstoned_docs": (int(self.executor._driver_tables()
+                                    .dead().size)
+                                if files.tomb_paths else 0),
             "avgdl": meta.get("avgdl"),
             "num_shards": meta.get("num_shards"),
             "num_partitions": meta.get("num_partitions"),

@@ -580,11 +580,24 @@ def _order_error(path: str, order: str) -> ValueError:
                       "index writer keeps: rebuild the index")
 
 
+def _each_part(fn, parts: list) -> list:
+    """``[fn(p) for p in parts]``, the parts read concurrently (pyarrow
+    releases the GIL while it reads and decodes a file)."""
+    if len(parts) < 2:
+        return [fn(p) for p in parts]
+    import os
+    from concurrent.futures import ThreadPoolExecutor
+    with ThreadPoolExecutor(min(len(parts), os.cpu_count() or 1)) as pool:
+        return list(pool.map(fn, parts))
+
+
 class _PartFiles:
     """The source parts of an index, read from their files: each read
-    returns the columns it is asked for. Spark tasks read their group's
-    parts this way (a closure cannot ship the driver's cache), and
-    ``_PartCache`` keeps what it reads."""
+    returns, per part asked for, the columns asked for, reading the
+    parts concurrently. Spark tasks read their group's parts this way
+    (a closure cannot ship the driver's cache), and so does the driver
+    when the index has no part cache; ``_PartCache`` keeps what it
+    reads."""
 
     def __init__(self, fs, dm_paths: dict, post_paths: dict,
                  tomb_paths: list[str]):
@@ -593,16 +606,26 @@ class _PartFiles:
         self.post_paths = post_paths
         self.tomb_paths = tomb_paths
 
+    def file_bytes(self) -> int:
+        """The bytes of every part file and tombstone file."""
+        return sum(i.size or 0 for i in self.fs.get_file_info(
+            [*self.post_paths.values(), *self.dm_paths.values(),
+             *self.tomb_paths]))
+
     def _read(self, path: str, cols: list[str]):
         import pyarrow.parquet as pq
         with self.fs.open_input_file(path) as f:
             return pq.ParquetFile(f).read(columns=cols)
 
-    def postings(self, p: int, cols: list[str],
-                 qterms: np.ndarray | None = None) -> _Postings:
-        """Part ``p``'s postings ``cols``; only the rows of ``qterms``
+    def postings(self, parts: list[int], cols: list[str],
+                 qterms: np.ndarray | None = None) -> list[_Postings]:
+        """Each part's postings ``cols``; only the rows of ``qterms``
         when given (a one-shot read: a directory of the whole part
         would cost more than the read)."""
+        return _each_part(lambda p: self._postings(p, cols, qterms), parts)
+
+    def _postings(self, p: int, cols: list[str],
+                  qterms: np.ndarray | None) -> _Postings:
         import pyarrow as pa
         import pyarrow.compute as pc
         path = self.post_paths[p]
@@ -630,7 +653,11 @@ class _PartFiles:
                          terms.nbytes + 49 * terms.size + heads.nbytes
                          + starts.nbytes)
 
-    def doc_meta(self, p: int, cols: list[str]):
+    def doc_meta(self, parts: list[int], cols: list[str]) -> list:
+        """Each part's doc_meta ``cols`` (Arrow tables)."""
+        return _each_part(lambda p: self._doc_meta(p, cols), parts)
+
+    def _doc_meta(self, p: int, cols: list[str]):
         path = self.dm_paths[p]
         tbl = self._read(path, cols)  # cols hold doc_id
         if (np.diff(tbl.column("doc_id").to_numpy()) <= 0).any():
@@ -647,69 +674,73 @@ class _PartCache(_PartFiles):
     an Engine never change): each part's postings and doc_meta columns
     and the tombstone ids, read once and then sliced by every
     driver-evaluated read. A read adds the columns it needs and the
-    cache lacks, so a cold read decodes what it would decode without
-    the cache. The held bytes stay under ``_DRIVER_CACHE_BYTES``: past
-    it the least recently used entries are dropped, to be read again.
-    ``stats()`` counts the lookups served from memory (hits) and those
-    that read a file (misses)."""
+    cache lacks. An Engine keeps one only when its index's files fit
+    ``_DRIVER_CACHE_BYTES``, so nothing is ever dropped. Missing parts
+    are read concurrently and outside the lock: a lookup never waits
+    for another read's I/O (two reads missing the same part may both
+    read it; the later one is kept). ``stats()`` counts the lookups
+    served from memory (hits) and those that read a file (misses)."""
 
     def __init__(self, *args):
         import threading
-        from collections import OrderedDict
         super().__init__(*args)
-        self._lru: OrderedDict = OrderedDict()  # key → (value, bytes)
+        self._held: dict = {}  # (part or None, kind) → value
         self._lock = threading.Lock()
         self.bytes = self.hits = self.misses = 0
 
     def stats(self) -> dict:
         with self._lock:
-            return {"parts": len({p for p, _ in self._lru
+            return {"parts": len({p for p, _ in self._held
                                   if p is not None}),
                     "bytes": self.bytes, "hits": self.hits,
                     "misses": self.misses}
 
-    def _get(self, key, cols: list[str], load):
-        """``key``'s value holding ``cols``: from memory, or read
-        (``load(old value or None, missing cols)``) and kept."""
+    def _fetch(self, kind: str, parts: list, cols: list[str], load):
+        """Each part's ``kind`` value holding ``cols``: from memory, or
+        read (``load(part, old value or None, missing cols)``) and
+        kept."""
         with self._lock:
-            old, old_bytes = self._lru.get(key, (None, 0))
-            held = set(old.column_names) if old is not None and cols else ()
-            missing = [c for c in cols if c not in held]
-            if old is not None and not missing:
-                self.hits += 1
-                self._lru.move_to_end(key)
-                return old
-            self.misses += 1
-            value = load(old, missing)
-            nbytes = value.nbytes
-            self._lru[key] = (value, nbytes)
-            self._lru.move_to_end(key)
-            self.bytes += nbytes - old_bytes
-            while self.bytes > _DRIVER_CACHE_BYTES and self._lru:
-                self.bytes -= self._lru.popitem(last=False)[1][1]
-            return value
+            old = [self._held.get((p, kind)) for p in parts]
+        need = {}
+        for p, v in zip(parts, old):
+            missing = [c for c in cols
+                       if v is None or c not in v.column_names]
+            if v is None or missing:
+                need[p] = (v, missing)
+        new = dict(zip(need, _each_part(lambda p: load(p, *need[p]),
+                                        list(need))))
+        with self._lock:
+            self.hits += len(parts) - len(need)
+            self.misses += len(need)
+            for p, v in new.items():
+                prev = self._held.get((p, kind))
+                self.bytes += v.nbytes - (0 if prev is None
+                                          else prev.nbytes)
+                self._held[(p, kind)] = v
+        return [new.get(p, v) for p, v in zip(parts, old)]
 
-    def postings(self, p: int, cols: list[str],
-                 qterms: np.ndarray | None = None) -> _Postings:
-        """The whole part, whatever ``qterms``: later reads slice it."""
-        def load(old, missing):
+    def postings(self, parts: list[int], cols: list[str],
+                 qterms: np.ndarray | None = None) -> list[_Postings]:
+        """The whole parts, whatever ``qterms``: later reads slice
+        them."""
+        def load(p, old, missing):
             if old is None:
-                return _PartFiles.postings(self, p, missing)
+                return self._postings(p, missing, None)
             return old._replace(table=_with_columns(
                 old.table, self._read(self.post_paths[p], missing)))
-        return self._get((p, "postings"), cols, load)
+        return self._fetch("postings", parts, cols, load)
 
-    def doc_meta(self, p: int, cols: list[str]):
-        def load(old, missing):
+    def doc_meta(self, parts: list[int], cols: list[str]) -> list:
+        def load(p, old, missing):
             if old is None:
-                return _PartFiles.doc_meta(self, p, missing)
+                return self._doc_meta(p, missing)
             return _with_columns(old, self._read(self.dm_paths[p],
                                                  missing))
-        return self._get((p, "doc_meta"), cols, load)
+        return self._fetch("doc_meta", parts, cols, load)
 
     def dead(self) -> np.ndarray:
-        return self._get((None, "tombstones"), [],
-                         lambda old, missing: _PartFiles.dead(self))
+        return self._fetch("tombstones", [None], [],
+                           lambda p, old, missing: _PartFiles.dead(self))[0]
 
 
 def _with_columns(tbl, more):
@@ -726,10 +757,8 @@ def _group_blocks(tables: _PartFiles, parts: list[int],
     id carries its part as a prefix. ``term`` is the last column."""
     import pyarrow as pa
     pieces, tix = [], []
-    for p in parts:
-        if p not in tables.post_paths:
-            continue
-        post = tables.postings(p, cols, qterms)
+    for post in tables.postings([p for p in parts
+                                 if p in tables.post_paths], cols, qterms):
         idx, n = post.rows(qterms)
         if idx.size:
             pieces.append(post.table.select(cols).take(pa.array(idx)))
@@ -753,8 +782,7 @@ def _hydrate(out: pd.DataFrame, tables: _PartFiles, parts: list[int],
     fields = ["doc_id", *(f for f in meta_fields if f != "doc_id")]
     ids = out["doc_id"].to_numpy()
     pieces, rows = [], []
-    for p in parts:
-        mt = tables.doc_meta(p, fields)
+    for mt in tables.doc_meta(parts, fields):
         pid = mt.column("doc_id").to_numpy()
         if not pid.size:
             continue
@@ -778,8 +806,8 @@ def _scatter_eval_group(parts, tables, tomb, items, ctx, qterms,
                         facet_fields, meta_read_cols):
     """Evaluate one scatter group (a set of doc-disjoint source parts),
     in a task or in the driver: slice the group's part tables
-    (``tables``: the driver's ``_PartCache`` or a task's
-    ``_PartFiles``) for the query terms' postings blocks, and, when
+    (``tables``: the driver's ``_PartCache``, else ``_PartFiles``) for
+    the query terms' postings blocks, and, when
     restricting or faceting, for the doc_meta rows where ``spec.mask``
     holds and the doc is live (not in ``tomb``); then run the
     _ShardEval kernel. Returns one pandas frame (mode-shaped) or None."""
@@ -789,8 +817,7 @@ def _scatter_eval_group(parts, tables, tomb, items, ctx, qterms,
     meta = None
     if meta_read_cols is not None:
         pieces = []
-        for p in parts:
-            mt = tables.doc_meta(p, meta_read_cols)
+        for mt in tables.doc_meta(parts, meta_read_cols):
             keep = spec.mask(mt)
             if tomb is not None:
                 keep &= ~_in_sorted(mt.column("doc_id").to_numpy(), tomb)
@@ -917,12 +944,16 @@ def scatter_tasks(mode: str, k: int | None, est_postings: int,
     return n_groups
 
 
-# the bytes each driver cache of an executor may hold. The term
-# dictionary is cached when its parquet files fit: idf lookups and
-# prefix/wildcard expansion then cost zero Spark jobs per query (ES
-# keeps the terms dict in the node's heap/FS cache the same way), and a
-# larger dictionary keeps the distributed filtered-collect path. The
-# part cache (_PartCache) drops its least recently used parts past it.
+# the file bytes each driver cache of an executor (so of an Engine:
+# every open Engine holds its own) may decode. The term dictionary is
+# cached when its parquet files fit: idf lookups and prefix/wildcard
+# expansion then cost zero Spark jobs per query (ES keeps the terms dict
+# in the node's heap/FS cache the same way), and a larger dictionary
+# keeps the distributed filtered-collect path. The part cache
+# (_PartCache) is kept when the index's part and tombstone files fit;
+# a larger index's driver reads read the query terms' rows from the
+# files on every read. Decoded, a cache takes more than its files (the
+# perfbench search index: 2.8 MB of files, 7.4 MB decoded).
 _DRIVER_CACHE_BYTES = 64 * 1024 * 1024
 
 
@@ -1232,12 +1263,13 @@ class SearchExecutor:
     # (k=None) stay a DataFrame.
     #
     # What a group reads: in the driver, the executor's _PartCache,
-    # which decodes each part file once per Engine and keeps it under
-    # _DRIVER_CACHE_BYTES; a warm read opens no index file. A task
-    # reads its group's files itself (_PartFiles). Either way the
-    # query's blocks are a binary search of each part's term directory
-    # (postings rows are sorted by (term, first_doc)) and a hit's
-    # doc_meta row is a binary search of its part's doc_id column
+    # which decodes each part file once per Engine, so a warm read opens
+    # no index file; an index whose files exceed _DRIVER_CACHE_BYTES has
+    # no cache, and its driver reads read the query terms' rows from
+    # the files (_PartFiles), as a task reads its group's files. Either
+    # way the query's blocks are a binary search of each part's term
+    # directory (postings rows are sorted by (term, first_doc)) and a
+    # hit's doc_meta row is a binary search of its part's doc_id column
     # (sorted): the same slicing code serves both.
     #
     # Correctness lever: every SPIMI source partition (doc_meta/part=K
@@ -1264,11 +1296,19 @@ class SearchExecutor:
             dm = {p: io.path(f"{self.storage.doc_meta_dir}"
                              f"/part={p}.parquet") for p in parts}
             tombs = _tombstone_paths(self.storage)
-            self._scatter = {"parts": parts, "post": post, "tombs": tombs,
-                             "fs": io.fs,
-                             "files": _PartFiles(io.fs, dm, post, tombs),
-                             "cache": _PartCache(io.fs, dm, post, tombs)}
+            files = _PartFiles(io.fs, dm, post, tombs)
+            self._scatter = {
+                "parts": parts, "files": files,
+                "cache": (_PartCache(io.fs, dm, post, tombs)
+                          if files.file_bytes() <= _DRIVER_CACHE_BYTES
+                          else None)}
         return self._scatter
+
+    def _driver_tables(self) -> _PartFiles:
+        """What a driver-evaluated read slices: the part cache, or the
+        part files when the index has none."""
+        lay = self._scatter_layout()
+        return lay["cache"] or lay["files"]
 
     def scatter_ok(self) -> bool:
         """True for every index that opens (a layout the scatter cannot
@@ -1320,7 +1360,8 @@ class SearchExecutor:
                 [], out_schema)
         local = gather and scatter_tasks(mode, k, est, len(groups)) == 0
         run = self._scatter_fn(
-            groups, lay["cache"] if local else lay["files"], items, ctx,
+            groups, self._driver_tables() if local else lay["files"],
+            items, ctx,
             terms, read_cols, need_pos, k, spec, mode, meta_fields,
             facet_fields)
         if not gather:

@@ -501,27 +501,27 @@ def test_warm_read_opens_no_index_file(spark, fixture_index, tmp_path):
         "misses"] == 0
 
 
-def test_part_cache_budget(spark, fixture_index, monkeypatch):
-    """With the driver-cache budget below the index's decoded size,
-    ``part_cache.bytes`` stays under it after every read: the least
-    recently used parts are dropped and read again (misses on a second
-    pass), and every result equals the unbounded cache's."""
+def test_part_cache_budget(spark, fixture_index, monkeypatch,
+                           spark_jobs):
+    """An Engine keeps a part cache only when its index's part and
+    tombstone files fit the driver-cache budget. One byte below it,
+    ``explain()`` reports no part cache and every driver-evaluated read
+    reads the query terms' rows from the files: still in the driver
+    with no Spark job, with the cached Engine's results."""
     from openaleph_search_spark.query import executor as xmod
     from openaleph_search_spark.query.engine import Engine
     full = Engine(spark, fixture_index)
     want = {n: fn() for n, fn in _cache_reads(full).items()}
-    size = full.explain({"q": "banana"})["part_cache"]
-    budget = size["bytes"] // 3
-    monkeypatch.setattr(xmod, "_DRIVER_CACHE_BYTES", budget)
+    size = full.executor._scatter_layout()["files"].file_bytes()
+    monkeypatch.setattr(xmod, "_DRIVER_CACHE_BYTES", size)
+    assert Engine(spark, fixture_index).explain(
+        {"q": "banana"})["part_cache"] is not None
+    monkeypatch.setattr(xmod, "_DRIVER_CACHE_BYTES", size - 1)
     eng = Engine(spark, fixture_index)
-    misses = []
-    for _ in range(2):
-        for name, fn in _cache_reads(eng).items():
-            assert fn() == want[name], name
-            got = eng.explain({"q": "banana"})["part_cache"]
-            assert 0 < got["bytes"] <= budget, name
-        misses.append(got["misses"])
-    assert misses[1] > misses[0] > 0
+    for name, fn in _cache_reads(eng).items():
+        got, jobs = spark_jobs(fn)
+        assert got == want[name] and jobs == [], name
+    assert eng.explain({"q": "banana"})["part_cache"] is None
 
 
 def test_multi_facet_evaluates_query_once(spark, fixture_engine,

@@ -801,9 +801,10 @@ def test_part_cache_paths_agree(spark, tmp_path_factory, case):
     """On a random corpus with one deleted doc, every read class gives
     the same rows, ranks and scores from a cold Engine (each read its
     Engine's first: the part cache fills), a warm Engine (each read
-    run before: only cache hits, no index file opened) and the task
-    path (``_POSTINGS_PER_TASK`` = 1: one Spark task per group, each
-    reading its own part files)."""
+    run before: only cache hits, no index file opened), the task path
+    (``_POSTINGS_PER_TASK`` = 1: one Spark task per group, each reading
+    its own part files) and a driver with no part cache (budget 0: each
+    read reads the query terms' rows from the files)."""
     from unittest import mock
 
     from openaleph_search_spark.index.build import build_index
@@ -831,7 +832,12 @@ def test_part_cache_paths_agree(spark, tmp_path_factory, case):
     assert eng.explain({"q": words[0]})["part_cache"]["misses"] == misses
     with mock.patch.object(xmod, "_POSTINGS_PER_TASK", 1):
         task = {n: fn(Engine(spark, idx)) for n, fn in reads.items()}
+    with mock.patch.object(xmod, "_DRIVER_CACHE_BYTES", 0):
+        files = Engine(spark, idx)
+        uncached = {n: fn(files) for n, fn in reads.items()}
+        assert files.explain({"q": words[0]})["part_cache"] is None
     assert warm == cold
     assert task == cold
+    assert uncached == cold
     assert not any(f"d{victim}.txt" in r for v in cold.values()
                    if isinstance(v, list) for r in v)

@@ -582,7 +582,9 @@ def aggregate_term_stats(spark: SparkSession,
     job, no shuffle, no per-job fixed latency, written sorted by term
     through ``write_parquet_atomic``. Past a size threshold (100-TB
     builds) it stays a distributed groupBy, written with ZSTD level 1
-    pages like every other index file."""
+    pages like every other index file and each file sorted by term, so
+    the query planner's dictionary reads skip row groups by their term
+    statistics."""
     import pyarrow as pa
     import pyarrow.dataset as ds
     from pyarrow import fs as pafs
@@ -615,6 +617,7 @@ def aggregate_term_stats(spark: SparkSession,
     (storage.postings(spark)
         .groupBy("term")
         .agg(F.sum("doc_count").alias("df"), F.sum("sum_tf").alias("cf"))
+        .sortWithinPartitions("term")
         .write.mode("overwrite")
         .option("compression", "zstd")
         .option("parquet.compression.codec.zstd.level", "1")

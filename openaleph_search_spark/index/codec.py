@@ -250,18 +250,13 @@ def encode_blocks(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
     return blocks
 
 
-def drop_docs(docs_payloads: list[bytes], tfs_payloads: list[bytes],
-              dls_payloads: list[bytes], pos_payloads: list[bytes],
-              doc_counts: np.ndarray, dead: np.ndarray,
-              with_positions: bool) -> tuple[np.ndarray, dict]:
-    """Drop the doc ids in ``dead`` (sorted int64) from packed block rows.
-
-    One concatenated varint decode per payload covers every block; the
-    dead docs are masked, whole per-doc position runs go with them
-    (``np.repeat(keep, tf)``), and the surviving docs are re-encoded
-    per block with the build's ``delta_restarting`` +
-    ``varint_encode_sliced``. → (``kept``: input row index of every
-    block that keeps ≥ 1 doc, its rebuilt block columns)."""
+def decode_blocks(docs_payloads, tfs_payloads, dls_payloads,
+                  doc_counts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode packed block rows → (doc_ids, tfs, dls) as uint64 arrays,
+    block after block: ONE varint pass per payload over every block,
+    and a segmented cumsum restores the doc ids, whose deltas restart
+    absolute at each block head (``doc_counts[i]`` ≥ 1 docs per
+    block)."""
     counts = np.asarray(doc_counts, dtype=np.int64)
     heads = np.cumsum(counts) - counts
     deltas = varint_decode(b"".join(docs_payloads))
@@ -271,6 +266,24 @@ def drop_docs(docs_payloads: list[bytes], tfs_payloads: list[bytes],
     docs = run - np.repeat(run[heads] - deltas[heads], counts)
     tfs = varint_decode(b"".join(tfs_payloads)) + np.uint64(1)
     dls = varint_decode(b"".join(dls_payloads))
+    return docs, tfs, dls
+
+
+def drop_docs(docs_payloads: list[bytes], tfs_payloads: list[bytes],
+              dls_payloads: list[bytes], pos_payloads: list[bytes],
+              doc_counts: np.ndarray, dead: np.ndarray,
+              with_positions: bool) -> tuple[np.ndarray, dict]:
+    """Drop the doc ids in ``dead`` (sorted int64) from packed block rows.
+
+    ``decode_blocks`` decodes every block in one pass; the dead docs
+    are masked, whole per-doc position runs go with them
+    (``np.repeat(keep, tf)``), and the surviving docs are re-encoded
+    per block with the build's ``delta_restarting`` +
+    ``varint_encode_sliced``. → (``kept``: input row index of every
+    block that keeps ≥ 1 doc, its rebuilt block columns)."""
+    counts = np.asarray(doc_counts, dtype=np.int64)
+    docs, tfs, dls = decode_blocks(docs_payloads, tfs_payloads,
+                                   dls_payloads, counts)
     keep = ~np.isin(docs.astype(np.int64), dead)
     new_counts = np.bincount(
         np.repeat(np.arange(counts.size), counts)[keep],

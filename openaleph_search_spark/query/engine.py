@@ -139,11 +139,11 @@ class Engine:
 
     def explain(self, args: dict | SearchArgs) -> dict:
         """Planner debug (the ES ``_validate_query``/explain role),
-        driver-only — zero Spark jobs beyond the cached term
-        dictionary: the parsed IR, analyzed + dictionary-expanded
-        terms, the physical strategy ``search()`` takes (both read it
-        from ``_strategy``), the query's ``est_postings`` (df summed
-        over its terms), ``scatter_tasks``, the scatter's task count
+        driver-only — zero Spark jobs on any index: the parsed IR,
+        analyzed + dictionary-expanded terms, the physical strategy
+        ``search()`` takes (both read it from ``_strategy``), the
+        query's ``est_postings`` (df summed over its terms),
+        ``scatter_tasks``, the scatter's task count
         (0 when the plan evaluates in the driver, None only for a
         match-all doc_meta scan, which runs no scatter), and
         ``scatter_columns``, the postings columns the scatter reads,
@@ -151,12 +151,13 @@ class Engine:
         ``bytes``, and its ``hits`` and ``misses`` so far (a miss read
         an index file; a warm driver-evaluated read only hits), or None
         when the index's files exceed the driver cache budget and
-        driver reads read them each time."""
+        driver reads read them each time, and ``term_dict``, the term
+        dictionary held in the driver (``{"terms": n}``), or None when
+        its files exceed the budget and each lookup reads them."""
         sa = args if isinstance(args, SearchArgs) else parse_args(args)
         tree = self._plan(sa)
         ex = self.executor
-        ex._expand_prefixes(tree)
-        ex._expand_wildcards(tree)
+        ex._expand(tree)
         expansions = {
             (l.prefix + "*" if isinstance(l, PrefixLeaf) else l.pattern):
                 list(l.expanded or [])
@@ -190,6 +191,7 @@ class Engine:
                               if scatter else None),
             "scatter_columns": read_cols if scatter else None,
             "part_cache": cache.stats() if cache is not None else None,
+            "term_dict": ex._term_dict().stats(),
         }
 
     def stats(self) -> dict:
@@ -216,9 +218,6 @@ class Engine:
                 sh["postings"] += int(pf.read(columns=["doc_count"])
                                       .column(0).to_numpy().sum())
         post_counts = [s["postings"] for s in shards.values()] or [0]
-        cache = self.executor._term_dict()
-        n_terms = (int(cache[0].size) if cache is not None
-                   else self.storage.term_stats(self.spark).count())
         return {
             "n_docs": meta.get("n_docs"),
             "tombstoned_docs": (int(self.executor._driver_tables()
@@ -229,7 +228,7 @@ class Engine:
             "num_partitions": meta.get("num_partitions"),
             "layout_version": meta.get("layout_version"),
             "bigrams": bool(meta.get("bigrams")),
-            "n_terms": n_terms,
+            "n_terms": self.executor._term_dict().n_terms(),
             "shards": shards,
             "postings_balance": (min(post_counts) / max(max(post_counts), 1)),
         }

@@ -44,13 +44,13 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
 
 from ..index.build import BIGRAM_FIELD, FIELD_SEP, field_of_term
-from ..index.codec import (bm25_idf, bm25_tfnorm, decode_positions,
-                           varint_decode)
+from ..index.codec import (bm25_idf, bm25_tfnorm, decode_blocks,
+                           decode_positions)
 from ..index.mutate import _read_dead, _source_parts, _tombstone_paths
 from ..index.storage import PART_FILE, IndexStorage
 from .filters import MetaSpec
@@ -205,8 +205,7 @@ class _ShardEval:
         ``positions`` is one flat int64 array, ``tfs[i]`` absolute
         positions per doc (empty unless asked).
 
-        Batched decode: ONE varint pass per payload type over all kept
-        blocks (segmented cumsum restores absolute doc ids), then one
+        Batched decode (``decode_blocks``) of all kept blocks, then one
         binary-search membership pass for the filters.
         """
         cacheable = candidates is None and not want_positions
@@ -220,19 +219,10 @@ class _ShardEval:
             if cacheable:
                 self._decode_cache[term] = empty
             return empty
-        counts = pdf["doc_count"].to_numpy(np.int64)
-        n = int(counts.sum())
-        if n == 0:
-            return empty
-        starts = np.cumsum(counts) - counts
-        deltas = varint_decode(b"".join(pdf["docs_payload"]))
-        # segmented cumsum: deltas restart absolute at each block head
-        total = np.cumsum(deltas.astype(np.int64))
-        base = np.zeros(counts.size, dtype=np.int64)
-        base[1:] = total[starts[1:] - 1]
-        ids = total - np.repeat(base, counts)
-        tfs = varint_decode(b"".join(pdf["tfs_payload"])) + np.uint64(1)
-        dls = varint_decode(b"".join(pdf["dls_payload"]))
+        ids, tfs, dls = decode_blocks(
+            pdf["docs_payload"], pdf["tfs_payload"], pdf["dls_payload"],
+            pdf["doc_count"].to_numpy(np.int64))
+        ids = ids.view(np.int64)  # doc ids < 2^63
         pos = None
         if want_positions:
             buf = b"".join(pdf["pos_payload"])
@@ -945,16 +935,129 @@ def scatter_tasks(mode: str, k: int | None, est_postings: int,
 
 
 # the file bytes each driver cache of an executor (so of an Engine:
-# every open Engine holds its own) may decode. The term dictionary is
-# cached when its parquet files fit: idf lookups and prefix/wildcard
-# expansion then cost zero Spark jobs per query (ES keeps the terms dict
-# in the node's heap/FS cache the same way), and a larger dictionary
-# keeps the distributed filtered-collect path. The part cache
-# (_PartCache) is kept when the index's part and tombstone files fit;
-# a larger index's driver reads read the query terms' rows from the
-# files on every read. Decoded, a cache takes more than its files (the
-# perfbench search index: 2.8 MB of files, 7.4 MB decoded).
+# every open Engine holds its own) may decode, decided once per Engine
+# from the files' sizes. The term dictionary is held as sorted arrays
+# when its term_stats files fit (ES keeps the terms dict in the node's
+# heap/FS cache the same way); a larger one is read from its files per
+# lookup, only the rows the lookup needs. The part cache (_PartCache)
+# is kept when the index's part and tombstone files fit; a larger
+# index's driver reads read the query terms' rows from the files on
+# every read. Decoded, a cache takes more than its files (the perfbench
+# search index: 2.8 MB of files, 7.4 MB decoded).
 _DRIVER_CACHE_BYTES = 64 * 1024 * 1024
+
+
+def _prefix_end(prefix: str) -> str | None:
+    """The least string above every string that starts with
+    ``prefix``: its last code point incremented (a surrogate is no
+    text, so U+D7FF steps to U+E000); None when there is none, i.e. the
+    dictionary's end."""
+    p = prefix.rstrip("\U0010ffff")
+    if not p:
+        return None
+    c = ord(p[-1]) + 1
+    return p[:-1] + chr(0xE000 if c == 0xD800 else c)
+
+
+class _TermDict:
+    """The index's term dictionary (``term_stats``: term, df), which
+    every planning lookup reads: idf, prefix and wildcard expansion,
+    ``Engine.stats`` and more_like_this's term selection. Only where
+    the rows come from differs, decided once from the files' bytes:
+    sorted arrays held in the driver when the files fit
+    ``_DRIVER_CACHE_BYTES``, else a read of each lookup's rows from the
+    files, streamed in record batches so driver memory stays bounded,
+    from only the row groups whose term range (footer statistics) meets
+    the lookup's terms: every writer sorts the files by term, so few
+    do. No lookup runs a Spark job."""
+
+    def __init__(self, storage: IndexStorage):
+        import os
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        io, d = storage.io, storage.term_stats_dir
+        paths = [io.path(os.path.join(d, n)) for n in io.listdir(d)
+                 if n.endswith(".parquet")]
+        self.files = ds.dataset(
+            paths, pa.schema([("term", pa.string()), ("df", pa.int64())]),
+            format="parquet", filesystem=io.fs)
+        self.held = None
+        if (sum(i.size for i in io.fs.get_file_info(paths))
+                <= _DRIVER_CACHE_BYTES):
+            tbl = self.files.to_table()
+            terms = tbl.column("term").to_numpy(zero_copy_only=False)
+            order = np.argsort(terms, kind="mergesort")
+            self.held = terms[order], tbl.column("df").to_numpy()[order]
+            return
+        # each row group as a fragment, with its term statistics
+        self.groups = []
+        for frag in self.files.get_fragments():
+            frag.ensure_complete_metadata()
+            self.groups += [(frag.subset(row_group_ids=[rg.id]),
+                             (rg.statistics or {}).get("term") or {})
+                            for rg in frag.row_groups]
+
+    def _read(self, cond, meets):
+        """The record batches of the file rows where ``cond`` holds,
+        read from the row groups whose term range ``meets(min, max)``
+        (or that have no statistics)."""
+        import pyarrow.dataset as ds
+        frags = [f for f, st in self.groups
+                 if "min" not in st or meets(st["min"], st["max"])]
+        return ds.FileSystemDataset(
+            frags, self.files.schema, self.files.format,
+            self.files.filesystem).to_batches(filter=cond)
+
+    def stats(self) -> dict | None:
+        """``{"terms": n}`` when held in the driver, else None."""
+        return None if self.held is None else {
+            "terms": int(self.held[0].size)}
+
+    def n_terms(self) -> int:
+        """The dictionary's size (the files' footer row counts when it
+        is not held)."""
+        if self.held is not None:
+            return int(self.held[0].size)
+        return self.files.count_rows()
+
+    def dfs(self, terms: list[str]) -> dict[str, int]:
+        """term → df of each of ``terms`` in the dictionary."""
+        qt = np.asarray(sorted(set(terms)), dtype=object)
+        if self.held is None:
+            import pyarrow.compute as pc
+
+            def meets(lo, hi):
+                i = np.searchsorted(qt, lo)
+                return i < qt.size and qt[i] <= hi
+            out = {}
+            for batch in self._read(pc.field("term").isin(qt), meets):
+                out.update(zip(*batch.to_pydict().values()))
+            return out
+        tarr, dfarr = self.held
+        if not tarr.size or not qt.size:
+            return {}
+        pos = np.minimum(np.searchsorted(tarr, qt), tarr.size - 1)
+        hit = tarr[pos] == qt
+        return dict(zip(qt[hit].tolist(), dfarr[pos[hit]].tolist()))
+
+    def range(self, lo: str, hi: str | None):
+        """Yield the rows with lo ≤ term < hi (``hi`` None: to the
+        end) in batches, each as (Arrow string array, df ndarray):
+        expansion matches a whole batch's terms at once."""
+        import pyarrow as pa
+        if self.held is not None:
+            tarr, dfarr = self.held
+            a = np.searchsorted(tarr, lo)
+            b = tarr.size if hi is None else np.searchsorted(tarr, hi)
+            yield pa.array(tarr[a:b], pa.string()), dfarr[a:b]
+            return
+        import pyarrow.compute as pc
+        cond = pc.field("term") >= lo
+        if hi is not None:
+            cond &= pc.field("term") < hi
+        for batch in self._read(cond, lambda a, b: b >= lo and (
+                hi is None or a < hi)):
+            yield batch.column(0), batch.column(1).to_numpy()
 
 
 class SearchExecutor:
@@ -966,167 +1069,65 @@ class SearchExecutor:
         # reference settings.py:139 — leading wildcards scan the whole
         # term dictionary, off unless the deployment opts in
         self.allow_leading_wildcard = allow_leading_wildcard
-        self._dict_cache: tuple | None | bool = False  # False=unprobed
-        # scatter layout and the part cache (same lifetime contract as
-        # the dict cache: mutations construct fresh Engines); None =
-        # unprobed
+        # the term dictionary, the scatter layout and the part cache
+        # live as long as the Engine (mutations construct fresh
+        # Engines); None = unprobed
+        self._terms: _TermDict | None = None
         self._scatter: dict | None = None
 
-    def _term_dict(self) -> tuple | None:
-        """(sorted term ndarray, df ndarray) driver cache, or None when
-        the dictionary is too large (stays distributed). Loaded once
-        per executor lifetime — mutations construct fresh Engines."""
-        if self._dict_cache is False:
-            import os as _os
-            d = self.storage.term_stats_dir
-            names = [n for n in self.storage.io.listdir(d)
-                     if n.endswith(".parquet")]
-            paths = [_os.path.join(d, n) for n in names]
-            if sum(self.storage.io.file_size(p) for p in paths) \
-                    > _DRIVER_CACHE_BYTES:
-                self._dict_cache = None
-            else:
-                import pyarrow as pa
-                tbl = pa.concat_tables(
-                    [self.storage.io.read_parquet(p) for p in paths])
-                terms = np.asarray(tbl.column("term").to_pylist(),
-                                   dtype=object)
-                dfs = tbl.column("df").to_numpy(zero_copy_only=False)
-                order = np.argsort(terms, kind="mergesort")
-                self._dict_cache = (terms[order],
-                                    dfs[order].astype(np.int64))
-        return self._dict_cache
+    def _term_dict(self) -> _TermDict:
+        if self._terms is None:
+            self._terms = _TermDict(self.storage)
+        return self._terms
 
-    def _expand_prefixes(self, tree: Node) -> None:
-        """Plan-time prefix rewrite against the term dictionary
-        (ES query_string top-terms rewrite, capped expansions).
+    def _expand(self, tree: Node) -> None:
+        """Plan-time prefix and wildcard rewrite against the term
+        dictionary (ES query_string top-terms rewrite). A leaf's
+        candidates are the dictionary range of its literal prefix, the
+        pattern before its first metacharacter (a prefix leaf is a
+        wildcard with nothing after it), that the whole pattern matches
+        (as an Arrow LIKE pattern: ``*`` → ``%``, ``?`` → ``_``); an
+        unfielded pattern only expands content terms, never
+        field-prefixed or bigram entries ("pa*" must not match the
+        ``path`` field's terms). A running top ``max_expansions`` by
+        (df desc, term asc) is kept across the range's batches. Leading
+        wildcards (no literal prefix) would scan the whole dictionary
+        and are gated behind ``allow_leading_wildcard`` (reference
+        query/base.py:62, settings.py:139)."""
+        import re
 
-        ALL prefix leaves expand in ONE dictionary scan: the ranges OR
-        into a single pushed filter, a per-prefix window keeps the top
-        ``max_expansions`` by df, and one bounded collect distributes
-        the result (≤ n_prefixes × max_expansions rows)."""
-        prefixes = [l for l in tree.leaves()
-                    if isinstance(l, PrefixLeaf) and l.expanded is None]
-        if not prefixes:
-            return
-        cache = self._term_dict()
-        if cache is not None:  # zero-job path: binary-search the dict
-            tarr, dfarr = cache
-            for leaf in prefixes:
-                lo = np.searchsorted(tarr, leaf.prefix)
-                hi = np.searchsorted(tarr, leaf.prefix + "￿")
-                cand, cdf = tarr[lo:hi], dfarr[lo:hi]
-                if FIELD_SEP not in leaf.prefix and cand.size:
-                    m = np.array([FIELD_SEP not in t for t in cand])
-                    cand, cdf = cand[m], cdf[m]
-                # same ranking as the Spark path: df desc, term asc
-                order = np.lexsort((cand, -cdf))[:leaf.max_expansions]
-                leaf.expanded = [str(t) for t in cand[order]]
-            return
-        from pyspark.sql import Window
-        ts = self.storage.term_stats(self.spark)
-        cond = None
-        for leaf in prefixes:
-            c = ((F.col("term") >= leaf.prefix)
-                 & (F.col("term") < leaf.prefix + "￿"))
-            cond = c if cond is None else (cond | c)
-        pf = self.spark.createDataFrame(
-            [(i, l.prefix, FIELD_SEP in l.prefix)
-             for i, l in enumerate(prefixes)],
-            "pid int, prefix string, fielded boolean")
-        w = Window.partitionBy("pid").orderBy(F.desc("df"), "term")
-        cap = max(l.max_expansions for l in prefixes)
-        rows = (ts.filter(cond)
-                .join(F.broadcast(pf),
-                      F.col("term").startswith(F.col("prefix"))
-                      # an unfielded prefix only expands CONTENT terms,
-                      # never field-prefixed/bigram dictionary entries
-                      # ("pa*" must not match "path\x1f...")
-                      & (F.col("fielded")
-                         | ~F.col("term").contains(FIELD_SEP)))
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= cap)
-                .select("pid", "term", "_rn").collect())
-        by_pid: dict[int, list[tuple[int, str]]] = {}
-        for r in rows:
-            by_pid.setdefault(r["pid"], []).append((r["_rn"], r["term"]))
-        for i, leaf in enumerate(prefixes):
-            got = sorted(by_pid.get(i, []))[:leaf.max_expansions]
-            leaf.expanded = [t for _, t in got]
-
-    def _expand_wildcards(self, tree: Node) -> None:
-        """Plan-time infix/leading wildcard rewrite (Q1): each pattern
-        becomes a capped term-dictionary scan — the literal prefix
-        before the first metacharacter pushes down as a range filter
-        (same pruning as prefix rewrite), the full pattern applies as a
-        regex, and a per-pattern window keeps the top ``max_expansions``
-        by df. Leading wildcards (no literal prefix) would scan the
-        whole dictionary and are gated behind ``allow_leading_wildcard``
-        (reference query/base.py:62, settings.py:139)."""
-        wilds = [l for l in tree.leaves()
-                 if isinstance(l, WildcardLeaf) and l.expanded is None]
-        if not wilds:
-            return
-        import re as _re
-        from pyspark.sql import Window
+        import pyarrow as pa
+        import pyarrow.compute as pc
         specs = []
-        for leaf in wilds:
-            pre = _re.split(r"[*?]", leaf.pattern, maxsplit=1)[0]
-            if not pre and not self.allow_leading_wildcard:
-                raise ValueError(
-                    f"leading wildcard {leaf.pattern!r} requires "
-                    "allow_leading_wildcard=true")
-            rex = "^" + "".join(
-                ".*" if s == "*" else "." if s == "?" else _re.escape(s)
-                for s in _re.split(r"([*?])", leaf.pattern) if s) + "$"
-            specs.append((pre, rex))
-        cache = self._term_dict()
-        if cache is not None:  # zero-job path over the cached dict
-            tarr, dfarr = cache
-            for leaf, (pre, rex) in zip(wilds, specs):
-                lo = np.searchsorted(tarr, pre) if pre else 0
-                hi = (np.searchsorted(tarr, pre + "￿") if pre
-                      else tarr.size)
-                cand, cdf = tarr[lo:hi], dfarr[lo:hi]
-                if cand.size:
-                    crex = _re.compile(rex)
-                    m = np.array([bool(crex.match(t))
-                                  and (FIELD_SEP in leaf.pattern
-                                       or FIELD_SEP not in t)
-                                  for t in cand])
-                    cand, cdf = cand[m], cdf[m]
-                order = np.lexsort((cand, -cdf))[:leaf.max_expansions]
-                leaf.expanded = [str(t) for t in cand[order]]
-            return
-        ts = self.storage.term_stats(self.spark)
-        cond = None
-        for pre, rex in specs:
-            c = F.col("term").rlike(rex)
-            if pre:  # pushable dictionary range
-                c = ((F.col("term") >= pre)
-                     & (F.col("term") < pre + "￿") & c)
-            cond = c if cond is None else (cond | c)
-        pf = self.spark.createDataFrame(
-            [(i, rex, FIELD_SEP in leaf.pattern)
-             for i, (leaf, (_, rex)) in enumerate(zip(wilds, specs))],
-            "pid int, rex string, fielded boolean")
-        w = Window.partitionBy("pid").orderBy(F.desc("df"), "term")
-        cap = max(l.max_expansions for l in wilds)
-        rows = (ts.filter(cond)
-                .join(F.broadcast(pf),
-                      F.expr("term rlike rex")
-                      # unfielded patterns match content terms only
-                      & (F.col("fielded")
-                         | ~F.col("term").contains(FIELD_SEP)))
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= cap)
-                .select("pid", "term", "_rn").collect())
-        by_pid: dict[int, list[tuple[int, str]]] = {}
-        for r in rows:
-            by_pid.setdefault(r["pid"], []).append((r["_rn"], r["term"]))
-        for i, leaf in enumerate(wilds):
-            got = sorted(by_pid.get(i, []))[:leaf.max_expansions]
-            leaf.expanded = [t for _, t in got]
+        for leaf in tree.leaves():
+            if isinstance(leaf, PrefixLeaf) and leaf.expanded is None:
+                specs.append((leaf, leaf.prefix, leaf.prefix, None))
+            elif isinstance(leaf, WildcardLeaf) and leaf.expanded is None:
+                pre = re.split(r"[*?]", leaf.pattern, maxsplit=1)[0]
+                if not pre and not self.allow_leading_wildcard:
+                    raise ValueError(
+                        f"leading wildcard {leaf.pattern!r} requires "
+                        "allow_leading_wildcard=true")
+                like = (re.sub(r"[\\%_]", r"\\\g<0>", leaf.pattern)
+                        .replace("*", "%").replace("?", "_"))
+                specs.append((leaf, leaf.pattern, pre, like))
+        for leaf, pattern, pre, like in specs:
+            top = (np.empty(0, object), np.empty(0, np.int64))
+            for terms, dfs in self._term_dict().range(
+                    pre, _prefix_end(pre)):
+                keep = np.ones(len(terms), bool)
+                if FIELD_SEP not in pattern:
+                    keep &= ~pc.match_substring(terms, FIELD_SEP).to_numpy(
+                        zero_copy_only=False)
+                if like is not None:
+                    keep &= pc.match_like(terms, like).to_numpy(
+                        zero_copy_only=False)
+                terms = np.concatenate([top[0], terms.filter(
+                    pa.array(keep)).to_numpy(zero_copy_only=False)])
+                dfs = np.concatenate([top[1], dfs[keep]])
+                order = np.lexsort((terms, -dfs))[:leaf.max_expansions]
+                top = (terms[order], dfs[order])
+            leaf.expanded = [str(t) for t in top[0]]
 
     def _collect_terms(self, tree: Node) -> list[str]:
         bigrams_on = bool(self.meta.get("bigrams"))
@@ -1173,8 +1174,7 @@ class SearchExecutor:
                 "with with_positions=False (bigrams=True answers only "
                 "exact phrases)")
         for t in trees:
-            self._expand_prefixes(t)
-            self._expand_wildcards(t)
+            self._expand(t)
         terms = sorted(set().union(
             *(self._collect_terms(t) for t in trees)))
         if not terms:
@@ -1185,20 +1185,7 @@ class SearchExecutor:
         avgdl_by_field = dict(self.meta.get("avgdl_by_field")
                               or {"content": avgdl})
         k1, b = float(self.meta["k1"]), float(self.meta["b"])
-        cache = self._term_dict()
-        if cache is not None:
-            tarr, dfarr = cache
-            qt = np.asarray(terms, dtype=object)
-            pos = np.searchsorted(tarr, qt)
-            np.minimum(pos, max(tarr.size - 1, 0), out=pos)
-            hit = tarr.size > 0 and (tarr[pos] == qt)
-            dfs = {t: int(dfarr[p])
-                   for t, p, h in zip(terms, pos, np.atleast_1d(hit))
-                   if h}
-        else:
-            stats = (self.storage.term_stats(self.spark)
-                     .filter(F.col("term").isin(terms)).collect())
-            dfs = {r["term"]: int(r["df"]) for r in stats}
+        dfs = self._term_dict().dfs(terms)
         idf = {t: float(bm25_idf(float(d), n_docs)) for t, d in dfs.items()}
 
         # column pruning: positions are the fattest payload — only

@@ -10,11 +10,11 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import numpy as np
+from pyspark.sql import DataFrame, functions as F
 
-from ..index.build import DOC_ID_PART_SHIFT
-from ..index.codec import bm25_idf
-from ..index.storage import IndexStorage
+from ..index.build import DOC_ID_PART_SHIFT, FIELD_SEP
+from ..index.codec import bm25_idf, decode_blocks
 from .ir import Bool, TermLeaf
 
 
@@ -41,90 +41,52 @@ from .ir import Bool, TermLeaf
 DEFAULTS = dict(min_tf=1, min_df=1, max_df_ratio=0.9, min_len=3,
                 max_terms=25, min_should_pct=0.1)
 
-# driver-memory guard on the probe doc's term-vector gather (VERDICT
-# r5): far above any real document's vocabulary, so exact in practice
-MAX_VECTOR_TERMS = 200_000
 REFERENCE_DEFAULTS = dict(min_tf=1, min_df=1, max_df=500, min_len=5,
-                          max_terms=200, min_should_pct=0.1)
+                         max_terms=200, min_should_pct=0.1)
 
 
-def shard_col(doc_id_col, num_shards: int):
-    """The postings shard holding a doc: its source part mod
-    ``num_shards``."""
-    return F.pmod(F.shiftright(doc_id_col, DOC_ID_PART_SHIFT),
-                  F.lit(num_shards)).cast("int")
+def doc_term_vector(engine, doc_id: int) -> list[tuple[str, int]]:
+    """(term, tf) pairs of one doc's content terms, in term order,
+    decoded in the driver from its own source part's postings (the
+    Engine's part cache, or the part's file): the blocks whose doc
+    range holds the doc, in one batched decode."""
+    import pyarrow as pa
+    tables = engine.executor._driver_tables()
+    part = doc_id >> DOC_ID_PART_SHIFT
+    if part not in tables.post_paths:
+        return []
+    (post,) = tables.postings([part], [
+        "first_doc", "last_doc", "doc_count", "docs_payload",
+        "tfs_payload", "dls_payload"])
+    rows = np.flatnonzero(
+        (post.table.column("first_doc").to_numpy() <= doc_id)
+        & (post.table.column("last_doc").to_numpy() >= doc_id))
+    terms = post.terms[np.searchsorted(post.starts, rows, side="right") - 1]
+    content = np.fromiter((FIELD_SEP not in t for t in terms), bool,
+                          terms.size)
+    rows, terms = rows[content], terms[content]
+    blocks = post.table.take(pa.array(rows, pa.int64()))
+    counts = blocks.column("doc_count").to_numpy()
+    ids, tfs, _ = decode_blocks(
+        *(blocks.column(c).to_pylist()
+          for c in ("docs_payload", "tfs_payload", "dls_payload")),
+        counts)
+    hit = ids == np.uint64(doc_id)
+    return list(zip(terms[np.repeat(np.arange(rows.size), counts)[hit]]
+                    .tolist(), tfs[hit].astype(int).tolist()))
 
 
-def doc_term_vector(spark: SparkSession, storage: IndexStorage,
-                    doc_id: int) -> list[tuple[str, int]]:
-    """(term, tf) pairs of one doc, decoded from its shard's blocks —
-    shard partition pruning + first/last_doc rowgroup pruning narrow the
-    scan to the doc's own partition's vocabulary."""
-    import numpy as np
-    import pandas as pd
-    from ..index.codec import varint_decode
-    blocks = (storage.postings(spark)
-              .select("term", "shard", "first_doc", "last_doc",
-                      "doc_count", "docs_payload", "tfs_payload")
-              .filter((F.col("shard") == shard_col(
-                  F.lit(doc_id), storage.read_meta()["num_shards"]))
-                      & (F.col("first_doc") <= doc_id)
-                      & (F.col("last_doc") >= doc_id)))
-
-    from ..index.build import FIELD_SEP
-
-    def extract(it):
-        # batched decode (no per-row python): ONE varint pass over all
-        # kept blocks, segmented cumsum, then a mask on ids == doc_id
-        for pdf in it:
-            pdf = pdf[~pdf["term"].str.contains(FIELD_SEP, regex=False)]
-            if not len(pdf):
-                yield pd.DataFrame({"term": [], "tf": []})
-                continue
-            counts = pdf["doc_count"].to_numpy(np.int64)
-            starts = np.cumsum(counts) - counts
-            deltas = varint_decode(b"".join(pdf["docs_payload"]))
-            total = np.cumsum(deltas.astype(np.int64))
-            base = np.zeros(counts.size, dtype=np.int64)
-            base[1:] = total[starts[1:] - 1]
-            ids = total - np.repeat(base, counts)
-            tfs = varint_decode(b"".join(pdf["tfs_payload"])) + np.uint64(1)
-            mask = ids == doc_id
-            term_idx = np.repeat(np.arange(len(pdf)), counts)[mask]
-            yield pd.DataFrame({
-                "term": pdf["term"].to_numpy()[term_idx],
-                "tf": tfs[mask].astype(np.int32)})
-
-    # bounded gather: TakeOrdered keeps the driver-side vector at most
-    # MAX_VECTOR_TERMS rows even for a pathological all-unique-token
-    # doc (ordering by tf desc, term asc is deterministic; any real
-    # doc's vocabulary is far below the cap, so results are exact)
-    return [(r["term"], r["tf"]) for r in
-            blocks.mapInPandas(extract, "term string, tf int")
-            .orderBy(F.desc("tf"), F.asc("term"))
-            .limit(MAX_VECTOR_TERMS).collect()]
-
-
-def interesting_terms(spark: SparkSession, storage: IndexStorage,
-                      doc_id: int, **kw) -> list[str]:
+def interesting_terms(engine, doc_id: int, **kw) -> list[str]:
     """Driver-side term selection from the doc's indexed term vector —
     deterministic: tf·idf desc, then term asc."""
     opts = {**DEFAULTS, **kw}
-    meta = storage.read_meta()
-    n_docs = float(meta["n_docs"])
+    n_docs = float(engine.executor.meta["n_docs"])
     max_df = opts.get("max_df", int(n_docs * opts["max_df_ratio"]))
-    tf_rows = [{"term": t, "tf": tf}
-               for t, tf in doc_term_vector(spark, storage, doc_id)]
-    if not tf_rows:
-        return []
-    terms = [r["term"] for r in tf_rows]
-    stats = {r["term"]: int(r["df"]) for r in
-             storage.term_stats(spark)
-             .filter(F.col("term").isin(terms)).collect()}
+    vector = doc_term_vector(engine, doc_id)
+    dfs = engine.executor._term_dict().dfs([t for t, _ in vector])
     scored = []
-    for r in tf_rows:
-        t, tf = r["term"], int(r["tf"])
-        df = stats.get(t, 0)
+    for t, tf in vector:
+        df = dfs.get(t, 0)
         if (tf >= opts["min_tf"] and opts["min_df"] <= df <= max_df
                 and len(t) >= opts["min_len"]):
             scored.append((tf * float(bm25_idf(float(df), n_docs)), t))
@@ -135,7 +97,7 @@ def interesting_terms(spark: SparkSession, storage: IndexStorage,
 def more_like_this(engine, doc_id: int, k: int = 10, **kw) -> DataFrame:
     """→ DataFrame(doc_id, score) of the k most similar docs
     (source excluded)."""
-    terms = interesting_terms(engine.spark, engine.storage, doc_id, **kw)
+    terms = interesting_terms(engine, doc_id, **kw)
     if not terms:
         return engine.spark.createDataFrame([], "doc_id long, score double")
     pct = {**DEFAULTS, **kw}["min_should_pct"]

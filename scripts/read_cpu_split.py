@@ -19,7 +19,12 @@ class it reads the CPU ticks of the process tree from
 Usage, from the repository root:
 
     python scripts/read_cpu_split.py [--seed 4245] [--reps 20] \\
-        [--cold 3] [--work DIR]
+        [--cold 3] [--work DIR] [--budget BYTES]
+
+``--budget`` sets ``query.executor._DRIVER_CACHE_BYTES`` in this
+process only (e.g. 0: neither the part cache nor the term dictionary is
+held, so reads and planning read the index files), to time the
+uncached source of a checkout against another's.
 
 It prints one row per class: median warm wall ms, mean CPU ms per read
 of each process, the median wall ms and mean driver CPU ms of the
@@ -70,8 +75,12 @@ def main(argv=None) -> int:
     ap.add_argument("--cold", type=int, default=3)
     ap.add_argument("--work", default=os.path.join(ROOT, ".perfbench",
                                                    "cpu-split"))
+    ap.add_argument("--budget", type=int, default=None)
     args = ap.parse_args(argv)
+    from openaleph_search_spark.query import executor
     from openaleph_search_spark.query.engine import Engine
+    if args.budget is not None:
+        executor._DRIVER_CACHE_BYTES = args.budget
 
     shutil.rmtree(args.work, ignore_errors=True)
     os.makedirs(args.work)
@@ -119,7 +128,8 @@ def main(argv=None) -> int:
         shutil.rmtree(args.work, ignore_errors=True)
 
     print(f"seed {args.seed}, {args.reps} warm reads per class, "
-          f"{os.cpu_count()} CPUs, local[2]")
+          f"{os.cpu_count()} CPUs, local[2], driver cache budget "
+          f"{executor._DRIVER_CACHE_BYTES} bytes")
     print("| class | wall ms | driver ms | jvm ms | workers ms "
           "| cold wall ms | cold driver ms |")
     print("|---|---|---|---|---|---|---|")
@@ -132,6 +142,7 @@ def main(argv=None) -> int:
     if cache is not None:
         print(f"part_cache after the warm reads: {cache}")
     print(json.dumps({"seed": args.seed, "reps": args.reps,
+                      "budget": executor._DRIVER_CACHE_BYTES,
                       "classes": rows, "part_cache": cache}))
     return 0
 

@@ -40,6 +40,7 @@ import sys
 import time
 
 import numpy as np
+import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from perfbench.trace import tree_cpu_s as _cpu_of, tree_pids  # noqa: E402
@@ -124,7 +125,9 @@ def main():
                     idx, num_partitions=args.parts, num_shards=4)
     eng = Engine(spark, idx)
     ex = eng.executor
-    tarr, dfarr = ex._term_dict()
+    ts = pq.read_table(eng.storage.term_stats_dir, columns=["term", "df"])
+    tarr = ts.column("term").to_numpy()
+    dfarr = ts.column("df").to_numpy()
     content = [i for i, t in enumerate(tarr) if FIELD_SEP not in t]
     by_df = sorted(content, key=lambda i: -dfarr[i])
     print(f"\nindex: {args.replicate}x {args.sf_dir} "

@@ -105,7 +105,8 @@ def test_term_stats_spark_path_matches_driver_path(
         spark, fixture_docs_df, tmp_path, monkeypatch):
     """Past _TERM_STATS_DRIVER_BYTES of postings, the global term stats
     come from a Spark groupBy instead of a driver-side pyarrow one;
-    both give the same df/cf, and both write ZSTD pages."""
+    both give the same df/cf, and both write ZSTD pages and term-sorted
+    files."""
     import pyarrow.parquet as pq
     from openaleph_search_spark.index import build as bmod
     st = build_index(spark, fixture_docs_df, str(tmp_path / "idx_ts"),
@@ -120,6 +121,9 @@ def test_term_stats_spark_path_matches_driver_path(
                  for n in os.listdir(st.term_stats_dir)
                  if n.endswith(".parquet")]
         assert files
+        for f in files:
+            terms = pq.read_table(f, columns=["term"]).column(0).to_pylist()
+            assert terms == sorted(terms), f
         mds = [pq.read_metadata(f) for f in files]
         return {md.row_group(g).column(j).compression for md in mds
                 for g in range(md.num_row_groups) for j in range(3)}

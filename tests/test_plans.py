@@ -345,12 +345,14 @@ def test_explain_reports_scatter_fanout(spark, fixture_engine,
     defaultParallelism) once est_postings exceeds par ×
     _POSTINGS_PER_TASK, None only for a match-all — and the
     search runs exactly that many Spark tasks."""
+    import pyarrow.parquet as pq
     from openaleph_search_spark.query import executor as xmod
     ex = fixture_engine.executor
     parts = len(ex._scatter_layout()["parts"])
     par = spark.sparkContext.defaultParallelism
-    tarr, dfarr = ex._term_dict()
-    df = dict(zip(tarr.tolist(), dfarr.tolist()))
+    ts = pq.read_table(fixture_engine.storage.term_stats_dir,
+                       columns=["term", "df"]).to_pydict()
+    df = dict(zip(ts["term"], ts["df"]))
     args = {"q": "banana crime", "limit": 10}
 
     e = fixture_engine.explain(args)
@@ -507,11 +509,41 @@ def test_part_cache_budget(spark, fixture_index, monkeypatch,
     tombstone files fit the driver-cache budget. One byte below it,
     ``explain()`` reports no part cache and every driver-evaluated read
     reads the query terms' rows from the files: still in the driver
-    with no Spark job, with the cached Engine's results."""
+    with no Spark job, with the cached Engine's results. At budget 0
+    the term dictionary is not held either (``explain()["term_dict"]``
+    is None): planning reads its rows from the files, so every read,
+    prefix and wildcard expansion (a gated leading one too),
+    ``explain()``, ``stats()`` and more_like_this's term selection
+    still run no Spark job and give the cached Engine's results."""
     from openaleph_search_spark.query import executor as xmod
     from openaleph_search_spark.query.engine import Engine
+    from openaleph_search_spark.query.more_like_this import \
+        interesting_terms
+
+    def planning(eng):
+        lead = Engine(spark, fixture_index, allow_leading_wildcard=True)
+        return {
+            "prefix": lambda: eng.search(
+                {"q": "kwaz* OR cr*", "limit": 5}).hits.collect(),
+            "wildcard": lambda: eng.search(
+                {"q": "b?n*a", "limit": 5}).hits.collect(),
+            "leading": lambda: lead.search(
+                {"q": "*rime", "limit": 5}).hits.collect(),
+            "gated": lambda: pytest.raises(
+                ValueError, eng.search, {"q": "*rime"}).typename,
+            "explain": lambda: {k: v for k, v in eng.explain(
+                {"q": "ban* crime", "limit": 5}).items()
+                if k not in ("part_cache", "term_dict")},
+            "stats": eng.stats,
+            "mlt": lambda: interesting_terms(eng, doc, min_len=2),
+        }
     full = Engine(spark, fixture_index)
+    doc = full.search({"q": "banana", "limit": 1}).hits.collect()[0][
+        "doc_id"]
     want = {n: fn() for n, fn in _cache_reads(full).items()}
+    want_plan = {n: fn() for n, fn in planning(full).items()}
+    assert full.explain({"q": "banana"})["term_dict"]["terms"] \
+        == want_plan["stats"]["n_terms"]
     size = full.executor._scatter_layout()["files"].file_bytes()
     monkeypatch.setattr(xmod, "_DRIVER_CACHE_BYTES", size)
     assert Engine(spark, fixture_index).explain(
@@ -522,6 +554,14 @@ def test_part_cache_budget(spark, fixture_index, monkeypatch,
         got, jobs = spark_jobs(fn)
         assert got == want[name] and jobs == [], name
     assert eng.explain({"q": "banana"})["part_cache"] is None
+    assert eng.explain({"q": "banana"})["term_dict"] is not None
+    monkeypatch.setattr(xmod, "_DRIVER_CACHE_BYTES", 0)
+    eng = Engine(spark, fixture_index)
+    reads = {**_cache_reads(eng), **planning(eng)}
+    for name, fn in reads.items():
+        got, jobs = spark_jobs(fn)
+        assert got == {**want, **want_plan}[name] and jobs == [], name
+    assert eng.explain({"q": "banana"})["term_dict"] is None
 
 
 def test_multi_facet_evaluates_query_once(spark, fixture_engine,

@@ -771,11 +771,21 @@ def _cache_case(draw):
 
 
 def _cache_paths_reads(a: str, b: str, c: str) -> dict:
-    """One read of every class the scatter serves: name → fn(engine)."""
+    """One read of every class the scatter serves, and more_like_this's
+    term selection: name → fn(engine)."""
+    from openaleph_search_spark.query.more_like_this import \
+        interesting_terms
+
     def hits(args):
         return lambda e: [tuple(r) for r in e.search(
             {**args, "limit": 4}).hits.select(
             "doc_id", "score", "path").collect()]
+
+    def mlt(e):
+        top = e.search({"q": f"{a} OR {b} OR {c}", "limit": 1}).hits
+        return [interesting_terms(e, r["doc_id"], min_len=1,
+                                  max_df_ratio=1.0)
+                for r in top.collect()]
     return {
         "and": hits({"q": f"{a} {b}"}),
         "or": hits({"q": f"{a} OR {b}"}),
@@ -784,6 +794,8 @@ def _cache_paths_reads(a: str, b: str, c: str) -> dict:
         "phrase3": hits({"q": f'"{a} {b} {c}"'}),
         "sloppy": hits({"q": f'"{a} {b}"~2'}),
         "prefix": hits({"q": f"{a[:2]}* {c}"}),
+        "wildcard": hits({"q": f"{a[0]}?{a[2]}* OR {b[0]}*"}),
+        "mlt": mlt,
         "filter_lang": hits({"q": f"{a} OR {c}", "filter:lang": "en"}),
         "facet": lambda e: [tuple(r) for r in e.search(
             {"q": f"{a} OR {b}", "facet": "lang", "limit": 0}
@@ -803,8 +815,10 @@ def test_part_cache_paths_agree(spark, tmp_path_factory, case):
     Engine's first: the part cache fills), a warm Engine (each read
     run before: only cache hits, no index file opened), the task path
     (``_POSTINGS_PER_TASK`` = 1: one Spark task per group, each reading
-    its own part files) and a driver with no part cache (budget 0: each
-    read reads the query terms' rows from the files)."""
+    its own part files) and a driver with no part cache and no held
+    term dictionary (budget 0: each read reads the query terms' rows
+    from the part files, and planning its dictionary rows from the
+    term_stats files)."""
     from unittest import mock
 
     from openaleph_search_spark.index.build import build_index
@@ -836,6 +850,7 @@ def test_part_cache_paths_agree(spark, tmp_path_factory, case):
         files = Engine(spark, idx)
         uncached = {n: fn(files) for n, fn in reads.items()}
         assert files.explain({"q": words[0]})["part_cache"] is None
+        assert files.explain({"q": words[0]})["term_dict"] is None
     assert warm == cold
     assert task == cold
     assert uncached == cold

@@ -151,6 +151,30 @@ def test_prefix_query(fixture_engine, oracle):
     assert len(got) == 2  # kwazulu.txt + long.rs
 
 
+def test_prefix_expands_terms_above_u_ffff(spark, tmp_path, monkeypatch):
+    """A prefix's dictionary range ends at the prefix with its last
+    code point incremented: ``ab*`` also expands ``ab𠀀`` (U+20000
+    sorts above ``ab`` + U+FFFF), from the dictionary held in the
+    driver and from its files (budget 0)."""
+    from openaleph_search_spark.index.build import build_index
+    from openaleph_search_spark.query import executor as xmod
+    from openaleph_search_spark.query.engine import Engine
+    idx = str(tmp_path / "idx_astral")
+    build_index(spark, spark.createDataFrame(
+        [("r", f"d{i}.txt", "c", "en", text)
+         for i, text in enumerate(["ab abc", "abz x", "ab𠀀 y", "ac"])],
+        "repo string, path string, commit string, lang string, "
+        "content string"), idx, num_partitions=1, num_shards=1)
+    for budget in (xmod._DRIVER_CACHE_BYTES, 0):
+        monkeypatch.setattr(xmod, "_DRIVER_CACHE_BYTES", budget)
+        eng = Engine(spark, idx)
+        rows = eng.search({"q": "ab*", "limit": 10}).hit_rows(0, 10)
+        assert {r["path"] for r in rows} == {"d0.txt", "d1.txt", "d2.txt"}
+        e = eng.explain({"q": "ab*"})
+        assert sorted(e["expansions"]["ab*"]) == ["ab", "abc", "abz", "ab𠀀"]
+        assert (e["term_dict"] is None) == (budget == 0)
+
+
 def test_term_filter(fixture_engine, ids_by_path):
     res = fixture_engine.search(
         {"q": "banana", "filter:lang": "go", "limit": 10})
@@ -549,14 +573,9 @@ def test_unfielded_expansion_skips_fielded_terms(spark, fixture_index):
     'path\\x1f...' field-prefixed or '_bi\\x1f...' bigram dictionary
     entries."""
     from openaleph_search_spark.query.engine import Engine
-    from openaleph_search_spark.query.parser import parse_query_string
     eng = Engine(spark, fixture_index)
     for q in ("pa*", "pa*l", "_b*", "_*i*"):
-        tree = parse_query_string(q)
-        eng.executor._expand_prefixes(tree)
-        eng.executor._expand_wildcards(tree)
-        for leaf in tree.leaves():
-            exp = getattr(leaf, "expanded", None) or []
+        for exp in eng.explain({"q": q})["expansions"].values():
             assert all("\x1f" not in t for t in exp), (q, exp)
 
 

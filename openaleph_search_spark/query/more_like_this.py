@@ -42,7 +42,7 @@ DEFAULTS = dict(min_tf=1, min_df=1, max_df_ratio=0.9, min_len=3,
                 max_terms=25, min_should_pct=0.1)
 
 REFERENCE_DEFAULTS = dict(min_tf=1, min_df=1, max_df=500, min_len=5,
-                         max_terms=200, min_should_pct=0.1)
+                          max_terms=200, min_should_pct=0.1)
 
 
 def doc_term_vector(engine, doc_id: int) -> list[tuple[str, int]]:

@@ -29,9 +29,9 @@ import os
 import uuid
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..ops.util import gather, plan_tasks
 from .storage import PART_FILE, TOMBSTONES_SCHEMA, IndexStorage
 
 
@@ -258,9 +258,10 @@ def compact(spark: SparkSession, storage: IndexStorage) -> dict:
     ``part=<p>.parquet`` name and reads stay on the scatter path. Sized
     by the work, like a read: ``n = min(targets, cores, ceil(docs /
     DOCS_PER_COMPACT_TASK))``, the docs taken from the target parts'
-    manifests. For ``n == 1`` the driver rewrites them with no Spark job
-    (``tasks == 0``); otherwise one ``spark.range(n).mapInPandas`` job
-    of ``n`` tasks does (no shuffle). Then the driver finishes like
+    manifests (``ops.util.plan_tasks``). When one group holds at most
+    that many docs the driver rewrites them with no Spark job (``tasks
+    == 0``); otherwise one single-stage job of ``n`` tasks does
+    (``ops.util.gather``, no shuffle). Then the driver finishes like
     build and append: global term stats from the postings, per-field
     avgdl from the per-part partials, meta.json, and last the
     tombstones go. A crash before that leaves the tombstones in place
@@ -285,25 +286,20 @@ def compact(spark: SparkSession, storage: IndexStorage) -> dict:
     meta = storage.read_meta()
     args = (int(meta["num_shards"]), bool(meta["with_positions"]))
     docs = sum(manifests[p]["docs"] for p in targets if p in manifests)
-    n = min(len(targets), spark.sparkContext.defaultParallelism,
-            -(-docs // DOCS_PER_COMPACT_TASK))
-    if n <= 1:
-        rows = _compact_parts(storage, targets, dead, *args)
-    else:
-        groups = [targets[i::n] for i in range(n)]
+    groups, stats["tasks"] = plan_tasks(
+        spark, targets, docs, DOCS_PER_COMPACT_TASK)
 
-        def fn(it):
-            # each task reads the tombstones itself: the ids do not
-            # ride in the closure
+    def rewrite(gids, dead=None):
+        # a task reads the tombstones itself: the ids do not ride in
+        # the closure
+        if dead is None:
             dead = _read_dead(storage.io.fs, tomb_paths)
-            for pdf in it:
-                for gid in pdf["id"]:
-                    yield pd.DataFrame(_compact_parts(
-                        storage, groups[int(gid)], dead, *args))
-        rows = [r.asDict() for r in spark.range(0, n, 1, n).mapInPandas(
-            fn, "part int, docs long, docs_dropped long, blocks_dropped long"
-        ).collect()]
-        stats["tasks"] = n
+        for gid in gids:
+            yield from _compact_parts(storage, groups[int(gid)], dead,
+                                      *args)
+    rows = gather(spark, groups, stats["tasks"],
+                  rewrite if stats["tasks"] else
+                  lambda gids: rewrite(gids, dead))
     stats.update(parts_rewritten=len(rows),
                  parts_skipped=len(parts) - len(rows),
                  docs_dropped=sum(r["docs_dropped"] for r in rows),

@@ -16,7 +16,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .util import rebalance_small
+from .util import spread
 
 #: end-of-word sentinel (a char the analyzer's token alphabet
 #: [a-z0-9_] can never produce)
@@ -124,5 +124,5 @@ def bpe_encode(df: DataFrame, merges: list[tuple[str, str]],
                 "doc_id": pdf[id_col],
                 "bpe_tokens": pd.Series(out_pieces, dtype=object),
                 "n_pieces": np.asarray(out_n, dtype=np.int64)})
-    return rebalance_small(df.select(id_col, text_col)).mapInPandas(
+    return spread(df.select(id_col, text_col), 1).mapInPandas(
         fn, "doc_id long, bpe_tokens array<string>, n_pieces long")

@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .textstats import tokens_col
-from .util import rebalance_small
+from .util import spread
 
 
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
@@ -217,7 +217,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     (1 − 0.9⁴)¹⁶ ≈ 3e-4 per pair; identical sets are always caught.
     Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
     """
-    base = (rebalance_small(df)
+    base = (spread(df, 1)
             .select(F.col(id_col).alias("doc_id"),
                       _shingle_set(text_col, shingle).alias("_toks"))
             .filter(F.size("_toks") > 0))
@@ -304,8 +304,8 @@ def _simhash_batches(hash_fn: str = "fast"):
 def simhash(df: DataFrame, id_col: str = "doc_id",
             text_col: str = "text", hash_fn: str = "fast") -> DataFrame:
     """→ (doc_id, simhash long)."""
-    base = rebalance_small(df).select(F.col(id_col).alias("doc_id"),
-                                      _token_set(text_col).alias("_toks"))
+    base = spread(df, 1).select(F.col(id_col).alias("doc_id"),
+                                _token_set(text_col).alias("_toks"))
     return base.mapInPandas(_simhash_batches(hash_fn),
                             "doc_id long, simhash long")
 
@@ -363,7 +363,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     and measured 20-50x slower (CLAUDE.md perf rule).
     """
     from pyspark import StorageLevel
-    base = (rebalance_small(df)
+    base = (spread(df, 1)
             .select(F.col(id_col).alias("doc_id"),
                     _shingle_set(text_col, n).alias("shingles"))
             .filter(F.size("shingles") > 0)
@@ -551,8 +551,8 @@ def duplicate_spans(df: DataFrame, id_col: str = "doc_id",
     sequences always collide-equal, unequal ones collide with
     probability ~n²/2⁶⁵ (document-level false merges only; no span
     is ever missed)."""
-    base = rebalance_small(df).select(F.col(id_col).alias("doc_id"),
-                                      F.col(text_col).alias("_text"))
+    base = spread(df, 1).select(F.col(id_col).alias("doc_id"),
+                                F.col(text_col).alias("_text"))
     wins = base.mapInPandas(
         _window_hash_batches(window, "doc_id", "_text"),
         schema="doc_id long, pos int, wh long")
@@ -646,7 +646,7 @@ def cut_spans(df: DataFrame, spans: DataFrame, id_col: str = "doc_id",
               .agg(F.sort_array(F.collect_list(
                   F.struct(F.col("span_start").alias("s"),
                            F.col("span_end").alias("e")))).alias("_rg")))
-    base = (rebalance_small(df)
+    base = (spread(df, 1)
             .select(F.col(id_col).alias("doc_id"),
                     F.col(text_col).alias("_text"))
             .join(ranges, F.col("doc_id") == F.col("_rid"), "left")
@@ -779,7 +779,7 @@ def strip_boilerplate_lines(df: DataFrame, boiler: DataFrame,
     join shape: (doc_id, pos, line_hash) stream ⋈ boiler → per-doc
     hit positions joined back to the docs — the text then takes one
     exchange, still never the pre-r4 two."""
-    base = (rebalance_small(df)
+    base = (spread(df, 1)
             .select(F.col(id_col).alias("doc_id"),
                     F.col(text_col).alias("_text")))
     # id dtype follows the caller's id column (string ids must not be

@@ -23,7 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .util import rebalance_small
+from .util import spread
 
 
 def _norm(v: np.ndarray) -> np.ndarray:
@@ -56,10 +56,10 @@ def cosine_topk(df: DataFrame, probe: list[float] | np.ndarray, k: int = 10,
     """Exact brute-force cosine top-k: scatter (matmul per partition,
     ≤k rows out each) → gather (global sort-limit over ≤ P·k rows)."""
     probe = np.asarray(probe, dtype=np.float64)
-    # matmul is bandwidth-trivial per byte: below ~64 MB the rebalance
-    # shuffle costs more than evaluating the few scan tasks directly
-    part = rebalance_small(df.select(id_col, vec_col),
-                           cheap_kernel_bytes=64 << 20).mapInPandas(
+    # matmul is bandwidth-trivial per byte: a task, and the shuffle
+    # that feeds it, pays for itself only at ~64 MB of input
+    part = spread(df.select(id_col, vec_col), 64 << 20,
+                  by_bytes=True).mapInPandas(
         _topk_partition(probe, k, id_col, vec_col),
         "vec_id long, cosine double")
     return (part
@@ -104,8 +104,8 @@ def knn_join(df: DataFrame, probes: DataFrame, k: int = 5,
                 "probe_id": np.repeat(pids, m),
                 "vec_id": pdf[id_col].to_numpy()[idx.T.ravel()],
                 "cosine": np.take_along_axis(sims, idx, axis=0).T.ravel()})
-    part = rebalance_small(df.select(id_col, vec_col),
-                           cheap_kernel_bytes=64 << 20).mapInPandas(
+    part = spread(df.select(id_col, vec_col), 64 << 20,
+                  by_bytes=True).mapInPandas(
         fn, "probe_id long, vec_id long, cosine double")
     from pyspark.sql import Window
     w = Window.partitionBy("probe_id").orderBy(

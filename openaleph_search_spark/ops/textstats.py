@@ -14,7 +14,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .util import rebalance_small
+from .util import spread
 
 # Tiny deterministic stopword banks per language (the n-gram/stopword
 # heuristic signal; real deployments would broadcast larger tables).
@@ -240,7 +240,7 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text",
     c = F.col(text_col)
     ws = F.split(c, " ")
     rep = _rep(c)
-    return (rebalance_small(df)
+    return (spread(df, 1)
             .withColumn("dup_word_fraction", F.round(
                 1.0 - F.size(F.array_distinct(ws))
                 / F.greatest(F.size(ws), F.lit(1)), 6))

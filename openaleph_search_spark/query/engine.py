@@ -23,7 +23,7 @@ from pyspark.sql.types import (DoubleType, LongType, StringType,
 from ..analysis.analyzer import analyze_text
 from ..index.storage import IndexStorage
 from ..index.build import FIELD_SEP
-from .executor import SearchExecutor, scatter_tasks, top_k
+from .executor import SearchExecutor, top_k
 from .facets import (cardinality, histogram_facet, metric_aggs,
                      significant_terms, terms_facet)
 from .filters import MetaSpec, meta_spec
@@ -169,12 +169,12 @@ class Engine:
             if isinstance(l, PhraseLeaf)
             and ex._phrase_uses_bigrams(l, bigrams_on)]
         strategy = self._strategy(sa, tree)
-        _, _, need_pos, read_cols, est, groups = ex._scatter_plan(
-            [tree], sa.k)
-        scatter = strategy != "match_all_meta_scan"
-        cache = ex._scatter_layout()["cache"]
         mode = {"topk_scatter_gather": "topk",
                 "facet_partials_scatter": "facet"}.get(strategy, "scores")
+        _, _, need_pos, read_cols, est, tasks, _ = ex._scatter_plan(
+            [tree], sa.k, mode)
+        scatter = strategy != "match_all_meta_scan"
+        cache = ex._scatter_layout()["cache"]
         return {
             "query_tree": repr(tree),
             "strategy": strategy,
@@ -187,8 +187,7 @@ class Engine:
             "post_filter_fields": [f for f in sa.facets
                                    if f in sa.filters],
             "est_postings": est,
-            "scatter_tasks": (scatter_tasks(mode, sa.k, est, len(groups))
-                              if scatter else None),
+            "scatter_tasks": tasks if scatter else None,
             "scatter_columns": read_cols if scatter else None,
             "part_cache": cache.stats() if cache is not None else None,
             "term_dict": ex._term_dict().stats(),

@@ -39,7 +39,6 @@ set is never shuffled or collected to the driver.
 """
 from __future__ import annotations
 
-import pickle
 from typing import NamedTuple
 
 import numpy as np
@@ -53,6 +52,7 @@ from ..index.codec import (bm25_idf, bm25_tfnorm, decode_blocks,
                            decode_positions)
 from ..index.mutate import _read_dead, _source_parts, _tombstone_paths
 from ..index.storage import PART_FILE, IndexStorage
+from ..ops.util import gather, plan_tasks, task_frames
 from .filters import MetaSpec
 from .ir import (Bool, DisMax, MatchAll, Node, PhraseLeaf, PrefixLeaf,
                  TermLeaf, WildcardLeaf)
@@ -887,30 +887,6 @@ def _scatter_eval_group(parts, tables, tomb, items, ctx, qterms,
 _POSTINGS_PER_TASK = 2_000_000
 
 
-def _scatter_groups(parts: list[int], par: int,
-                    est_postings: int) -> list[list[int]]:
-    """Partition source parts into evaluation groups, sized by the
-    query's work: ``ceil(est_postings / _POSTINGS_PER_TASK)`` groups,
-    capped by the part count and ``par`` (defaultParallelism).
-
-    A Python task is not cheap: each ``mapInPandas`` task costs
-    0.19-0.26 s of CPU before it evaluates anything, even on a reused
-    worker (4-vCPU host, pyspark 4.1.2). pyspark's ``setup_spark_files``
-    calls ``importlib.invalidate_caches()`` on every task, and that makes
-    each cached ``zipimporter`` re-read ``pyspark.zip``'s directory. So
-    a query only fans out once each task carries as much eval work as
-    that fixed cost. A plan whose work fits one group has no
-    parallelism to buy: a bounded mode evaluates it in the driver, with
-    no job and no task (``scatter_tasks``); otherwise each group runs
-    as one task. Round-robin keeps groups balanced in part count."""
-    n = max(1, min(len(parts), par,
-                   -(-int(est_postings) // _POSTINGS_PER_TASK)))
-    groups: list[list[int]] = [[] for _ in range(n)]
-    for i, p in enumerate(parts):
-        groups[i % n].append(p)
-    return groups
-
-
 def scatter_gathers(mode: str, k: int | None) -> bool:
     """Whether a scatter mode's output is bounded, so it is gathered to
     the driver: count (≤ groups rows), facet (≤ groups × distinct
@@ -919,19 +895,6 @@ def scatter_gathers(mode: str, k: int | None) -> bool:
     unbounded, so they stay a Spark DataFrame."""
     return mode in ("count", "facet") or (
         mode in ("topk", "multi") and k is not None)
-
-
-def scatter_tasks(mode: str, k: int | None, est_postings: int,
-                  n_groups: int) -> int:
-    """Spark tasks a scatter plan runs: 0 when it evaluates in the
-    driver — a bounded output whose work fits one group, where one task
-    would buy no parallelism — else one task per group. A plan held to
-    one group only by the part count or defaultParallelism keeps its
-    task, so the driver never evaluates more than _POSTINGS_PER_TASK."""
-    if (n_groups == 1 and est_postings <= _POSTINGS_PER_TASK
-            and scatter_gathers(mode, k)):
-        return 0
-    return n_groups
 
 
 # the file bytes each driver cache of an executor (so of an Engine:
@@ -1304,17 +1267,20 @@ class SearchExecutor:
         self._scatter_layout()
         return True
 
-    def _scatter_plan(self, trees: list[Node], k: int | None):
+    def _scatter_plan(self, trees: list[Node], k: int | None, mode: str):
         """Driver-side scatter planning → (terms, ctx, need_pos,
-        read_cols, est_postings, groups). The one place the fan-out and
-        the projected postings columns are decided: ``_scatter_exec``
-        runs it and ``Engine.explain`` reports it."""
+        read_cols, est_postings, tasks, groups). The one place the
+        fan-out and the projected postings columns are decided:
+        ``_scatter_exec`` runs it and ``Engine.explain`` reports it.
+        The source parts are sized by the query's work, its postings
+        (``plan_tasks`` over ``_POSTINGS_PER_TASK``); ``tasks`` is 0
+        when a bounded mode evaluates in the driver."""
         terms, ctx, need_pos, read_cols, est = self._plan_ctx(trees, k)
         parts = self._scatter_layout()["parts"]
-        groups = (_scatter_groups(
-            parts, self.spark.sparkContext.defaultParallelism, est)
-            if terms and parts else [])
-        return terms, ctx, need_pos, read_cols, est, groups
+        groups, tasks = plan_tasks(
+            self.spark, parts if terms else [], est, _POSTINGS_PER_TASK,
+            scatter_gathers(mode, k))
+        return terms, ctx, need_pos, read_cols, est, tasks, groups
 
     def _scatter_exec(self, items: list[tuple], k: int | None,
                       spec: MetaSpec | None, mode: str,
@@ -1333,44 +1299,27 @@ class SearchExecutor:
         A bounded mode (``scatter_gathers``) returns the per-group
         frames gathered into one pandas frame, or None when nothing
         matched: a plan whose work fits one group evaluates in the
-        driver with no Spark job (``scatter_tasks``), a larger one runs
-        one job whose tasks send their frames back. ``scores`` returns
+        driver with no Spark job, a larger one runs one job whose tasks
+        send their frames back (``ops.util.gather``). ``scores`` returns
         the job's DataFrame of ``out_schema``: with ``k=None`` its
         output is unbounded, so it stays in Spark.
         """
         lay = self._scatter_layout()
-        terms, ctx, need_pos, read_cols, est, groups = self._scatter_plan(
-            [t for _, t in items], k)
-        gather = scatter_gathers(mode, k)
+        terms, ctx, need_pos, read_cols, est, tasks, groups = \
+            self._scatter_plan([t for _, t in items], k, mode)
+        bounded = scatter_gathers(mode, k)
         if not groups or (spec is not None and spec.match_none):
-            return None if gather else self.spark.createDataFrame(
+            return None if bounded else self.spark.createDataFrame(
                 [], out_schema)
-        local = gather and scatter_tasks(mode, k, est, len(groups)) == 0
         run = self._scatter_fn(
-            groups, self._driver_tables() if local else lay["files"],
+            groups, self._driver_tables() if tasks == 0 else lay["files"],
             items, ctx,
             terms, read_cols, need_pos, k, spec, mode, meta_fields,
             facet_fields)
-        if not gather:
-            return self._scatter_job(len(groups), run, out_schema)
-        if local:
-            frames = list(run([0]))
-        else:
-            rows = self._scatter_job(
-                len(groups),
-                lambda gids: (pd.DataFrame({"frame": [pickle.dumps(f)]})
-                              for f in run(gids)),
-                "frame binary").collect()
-            frames = [pickle.loads(r["frame"]) for r in rows]
+        if not bounded:
+            return task_frames(self.spark, tasks, run, out_schema)
+        frames = gather(self.spark, groups, tasks, run)
         return pd.concat(frames, ignore_index=True) if frames else None
-
-    def _scatter_job(self, n: int, run, out_schema) -> DataFrame:
-        """One single-stage job of ``n`` tasks, task i running
-        ``run([i])``: Range → MapInPandas, no exchange."""
-        return (self.spark.range(0, n, 1, n)
-                .mapInPandas(lambda it: (out for pdf in it
-                                         for out in run(pdf["id"])),
-                             out_schema))
 
     @staticmethod
     def _scatter_fn(groups, tables: _PartFiles, items, ctx, terms,

@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..analysis.analyzer import analyze_query_terms, tokenize_flat
+from ..ops.util import spread
 from .filters import MetaSpec
 from .ir import Bool, PhraseLeaf, TermLeaf
 
@@ -40,7 +41,7 @@ MAX_CLAUSES = 500      # reference MAX_CLAUSES (matching.py:28)
 # docs per kernel chunk: bounds the per-chunk working set (the
 # lexsort/searchsorted intermediates grow with docs x clause hits, and
 # ~1k docs keeps them cache-sized), and the docs one batch task is
-# sized for (_spread)
+# sized for (ops.util.spread)
 CHUNK_DOCS = 1024
 
 
@@ -385,31 +386,6 @@ def _percolate_batch_arrow_fn(stored: list[StoredQuery],
     return fn
 
 
-def _spread(src: DataFrame) -> DataFrame:
-    """Fan a batch input with fewer partitions than cores (one parquet
-    file, a LocalRelation) out to ``min(cores, ceil(rows / CHUNK_DOCS))``
-    tasks: each Python task has a fixed cost, so a micro-batch of one
-    chunk keeps its scan's split and takes no Exchange. The rows come
-    from the parquet footers of the input files (no job); when they
-    can't be read, spread to every core. At corpus scale partitions >=
-    cores, so no footer is opened and doc text takes no extra shuffle."""
-    import pyarrow.parquet as pq
-    from ..index.fsio import resolve
-    par = src.sparkSession.sparkContext.defaultParallelism
-    have = src.rdd.getNumPartitions()
-    if have >= par:
-        return src
-    files, n = src.inputFiles(), par
-    try:
-        if files:
-            rows = sum(pq.read_metadata(p, filesystem=fs).num_rows
-                       for fs, p in map(resolve, files))
-            n = min(par, -(-rows // CHUNK_DOCS))
-    except (OSError, ValueError):  # unreadable, or not parquet
-        pass
-    return src.repartition(n) if n > have else src
-
-
 def percolate_docs(docs: DataFrame, stored: list[StoredQuery],
                    id_cols: list[str] | None = None,
                    text_col: str = "content",
@@ -428,17 +404,16 @@ def percolate_docs(docs: DataFrame, stored: list[StoredQuery],
     Scale shape: the watchlist is driver-compiled and closure-broadcast
     (the reference caps percolator candidates per shard the same way);
     docs stream through in ≤ ``CHUNK_DOCS`` chunks with constant memory.
-    A batch input is sized by its rows (:func:`_spread`); a streaming
-    micro-batch keeps its source's splits.
+    A batch input is sized by its rows, ``CHUNK_DOCS`` per task
+    (``ops.util.spread``); a streaming micro-batch keeps its source's
+    splits.
     """
     id_cols = id_cols or ["repo", "path", "commit"]
     id_schema = ", ".join(
         f"{c} {docs.schema[c].dataType.simpleString()}" for c in id_cols)
     out_schema = (f"{id_schema}, entity_id string, score double, "
                   f"matched_names array<string>")
-    src = docs.select(*id_cols, text_col)
-    if not src.isStreaming:  # a streaming plan has no .rdd
-        src = _spread(src)
+    src = spread(docs.select(*id_cols, text_col), CHUNK_DOCS)
     large = src.sparkSession.conf.get(
         "spark.sql.execution.arrow.useLargeVarTypes", "false")
     return src.mapInArrow(

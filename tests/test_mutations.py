@@ -352,24 +352,34 @@ def test_compact_job_path_matches_driver_path(spark, mutable_index,
     """Forced onto the job path (one task per target part), compact()
     runs one single-stage job and leaves every index file
     byte-identical to the driver path's on a copy of the same index,
-    the term dictionary included."""
+    the term dictionary included. A one-part compaction above the
+    per-task docs runs as one task too: the driver only takes work that
+    fits one task."""
     import shutil
     from openaleph_search_spark.index import mutate
-    st = IndexStorage(mutable_index)
-    delete_docs(spark, st, _DEAD)
-    copy = str(tmp_path / "idx_job_path")
-    shutil.copytree(mutable_index, copy)
-    by_driver = compact(spark, st)
+    one = str(tmp_path / "idx_one_part")
+    shutil.copytree(mutable_index, one)
+    inputs = {mutable_index: _DEAD, one: "path = 'a/banana.txt'"}
+    copies = {}
+    for root, cond in inputs.items():
+        delete_docs(spark, IndexStorage(root), cond)
+        copies[root] = f"{root}_job"
+        shutil.copytree(root, copies[root])
+    by_driver = {r: compact(spark, IndexStorage(r)) for r in inputs}
+    assert by_driver[mutable_index]["parts_rewritten"] >= 2
+    assert by_driver[one]["parts_rewritten"] == 1
     monkeypatch.setattr(mutate, "DOCS_PER_COMPACT_TASK", 1)
-    by_job, jobs = spark_jobs(lambda: compact(spark, IndexStorage(copy)))
-    n = by_driver["parts_rewritten"]
-    assert n >= 2 and by_driver["tasks"] == 0
-    assert jobs == [[n]] and by_job.pop("tasks") == n
-    by_driver.pop("tasks")
-    assert by_job == by_driver
-    driver_files, job_files = _tree_files(mutable_index), _tree_files(copy)
-    assert os.path.join("term_stats", "part=all.parquet") in driver_files
-    assert driver_files == job_files
+    for root, copy in copies.items():
+        by_job, jobs = spark_jobs(
+            lambda: compact(spark, IndexStorage(copy)))
+        n = by_driver[root]["parts_rewritten"]
+        assert by_driver[root].pop("tasks") == 0
+        assert jobs == [[n]] and by_job.pop("tasks") == n, root
+        assert by_job == by_driver[root]
+        driver_files, job_files = _tree_files(root), _tree_files(copy)
+        assert os.path.join("term_stats", "part=all.parquet") \
+            in driver_files
+        assert driver_files == job_files, root
 
 
 def test_mentions_skip_tombstoned_docs(spark, mutable_index):

@@ -3,6 +3,8 @@ engine to be scan-efficient at 100 TB (filter pushdown, column pruning,
 partition pruning) — SURVEY.md §4.2 — and the job counts and results
 of the scatter, the one query executor, against the pure-Python BM25
 oracle and the doc_meta rows."""
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,6 +13,10 @@ from tests.conftest import FIXTURE_DOCS
 from tests.oracle import OracleIndex
 
 TOL = 1e-9
+# a session stand-in for ops.util.plan_tasks: one core, so the plan
+# holds one group whatever its work
+_ONE_CORE = SimpleNamespace(
+    sparkContext=SimpleNamespace(defaultParallelism=1))
 
 
 def _oracle(eng, docs=FIXTURE_DOCS) -> OracleIndex:
@@ -197,7 +203,7 @@ def test_run_multi_single_pass(spark, fixture_engine, monkeypatch,
              for i, t in enumerate(["banana", "kwazulu", "crime wave"])}
     ex = fixture_engine.executor
     monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK", 1)  # ≥2 groups
-    groups = ex._scatter_plan(list(trees.values()), 5)[-1]
+    groups = ex._scatter_plan(list(trees.values()), 5, "multi")[-1]
     assert len(groups) >= 2
     df, jobs = spark_jobs(lambda: ex.run_multi(trees, k=5))
     assert jobs == [[len(groups)]]
@@ -298,13 +304,17 @@ def test_scatter_matches_oracle_everywhere(spark, fixture_docs_df,
         return sorted(vc.items(), key=lambda x: (-x[1], x[0]))
 
     meta = {r[0]: tuple(r[1:]) for r in eng.doc_meta.collect()}
+    plan = xmod.plan_tasks
     fanouts = {
-        "planned": xmod._scatter_groups,
-        "one_group": lambda parts, par, est: [list(parts)],
-        "group_per_part": lambda parts, par, est: [[p] for p in parts],
+        "planned": plan,
+        # one group: in the driver when its work fits, else one task
+        "one_group": lambda spark, units, work, per, bounded: plan(
+            _ONE_CORE, units, work, per, bounded),
+        "group_per_part": lambda spark, units, work, per, bounded: (
+            [[u] for u in units], len(units)),
     }
     for name, fn in fanouts.items():
-        monkeypatch.setattr(xmod, "_scatter_groups", fn)
+        monkeypatch.setattr(xmod, "plan_tasks", fn)
         for args, pred in filtered:
             want = matches(args, pred)
             hits = eng.search({**args, "limit": 3}).hits.collect()
@@ -336,6 +346,24 @@ def test_scatter_matches_oracle_everywhere(spark, fixture_docs_df,
             _assert_hits(sorted(got, key=lambda r: (-r[1], r[0])),
                          o.topk(want, 3), meta)
     monkeypatch.undo()
+
+
+def test_task_sizing_lives_in_one_module():
+    """How many Python tasks work gets is decided in ops/util.py only:
+    the core count, the Range job and the private ``_jdf`` handle
+    appear nowhere else in the package but the input sources and the
+    index build (which sizes its own parts)."""
+    import pathlib
+    import openaleph_search_spark
+    root = pathlib.Path(openaleph_search_spark.__file__).parent
+    allowed = ("ops/util.py", "sources/", "index/build.py")
+    found = [
+        (rel, word) for path in sorted(root.rglob("*.py"))
+        for rel in [path.relative_to(root).as_posix()]
+        if not rel.startswith(allowed)
+        for word in ("defaultParallelism", "spark.range(", "._jdf")
+        if word in path.read_text()]
+    assert found == []
 
 
 def test_explain_reports_scatter_fanout(spark, fixture_engine,
@@ -445,8 +473,10 @@ def test_small_reads_run_zero_jobs(spark, fixture_index, tmp_path,
         assert got == want[name], name
     # a plan held to one group by its caps, not by its work, keeps its
     # task: the driver never evaluates more than _POSTINGS_PER_TASK
-    monkeypatch.setattr(xmod, "_scatter_groups",
-                        lambda parts, par, est: [list(parts)])
+    plan = xmod.plan_tasks
+    monkeypatch.setattr(xmod, "plan_tasks",
+                        lambda spark, units, work, per, bounded: plan(
+                            _ONE_CORE, units, work, per, bounded))
     for name, fn in reads.items():
         got, jobs = spark_jobs(fn)
         assert jobs == [[1]], name
@@ -576,7 +606,8 @@ def test_multi_facet_evaluates_query_once(spark, fixture_engine,
     args = {"q": "banana OR kwazulu", "facet": ["lang", "repo"],
             "limit": 0}
     tree = fixture_engine._plan(parse_args(args))
-    groups = fixture_engine.executor._scatter_plan([tree], 0)[-1]
+    groups = fixture_engine.executor._scatter_plan([tree], 0,
+                                                   "facet")[-1]
     assert len(groups) == 1
     calls = []
     real = xmod._scatter_eval_group
@@ -834,3 +865,51 @@ def test_percolate_large_file_fans_out_by_rows(spark, tmp_path,
     got, jobs = spark_jobs(df.collect)
     assert max(t for job in jobs for t in job) == n
     assert sorted(map(_perc_key, got)) == _perc_want(rows, stored)
+
+
+def test_ops_inputs_spread_by_work(spark, tmp_path):
+    """The ops kernels size a batch input by its work like percolation
+    does (ops.util.spread). simhash (one row per task) spreads a
+    one-file input of more rows than cores over min(cores, rows) tasks
+    and keeps a one-row file on its scan's split. cosine_topk sizes its
+    tasks by input bytes (64 MiB each), so a small parquet or JSON file
+    takes no Exchange; an input with no files can't be sized and
+    spreads to every core. A streaming input is returned as it is."""
+    from openaleph_search_spark.ops.dedup import simhash
+    from openaleph_search_spark.ops.similarity import cosine_topk
+    from openaleph_search_spark.ops.util import spread
+    par = spark.sparkContext.defaultParallelism
+    assert par >= 2
+
+    def one_file(rows, schema, name, fmt="parquet"):
+        d = str(tmp_path / name)
+        getattr(spark.createDataFrame(rows, schema).coalesce(1).write,
+                fmt)(d)
+        df = spark.read.schema(schema).format(fmt).load(d)
+        assert df.rdd.getNumPartitions() == 1
+        return df, d
+
+    rows = [(i, f"doc {i} banana crime") for i in range(par + 3)]
+    docs, docs_dir = one_file(rows, "doc_id long, text string", "docs")
+    sims = simhash(docs)
+    assert f"RoundRobinPartitioning({par})" in _plan(sims)
+    assert sims.count() == len(rows)
+    one = simhash(one_file(rows[:1], "doc_id long, text string",
+                           "one_doc")[0])
+    assert "Exchange" not in _plan(one)
+    assert one.count() == 1
+
+    vecs = [(i, [float(i % 7), 1.0, float(i % 3)]) for i in range(50)]
+    vec_schema = "vec_id long, embedding array<float>"
+    for src in (one_file(vecs, vec_schema, "vecs")[0],
+                one_file(vecs, vec_schema, "vecs_json", "json")[0]):
+        top = cosine_topk(src, [1.0, 1.0, 0.0], k=3)
+        assert "Exchange" not in _plan(top)
+        assert len(top.collect()) == 3
+    top = cosine_topk(spark.createDataFrame(vecs, vec_schema).coalesce(1),
+                      [1.0, 1.0, 0.0], k=3)
+    assert f"RoundRobinPartitioning({par})" in _plan(top)
+    assert len(top.collect()) == 3
+
+    stream = spark.readStream.schema(docs.schema).parquet(docs_dir)
+    assert spread(stream, 1) is stream

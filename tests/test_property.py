@@ -415,33 +415,47 @@ def test_percolate_batch_matches_per_doc_reference(docs, clauses, slop):
 
 
 # --------------------------------------------------------------------------
-# scatter fan-out: grouping of source parts into tasks
+# work-sized dispatch: grouping of work units (source parts) into tasks
 # --------------------------------------------------------------------------
 
 @given(parts=st.lists(st.integers(0, 1 << 20), min_size=1, max_size=80,
                       unique=True),
        par=st.integers(1, 256),
        ests=st.lists(st.integers(0, 300), min_size=2, max_size=2),
-       frac=st.integers(0, 3))
+       frac=st.integers(0, 3),
+       bounded=st.booleans())
 @settings(max_examples=300, deadline=None)
-def test_scatter_groups_partition_parts(parts, par, ests, frac):
-    """Every part lands in exactly one non-empty group, the task count
-    stays within [1, min(parts, par)], and it never drops as the
-    query's est_postings grows."""
-    from openaleph_search_spark.query.executor import (
-        _POSTINGS_PER_TASK, _scatter_groups)
+def test_scatter_groups_partition_parts(parts, par, ests, frac, bounded):
+    """ops.util.plan_tasks, sized as the scatter sizes its parts: every
+    part lands in exactly one non-empty group, the group count stays
+    within [1, min(parts, par)] and never drops as the query's
+    est_postings grows, and the task count is 0 (driver) exactly when
+    there is one group, the work fits one task and the output is
+    bounded; else one task per group. No parts → nothing runs."""
+    from types import SimpleNamespace
+
+    from openaleph_search_spark.ops.util import plan_tasks
+    from openaleph_search_spark.query.executor import _POSTINGS_PER_TASK
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(defaultParallelism=par))
     # whole multiples of the per-task postings, ± a remainder around
     # the boundaries where the task count steps
     lo, hi = sorted(max(0, e * _POSTINGS_PER_TASK + frac - 1)
                     for e in ests)
     counts = []
     for est in (lo, hi):
-        groups = _scatter_groups(parts, par, est)
+        groups, tasks = plan_tasks(spark, parts, est,
+                                   _POSTINGS_PER_TASK, bounded)
         assert sorted(p for g in groups for p in g) == sorted(parts)
         assert all(groups)
         assert 1 <= len(groups) <= min(len(parts), par)
+        driver = (len(groups) == 1 and est <= _POSTINGS_PER_TASK
+                  and bounded)
+        assert tasks == (0 if driver else len(groups))
         counts.append(len(groups))
     assert counts[0] <= counts[1]
+    assert plan_tasks(spark, [], hi, _POSTINGS_PER_TASK,
+                      bounded) == ([], 0)
 
 
 

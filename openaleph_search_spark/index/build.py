@@ -10,12 +10,12 @@ drives it, Lucene executes it).  Pipeline:
     ├─ groupBy(src_part).applyInPandas(SPIMI)          ── scatter
     │     tokenize (vectorized analyzer) → per-partition PACKED posting
     │     blocks (≤128 docs, delta+varint docs/tfs/dls/positions)
-    │     write postings/shard=K/part=N.parquet (term-sorted, the
-    │     final layout — shard = src_part mod S is constant per task)
-    │     + doc_meta/part=N.parquet
-    │     commit manifest/part=N.json   ← per-partition checkpoint
-    ├─ global_stats (N, avgdl) from doc_meta           ── tiny agg
-    └─ term_stats: df/cf summed by term over the postings' block
+    │     write the part's postings run (term-sorted, the final
+    │     layout: shard = src_part mod S is constant per task)
+    │     + doc_meta + field_lens + per-field (docs, tokens) partial
+    │     commit the part's manifest, last  ← per-partition checkpoint
+    ├─ global stats (N, avgdl) summed from the live parts' partials
+    └─ term_stats: df/cf summed by term over the live parts' block
        stats (a projected read of term, doc_count, sum_tf)
 
 Scale properties (designed for 1000-executor / 100 TB):
@@ -53,7 +53,7 @@ from pyspark.sql.types import StructType
 from ..analysis.analyzer import tokenize_flat
 from .codec import (BLOCK_SIZE, K1, B, delta_restarting,
                     encode_positions_grouped, varint_encode_sliced)
-from .storage import PART_FILE, IndexStorage
+from .storage import IndexStorage
 
 DOC_ID_PART_SHIFT = 33  # doc_id = (src_part << 33) | local_row
 LAYOUT_VERSION = 8  # bump on any physical-layout / shard-map change
@@ -67,7 +67,7 @@ DOC_META_SCHEMA = ("doc_id long, repo string, path string, commit string, "
                    "src_part int")
 MANIFEST_SCHEMA = ("src_part int, status string, docs long, postings long, "
                    "tokens long, seconds double, attempt int")
-_BLOCK_COLS = ["term", "shard", "first_doc", "last_doc", "doc_count",
+_BLOCK_COLS = ["term", "first_doc", "last_doc", "doc_count",
                "sum_tf", "max_tf", "min_dl", "docs_payload",
                "tfs_payload", "dls_payload", "pos_payload"]
 
@@ -104,7 +104,7 @@ def _cast_doc_meta(tbl, schema, tz: str):
 
 
 def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
-                  shard_of_part, fields: dict[str, str] | None = None,
+                  fields: dict[str, str] | None = None,
                   bigrams: bool = False,
                   meta_cols: list[str] | None = None, *,
                   meta_schema: StructType, tz: str, epoch: int = -1):
@@ -149,7 +149,6 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
     def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
         t0 = time.time()
         src_part = int(pdf["src_part"].iloc[0])
-        shard = int(shard_of_part(src_part))
         pdf = pdf.sort_values(["repo", "path", "commit"], kind="mergesort")
         pdf = pdf.reset_index(drop=True)
         n = len(pdf)
@@ -222,6 +221,10 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
             dl_tok_parts.append(bi_dl[bi_row])
             field_stats[BIGRAM_FIELD] = (n, int(bi_dl.sum()))
             field_len_cols.append((BIGRAM_FIELD, bi_dl))
+        elif bigrams:
+            # a part with no tokens still counts its docs: the avgdl
+            # denominator is every doc, however the docs are parted
+            field_stats[BIGRAM_FIELD] = (n, 0)
         row_idx = np.concatenate(row_parts)
         positions = np.concatenate(pos_parts)
         dl_tok = np.concatenate(dl_tok_parts).astype(np.int64)
@@ -293,7 +296,6 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
             mins_dl = np.minimum.reduceat(g_dl, blk_lo)
             run = pd.DataFrame({
                 "term": uniq_arr[g_code[blk_lo]],
-                "shard": np.full(tot, shard, dtype=np.int32),
                 "first_doc": g_doc[blk_lo],
                 "last_doc": g_doc[blk_hi - 1],
                 "doc_count": (blk_hi - blk_lo).astype(np.int32),
@@ -323,14 +325,13 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
 
         # all direct writes go through storage.io (pyarrow.fs): works on
         # object stores / HDFS, atomic under speculative task attempts
-        shard_dir = os.path.join(storage.postings_dir, f"shard={shard}")
-        for d in (shard_dir, storage.doc_meta_dir,
-                  storage.manifest_dir, storage.field_lens_dir):
+        path = {t: storage.part_path(t, src_part) for t in
+                ("postings", "doc_meta", "field_lens", "fields",
+                 "manifest")}
+        for d in {os.path.dirname(v) for v in path.values()}:
             storage.io.mkdirs(d)
-        # the task writes its single-shard run STRAIGHT into the final
-        # hive layout (shard = src_part mod S is constant per task):
-        # term-sorted for rowgroup pruning, shard encoded in the dir
-        # (LAYOUT v6 — no separate tf_runs spool + JVM re-layout job)
+        # the task writes its run STRAIGHT into its final postings
+        # file, term-sorted for rowgroup pruning
         run = run.sort_values(["term", "first_doc"], kind="mergesort",
                               ignore_index=True)
         run_schema = pa.schema([
@@ -342,14 +343,13 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
             ("dls_payload", pa.binary()), ("pos_payload", pa.binary()),
         ])
         storage.io.write_parquet_atomic(
-            pa.Table.from_pandas(run.drop(columns=["shard"]),
-                                 schema=run_schema,
+            pa.Table.from_pandas(run, schema=run_schema,
                                  preserve_index=False),
-            os.path.join(shard_dir, f"part={src_part}.parquet"))
+            path["postings"])
         storage.io.write_parquet_atomic(
             _cast_doc_meta(pa.Table.from_pandas(meta, preserve_index=False),
                            meta_arrow, tz),
-            os.path.join(storage.doc_meta_dir, f"part={src_part}.parquet"))
+            path["doc_meta"])
         # per-doc per-field lengths (long format, zero rows skipped):
         # compact() needs these to recompute exact per-field avgdl
         # after deletes (the json partials below are pre-delete sums)
@@ -373,13 +373,10 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
                                      ("doc_id", pa.int64()),
                                      ("field", pa.string()),
                                      ("dl", pa.int32())])),
-            os.path.join(storage.field_lens_dir,
-                         f"part={src_part}.parquet"))
+            path["field_lens"])
         # per-field (docs, tokens) partials → global per-field avgdl
         storage.io.write_bytes_atomic(
-            os.path.join(storage.manifest_dir,
-                         f"fields_part={src_part}.json"),
-            json.dumps(field_stats).encode())
+            path["fields"], json.dumps(field_stats).encode())
 
         row = {
             "src_part": src_part, "status": "done", "docs": n,
@@ -388,8 +385,7 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
         }
         # JSON manifest written LAST = the atomic per-partition commit.
         storage.io.write_bytes_atomic(
-            storage.manifest_path(src_part),
-            json.dumps({**row, "epoch": epoch}).encode())
+            path["manifest"], json.dumps({**row, "epoch": epoch}).encode())
         return pd.DataFrame([row])
 
     return fn
@@ -441,7 +437,7 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
     for fname, bv in b_by_field.items():
         if not 0.0 <= bv <= 1.0:
             raise ValueError(f"b_by_field[{fname!r}]={bv} outside [0,1]")
-    storage = IndexStorage(index_dir)
+    storage = IndexStorage(index_dir, num_shards)
     sc_parallelism = spark.sparkContext.defaultParallelism
     if num_partitions is None:
         # bound docs per TASK, not tasks per core: oversized partitions
@@ -480,8 +476,7 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
     # (term, shard) stay disjoint+sorted because doc ids are
     # partition-prefixed
     manifests = prepared.groupBy("src_part").applyInPandas(
-        _spimi_writer(storage, with_positions, attempt,
-                      lambda sp: sp % num_shards, fields, bigrams,
+        _spimi_writer(storage, with_positions, attempt, fields, bigrams,
                       meta_cols, meta_schema=meta_schema,
                       tz=spark.conf.get("spark.sql.session.timeZone")),
         MANIFEST_SCHEMA)
@@ -511,7 +506,7 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
             saved[k] = None
         conf.set(k, v)
     try:
-        new_rows = manifests.collect()  # tiny: one row per partition
+        manifests.collect()  # tiny: one row per partition
     finally:
         for k, v in saved.items():
             if v is None:
@@ -520,36 +515,16 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
                 conf.set(k, v)
     _mark("spimi_job")
 
-    # ---- global stats: free — summed from the manifest checkpoints
-    # (docs + token counts are per-partition lineage metrics) -------------
-    all_manifests = list(done.values()) + [r.asDict() for r in new_rows]
-    n_docs = sum(m["docs"] for m in all_manifests)
-    total_tokens = sum(m["tokens"] for m in all_manifests)
-    avgdl = (total_tokens / n_docs) if n_docs else 0.0
-    avgdl_by_field = _read_field_stats(storage)
-    _mark("field_stats")
-
-    # ---- no step B: each SPIMI task wrote its (term, first_doc)-sorted
-    # single-shard run STRAIGHT into postings/shard=K/ (LAYOUT v6) —
-    # the former full read+rewrite re-layout job is gone from the build
-    # critical path. Impact bounds are computed LIVE at query time from
-    # each block's stored (max_tf, min_dl) — a true upper bound under
-    # ANY collection stats, so appends/compactions never invalidate
-    # pruning. Blocks of one (term, shard) stay doc-range disjoint
-    # across part files (partition-prefixed doc ids), so the executor's
-    # sort-by-first_doc merge needs no re-encode.
-
-    # ---- term stats (global df/cf — unlike ES's per-shard idf), summed
-    # over the block stats of the postings written in step A -------------
-    aggregate_term_stats(spark, storage)
-    _mark("term_stats")
-
-    storage.write_meta({
+    # no merge step: each task wrote its final postings file, and
+    # blocks of one term stay doc-range disjoint across part files
+    # (partition-prefixed doc ids). Impact bounds are computed LIVE at
+    # query time from each block's (max_tf, min_dl), so no stats change
+    # invalidates pruning.
+    refresh_stats(spark, storage, {
         "num_partitions": P, "num_shards": num_shards,
         "block_size": BLOCK_SIZE, "k1": K1, "b": B,
         "b_by_field": b_by_field,
-        "with_positions": with_positions, "n_docs": n_docs, "avgdl": avgdl,
-        "avgdl_by_field": avgdl_by_field,
+        "with_positions": with_positions,
         "fields": sorted(["content", *fields]),
         "field_map": fields,
         "meta_cols": meta_cols,
@@ -557,11 +532,24 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
         "bigrams": bigrams,
         "analyzer": "icu-default-v1",
         "layout_version": LAYOUT_VERSION,
-        "built_partitions": len(done) + len(new_rows),
         "resumed_from": len(done),
-    })
-    _mark("write_meta")
+    }, _mark)
     return storage
+
+
+def refresh_stats(spark: SparkSession, storage: IndexStorage, meta: dict,
+                  mark=lambda name: None) -> None:
+    """The tail of build, append and compaction: the live parts' stats
+    (``IndexStorage.stats``) into ``meta``, the global term stats
+    (df/cf, unlike ES's per-shard idf), then meta.json; ``mark`` times
+    each step for build's phase log."""
+    parts = storage.parts()
+    meta.update(storage.stats(parts))
+    mark("field_stats")
+    aggregate_term_stats(spark, storage, parts)
+    mark("term_stats")
+    storage.write_meta(meta)
+    mark("write_meta")
 
 
 # below this many postings bytes, the projected (term, doc_count,
@@ -570,10 +558,10 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
 _TERM_STATS_DRIVER_BYTES = 256 * 1024 * 1024
 
 
-def aggregate_term_stats(spark: SparkSession,
-                         storage: IndexStorage) -> None:
+def aggregate_term_stats(spark: SparkSession, storage: IndexStorage,
+                         parts: list[int]) -> None:
     """Global term dictionary (df/cf): ``doc_count``/``sum_tf`` summed
-    by term over every block row of the per-part postings files.
+    by term over every block row of the live ``parts``' postings files.
 
     The postings are the only source, so build, resume, append and
     compaction all stay exact with no per-part partial to keep in step.
@@ -587,17 +575,15 @@ def aggregate_term_stats(spark: SparkSession,
     statistics."""
     import pyarrow as pa
     import pyarrow.dataset as ds
-    from pyarrow import fs as pafs
     io = storage.io
-    sel = pafs.FileSelector(io.path(storage.postings_dir), recursive=True,
-                            allow_not_found=True)
-    files = [i for i in io.fs.get_file_info(sel)
-             if PART_FILE.fullmatch(i.base_name)]
-    if sum(i.size for i in files) <= _TERM_STATS_DRIVER_BYTES:
-        cols = pa.schema([("term", pa.string()),
-                          ("doc_count", pa.int32()), ("sum_tf", pa.int64())])
-        merged = (ds.dataset([i.path for i in files], schema=cols,
-                             filesystem=io.fs, format="parquet")
+    uris = [storage.part_path("postings", p) for p in parts]
+    paths = [io.path(u) for u in uris]
+    cols = pa.schema([("term", pa.string()),
+                      ("doc_count", pa.int32()), ("sum_tf", pa.int64())])
+    if (sum(i.size for i in io.fs.get_file_info(paths))
+            <= _TERM_STATS_DRIVER_BYTES):
+        merged = (ds.dataset(paths, schema=cols, filesystem=io.fs,
+                             format="parquet")
                   .to_table()
                   .group_by("term")
                   .aggregate([("doc_count", "sum"), ("sum_tf", "sum")])
@@ -607,14 +593,14 @@ def aggregate_term_stats(spark: SparkSession,
         # replace the file first, then drop stale ones (a Spark-path
         # write's), so readers never see an empty term dictionary
         io.mkdirs(storage.term_stats_dir)
-        io.write_parquet_atomic(
-            merged, os.path.join(storage.term_stats_dir,
-                                 "part=all.parquet"))
-        for n in io.listdir(storage.term_stats_dir):
-            if n.endswith(".parquet") and n != "part=all.parquet":
-                io.delete_file(os.path.join(storage.term_stats_dir, n))
+        kept = os.path.join(storage.term_stats_dir, "part=all.parquet")
+        io.write_parquet_atomic(merged, kept)
+        for path in storage.term_stats_paths():
+            if path != io.path(kept):
+                io.fs.delete_file(path)
         return
-    (storage.postings(spark)
+    (spark.read.schema("term string, doc_count int, sum_tf long")
+        .parquet(*uris)
         .groupBy("term")
         .agg(F.sum("doc_count").alias("df"), F.sum("sum_tf").alias("cf"))
         .sortWithinPartitions("term")
@@ -622,17 +608,3 @@ def aggregate_term_stats(spark: SparkSession,
         .option("compression", "zstd")
         .option("parquet.compression.codec.zstd.level", "1")
         .parquet(storage.term_stats_dir))
-
-
-def _read_field_stats(storage: IndexStorage) -> dict[str, float]:
-    """Per-field avgdl from the per-partition field-stat jsons
-    (parallel driver-side reads — see storage.read_json_files)."""
-    totals: dict[str, list[int]] = {}
-    for stats in storage.read_json_files(storage.manifest_dir,
-                                         "fields_part="):
-        for fname, (docs_f, toks_f) in stats.items():
-            t = totals.setdefault(fname, [0, 0])
-            t[0] += docs_f
-            t[1] += toks_f
-    return {f: (t[1] / t[0] if t[0] else 0.0)
-            for f, t in totals.items()}

@@ -25,26 +25,12 @@ that adds one file and commits it):
 from __future__ import annotations
 
 import json
-import os
-import uuid
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..ops.util import gather, plan_tasks
-from .storage import PART_FILE, TOMBSTONES_SCHEMA, IndexStorage
-
-
-def tombstones_dir(storage: IndexStorage) -> str:
-    return os.path.join(storage.root, "tombstones")
-
-
-def read_tombstones(spark: SparkSession,
-                    storage: IndexStorage) -> DataFrame | None:
-    if not _tombstone_paths(storage):
-        return None
-    return (spark.read.schema(TOMBSTONES_SCHEMA)
-            .parquet(tombstones_dir(storage)).select("doc_id").distinct())
+from .storage import IndexStorage
 
 
 def _ids(victims: DataFrame) -> np.ndarray:
@@ -55,18 +41,11 @@ def _ids(victims: DataFrame) -> np.ndarray:
 
 def _add_tombstones(storage: IndexStorage, ids: np.ndarray) -> int:
     """Tombstone ``ids``: the ids already tombstoned are read through
-    pyarrow and subtracted, and the new ones go into ONE
-    ``tombstones/<uuid>.parquet``, written atomically (a crash leaves
-    only a hidden temp file that no reader sees). → how many."""
-    import pyarrow as pa
-    new = np.setdiff1d(ids, _read_dead(storage.io.fs,
-                                       _tombstone_paths(storage)))
+    pyarrow and subtracted, and the new ones go into ONE tombstone
+    file (``IndexStorage.add_tombstones``). → how many."""
+    new = np.setdiff1d(ids, storage.dead_ids())
     if new.size:
-        d = tombstones_dir(storage)
-        storage.io.mkdirs(d)
-        storage.io.write_parquet_atomic(
-            pa.table({"doc_id": pa.array(new, pa.int64())}),
-            os.path.join(d, f"{uuid.uuid4().hex}.parquet"))
+        storage.add_tombstones(new)
     return int(new.size)
 
 
@@ -116,19 +95,6 @@ def upsert_docs(spark: SparkSession, storage: IndexStorage,
     _add_tombstones(storage, ids)
 
 
-def export_index(spark: SparkSession, storage: IndexStorage,
-                 include_stats: bool = True) -> DataFrame:
-    """S6 full export: every live doc's metadata (the reference's
-    scroll-based action export, /root/reference/openaleph_search/index/
-    export.py:15-96 — Spark is already batch, no scroll machinery)."""
-    dm = storage.doc_meta(spark)
-    tombs = read_tombstones(spark, storage)
-    if tombs is not None:
-        dm = dm.join(tombs, "doc_id", "left_anti")
-    return dm
-
-
-
 _PAYLOADS = ("docs_payload", "tfs_payload", "dls_payload", "pos_payload")
 # docs a compaction task must rewrite before compact() fans out to
 # another: a Python task's fixed CPU over the rewrite CPU per doc
@@ -136,46 +102,8 @@ _PAYLOADS = ("docs_payload", "tfs_payload", "dls_payload", "pos_payload")
 DOCS_PER_COMPACT_TASK = 10_000
 
 
-def _source_parts(storage: IndexStorage) -> list[int]:
-    """Source parts of the index, from ``doc_meta/part=<p>.parquet``.
-    Raises ValueError when a data file breaks that naming (what a
-    layout-6 compaction or a foreign writer left behind): neither
-    compact() nor a query can read such an index, it must be rebuilt."""
-    from .build import LAYOUT_VERSION
-    parts = []
-    for name in storage.io.listdir(storage.doc_meta_dir):
-        if not name.endswith(".parquet"):
-            continue
-        m = PART_FILE.fullmatch(name)
-        if m is None:
-            raise ValueError(
-                f"the index needs the layout-{LAYOUT_VERSION} per-part "
-                f"files, but doc_meta/{name} is not part=<int>.parquet "
-                "(an index compacted under layout 6 or older, or a "
-                "foreign file): rebuild the index")
-        parts.append(int(m.group(1)))
-    return sorted(parts)
-
-
-def _tombstone_paths(storage: IndexStorage) -> list[str]:
-    io = storage.io
-    d = tombstones_dir(storage)
-    return [io.path(os.path.join(d, n)) for n in io.listdir(d)
-            if n.endswith(".parquet")]
-
-
-def _read_dead(fs, tomb_paths: list[str]) -> np.ndarray:
-    """Sorted unique tombstoned doc ids, read through pyarrow."""
-    import pyarrow as pa
-    import pyarrow.dataset as ds
-    ids = ds.dataset(tomb_paths, filesystem=fs,
-                     schema=pa.schema([("doc_id", pa.int64())])
-                     ).to_table().column("doc_id")
-    return np.unique(ids.to_numpy())
-
-
-def _rewrite_part(storage: IndexStorage, part: int, num_shards: int,
-                  dead: np.ndarray, with_positions: bool) -> dict:
+def _rewrite_part(storage: IndexStorage, part: int, dead: np.ndarray,
+                  with_positions: bool) -> dict:
     """Drop ``dead`` (this part's sorted tombstoned ids) from one source
     part and write its files back in place, each one atomically and the
     manifest last. Every value is re-derived from the part's own files,
@@ -184,10 +112,7 @@ def _rewrite_part(storage: IndexStorage, part: int, num_shards: int,
     import pyarrow.compute as pc
     from .codec import drop_docs
     io = storage.io
-    name = f"part={part}.parquet"
-
-    post_path = os.path.join(storage.postings_dir,
-                             f"shard={part % num_shards}", name)
+    post_path = storage.part_path("postings", part)
     post = io.read_parquet(post_path)
     lo = np.searchsorted(dead, post["first_doc"].to_numpy())
     hi = np.searchsorted(dead, post["last_doc"].to_numpy(), side="right")
@@ -210,12 +135,12 @@ def _rewrite_part(storage: IndexStorage, part: int, num_shards: int,
         blocks_dropped = int(touched.size - kept.size)
         io.write_parquet_atomic(post, post_path)
 
-    dm_path = os.path.join(storage.doc_meta_dir, name)
+    dm_path = storage.part_path("doc_meta", part)
     dm = io.read_parquet(dm_path)
     live = ~np.isin(dm["doc_id"].to_numpy(), dead)
     dm = dm.filter(pa.array(live))
     io.write_parquet_atomic(dm, dm_path)
-    fl_path = os.path.join(storage.field_lens_dir, name)
+    fl_path = storage.part_path("field_lens", part)
     fl = io.read_parquet(fl_path)
     fl = fl.filter(pa.array(~np.isin(fl["doc_id"].to_numpy(), dead)))
     io.write_parquet_atomic(fl, fl_path)
@@ -225,36 +150,34 @@ def _rewrite_part(storage: IndexStorage, part: int, num_shards: int,
     sums = fl.group_by("field").aggregate([("dl", "sum")])
     tokens = dict(zip(sums["field"].to_pylist(),
                       sums["dl_sum"].to_pylist()))
-    fields_path = os.path.join(storage.manifest_dir,
-                               f"fields_part={part}.json")
+    fields_path = storage.part_path("fields", part)
     io.write_bytes_atomic(fields_path, json.dumps({
         f: (n, tokens.get(f, 0))
         for f in json.loads(io.read_bytes(fields_path))}).encode())
-    man = json.loads(io.read_bytes(storage.manifest_path(part)))
+    man_path = storage.part_path("manifest", part)
+    man = json.loads(io.read_bytes(man_path))
     man.update(docs=n, postings=post.num_rows,
                tokens=int(pc.sum(dm["doc_len"]).as_py() or 0))
-    io.write_bytes_atomic(storage.manifest_path(part),
-                          json.dumps(man).encode())
-    return {"part": part, "docs": n, "docs_dropped": int(live.size - n),
+    io.write_bytes_atomic(man_path, json.dumps(man).encode())
+    return {"docs_dropped": int(live.size - n),
             "blocks_dropped": blocks_dropped}
 
 
 def _compact_parts(storage: IndexStorage, parts: list[int],
-                   dead: np.ndarray, num_shards: int,
-                   with_positions: bool) -> list[dict]:
+                   dead: np.ndarray, with_positions: bool) -> list[dict]:
     """One compaction group, in the driver or a task: keep the dead ids
     (sorted, every tombstoned id) of its parts, rewrite them one by one."""
     from .build import DOC_ID_PART_SHIFT
     part_of = dead >> DOC_ID_PART_SHIFT
-    return [_rewrite_part(storage, p, num_shards, dead[part_of == p],
-                          with_positions) for p in parts]
+    return [_rewrite_part(storage, p, dead[part_of == p], with_positions)
+            for p in parts]
 
 
 def compact(spark: SparkSession, storage: IndexStorage) -> dict:
     """Fold the tombstones into the index and refresh its statistics.
 
-    Only the source parts that hold a tombstoned id are rewritten, each
-    in place (``_rewrite_part``), so every file keeps its
+    Only the live source parts that hold a tombstoned id are rewritten,
+    each in place (``_rewrite_part``), so every file keeps its
     ``part=<p>.parquet`` name and reads stay on the scatter path. Sized
     by the work, like a read: ``n = min(targets, cores, ceil(docs /
     DOCS_PER_COMPACT_TASK))``, the docs taken from the target parts'
@@ -262,8 +185,7 @@ def compact(spark: SparkSession, storage: IndexStorage) -> dict:
     that many docs the driver rewrites them with no Spark job (``tasks
     == 0``); otherwise one single-stage job of ``n`` tasks does
     (``ops.util.gather``, no shuffle). Then the driver finishes like
-    build and append: global term stats from the postings, per-field
-    avgdl from the per-part partials, meta.json, and last the
+    build and append (``build.refresh_stats``), and last the
     tombstones go. A crash before that leaves the tombstones in place
     (readers keep subtracting them) and a re-run finishes the job.
     Impact bounds need no refill: they are derived live at query time
@@ -271,20 +193,19 @@ def compact(spark: SparkSession, storage: IndexStorage) -> dict:
 
     → ``{"parts_rewritten", "parts_skipped", "docs_dropped",
     "blocks_dropped", "tasks"}``."""
-    from .build import (DOC_ID_PART_SHIFT, _read_field_stats,
-                        aggregate_term_stats)
+    from .build import DOC_ID_PART_SHIFT, refresh_stats
     stats = dict.fromkeys(("parts_rewritten", "parts_skipped",
                            "docs_dropped", "blocks_dropped", "tasks"), 0)
-    tomb_paths = _tombstone_paths(storage)
+    tomb_paths = storage.tombstone_paths()
     if not tomb_paths:
         return stats
-    parts = _source_parts(storage)
+    parts = storage.parts()
     manifests = storage.completed_partitions()
-    dead = _read_dead(storage.io.fs, tomb_paths)
+    dead = storage.dead_ids(tomb_paths)
     targets = sorted(set((dead >> DOC_ID_PART_SHIFT).tolist())
                      & set(parts))
     meta = storage.read_meta()
-    args = (int(meta["num_shards"]), bool(meta["with_positions"]))
+    with_positions = bool(meta["with_positions"])
     docs = sum(manifests[p]["docs"] for p in targets if p in manifests)
     groups, stats["tasks"] = plan_tasks(
         spark, targets, docs, DOCS_PER_COMPACT_TASK)
@@ -293,10 +214,10 @@ def compact(spark: SparkSession, storage: IndexStorage) -> dict:
         # a task reads the tombstones itself: the ids do not ride in
         # the closure
         if dead is None:
-            dead = _read_dead(storage.io.fs, tomb_paths)
+            dead = storage.dead_ids(tomb_paths)
         for gid in gids:
             yield from _compact_parts(storage, groups[int(gid)], dead,
-                                      *args)
+                                      with_positions)
     rows = gather(spark, groups, stats["tasks"],
                   rewrite if stats["tasks"] else
                   lambda gids: rewrite(gids, dead))
@@ -304,16 +225,6 @@ def compact(spark: SparkSession, storage: IndexStorage) -> dict:
                  parts_skipped=len(parts) - len(rows),
                  docs_dropped=sum(r["docs_dropped"] for r in rows),
                  blocks_dropped=sum(r["blocks_dropped"] for r in rows))
-
-    aggregate_term_stats(spark, storage)
-    avgdl_by_field = _read_field_stats(storage)
-    docs_now = {r["part"]: r["docs"] for r in rows}
-    meta.update({
-        "n_docs": sum(docs_now.get(p, m["docs"])
-                      for p, m in manifests.items()),
-        "avgdl": avgdl_by_field.get("content", 0.0),
-        "avgdl_by_field": avgdl_by_field,
-    })
-    storage.write_meta(meta)
-    storage.io.delete_dir(tombstones_dir(storage), missing_ok=True)
+    refresh_stats(spark, storage, meta)
+    storage.drop_tombstones()
     return stats

@@ -209,8 +209,8 @@ class Engine:
         # or balance would read 1.0 for maximal skew
         shards = {sid: {"blocks": 0, "postings": 0} for sid in range(S)}
         files = lay["files"]
-        for p, path in files.post_paths.items():
-            with files.fs.open_input_file(path) as f:
+        for p in lay["parts"]:
+            with files.fs.open_input_file(files.path("postings", p)) as f:
                 pf = pq.ParquetFile(f)
                 sh = shards[p % S]
                 sh["blocks"] += pf.metadata.num_rows
@@ -234,15 +234,12 @@ class Engine:
 
     @property
     def doc_meta(self) -> DataFrame:
-        """Live docs only — tombstoned (deleted) ids are subtracted
-        (Lucene-style soft deletes, index/mutate.py)."""
+        """Live docs only: the parts and tombstones the Engine's reads
+        see (``IndexStorage.live_doc_meta``)."""
         if self._doc_meta is None:
-            dm = self.storage.doc_meta(self.spark)
-            from ..index.mutate import read_tombstones
-            tombs = read_tombstones(self.spark, self.storage)
-            if tombs is not None:
-                dm = dm.join(tombs, "doc_id", "left_anti")
-            self._doc_meta = dm
+            lay = self.executor._scatter_layout()
+            self._doc_meta = self.storage.live_doc_meta(
+                self.spark, lay["uncommitted"], lay["files"].tomb_paths)
         return self._doc_meta
 
     def _strategy(self, sa: SearchArgs, tree: Node,

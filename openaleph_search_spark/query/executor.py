@@ -50,8 +50,7 @@ from pyspark.sql.types import (DoubleType, LongType, StringType,
 from ..index.build import BIGRAM_FIELD, FIELD_SEP, field_of_term
 from ..index.codec import (bm25_idf, bm25_tfnorm, decode_blocks,
                            decode_positions)
-from ..index.mutate import _read_dead, _source_parts, _tombstone_paths
-from ..index.storage import PART_FILE, IndexStorage
+from ..index.storage import IndexStorage
 from ..ops.util import gather, plan_tasks, task_frames
 from .filters import MetaSpec
 from .ir import (Bool, DisMax, MatchAll, Node, PhraseLeaf, PrefixLeaf,
@@ -582,25 +581,29 @@ def _each_part(fn, parts: list) -> list:
 
 
 class _PartFiles:
-    """The source parts of an index, read from their files: each read
-    returns, per part asked for, the columns asked for, reading the
-    parts concurrently. Spark tasks read their group's parts this way
-    (a closure cannot ship the driver's cache), and so does the driver
-    when the index has no part cache; ``_PartCache`` keeps what it
-    reads."""
+    """The live source parts ``parts`` of an index, read from their
+    files (``IndexStorage.part_path``), and its tombstone files
+    ``tomb_paths``: each read returns, per part asked for, the columns
+    asked for, reading the parts concurrently. Spark tasks read their
+    group's parts this way (a closure cannot ship the driver's cache),
+    and so does the driver when the index has no part cache;
+    ``_PartCache`` keeps what it reads."""
 
-    def __init__(self, fs, dm_paths: dict, post_paths: dict,
+    def __init__(self, storage: IndexStorage, parts: list[int],
                  tomb_paths: list[str]):
-        self.fs = fs
-        self.dm_paths = dm_paths
-        self.post_paths = post_paths
+        self.storage = storage
+        self.fs = storage.io.fs
+        self.parts = parts
         self.tomb_paths = tomb_paths
+
+    def path(self, table: str, p: int) -> str:
+        return self.storage.io.path(self.storage.part_path(table, p))
 
     def file_bytes(self) -> int:
         """The bytes of every part file and tombstone file."""
         return sum(i.size or 0 for i in self.fs.get_file_info(
-            [*self.post_paths.values(), *self.dm_paths.values(),
-             *self.tomb_paths]))
+            [self.path(t, p) for p in self.parts
+             for t in ("postings", "doc_meta")] + self.tomb_paths))
 
     def _read(self, path: str, cols: list[str]):
         import pyarrow.parquet as pq
@@ -618,7 +621,7 @@ class _PartFiles:
                   qterms: np.ndarray | None) -> _Postings:
         import pyarrow as pa
         import pyarrow.compute as pc
-        path = self.post_paths[p]
+        path = self.path("postings", p)
         tbl = self._read(path, ["term", *cols])  # cols hold first_doc
         if qterms is not None:
             tbl = tbl.filter(pc.is_in(tbl.column("term"), pa.array(
@@ -648,14 +651,14 @@ class _PartFiles:
         return _each_part(lambda p: self._doc_meta(p, cols), parts)
 
     def _doc_meta(self, p: int, cols: list[str]):
-        path = self.dm_paths[p]
+        path = self.path("doc_meta", p)
         tbl = self._read(path, cols)  # cols hold doc_id
         if (np.diff(tbl.column("doc_id").to_numpy()) <= 0).any():
             raise _order_error(path, "doc_id")
         return tbl
 
     def dead(self) -> np.ndarray:
-        return _read_dead(self.fs, self.tomb_paths)
+        return self.storage.dead_ids(self.tomb_paths)
 
 
 class _PartCache(_PartFiles):
@@ -717,15 +720,16 @@ class _PartCache(_PartFiles):
             if old is None:
                 return self._postings(p, missing, None)
             return old._replace(table=_with_columns(
-                old.table, self._read(self.post_paths[p], missing)))
+                old.table,
+                self._read(self.path("postings", p), missing)))
         return self._fetch("postings", parts, cols, load)
 
     def doc_meta(self, parts: list[int], cols: list[str]) -> list:
         def load(p, old, missing):
             if old is None:
                 return self._doc_meta(p, missing)
-            return _with_columns(old, self._read(self.dm_paths[p],
-                                                 missing))
+            return _with_columns(
+                old, self._read(self.path("doc_meta", p), missing))
         return self._fetch("doc_meta", parts, cols, load)
 
     def dead(self) -> np.ndarray:
@@ -747,8 +751,7 @@ def _group_blocks(tables: _PartFiles, parts: list[int],
     id carries its part as a prefix. ``term`` is the last column."""
     import pyarrow as pa
     pieces, tix = [], []
-    for post in tables.postings([p for p in parts
-                                 if p in tables.post_paths], cols, qterms):
+    for post in tables.postings(parts, cols, qterms):
         idx, n = post.rows(qterms)
         if idx.size:
             pieces.append(post.table.select(cols).take(pa.array(idx)))
@@ -897,16 +900,19 @@ def scatter_gathers(mode: str, k: int | None) -> bool:
         mode in ("topk", "multi") and k is not None)
 
 
-# the file bytes each driver cache of an executor (so of an Engine:
-# every open Engine holds its own) may decode, decided once per Engine
-# from the files' sizes. The term dictionary is held as sorted arrays
-# when its term_stats files fit (ES keeps the terms dict in the node's
-# heap/FS cache the same way); a larger one is read from its files per
-# lookup, only the rows the lookup needs. The part cache (_PartCache)
-# is kept when the index's part and tombstone files fit; a larger
-# index's driver reads read the query terms' rows from the files on
-# every read. Decoded, a cache takes more than its files (the perfbench
-# search index: 2.8 MB of files, 7.4 MB decoded).
+# the bytes each driver cache of an executor (so of an Engine: every
+# open Engine holds its own) may hold, decided once per Engine from the
+# files, before anything is decoded. The term dictionary is held as
+# sorted arrays when its decoded size fits: the term_stats row groups'
+# uncompressed bytes plus a str object's ~49 bytes per term, read from
+# the footers (a held term takes ~12x its ZSTD file bytes). ES keeps
+# the terms dict in the node's heap/FS cache the same way; a larger one
+# is read from its files per lookup, only the rows the lookup needs.
+# The part cache (_PartCache) is kept when the index's part and
+# tombstone FILE bytes fit; a larger index's driver reads read the
+# query terms' rows from the files on every read. Decoded, the part
+# cache takes more than its files (the perfbench search index: 2.8 MB
+# of files, 7.4 MB decoded).
 _DRIVER_CACHE_BYTES = 64 * 1024 * 1024
 
 
@@ -926,8 +932,8 @@ class _TermDict:
     """The index's term dictionary (``term_stats``: term, df), which
     every planning lookup reads: idf, prefix and wildcard expansion,
     ``Engine.stats`` and more_like_this's term selection. Only where
-    the rows come from differs, decided once from the files' bytes:
-    sorted arrays held in the driver when the files fit
+    the rows come from differs, decided once from the files' footers:
+    sorted arrays held in the driver when their decoded size fits
     ``_DRIVER_CACHE_BYTES``, else a read of each lookup's rows from the
     files, streamed in record batches so driver memory stays bounded,
     from only the row groups whose term range (footer statistics) meets
@@ -935,30 +941,30 @@ class _TermDict:
     do. No lookup runs a Spark job."""
 
     def __init__(self, storage: IndexStorage):
-        import os
         import pyarrow as pa
         import pyarrow.dataset as ds
-        io, d = storage.io, storage.term_stats_dir
-        paths = [io.path(os.path.join(d, n)) for n in io.listdir(d)
-                 if n.endswith(".parquet")]
         self.files = ds.dataset(
-            paths, pa.schema([("term", pa.string()), ("df", pa.int64())]),
-            format="parquet", filesystem=io.fs)
+            storage.term_stats_paths(),
+            pa.schema([("term", pa.string()), ("df", pa.int64())]),
+            format="parquet", filesystem=storage.io.fs)
+        # each row group as a fragment, with its term statistics, and
+        # the held form's size, all from the footers
+        self.groups, held_bytes = [], 0
+        for frag in self.files.get_fragments():
+            frag.ensure_complete_metadata()
+            md = frag.metadata
+            held_bytes += sum(md.row_group(i).total_byte_size
+                              + 49 * md.row_group(i).num_rows
+                              for i in range(md.num_row_groups))
+            self.groups += [(frag.subset(row_group_ids=[rg.id]),
+                             (rg.statistics or {}).get("term") or {})
+                            for rg in frag.row_groups]
         self.held = None
-        if (sum(i.size for i in io.fs.get_file_info(paths))
-                <= _DRIVER_CACHE_BYTES):
+        if held_bytes <= _DRIVER_CACHE_BYTES:
             tbl = self.files.to_table()
             terms = tbl.column("term").to_numpy(zero_copy_only=False)
             order = np.argsort(terms, kind="mergesort")
             self.held = terms[order], tbl.column("df").to_numpy()[order]
-            return
-        # each row group as a fragment, with its term statistics
-        self.groups = []
-        for frag in self.files.get_fragments():
-            frag.ensure_complete_metadata()
-            self.groups += [(frag.subset(row_group_ids=[rg.id]),
-                             (rg.statistics or {}).get("term") or {})
-                            for rg in frag.row_groups]
 
     def _read(self, cond, meets):
         """The record batches of the file rows where ``cond`` holds,
@@ -1222,34 +1228,23 @@ class SearchExecutor:
     # hit's doc_meta row is a binary search of its part's doc_id column
     # (sorted): the same slicing code serves both.
     #
-    # Correctness lever: every SPIMI source partition (doc_meta/part=K
-    # ↔ postings/shard=K%S/part=K) is doc-disjoint and carries ALL
-    # terms for its docs, so any grouping of WHOLE source partitions
-    # is a valid evaluation group — per-group top-k unions to a
-    # superset of the global top-k, scores are exact per doc (global
-    # idf/avgdl live in ctx). Every writer keeps the part=<int>.parquet
-    # naming (compact() rewrites parts in place). A doc_meta data file
-    # that breaks it raises ValueError: the index must be rebuilt. An
-    # empty index has no parts, and every read of it is empty.
+    # Correctness lever: every source part is doc-disjoint and carries
+    # ALL terms for its docs, so any grouping of WHOLE parts is a valid
+    # evaluation group — per-group top-k unions to a superset of the
+    # global top-k, scores are exact per doc (global idf/avgdl live in
+    # ctx). The groups hold the live parts (IndexStorage.parts), listed
+    # once per Engine; an empty index has none, and reads of it are
+    # empty.
 
     def _scatter_layout(self) -> dict:
         if self._scatter is None:
-            io = self.storage.io
-            parts = _source_parts(self.storage)
-            post: dict[int, str] = {}
-            for s in range(int(self.meta.get("num_shards") or 0)):
-                sd = f"{self.storage.postings_dir}/shard={s}"
-                for n in io.listdir(sd):
-                    m = PART_FILE.fullmatch(n)
-                    if m:
-                        post[int(m.group(1))] = io.path(f"{sd}/{n}")
-            dm = {p: io.path(f"{self.storage.doc_meta_dir}"
-                             f"/part={p}.parquet") for p in parts}
-            tombs = _tombstone_paths(self.storage)
-            files = _PartFiles(io.fs, dm, post, tombs)
+            st = self.storage
+            parts, uncommitted = st.listing()
+            args = (st, parts, st.tombstone_paths())
+            files = _PartFiles(*args)
             self._scatter = {
-                "parts": parts, "files": files,
-                "cache": (_PartCache(io.fs, dm, post, tombs)
+                "parts": parts, "uncommitted": uncommitted, "files": files,
+                "cache": (_PartCache(*args)
                           if files.file_bytes() <= _DRIVER_CACHE_BYTES
                           else None)}
         return self._scatter

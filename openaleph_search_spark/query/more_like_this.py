@@ -53,7 +53,7 @@ def doc_term_vector(engine, doc_id: int) -> list[tuple[str, int]]:
     import pyarrow as pa
     tables = engine.executor._driver_tables()
     part = doc_id >> DOC_ID_PART_SHIFT
-    if part not in tables.post_paths:
+    if part not in tables.parts:
         return []
     (post,) = tables.postings([part], [
         "first_doc", "last_doc", "doc_count", "docs_payload",

@@ -21,8 +21,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..index.build import (MANIFEST_SCHEMA, TARGET_DOCS_PER_PARTITION,
-                           _read_field_stats, _spimi_writer,
-                           aggregate_term_stats)
+                           _spimi_writer, refresh_stats)
 from ..index.storage import IndexStorage
 
 
@@ -38,8 +37,8 @@ def append_batch(spark: SparkSession, docs: DataFrame, index_dir: str,
     that fits one part is written by the driver as part ``base_part``,
     running the same ``_spimi_writer`` body as a build task; a larger
     batch keeps the grouped job, hashed over ``num_partitions`` parts.
-    Then the driver refreshes term stats and meta.json (``n_docs``
-    summed from the part manifests).
+    Then the driver refreshes the stats and meta.json
+    (``build.refresh_stats``).
 
     Idempotent per stream epoch: each part's manifest records the
     ``epoch_id`` that wrote it. A ``foreachBatch`` re-delivery of that
@@ -51,7 +50,6 @@ def append_batch(spark: SparkSession, docs: DataFrame, index_dir: str,
     storage = IndexStorage(index_dir)
     meta = storage.read_meta()
     P = meta["num_partitions"]
-    S = meta["num_shards"]
     # field config must match the base build or appended docs silently
     # lose their field postings / bigram shingles
     fields: dict[str, str] = meta.get("field_map") or {
@@ -69,8 +67,8 @@ def append_batch(spark: SparkSession, docs: DataFrame, index_dir: str,
             (m.get("epoch", -1) for m in done.values()), default=-1):
         return base_part, None
     writer = _spimi_writer(
-        storage, meta["with_positions"], 1, lambda sp: sp % S, fields,
-        bigrams, meta_cols, meta_schema=storage.doc_meta_schema(),
+        storage, meta["with_positions"], 1, fields, bigrams, meta_cols,
+        meta_schema=storage.doc_meta_schema(),
         tz=spark.conf.get("spark.sql.session.timeZone"), epoch=epoch_id)
 
     base_cols = ["repo", "path", "commit", "lang", "content"]
@@ -94,18 +92,7 @@ def append_batch(spark: SparkSession, docs: DataFrame, index_dir: str,
         pdf["src_part"] = base_part
         writer(pdf)
 
-    # per-field avgdl over ALL docs (base + appended) from the
-    # per-partition field-stat partials — the scoring stats
-    avgdl_by_field = _read_field_stats(storage)
-    aggregate_term_stats(spark, storage)
-    meta.update({
-        "n_docs": sum(m["docs"]
-                      for m in storage.completed_partitions().values()),
-        "avgdl": avgdl_by_field.get("content", 0.0),
-        "avgdl_by_field": avgdl_by_field,
-        "built_partitions": meta.get("built_partitions", 0) + 1,
-    })
-    storage.write_meta(meta)
+    refresh_stats(spark, storage, meta)
     return base_part, batch
 
 

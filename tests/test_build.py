@@ -130,7 +130,7 @@ def test_term_stats_spark_path_matches_driver_path(
     driver = stats()
     assert codecs() == {"ZSTD"}
     monkeypatch.setattr(bmod, "_TERM_STATS_DRIVER_BYTES", -1)
-    bmod.aggregate_term_stats(spark, st)
+    bmod.aggregate_term_stats(spark, st, st.parts())
     assert stats() == driver and driver
     assert "part=all.parquet" not in os.listdir(st.term_stats_dir)
     assert codecs() == {"ZSTD"}
@@ -158,7 +158,7 @@ def test_build_and_search_over_file_uri(spark, fixture_docs_df, tmp_path):
     # resume over the URI: drop one partition's artifacts, rebuild
     import os as _os
     k = sorted(st.completed_partitions())[0]
-    st.io.delete_file(st.manifest_path(k))
+    st.io.delete_file(st.part_path("manifest", k))
     meta_shards = st.read_meta()["num_shards"]
     st.io.delete_file(_os.path.join(
         st.postings_dir, f"shard={k % meta_shards}", f"part={k}.parquet"))

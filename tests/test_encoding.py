@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from openaleph_search_spark.index.build import build_index
 from openaleph_search_spark.index.mutate import (compact, delete_docs,
-                                                 export_index, upsert_docs)
+                                                 upsert_docs)
 from openaleph_search_spark.index.storage import IndexStorage
 from openaleph_search_spark.query.engine import Engine
 from openaleph_search_spark.query.percolate import register_watchlist
@@ -102,7 +102,7 @@ def test_index_files_encoded_by_column_type(spark, fixture_docs_df,
     assert [types[c] for c in INT_COLS] == [t for t, _, _ in
                                            INT_COLS.values()]
     for rows in (eng.doc_meta.collect(),
-                 export_index(spark, st).collect(),
+                 st.live_doc_meta(spark).collect(),
                  eng.search({"q": "banana OR kwazulu OR fruit OR token1",
                              "limit": 20}).hits.collect()):
         assert rows

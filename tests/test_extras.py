@@ -60,9 +60,8 @@ def test_upsert(spark, fixture_docs_df, tmp_path):
 
 
 def test_export(spark, fixture_engine, fixture_index):
-    from openaleph_search_spark.index.mutate import export_index
     from openaleph_search_spark.index.storage import IndexStorage
-    out = export_index(spark, IndexStorage(fixture_index))
+    out = IndexStorage(fixture_index).live_doc_meta(spark)
     assert out.count() == 10
     assert {"doc_id", "repo", "path", "commit", "lang",
             "content_sha256", "doc_len"} <= set(out.columns)

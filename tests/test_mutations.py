@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from openaleph_search_spark.index.build import build_index
 from openaleph_search_spark.index.mutate import (
-    compact, delete_by_ids, delete_docs, read_tombstones, upsert_docs)
+    compact, delete_by_ids, delete_docs, upsert_docs)
 from openaleph_search_spark.index.storage import IndexStorage
 from openaleph_search_spark.query.engine import Engine
 
@@ -46,7 +46,7 @@ def test_compact_folds_tombstones(spark, mutable_index, fixture_docs_df):
     st = IndexStorage(mutable_index)
     delete_docs(spark, st, F.col("lang") == "txt")
     compact(spark, st)
-    assert read_tombstones(spark, st) is None
+    assert st.tombstone_paths() == []
     eng = Engine(spark, mutable_index)
     assert eng.search({"limit": 100}, with_total=True).total == \
         fixture_docs_df.filter("lang != 'txt'").count()
@@ -238,37 +238,55 @@ def _dead_parts(spark, path, pred):
                    .select("doc_id").collect()})
 
 
+@pytest.mark.parametrize("change", ["compact", "append"])
 def test_compact_refreshes_per_field_stats(spark, fixture_docs_df,
-                                           tmp_path):
+                                           tmp_path, change):
     """Regression (ADVICE r1): compact must recompute avgdl_by_field,
     so post-compact results (3-term phrase, count, lang facet) equal a
     fresh build over the surviving docs; the rewritten parts keep the
-    per-part layout, so reads stay on the scatter path."""
+    per-part layout, so reads stay on the scatter path. An append
+    refreshes the same statistics: build A, append B, and n_docs,
+    avgdl, avgdl_by_field and the term stats equal a fresh build of
+    A and B."""
     comp = str(tmp_path / "idx_comp")
     fresh = str(tmp_path / "idx_fresh")
-    build_index(spark, fixture_docs_df, comp, num_partitions=4,
-                num_shards=2, bigrams=True)
     st = IndexStorage(comp)
-    parts = st.completed_partitions()
-    dead_parts = _dead_parts(spark, comp, _DEAD)
-    assert len(dead_parts) >= 2
-    n_dead = delete_docs(spark, st, _DEAD)
-    stats = compact(spark, st)
-    assert stats["parts_rewritten"] == len(dead_parts)
-    assert stats["parts_skipped"] == len(parts) - len(dead_parts)
-    assert stats["docs_dropped"] == n_dead == 3
-    assert stats["blocks_dropped"] > 0  # e.g. terms only r3 docs had
-    assert stats["tasks"] == 0  # a few docs: rewritten in the driver
-    survivors = fixture_docs_df.filter(f"NOT ({_DEAD})")
-    build_index(spark, survivors, fresh, num_partitions=4, num_shards=2,
-                bigrams=True)
-    e_c, e_f = Engine(spark, comp), Engine(spark, fresh)
-    assert e_c.executor.scatter_ok()
-    assert e_c.explain({"q": "banana crime"})["scatter_tasks"] is not None
-    _assert_same_results(e_c, e_f)
+    if change == "append":
+        from openaleph_search_spark.streaming.incremental import \
+            append_batch
+        build_index(spark, fixture_docs_df.filter(F.col("repo") != "r3"),
+                    comp, num_partitions=4, num_shards=2, bigrams=True)
+        append_batch(spark, fixture_docs_df.filter(F.col("repo") == "r3"),
+                     comp, epoch_id=0)
+        build_index(spark, fixture_docs_df, fresh, num_partitions=4,
+                    num_shards=2, bigrams=True)
+        n_docs = 10
+    else:
+        build_index(spark, fixture_docs_df, comp, num_partitions=4,
+                    num_shards=2, bigrams=True)
+        parts = st.completed_partitions()
+        dead_parts = _dead_parts(spark, comp, _DEAD)
+        assert len(dead_parts) >= 2
+        n_dead = delete_docs(spark, st, _DEAD)
+        stats = compact(spark, st)
+        assert stats["parts_rewritten"] == len(dead_parts)
+        assert stats["parts_skipped"] == len(parts) - len(dead_parts)
+        assert stats["docs_dropped"] == n_dead == 3
+        assert stats["blocks_dropped"] > 0  # e.g. terms only r3 docs had
+        assert stats["tasks"] == 0  # a few docs: rewritten in the driver
+        survivors = fixture_docs_df.filter(f"NOT ({_DEAD})")
+        build_index(spark, survivors, fresh, num_partitions=4,
+                    num_shards=2, bigrams=True)
+        e_c, e_f = Engine(spark, comp), Engine(spark, fresh)
+        assert e_c.executor.scatter_ok()
+        assert e_c.explain({"q": "banana crime"})["scatter_tasks"] \
+            is not None
+        _assert_same_results(e_c, e_f)
+        n_docs = 7
     m_c = st.read_meta()
     m_f = IndexStorage(fresh).read_meta()
-    assert m_c["n_docs"] == m_f["n_docs"] == 7
+    assert m_c["n_docs"] == m_f["n_docs"] == n_docs
+    assert abs(m_c["avgdl"] - m_f["avgdl"]) < 1e-9
     assert m_c["avgdl_by_field"].keys() == m_f["avgdl_by_field"].keys()
     for f, a in m_f["avgdl_by_field"].items():
         assert abs(m_c["avgdl_by_field"][f] - a) < 1e-9, f
@@ -289,7 +307,7 @@ def _part_files(st, part):
     name = f"part={part}.parquet"
     paths = [os.path.join(st.doc_meta_dir, name),
              os.path.join(st.field_lens_dir, name),
-             st.manifest_path(part),
+             st.part_path("manifest", part),
              os.path.join(st.manifest_dir, f"fields_part={part}.json")]
     for shard in os.listdir(st.postings_dir):
         p = os.path.join(st.postings_dir, shard, name)
@@ -342,7 +360,7 @@ def test_compact_small_runs_in_driver(spark, mutable_index, spark_jobs):
     stats, jobs = spark_jobs(lambda: compact(spark, st))
     assert jobs == []
     assert stats["tasks"] == 0 and stats["parts_rewritten"] >= 2
-    assert read_tombstones(spark, st) is None
+    assert st.tombstone_paths() == []
     assert Engine(spark, mutable_index).count({"q": "banana"}) == 1
 
 
@@ -433,15 +451,12 @@ def test_compact_crash_then_rerun(spark, fixture_docs_df, tmp_path,
     monkeypatch.setattr(mutate, "_rewrite_part", crash_after_first)
     with pytest.raises(RuntimeError, match="simulated crash"):
         # one compaction task's body, run in-process
-        mutate._compact_parts(
-            st, dead_parts,
-            mutate._read_dead(st.io.fs, mutate._tombstone_paths(st)),
-            2, True)
+        mutate._compact_parts(st, dead_parts, st.dead_ids(), True)
     monkeypatch.undo()
     assert done == dead_parts[:1]
     first = st.completed_partitions()[done[0]]
     assert first["docs"] < manifests_before[done[0]]["docs"]
-    assert read_tombstones(spark, st) is not None
+    assert st.tombstone_paths() != []
     assert st.io.read_bytes(st.meta_path) == meta_before
     e_mid = Engine(spark, comp)
     assert e_mid.executor.scatter_ok()
@@ -449,7 +464,7 @@ def test_compact_crash_then_rerun(spark, fixture_docs_df, tmp_path,
 
     stats = compact(spark, st)
     assert stats["parts_rewritten"] == len(dead_parts)
-    assert read_tombstones(spark, st) is None
+    assert st.tombstone_paths() == []
     build_index(spark, fixture_docs_df.filter(f"NOT ({_DEAD})"), fresh,
                 num_partitions=4, num_shards=2, bigrams=True)
     _assert_same_results(Engine(spark, comp), Engine(spark, fresh))
@@ -468,9 +483,75 @@ def test_compact_rejects_layout6_compaction(spark, mutable_index):
                             "part-00000-0000.c000.snappy.parquet"))
     with pytest.raises(ValueError, match="layout"):
         compact(spark, st)
-    assert read_tombstones(spark, st) is not None
+    assert st.tombstone_paths() != []
     with pytest.raises(ValueError, match="part=<int>.parquet"):
         Engine(spark, mutable_index).search({"q": "banana", "limit": 5})
+
+
+_ANY = ("banana OR kwazulu OR crime OR fruit OR igumnov OR manafort "
+        "OR felix OR putin OR token1 OR jane")
+
+
+def test_uncommitted_part_is_unseen(spark, mutable_index, fixture_docs_df,
+                                    tmp_path):
+    """A part whose writer died before its manifest (the commit) is not
+    part of the index: top-k, count, facets, msearch, a match-all search
+    and the export return none of its docs, a delete and a compaction
+    leave its files alone, and a resumed build commits it, after which
+    the index answers like a fresh build."""
+    from collections import Counter
+    from openaleph_search_spark.index.build import DOC_ID_PART_SHIFT
+
+    def parts_of(rows):
+        return {r["doc_id"] >> DOC_ID_PART_SHIFT for r in rows}
+
+    st = IndexStorage(mutable_index)
+    parts = st.parts()
+    rows = Engine(spark, mutable_index).doc_meta.collect()
+    size = Counter(r["doc_id"] >> DOC_ID_PART_SHIFT for r in rows)
+    k = max(size, key=size.get)
+    assert k in parts_of(Engine(spark, mutable_index).search(
+        {"q": _ANY, "limit": 20}).hit_rows(0, 20))
+    os.remove(st.part_path("manifest", k))
+    assert st.parts() == [p for p in parts if p != k]
+
+    eng = Engine(spark, mutable_index)
+    top = eng.search({"q": _ANY, "limit": 20}).hit_rows(0, 20)
+    assert top and k not in parts_of(top)
+    assert eng.count({"q": _ANY}) == len(top)
+    res = eng.search({"q": _ANY, "facet": "lang", "limit": 0})
+    assert sum(r["count"] for r in res.facets["lang"].collect()) == len(top)
+    multi = eng.msearch({"a": {"q": _ANY}}, k=20).collect()
+    assert len(multi) == len(top) and k not in parts_of(multi)
+    every = eng.search({"limit": 100}, with_total=True)
+    assert every.total == len(rows) - size[k]
+    assert k not in parts_of(every.hit_rows(0, 100))
+    export = eng.export().collect()
+    assert len(export) == len(rows) - size[k] and k not in parts_of(export)
+
+    def files_of_k():
+        return {n: b for n, b in _tree_files(mutable_index).items()
+                if os.path.basename(n) in (f"part={k}.parquet",
+                                           f"fields_part={k}.json")}
+    before = files_of_k()
+    assert delete_docs(spark, st, F.col("src_part") == k) == 0
+    assert st.tombstone_paths() == []
+    victim = next(r for r in rows if r["doc_id"] >> DOC_ID_PART_SHIFT != k)
+    assert delete_by_ids(spark, st, [victim["doc_id"]]) == 1
+    stats = compact(spark, st)
+    assert stats["parts_rewritten"] == 1
+    assert stats["parts_skipped"] == len(parts) - 2
+    assert files_of_k() == before
+
+    build_index(spark, fixture_docs_df, mutable_index, num_partitions=4,
+                num_shards=2)
+    assert st.parts() == parts
+    fresh = str(tmp_path / "idx_fresh")
+    build_index(spark, fixture_docs_df.filter(
+        F.col("path") != victim["path"]), fresh, num_partitions=4,
+        num_shards=2)
+    assert st.read_meta()["n_docs"] == len(rows) - 1
+    _assert_same_results(Engine(spark, mutable_index), Engine(spark, fresh))
 
 
 def test_append_grown_avgdl_disables_pruning_soundly(
@@ -723,7 +804,7 @@ def test_append_redelivered_epoch_is_idempotent(spark, monkeypatch, limit,
     new = parts[4:]
     assert len(new) == (4 if limit else 1)
     if limit:
-        os.remove(st.manifest_path(new[-1]))
+        os.remove(st.part_path("manifest", new[-1]))
     st.write_meta(meta0)
     incremental.append_batch(spark, batch, out, 7)
     assert state() == once
@@ -763,7 +844,7 @@ def test_delete_crash_leaves_no_tombstone(spark, mutable_index,
     names = os.listdir(os.path.join(mutable_index, "tombstones"))
     assert sum(n.endswith(".parquet") for n in names) == 1
     assert any(n.startswith(".") for n in names)  # the temp file
-    assert read_tombstones(spark, st).count() == 1
+    assert st.dead_ids().size == 1
     eng = Engine(spark, mutable_index)
     assert _hits(eng, {"q": "banana OR crime"}) == want
     assert eng.stats()["tombstoned_docs"] == 1
@@ -774,7 +855,6 @@ def test_all_null_meta_column_in_a_part(spark, fixture_docs_df, tmp_path):
     """A part whose docs are all null in a meta column still writes the
     column with its real type, so doc_meta, a hydrated search and the
     export read every part; appends keep the type too."""
-    from openaleph_search_spark.index.mutate import export_index
     from openaleph_search_spark.streaming.incremental import append_batch
     part = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(4))
     docs = (fixture_docs_df
@@ -795,7 +875,7 @@ def test_all_null_meta_column_in_a_part(spark, fixture_docs_df, tmp_path):
         ("string", "int", "timestamp")
     n = 10 + docs.filter(part == 0).count()
     assert len(eng.doc_meta.collect()) == n
-    assert len(export_index(spark, eng.storage).collect()) == n
+    assert len(eng.storage.live_doc_meta(spark).collect()) == n
     hits = eng.search({"q": "banana OR kwazulu OR crime OR fruit",
                        "limit": 20}).hits.collect()
     assert any(h["owner"] is None for h in hits)
@@ -827,7 +907,7 @@ def test_stats_reads_the_layout_with_zero_jobs(spark, mutable_index,
     meta = st.read_meta()
     assert got == {
         "n_docs": meta["n_docs"], "avgdl": meta["avgdl"],
-        "tombstoned_docs": read_tombstones(spark, st).count(),
+        "tombstoned_docs": st.dead_ids().size,
         "num_shards": 2, "num_partitions": meta["num_partitions"],
         "layout_version": meta["layout_version"],
         "bigrams": bool(meta.get("bigrams")),

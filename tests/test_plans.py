@@ -3,6 +3,7 @@ engine to be scan-efficient at 100 TB (filter pushdown, column pruning,
 partition pruning) — SURVEY.md §4.2 — and the job counts and results
 of the scatter, the one query executor, against the pure-Python BM25
 oracle and the doc_meta rows."""
+import os
 from types import SimpleNamespace
 
 import pytest
@@ -366,6 +367,54 @@ def test_task_sizing_lives_in_one_module():
     assert found == []
 
 
+def test_index_file_set_lives_in_one_module():
+    """Which files make up the index is known to index/storage.py only:
+    the part file names (``PART_FILE``, ``shard=``, ``fields_part=``)
+    appear nowhere else in the package, and nothing else lists a
+    directory but the filesystem adapter, the version dirs and the
+    percolator's watchlist registry."""
+    import pathlib
+    import openaleph_search_spark
+    root = pathlib.Path(openaleph_search_spark.__file__).parent
+    rules = {("PART_FILE", "shard=", "fields_part="): (
+                 "index/storage.py",),
+             ("listdir(", "FileSelector("): (
+                 "index/storage.py", "index/fsio.py", "index/versions.py",
+                 "query/percolate.py")}
+    found = [
+        (rel, word) for path in sorted(root.rglob("*.py"))
+        for rel in [path.relative_to(root).as_posix()]
+        for words, allowed in rules.items() if rel not in allowed
+        for word in words if word in path.read_text()]
+    assert found == []
+
+
+def test_engine_lists_each_directory_once(spark, fixture_index, tmp_path,
+                                          monkeypatch):
+    """Opening an Engine and reading through it lists the doc_meta,
+    manifest, tombstones and term_stats directories once each, and no
+    postings directory: the live parts come from the manifests and
+    their files from ``IndexStorage.part_path``."""
+    import shutil
+    from openaleph_search_spark.index.fsio import FsIO
+    from openaleph_search_spark.index.mutate import delete_by_ids
+    from openaleph_search_spark.query.engine import Engine
+    idx = str(tmp_path / "idx_listing")
+    shutil.copytree(fixture_index, idx)
+    delete_by_ids(spark, IndexStorage(idx), [0])
+    listed = []
+    real = FsIO.listdir
+    monkeypatch.setattr(FsIO, "listdir", lambda self, uri: (
+        listed.append(uri[len(idx) + 1:]), real(self, uri))[1])
+    eng = Engine(spark, idx)
+    eng.search({"q": "banana", "limit": 5}).hits.collect()
+    eng.search({"limit": 5}).hits.collect()
+    eng.count({"q": "ban* OR crime"})
+    eng.stats()
+    assert sorted(listed) == ["doc_meta", "manifest", "term_stats",
+                              "tombstones"]
+
+
 def test_explain_reports_scatter_fanout(spark, fixture_engine,
                                         monkeypatch, spark_jobs):
     """explain() reports the fan-out _scatter_exec would plan: 0 tasks
@@ -592,6 +641,36 @@ def test_part_cache_budget(spark, fixture_index, monkeypatch,
         got, jobs = spark_jobs(fn)
         assert got == {**want, **want_plan}[name] and jobs == [], name
     assert eng.explain({"q": "banana"})["term_dict"] is None
+
+
+def test_term_dict_budget_counts_decoded_bytes(spark, fixture_index,
+                                               monkeypatch, spark_jobs):
+    """The term dictionary is held only when its decoded size fits the
+    driver-cache budget: the term_stats row groups' uncompressed bytes
+    plus ~49 bytes per held str, read from the footers. With the budget
+    between the files' bytes and that size, ``explain()["term_dict"]``
+    is None and reads give the held Engine's rows with no Spark job."""
+    import pyarrow.parquet as pq
+    from openaleph_search_spark.query import executor as xmod
+    from openaleph_search_spark.query.engine import Engine
+    st = IndexStorage(fixture_index)
+    paths = st.term_stats_paths()
+    file_bytes = sum(os.path.getsize(p) for p in paths)
+    mds = [pq.read_metadata(p) for p in paths]
+    decoded = sum(md.row_group(i).total_byte_size
+                  + 49 * md.row_group(i).num_rows
+                  for md in mds for i in range(md.num_row_groups))
+    assert file_bytes < decoded
+    held = Engine(spark, fixture_index)
+    assert held.explain({"q": "banana"})["term_dict"] is not None
+    want = {n: fn() for n, fn in _cache_reads(held).items()}
+    monkeypatch.setattr(xmod, "_DRIVER_CACHE_BYTES",
+                        (file_bytes + decoded) // 2)
+    eng = Engine(spark, fixture_index)
+    assert eng.explain({"q": "banana"})["term_dict"] is None
+    for name, fn in _cache_reads(eng).items():
+        got, jobs = spark_jobs(fn)
+        assert got == want[name] and jobs == [], name
 
 
 def test_multi_facet_evaluates_query_once(spark, fixture_engine,

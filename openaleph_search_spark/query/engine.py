@@ -14,6 +14,7 @@ computed once and the branches reuse it
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import cached_property
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -64,11 +65,6 @@ def _facet_size(sa, auth, f: str) -> int:
     if _anon(auth) and f not in SMALL_FACETS:
         size = min(50, size)
     return size
-
-
-def _pure_negative(tree: Node) -> bool:
-    return bool(isinstance(tree, Bool) and tree.must_not
-                and not tree.must and not tree.should)
 
 
 def _facet_total_on(sa, auth, f: str) -> bool:
@@ -128,7 +124,7 @@ class Engine:
                 "auth required: pass auth=SearchAuth(...) "
                 "(reference model.py:11-28)")
         sa = sa or SearchArgs()
-        return meta_spec(self.spark, self.doc_meta.schema, filters,
+        return meta_spec(self.spark, self._meta_schema, filters,
                          sa.excludes, sa.empties, sa.ranges, auth,
                          self.auth_field)
 
@@ -142,11 +138,11 @@ class Engine:
         driver-only — zero Spark jobs on any index: the parsed IR,
         analyzed + dictionary-expanded terms, the physical strategy
         ``search()`` takes (both read it from ``_strategy``), the
-        query's ``est_postings`` (df summed over its terms),
-        ``scatter_tasks``, the scatter's task count
-        (0 when the plan evaluates in the driver, None only for a
-        match-all doc_meta scan, which runs no scatter), and
-        ``scatter_columns``, the postings columns the scatter reads,
+        query's ``est_postings`` (df summed over its terms, plus
+        ``n_docs`` for a match-all or pure-NOT), ``scatter_tasks``, the
+        scatter's task count (never None: 0 when the plan evaluates in
+        the driver), and ``scatter_columns``, the postings columns the
+        scatter reads,
         and ``part_cache``, the driver's decoded parts: ``parts``,
         ``bytes``, and its ``hits`` and ``misses`` so far (a miss read
         an index file; a warm driver-evaluated read only hits), or None
@@ -173,7 +169,6 @@ class Engine:
                 "facet_partials_scatter": "facet"}.get(strategy, "scores")
         _, _, need_pos, read_cols, est, tasks, _ = ex._scatter_plan(
             [tree], sa.k, mode)
-        scatter = strategy != "match_all_meta_scan"
         cache = ex._scatter_layout()["cache"]
         return {
             "query_tree": repr(tree),
@@ -187,8 +182,8 @@ class Engine:
             "post_filter_fields": [f for f in sa.facets
                                    if f in sa.filters],
             "est_postings": est,
-            "scatter_tasks": tasks if scatter else None,
-            "scatter_columns": read_cols if scatter else None,
+            "scatter_tasks": tasks,
+            "scatter_columns": read_cols,
             "part_cache": cache.stats() if cache is not None else None,
             "term_dict": ex._term_dict().stats(),
         }
@@ -232,10 +227,17 @@ class Engine:
             "postings_balance": (min(post_counts) / max(max(post_counts), 1)),
         }
 
+    @cached_property
+    def _meta_schema(self) -> StructType:
+        """doc_meta's schema, as stored in meta.json."""
+        return self.storage.doc_meta_schema()
+
     @property
     def doc_meta(self) -> DataFrame:
         """Live docs only: the parts and tombstones the Engine's reads
-        see (``IndexStorage.live_doc_meta``)."""
+        see (``IndexStorage.live_doc_meta``). Only the reads that run
+        in Spark build it: the full match, ``export`` and the
+        significant-terms background."""
         if self._doc_meta is None:
             lay = self.executor._scatter_layout()
             self._doc_meta = self.storage.live_doc_meta(
@@ -244,20 +246,16 @@ class Engine:
 
     def _strategy(self, sa: SearchArgs, tree: Node,
                   with_total: bool = False) -> str:
-        """The physical strategy of a search: a match-all scans
-        doc_meta; pure NOT anti-joins its banned set; plain terms
-        facets over string meta columns with no hits, total or facet
-        interplay wanted take one scatter pass of per-group (value,
-        count) partials; anything else needing every match runs the
-        full match, then its branches; the rest is the gathered top-k."""
-        if isinstance(tree, MatchAll):
-            return "match_all_meta_scan"
-        if _pure_negative(tree):
-            return "anti_join_scan"
+        """The physical strategy of a search, whatever the tree's shape:
+        plain terms facets over string meta columns with no hits, total
+        or facet interplay wanted take one scatter pass of per-group
+        (value, count) partials; anything else needing every match runs
+        the full match, then its branches; the rest is the gathered
+        top-k."""
         need_all = bool(sa.facet_total or sa.metrics or sa.facet_significant
                         or sa.sort or with_total or sa.function_score
                         or sa.search_after)
-        dtypes = dict(self.doc_meta.dtypes)
+        dtypes = self._dtypes()
         if (sa.facets and sa.k == 0 and not need_all and not sa.highlight
                 and not any(f in sa.filters for f in sa.facets)
                 and all(f not in sa.facet_interval
@@ -322,8 +320,7 @@ class Engine:
                     _facet_cut(partials, f, _facet_size(sa, auth, f)),
                     FACET_SCHEMA)
                 for f in sa.facets}
-            hits = (self.doc_meta.withColumn("score", F.lit(0.0))
-                    .select(*self._hits_schema().names).limit(0))
+            hits = self.executor.local_frame(None, self._hits_schema())
             return SearchResult(hits=hits, facets=facets)
         if strategy == "topk_scatter_gather":
             # per-group top-k evaluated AND hydrated where the group
@@ -331,7 +328,7 @@ class Engine:
             # pandas — no exchange, no hydrate join, and the hits are a
             # LocalRelation
             raw = self.executor.scatter_topk_hydrated(
-                tree, sa.k, spec, self.doc_meta.columns)
+                tree, sa.k, spec, self._meta_schema.names)
             hits = self.executor.local_frame(top_k(raw, sa.k),
                                              self._hits_schema())
             if sa.highlight:
@@ -339,11 +336,8 @@ class Engine:
             return SearchResult(hits=self._dehydrate(hits, sa))
 
         base_meta = self.doc_meta.filter(spec.column())
-        if strategy == "match_all_meta_scan":
+        if isinstance(tree, MatchAll):
             matched = base_meta.withColumn("score", F.lit(0.0))
-        elif strategy == "anti_join_scan":
-            matched = self._anti_join(base_meta, tree) \
-                .withColumn("score", F.lit(0.0))
         else:
             ids = self.executor.run(tree, k=None, spec=spec)
             matched = base_meta.join(ids, "doc_id")
@@ -387,12 +381,12 @@ class Engine:
             order = [F.col(f).asc_nulls_last() if asc
                      else F.col(f).desc_nulls_last() for f, asc in sa.sort]
             hits = fully.orderBy(*order, F.asc("doc_id"))
-        elif isinstance(tree, MatchAll):
-            hits = fully.orderBy(F.asc("doc_id"))  # _doc order, no scoring
         else:
+            # an unscored tree (score 0 everywhere) comes out in _doc
+            # order
             hits = fully.orderBy(F.desc("score"), F.asc("doc_id"))
         hits = hits.limit(sa.k) if sa.k else hits.limit(0)
-        if sa.highlight and not isinstance(tree, MatchAll):
+        if sa.highlight:
             hits = self._highlight(hits, tree, sa)
         hits = self._dehydrate(hits, sa)
         return SearchResult(hits=hits,
@@ -417,15 +411,13 @@ class Engine:
                 raise ValueError(
                     "msearch batches pure scored queries; use search() "
                     f"for {qid!r} (filters/facets/sort present)")
-            tree = self._plan(sa)
-            if not isinstance(tree, MatchAll):
-                trees[str(qid)] = tree
+            trees[str(qid)] = self._plan(sa)
         # ACL/tombstones restrict the per-group top-k itself
         # (filtering after the cut would drop hits without refill)
         spec = self._spec(auth)
         hit = self._hits_schema().fields
         raw = (self.executor.scatter_multi_hydrated(
-            trees, k, spec, self.doc_meta.columns) if trees else None)
+            trees, k, spec, self._meta_schema.names) if trees else None)
         if raw is not None:
             raw = raw.rename(columns={"entity_id": "query_id"})
         return self.executor.local_frame(
@@ -448,8 +440,6 @@ class Engine:
         base = self.doc_meta.filter(spec.column())
         if isinstance(tree, MatchAll):
             out = base
-        elif _pure_negative(tree):
-            out = self._anti_join(base, tree)
         else:
             ids = self.executor.run(tree, k=None, spec=spec)
             out = base.join(ids.select("doc_id"), "doc_id")
@@ -466,19 +456,7 @@ class Engine:
         sa = args if isinstance(args, SearchArgs) else parse_args(args)
         tree = self._plan(sa)
         spec = self._spec(auth, sa.filters, sa)
-        if isinstance(tree, MatchAll):
-            return self.doc_meta.filter(spec.column()).count()
-        if _pure_negative(tree):
-            return self._anti_join(
-                self.doc_meta.filter(spec.column()), tree).count()
         return self.executor.scatter_count(tree, spec)
-
-    def _anti_join(self, base: DataFrame, tree: Bool) -> DataFrame:
-        """"NOT x" = ``base`` minus the negated set (ES lenient
-        query_string semantics); unscored, _doc order. The banned set
-        is the raw postings' match: ``base`` is live already."""
-        banned = self.executor.run(Bool(should=tree.must_not), k=None)
-        return base.join(banned.select("doc_id"), "doc_id", "left_anti")
 
     def _post_filter(self, matched: DataFrame, sa: SearchArgs,
                      post_fields: list[str],
@@ -489,7 +467,7 @@ class Engine:
         if not fields:
             return matched
         return matched.filter(meta_spec(
-            self.spark, self.doc_meta.schema,
+            self.spark, self._meta_schema,
             {f: sa.filters[f] for f in fields}).column())
 
     @staticmethod
@@ -529,7 +507,7 @@ class Engine:
             raise ValueError(
                 f"search_after needs {len(keys)} values (one per sort "
                 f"field + the doc_id tiebreak), got {len(cursor)}")
-        dtypes = dict(self.doc_meta.dtypes)
+        dtypes = self._dtypes()
         for f, _ in keys:
             if f not in dtypes:
                 raise ValueError(
@@ -563,7 +541,12 @@ class Engine:
         return StructType([
             StructField("doc_id", LongType()),
             StructField("score", DoubleType()),
-            *(f for f in self.doc_meta.schema.fields if f.name != "doc_id")])
+            *(f for f in self._meta_schema.fields if f.name != "doc_id")])
+
+    def _dtypes(self) -> dict[str, str]:
+        """doc_meta column → its type name, as ``DataFrame.dtypes``."""
+        return {f.name: f.dataType.simpleString()
+                for f in self._meta_schema.fields}
 
     def _plan(self, sa: SearchArgs) -> Node:
         tree = parse_query_string(sa.q)
@@ -681,8 +664,9 @@ class Engine:
 
         ``highlight_query`` overrides the term source (reference
         get_highlighter text override); values of human-readable
-        filters are highlighted too (base.py:414-446)."""
-        if self.source_docs is None:
+        filters are highlighted too (base.py:414-446). A match-all hit
+        set is not highlighted."""
+        if self.source_docs is None or isinstance(tree, MatchAll):
             return hits
         max_fragments = sa.highlight_count
         fragment_size = sa.highlight_length

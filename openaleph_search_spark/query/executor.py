@@ -35,7 +35,9 @@ rank- AND score-identical across shard counts and parallelism levels.
 Filters (auth/dataset/lang/range … predicates) are pushed into the
 evaluator: each group applies a ``MetaSpec`` (query/filters.py) to the
 doc_meta rows it reads itself and subtracts tombstones, so the filter
-set is never shuffled or collected to the driver.
+set is never shuffled or collected to the driver. Those rows are also
+the universe a match-all or a root pure-NOT starts from
+(``universe_tree``), so every tree shape evaluates here.
 """
 from __future__ import annotations
 
@@ -78,6 +80,14 @@ def top_k(pdf: pd.DataFrame | None, k: int,
             .groupby(by, sort=False).head(k))
 
 
+def universe_tree(tree: Node) -> bool:
+    """A match-all, or a root Bool with only must_not (ES lenient
+    "NOT x" = match_all minus x): every allowed doc but the banned."""
+    return isinstance(tree, MatchAll) or (
+        isinstance(tree, Bool) and bool(tree.must_not)
+        and not tree.must and not tree.should)
+
+
 # ---------------------------------------------------------------------------
 # sorted-array merge helpers (all vectorized)
 # ---------------------------------------------------------------------------
@@ -92,8 +102,9 @@ def _in_sorted(values: np.ndarray, sorted_ref: np.ndarray) -> np.ndarray:
     return sorted_ref[idx] == values
 
 
-def _merge_sum(ids_a, sc_a, ids_b, sc_b):
-    """Union of two sorted (ids, scores) maps, summing scores."""
+def _merge(ids_a, sc_a, ids_b, sc_b, reduce=np.add.reduceat):
+    """Union of two sorted (ids, scores) maps, a doc's scores summed
+    (``np.maximum.reduceat``: their max, for dis_max)."""
     ids = np.concatenate([ids_a, ids_b])
     sc = np.concatenate([sc_a, sc_b])
     order = np.argsort(ids, kind="mergesort")
@@ -104,7 +115,7 @@ def _merge_sum(ids_a, sc_a, ids_b, sc_b):
     new[0] = True
     np.not_equal(ids[1:], ids[:-1], out=new[1:])
     starts = np.flatnonzero(new)
-    return ids[starts], np.add.reduceat(sc, starts)
+    return ids[starts], reduce(sc, starts)
 
 
 def _merge_sum_multi(ids_a, vals_a: list, ids_b, vals_b: list):
@@ -123,21 +134,6 @@ def _merge_sum_multi(ids_a, vals_a: list, ids_b, vals_b: list):
         v = np.concatenate([va, vb])[order]
         out_vals.append(np.add.reduceat(v, starts))
     return ids[starts], out_vals
-
-
-def _merge_max(ids_a, sc_a, ids_b, sc_b):
-    """Union of two sorted maps, taking the max score (dis_max)."""
-    ids = np.concatenate([ids_a, ids_b])
-    sc = np.concatenate([sc_a, sc_b])
-    order = np.argsort(ids, kind="mergesort")
-    ids, sc = ids[order], sc[order]
-    if ids.size == 0:
-        return ids, sc
-    new = np.empty(ids.size, dtype=bool)
-    new[0] = True
-    np.not_equal(ids[1:], ids[:-1], out=new[1:])
-    starts = np.flatnonzero(new)
-    return ids[starts], np.maximum.reduceat(sc, starts)
 
 
 def _intersect_sum(ids_a, sc_a, ids_b, sc_b):
@@ -259,7 +255,7 @@ class _ShardEval:
             acc = (np.empty(0, np.int64), np.empty(0, np.float64))
             for t in (node.expanded or []):
                 ids, sc, _, _, _ = self._decode_term(t, candidates)
-                acc = _merge_sum(*acc, ids, sc * node.boost)
+                acc = _merge(*acc, ids, sc * node.boost)
             return acc
         if isinstance(node, PhraseLeaf):
             return self._eval_phrase(node, candidates)
@@ -269,12 +265,18 @@ class _ShardEval:
             acc = (np.empty(0, np.int64), np.empty(0, np.float64))
             for child in node.children:
                 c_ids, c_sc = self.eval(child, candidates)
-                acc = _merge_max(*acc, c_ids, c_sc)
+                acc = _merge(*acc, c_ids, c_sc, np.maximum.reduceat)
             return acc
         if isinstance(node, MatchAll):
-            raise ValueError("match_all reaches the executor only via the "
-                             "filter-only fast path")
+            return self._universe(candidates)
         raise TypeError(type(node))
+
+    def _universe(self, candidates: np.ndarray | None):
+        """Every allowed doc (of ``candidates``), score 0.0."""
+        ids = self.allowed
+        if candidates is not None:
+            ids = candidates[_in_sorted(candidates, ids)]
+        return ids, np.zeros(ids.size)
 
     def _eval_bool(self, node: Bool, candidates: np.ndarray | None,
                    root: bool = False):
@@ -313,7 +315,9 @@ class _ShardEval:
                                                 return_indices=True)
                 scores = scores.copy()
                 scores[ii] += sh_sc[si]
-        if ids is None:
+        if ids is None and root and node.must_not:
+            ids, scores = self._universe(candidates)  # root pure-NOT
+        elif ids is None:
             ids = np.empty(0, np.int64)
             scores = np.empty(0, np.float64)
         if node.must_not and ids.size:
@@ -409,7 +413,7 @@ class _ShardEval:
                     acc_ids, [acc_sc, acc_cnt], c_ids,
                     [c_sc, np.ones(c_ids.size, np.int64)])
             else:
-                acc_ids, acc_sc = _merge_sum(acc_ids, acc_sc, c_ids, c_sc)
+                acc_ids, acc_sc = _merge(acc_ids, acc_sc, c_ids, c_sc)
         if track_counts:
             keep = acc_cnt >= min_should
             return acc_ids[keep], acc_sc[keep]
@@ -800,10 +804,11 @@ def _scatter_eval_group(parts, tables, tomb, items, ctx, qterms,
     """Evaluate one scatter group (a set of doc-disjoint source parts),
     in a task or in the driver: slice the group's part tables
     (``tables``: the driver's ``_PartCache``, else ``_PartFiles``) for
-    the query terms' postings blocks, and, when
-    restricting or faceting, for the doc_meta rows where ``spec.mask``
-    holds and the doc is live (not in ``tomb``); then run the
-    _ShardEval kernel. Returns one pandas frame (mode-shaped) or None."""
+    the query terms' postings blocks, and, when restricting, faceting
+    or evaluating a universe tree, for the doc_meta rows where
+    ``spec.mask`` holds and the doc is live (not in ``tomb``); then run
+    the _ShardEval kernel. Returns one pandas frame (mode-shaped) or
+    None."""
     import pyarrow as pa
 
     allowed = None
@@ -822,16 +827,16 @@ def _scatter_eval_group(parts, tables, tomb, items, ctx, qterms,
             return None
 
     cols = [c for c in read_cols if c != "term"]
-    blocks = _group_blocks(tables, parts, qterms, cols)
-    if blocks is None:
-        return None
-    if not need_pos:
-        blocks["pos_payload"] = b""
-    blocks = SearchExecutor._attach_bounds(blocks, ctx)
-    edges = np.searchsorted(blocks["term"].to_numpy(), qterms)
-    edges = np.append(edges, len(blocks))
-    by_term = {t: blocks.iloc[a:b] for t, a, b in
-               zip(qterms, edges[:-1], edges[1:]) if b > a}
+    blocks = _group_blocks(tables, parts, qterms, cols) if cols else None
+    by_term = {}  # stays empty for a universe tree with no terms
+    if blocks is not None:
+        if not need_pos:
+            blocks["pos_payload"] = b""
+        blocks = SearchExecutor._attach_bounds(blocks, ctx)
+        edges = np.searchsorted(blocks["term"].to_numpy(), qterms)
+        edges = np.append(edges, len(blocks))
+        by_term = {t: blocks.iloc[a:b] for t, a, b in
+                   zip(qterms, edges[:-1], edges[1:]) if b > a}
     ev = _ShardEval(by_term, ctx["idf"], ctx["k_prune"], allowed,
                     ctx["k1"], ctx["b"], ctx["avgdl_by_field"],
                     bigrams=ctx["bigrams"],
@@ -894,8 +899,8 @@ def scatter_gathers(mode: str, k: int | None) -> bool:
     """Whether a scatter mode's output is bounded, so it is gathered to
     the driver: count (≤ groups rows), facet (≤ groups × distinct
     values), topk and multi with a k (≤ groups × trees × k). Scores
-    never gather: with k=None (full match, pure-NOT, export) they are
-    unbounded, so they stay a Spark DataFrame."""
+    never gather: with k=None (full match, export) they are unbounded,
+    so they stay a Spark DataFrame."""
     return mode in ("count", "facet") or (
         mode in ("topk", "multi") and k is not None)
 
@@ -1134,6 +1139,8 @@ class SearchExecutor:
         ``est_postings`` is the sum of df over the resolved terms (the
         union across ``trees``): the query's posting volume, read from
         the same dictionary lookup that yields idf — no extra job.
+        A universe tree adds the index's ``n_docs``: its groups read
+        every doc_meta row. ctx is None when nothing can match.
         Raises ``ValueError`` for a phrase the index cannot answer: one
         that needs positions on an index built without them."""
         need_pos = self._need_positions(trees)
@@ -1146,7 +1153,8 @@ class SearchExecutor:
             self._expand(t)
         terms = sorted(set().union(
             *(self._collect_terms(t) for t in trees)))
-        if not terms:
+        universe = any(map(universe_tree, trees))
+        if not terms and not universe:
             return terms, None, False, [], 0
 
         n_docs = float(self.meta["n_docs"])
@@ -1154,7 +1162,7 @@ class SearchExecutor:
         avgdl_by_field = dict(self.meta.get("avgdl_by_field")
                               or {"content": avgdl})
         k1, b = float(self.meta["k1"]), float(self.meta["b"])
-        dfs = self._term_dict().dfs(terms)
+        dfs = self._term_dict().dfs(terms) if terms else {}
         idf = {t: float(bm25_idf(float(d), n_docs)) for t, d in dfs.items()}
 
         # column pruning: positions are the fattest payload — only
@@ -1166,14 +1174,15 @@ class SearchExecutor:
         # sum_tf intentionally absent: the evaluator never reads it
         cols = ["term", "first_doc", "last_doc", "doc_count",
                 "max_tf", "min_dl", "docs_payload",
-                "tfs_payload", "dls_payload"]
+                "tfs_payload", "dls_payload"] if terms else []
         if need_pos:
             cols.append("pos_payload")
         ctx = {"idf": idf, "k_prune": k,
                "k1": k1, "b": b, "avgdl_by_field": avgdl_by_field,
                "b_by_field": dict(self.meta.get("b_by_field") or {}),
-               "bigrams": bigrams_on}
-        return terms, ctx, need_pos, cols, sum(dfs.values())
+               "bigrams": bigrams_on, "universe": universe}
+        est = sum(dfs.values()) + (int(n_docs) if universe else 0)
+        return terms, ctx, need_pos, cols, est
 
     @staticmethod
     def _attach_bounds(pdf: pd.DataFrame, ctx: dict) -> pd.DataFrame:
@@ -1273,8 +1282,8 @@ class SearchExecutor:
         terms, ctx, need_pos, read_cols, est = self._plan_ctx(trees, k)
         parts = self._scatter_layout()["parts"]
         groups, tasks = plan_tasks(
-            self.spark, parts if terms else [], est, _POSTINGS_PER_TASK,
-            scatter_gathers(mode, k))
+            self.spark, parts if ctx is not None else [], est,
+            _POSTINGS_PER_TASK, scatter_gathers(mode, k))
         return terms, ctx, need_pos, read_cols, est, tasks, groups
 
     def _scatter_exec(self, items: list[tuple], k: int | None,
@@ -1285,9 +1294,9 @@ class SearchExecutor:
         """Run the scatter. ``items`` = [(entity_id|None, tree)].
 
         ``spec`` semantics: None → raw postings evaluation, tombstoned
-        docs included (for callers that anti-join the result against
-        live doc_meta); a MetaSpec (possibly with zero conjuncts) →
-        restrict to LIVE docs passing it (tombstones subtracted).
+        docs included (a universe tree starts from every doc_meta row);
+        a MetaSpec (possibly with zero conjuncts) → restrict to LIVE
+        docs passing it (tombstones subtracted).
         Modes: scores | multi | topk | facet | count; ``meta_fields``
         hydrates each group's hits from its own doc_meta files.
 
@@ -1324,15 +1333,17 @@ class SearchExecutor:
         the same closure runs in the driver (over the part cache) or
         inside a task (over the part files)."""
         qterms = np.asarray([str(t) for t in terms], dtype=object)
-        spec_cols = spec.cols() if spec is not None else []
         # spec None: raw evaluation, tombstoned docs included
         tombs = spec is not None and bool(tables.tomb_paths)
-        # facet mode always needs the meta read (values of matched docs)
+        spec = spec or MetaSpec()
+        spec_cols = spec.cols()
+        # facet mode always needs the meta read (values of matched
+        # docs), and a universe tree its doc ids
         meta_read_cols = None
         if mode == "facet":
             meta_read_cols = ["doc_id"] + sorted(
                 set(spec_cols) | set(facet_fields))
-        elif spec_cols or tombs:
+        elif spec_cols or tombs or ctx["universe"]:
             meta_read_cols = ["doc_id"] + spec_cols
 
         def run(gids):

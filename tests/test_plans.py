@@ -420,8 +420,8 @@ def test_explain_reports_scatter_fanout(spark, fixture_engine,
     """explain() reports the fan-out _scatter_exec would plan: 0 tasks
     (driver evaluation) for a small bounded read, min(parts,
     defaultParallelism) once est_postings exceeds par ×
-    _POSTINGS_PER_TASK, None only for a match-all — and the
-    search runs exactly that many Spark tasks."""
+    _POSTINGS_PER_TASK — and the search runs exactly that many Spark
+    tasks."""
     import pyarrow.parquet as pq
     from openaleph_search_spark.query import executor as xmod
     ex = fixture_engine.executor
@@ -457,7 +457,8 @@ def test_explain_reports_scatter_fanout(spark, fixture_engine,
         == (0 if n == 1 else n)
     monkeypatch.undo()
 
-    assert fixture_engine.explain({"limit": 10})["scatter_tasks"] is None
+    # a match-all is a scatter read like any other
+    assert fixture_engine.explain({"limit": 10})["scatter_tasks"] == 0
     # a range filter evaluates in the groups like any other filter
     assert fixture_engine.explain(
         {"q": "banana", "filter:gte:doc_len": "3",
@@ -530,6 +531,81 @@ def test_small_reads_run_zero_jobs(spark, fixture_index, tmp_path,
         got, jobs = spark_jobs(fn)
         assert jobs == [[1]], name
         assert got == want[name], name
+
+
+def test_every_tree_shape_runs_no_job(spark, fixture_index, spark_jobs):
+    """A match-all and a root pure-NOT are scatter trees like any
+    other: on the fixture index (a one-group plan) their top-k, count,
+    facet, filtered and msearch reads run no Spark job, a fresh
+    Engine's first read included. A match-all's hits are the live docs
+    in _doc order, a pure-NOT's every doc but the banned ones, both at
+    score 0.0."""
+    from collections import Counter
+    from openaleph_search_spark.query.engine import Engine
+    ref = Engine(spark, fixture_index)
+    meta = {r[0]: tuple(r[1:]) for r in ref.doc_meta.collect()}
+    lang = {d: m[ref.doc_meta.columns.index("lang") - 1]
+            for d, m in meta.items()}
+    everyone = sorted(meta)
+    banned = set(_oracle(ref).or_query(["banana"]))
+    nots = [d for d in everyone if d not in banned]
+    eng = Engine(spark, fixture_index)
+    reads = {
+        "match_all": lambda: eng.search({"limit": 10}).hits.collect(),
+        "pure_not": lambda: eng.search(
+            {"q": "-banana", "limit": 10}).hits.collect(),
+        "count_all": lambda: eng.count({}),
+        "count_not": lambda: eng.count({"q": "-banana"}),
+        "facet": lambda: eng.search(
+            {"facet": "lang", "limit": 0}).facets["lang"].collect(),
+        "filtered": lambda: eng.search(
+            {"filter:lang": "txt", "limit": 10}).hits.collect(),
+        "msearch": lambda: eng.msearch(
+            {"a": {}, "b": {"q": "-banana"}}, k=10).collect(),
+    }
+    got = {}
+    for name, fn in reads.items():
+        got[name], jobs = spark_jobs(fn)
+        assert jobs == [], name
+    assert len(everyone) == 10 and len(nots) == 8
+    _assert_hits(got["match_all"], [(d, 0.0) for d in everyone], meta)
+    _assert_hits(got["pure_not"], [(d, 0.0) for d in nots], meta)
+    assert (got["count_all"], got["count_not"]) == (10, 8)
+    assert [tuple(r) for r in got["facet"]] == sorted(
+        Counter(lang.values()).items(), key=lambda kv: (-kv[1], kv[0]))
+    _assert_hits(got["filtered"],
+                 [(d, 0.0) for d in everyone if lang[d] == "txt"], meta)
+    assert sorted((r["query_id"], r["doc_id"], r["score"])
+                  for r in got["msearch"]) == [
+        *(("a", d, 0.0) for d in everyone),
+        *(("b", d, 0.0) for d in nots)]
+
+
+def test_bounded_reads_never_build_doc_meta(spark, fixture_index,
+                                            monkeypatch):
+    """Bounded reads plan from meta.json's doc_meta schema: with the
+    Spark doc_meta relation made unbuildable, a fresh Engine's top-k,
+    count, terms facet, msearch, explain and stats give the rows they
+    gave before, for a plain, a match-all and a pure-NOT query."""
+    from openaleph_search_spark.query.engine import Engine
+
+    def reads(eng):
+        out = []
+        for q in ({"q": "banana OR kwazulu"}, {}, {"q": "-banana"}):
+            out += [
+                eng.search({**q, "limit": 5}).hits.collect(),
+                eng.count(q),
+                eng.search({**q, "facet": "lang",
+                            "limit": 0}).facets["lang"].collect(),
+                eng.msearch({"x": q}, k=3).collect(),
+                eng.explain({**q, "limit": 5})["scatter_tasks"]]
+        return out + [eng.stats()]
+    want = reads(Engine(spark, fixture_index))
+
+    def unbuildable(*args, **kwargs):
+        raise AssertionError("a bounded read built Engine.doc_meta")
+    monkeypatch.setattr(IndexStorage, "live_doc_meta", unbuildable)
+    assert reads(Engine(spark, fixture_index)) == want
 
 
 def _cache_reads(eng):

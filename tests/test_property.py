@@ -815,6 +815,10 @@ def _cache_paths_reads(a: str, b: str, c: str) -> dict:
             {"q": f"{a} OR {b}", "facet": "lang", "limit": 0}
         ).facets["lang"].collect()],
         "count": lambda e: e.count({"q": f"{b} OR {c}"}),
+        "match_all": hits({}),
+        "pure_not": hits({"q": f"-{a}"}),
+        "count_all": lambda e: e.count({}),
+        "count_not": lambda e: e.count({"q": f"-{b}"}),
         "msearch": lambda e: sorted(tuple(r) for r in e.msearch(
             {"x": {"q": a}, "y": {"q": f"{b} {c}"}}, k=3).select(
             "query_id", "doc_id", "score", "path").collect()),

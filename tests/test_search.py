@@ -257,36 +257,36 @@ def test_search_after_validation(fixture_engine):
                                "limit": 3, "search_after": ["1.5", "2"]})
 
 
-def test_search_after_null_sort_keys(fixture_engine, spark):
+def test_search_after_null_sort_keys(spark, fixture_docs_df, tmp_path):
     """nulls_last keyset: null-keyed rows stay reachable after a
     non-null cursor, and a None cursor element resumes among them."""
     import pyspark.sql.functions as SF
-    dm = fixture_engine.doc_meta.withColumn(
+    from openaleph_search_spark.index.build import build_index
+    from openaleph_search_spark.query.engine import Engine
+    docs = fixture_docs_df.withColumn(
         "nullable_ext",
         SF.when(SF.col("path").endswith(".txt"), None)
         .otherwise(SF.element_at(SF.split("path", r"\."), -1)))
-    fixture_engine._doc_meta = dm  # session-local sortable column
-    try:
-        base = {"sort": "nullable_ext"}
-        rows = fixture_engine.search(
-            {**base, "limit": 100}).hit_rows(0, 100)
-        nn = [r for r in rows if r["nullable_ext"] is not None]
-        cur = nn[-1]  # last non-null row: next page = the null region
-        page = fixture_engine.search(
-            {**base, "limit": 100,
-             "search_after": [cur["nullable_ext"],
-                              str(cur["doc_id"])]}).hit_rows(0, 100)
-        want = [r["doc_id"] for r in rows
-                if r["nullable_ext"] is None]
-        assert sorted(r["doc_id"] for r in page) == sorted(want)
-        assert len(want) > 0
-        # resume WITHIN the null region via a None cursor element
-        page2 = fixture_engine.search(
-            {**base, "limit": 100,
-             "search_after": [None, str(want[0])]}).hit_rows(0, 100)
-        assert [r["doc_id"] for r in page2] == want[1:]
-    finally:
-        fixture_engine._doc_meta = None
+    idx = str(tmp_path / "idx_nullable_ext")
+    build_index(spark, docs, idx, num_partitions=2, num_shards=1,
+                meta_cols=["nullable_ext"])
+    eng = Engine(spark, idx)
+    base = {"sort": "nullable_ext"}
+    rows = eng.search({**base, "limit": 100}).hit_rows(0, 100)
+    nn = [r for r in rows if r["nullable_ext"] is not None]
+    cur = nn[-1]  # last non-null row: next page = the null region
+    page = eng.search(
+        {**base, "limit": 100,
+         "search_after": [cur["nullable_ext"],
+                          str(cur["doc_id"])]}).hit_rows(0, 100)
+    want = [r["doc_id"] for r in rows if r["nullable_ext"] is None]
+    assert sorted(r["doc_id"] for r in page) == sorted(want)
+    assert len(want) > 0
+    # resume WITHIN the null region via a None cursor element
+    page2 = eng.search(
+        {**base, "limit": 100,
+         "search_after": [None, str(want[0])]}).hit_rows(0, 100)
+    assert [r["doc_id"] for r in page2] == want[1:]
 
 
 def test_explain_strategies(fixture_engine):
@@ -299,12 +299,12 @@ def test_explain_strategies(fixture_engine):
     e = fixture_engine.explain({"q": "ba*", "limit": 5})
     assert "banana" in e["expansions"]["ba*"]
     e = fixture_engine.explain({"limit": 10})
-    assert e["strategy"] == "match_all_meta_scan"
+    assert e["strategy"] == "topk_scatter_gather"
     e = fixture_engine.explain({"q": "banana", "facet": "lang",
                                 "limit": 0})
     assert e["strategy"] == "facet_partials_scatter"
     e = fixture_engine.explain({"q": "-banana", "limit": 10})
-    assert e["strategy"] == "anti_join_scan"
+    assert e["strategy"] == "topk_scatter_gather"
     e = fixture_engine.explain({"q": '"banana crime"', "limit": 5})
     assert e["phrase_bigram_fast_path"] == [] or e["needs_positions"] \
         is False  # config-dependent: fixture index may lack bigrams
@@ -332,8 +332,8 @@ def test_hit_columns_same_on_every_branch(fixture_engine):
          "full_match_then_branches"),
         ({**q, "function_score": "true"}, False,
          "full_match_then_branches"),
-        ({"limit": 10}, False, "match_all_meta_scan"),
-        ({"q": "-banana", "limit": 10}, False, "anti_join_scan"),
+        ({"limit": 10}, False, "topk_scatter_gather"),
+        ({"q": "-banana", "limit": 10}, False, "topk_scatter_gather"),
         ({"q": "banana", "facet": "lang", "limit": 0}, False,
          "facet_partials_scatter"),
     ]
@@ -517,9 +517,11 @@ def test_anonymous_facet_caps(spark, fixture_index):
 
 def test_msearch_batches_match_individual(fixture_engine):
     """msearch: one grouped-map pass; per-query hits identical to
-    individual search() calls."""
+    individual search() calls, a match-all's (the first k docs in _doc
+    order, score 0.0) included."""
     queries = {"qa": {"q": "banana"}, "qb": {"q": "kwazulu natal"},
-               "qc": {"q": '"banana crime"'}, "qd": {"q": "zzznothing"}}
+               "qc": {"q": '"banana crime"'}, "qd": {"q": "zzznothing"},
+               "qe": {}}
     out = fixture_engine.msearch(queries, k=5).collect()
     got = {}
     for r in out:
@@ -529,6 +531,7 @@ def test_msearch_batches_match_individual(fixture_engine):
         want = [(r["doc_id"], round(r["score"], 9)) for r in
                 fixture_engine.search({**args, "limit": 5}).hit_rows(0, 5)]
         assert sorted(got.get(qid, [])) == sorted(want), qid
+    assert len(got["qe"]) == 5 and {s for _, s in got["qe"]} == {0.0}
     # unsupported combos are rejected, not silently wrong
     import pytest as _pytest
     with _pytest.raises(ValueError):

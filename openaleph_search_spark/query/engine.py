@@ -3,18 +3,24 @@
 (/root/reference/openaleph_search/search/logic.py:25-33 →
 query/queries.py:111 → query/base.py:469-533), Spark-first.
 
-Lifecycle: parse (driver) → plan (IR + filter split into a MetaSpec)
-→ execute (the scatter: per-group evaluation in the driver or one task
+Lifecycle: parse (driver) → plan (IR + filters as a MetaSpec) →
+execute (the scatter: per-group evaluation in the driver or one task
 per group, tiny gather) → hydrate (in-group, from doc_meta).
-Facet/post_filter interplay (Q10/A8): each facet is computed with every
-*other* facet's filter applied; hits get all filters — the match set is
-computed once and the branches reuse it
-(/root/reference/openaleph_search/query/base.py:99-123,226-238).
+Every bounded part of a search is one gathered scatter pass, cut in
+pandas: its hits (in score order or a sort's, search_after and
+function_score included), its total, and its terms facets over string
+columns. Facet/post_filter interplay (Q10/A8): hits and the total get
+every filter; each facet gets every filter but its own field's, one
+facet pass per distinct set
+(reference openaleph_search/query/base.py:99-123,226-238). Only
+the aggregations that stay in Spark (histogram and non-string terms
+facets, significant terms, metrics) read the full match, a Catalyst
+join of doc_meta with every match's score.
 """
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import cached_property
+from functools import cache, cached_property
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -24,10 +30,10 @@ from pyspark.sql.types import (DoubleType, LongType, StringType,
 from ..analysis.analyzer import analyze_text
 from ..index.storage import IndexStorage
 from ..index.build import FIELD_SEP
-from .executor import SearchExecutor, top_k
+from .executor import HitOrder, SearchExecutor, top_k
 from .facets import (cardinality, histogram_facet, metric_aggs,
                      significant_terms, terms_facet)
-from .filters import MetaSpec, meta_spec
+from .filters import MetaSpec, comparable, keyset, meta_spec
 from .ir import (Bool, DisMax, MatchAll, Node, PhraseLeaf, PrefixLeaf,
                  TermLeaf, WildcardLeaf)
 from .parser import SearchArgs, parse_args, parse_query_string
@@ -75,18 +81,18 @@ def _facet_total_on(sa, auth, f: str) -> bool:
 
 FACET_SCHEMA = StructType([StructField("value", StringType()),
                            StructField("count", LongType())])
+TOTAL_SCHEMA = StructType([StructField("cardinality", LongType())])
 
 
-def _facet_cut(partials: pd.DataFrame | None, f: str,
-               size: int) -> pd.DataFrame | None:
-    """One terms facet from gathered per-group partials: counts summed
-    by value, ordered by (count desc, value asc), ``size`` buckets."""
+def _facet_buckets(partials: pd.DataFrame | None,
+                   f: str) -> pd.DataFrame:
+    """Every bucket of one terms facet from gathered per-group partials:
+    counts summed by value, ordered by (count desc, value asc)."""
     if partials is None:
-        return None
+        return pd.DataFrame({"value": [], "count": []})
     sub = (partials[partials["field"] == f]
            .groupby("value", as_index=False)["count"].sum())
-    return sub.sort_values(["count", "value"],
-                           ascending=[False, True]).head(size)
+    return sub.sort_values(["count", "value"], ascending=[False, True])
 
 
 class Engine:
@@ -136,13 +142,19 @@ class Engine:
     def explain(self, args: dict | SearchArgs) -> dict:
         """Planner debug (the ES ``_validate_query``/explain role),
         driver-only — zero Spark jobs on any index: the parsed IR,
-        analyzed + dictionary-expanded terms, the physical strategy
-        ``search()`` takes (both read it from ``_strategy``), the
-        query's ``est_postings`` (df summed over its terms, plus
-        ``n_docs`` for a match-all or pure-NOT), ``scatter_tasks``, the
-        scatter's task count (never None: 0 when the plan evaluates in
-        the driver), and ``scatter_columns``, the postings columns the
-        scatter reads,
+        analyzed + dictionary-expanded terms, the path each part of
+        ``search()`` takes: ``hits_order``, the order its hits pass cuts
+        in (None when ``limit`` is 0: no hits pass), and
+        ``pruning_eligible``, whether that pass prunes (score order
+        only); ``facet_passes``, the string terms facets of each facet
+        pass (one per distinct filter set); ``full_match``, the
+        aggregations that read the full match in Spark, and
+        ``full_match_tasks``, its job's task count (None when none
+        reads it); the query's ``est_postings`` (df summed over its
+        terms, plus ``n_docs`` for a match-all or pure-NOT),
+        ``scatter_tasks``, each scatter pass's task count (never None: 0
+        when the plan evaluates in the driver), and ``scatter_columns``,
+        the postings columns the scatter reads,
         and ``part_cache``, the driver's decoded parts: ``parts``,
         ``bytes``, and its ``hits`` and ``misses`` so far (a miss read
         an index file; a warm driver-evaluated read only hits), or None
@@ -164,27 +176,36 @@ class Engine:
             " ".join(l.terms) for l in tree.leaves()
             if isinstance(l, PhraseLeaf)
             and ex._phrase_uses_bigrams(l, bigrams_on)]
-        strategy = self._strategy(sa, tree)
-        mode = {"topk_scatter_gather": "topk",
-                "facet_partials_scatter": "facet"}.get(strategy, "scores")
         _, _, need_pos, read_cols, est, tasks, _ = ex._scatter_plan(
-            [tree], sa.k, mode)
-        cache = ex._scatter_layout()["cache"]
+            [tree], sa.k, "topk")
+        own = self._facet_passes(sa)
+        full = [*(f"facet:{f}" for f in sa.facets if f not in own),
+                *(f"facet_significant:{f}" for f in sa.facet_significant),
+                *(f"metric:{op}" for op in sa.metrics)]
+        held = ex._scatter_layout()["cache"]
         return {
             "query_tree": repr(tree),
-            "strategy": strategy,
             "terms": ex._collect_terms(tree),
             "expansions": expansions,
             "needs_positions": need_pos,
             "phrase_bigram_fast_path": phrase_fast,
             "k": sa.k,
-            "pruning_eligible": strategy == "topk_scatter_gather",
+            "hits_order": [f"{f}:{'asc' if asc else 'desc'}" for f, asc
+                           in (sa.sort or [("score", False)])
+                           ] + ["doc_id:asc"] if sa.k else None,
+            "pruning_eligible": bool(sa.k) and not (
+                sa.sort or sa.function_score or sa.search_after),
+            "facet_passes": [[f for f in own if own[f] == o]
+                             for o in dict.fromkeys(own.values())],
+            "full_match": full,
+            "full_match_tasks": ex._scatter_plan(
+                [tree], None, "scores")[5] if full else None,
             "post_filter_fields": [f for f in sa.facets
                                    if f in sa.filters],
             "est_postings": est,
             "scatter_tasks": tasks,
             "scatter_columns": read_cols,
-            "part_cache": cache.stats() if cache is not None else None,
+            "part_cache": held.stats() if held is not None else None,
             "term_dict": ex._term_dict().stats(),
         }
 
@@ -236,163 +257,150 @@ class Engine:
     def doc_meta(self) -> DataFrame:
         """Live docs only: the parts and tombstones the Engine's reads
         see (``IndexStorage.live_doc_meta``). Only the reads that run
-        in Spark build it: the full match, ``export`` and the
-        significant-terms background."""
+        in Spark build it: the full match (the Spark-side
+        aggregations' input), ``export`` and the significant-terms
+        background."""
         if self._doc_meta is None:
             lay = self.executor._scatter_layout()
             self._doc_meta = self.storage.live_doc_meta(
                 self.spark, lay["uncommitted"], lay["files"].tomb_paths)
         return self._doc_meta
 
-    def _strategy(self, sa: SearchArgs, tree: Node,
-                  with_total: bool = False) -> str:
-        """The physical strategy of a search, whatever the tree's shape:
-        plain terms facets over string meta columns with no hits, total
-        or facet interplay wanted take one scatter pass of per-group
-        (value, count) partials; anything else needing every match runs
-        the full match, then its branches; the rest is the gathered
-        top-k."""
-        need_all = bool(sa.facet_total or sa.metrics or sa.facet_significant
-                        or sa.sort or with_total or sa.function_score
-                        or sa.search_after)
+    def _facet_passes(self, sa: SearchArgs) -> dict:
+        """Each terms facet over a string column, which the scatter
+        counts, → the filter field its pass leaves out (None: every
+        filter applies). A facet ignores its own field's filter, so
+        facets share a pass exactly when they leave out the same one."""
         dtypes = self._dtypes()
-        if (sa.facets and sa.k == 0 and not need_all and not sa.highlight
-                and not any(f in sa.filters for f in sa.facets)
-                and all(f not in sa.facet_interval
-                        and dtypes.get(f) == "string"
-                        for f in sa.facets)):
-            return "facet_partials_scatter"
-        if sa.facets or need_all:
-            return "full_match_then_branches"
-        return "topk_scatter_gather"
+        return {f: f if f in sa.filters else None for f in sa.facets
+                if f not in sa.facet_interval
+                and dtypes.get(f) == "string"}
 
     def search(self, args: dict | SearchArgs, with_total: bool = False,
                auth=None) -> SearchResult:
         sa = args if isinstance(args, SearchArgs) else parse_args(args)
         tree = self._plan(sa)
-
-        # search_after validates BEFORE any distributed work (a
-        # statically-invalid cursor must not cost a cluster scan)
-        keyset = None
+        # fields and the search_after cursor validate BEFORE any read (a
+        # statically-invalid request must not cost a scan)
+        known = {**self._dtypes(), "score": "double"}
+        for f in [*sa.facets, *sa.facet_significant,
+                  *(f for f, _ in sa.sort)]:
+            if f not in known:
+                raise ValueError(f"unknown doc_meta field {f!r}")
+        for f, _ in sa.sort:
+            if not comparable(known[f]):
+                raise ValueError(f"cannot sort by doc_meta column {f!r} "
+                                 f"of type {known[f]}")
+        after = None
         if sa.search_after:
-            if sa.sort:
-                keyset = self._keyset_after(sa.sort, sa.search_after)
-            elif isinstance(tree, MatchAll):
-                # _doc-order scan cursor: the single last doc_id seen
-                # (reference id-sorted export continuation)
-                if len(sa.search_after) != 1:
-                    raise ValueError(
-                        "a _doc-order search_after cursor is the "
-                        "single last doc_id; pass sort= for field "
-                        "cursors")
-                try:
-                    keyset = (F.col("doc_id")
-                              > int(sa.search_after[0]))
-                except (TypeError, ValueError):
-                    raise ValueError(
-                        "search_after doc_id cursor "
-                        f"{sa.search_after[0]!r} is not an integer"
-                    ) from None
-            else:
+            if not sa.sort and not isinstance(tree, MatchAll):
                 raise ValueError(
                     "search_after requires an explicit sort (or a "
                     "match-all _doc scan); score cursors are not "
                     "stable floats")
+            if not sa.sort and len(sa.search_after) != 1:
+                # _doc-order scan cursor: the single last doc_id seen
+                # (reference id-sorted export continuation)
+                raise ValueError(
+                    "a _doc-order search_after cursor is the single "
+                    "last doc_id; pass sort= for field cursors")
+            after = keyset(self.spark, self._meta_schema,
+                           [*sa.sort, ("doc_id", True)], sa.search_after)
 
-        # split filters: filters on faceted fields become post-filters
-        # (reference base.py:99-123) so each facet excludes its own.
-        # The ACL rides in the pre-filter spec, so facets and
-        # post-filters all run inside the visibility set; an explicit
-        # filter: can never widen it.
-        post_fields = [f for f in sa.facets if f in sa.filters]
-        spec = self._spec(auth, {f: v for f, v in sa.filters.items()
-                                 if f not in post_fields}, sa)
-        strategy = self._strategy(sa, tree, with_total)
+        # hits and the total get every filter, each facet every filter
+        # but its own field's (reference base.py:99-123). The ACL rides
+        # in every spec, so an explicit filter: can never widen it.
+        ex = self.executor
+        spec = self._spec(auth, sa.filters, sa)
+        # each group cuts its own top k, hydrated where it runs; the
+        # global cut on ≤ groups×k rows runs here in pandas — no
+        # exchange, no hydrate join, and the hits are a LocalRelation
+        order = HitOrder(tuple((f, asc, known[f]) for f, asc in sa.sort),
+                         sa.function_score and not isinstance(
+                             tree, MatchAll), after)
+        raw = ex.scatter_topk_hydrated(
+            tree, sa.k, spec, self._meta_schema.names, order) \
+            if sa.k else None
+        hits = ex.local_frame(top_k(raw, sa.k, keys=order.keys()),
+                              self._hits_schema())
+        if sa.highlight:
+            hits = self._highlight(hits, tree, sa)
+        total = ex.scatter_count(tree, spec) if with_total else None
 
-        if strategy == "facet_partials_scatter":
-            # each group reads its own doc_meta slice for the facet
-            # values, and the partials of every facet are gathered
-            # ONCE; the per-facet cuts run in pandas
-            partials = self.executor.scatter_facets(
-                tree, sa.facets, spec)
-            facets = {
-                f: self.executor.local_frame(
-                    _facet_cut(partials, f, _facet_size(sa, auth, f)),
-                    FACET_SCHEMA)
-                for f in sa.facets}
-            hits = self.executor.local_frame(None, self._hits_schema())
-            return SearchResult(hits=hits, facets=facets)
-        if strategy == "topk_scatter_gather":
-            # per-group top-k evaluated AND hydrated where the group
-            # runs; the global cut on ≤ groups×k rows runs here in
-            # pandas — no exchange, no hydrate join, and the hits are a
-            # LocalRelation
-            raw = self.executor.scatter_topk_hydrated(
-                tree, sa.k, spec, self._meta_schema.names)
-            hits = self.executor.local_frame(top_k(raw, sa.k),
-                                             self._hits_schema())
-            if sa.highlight:
-                hits = self._highlight(hits, tree, sa)
-            return SearchResult(hits=self._dehydrate(hits, sa))
-
-        base_meta = self.doc_meta.filter(spec.column())
-        if isinstance(tree, MatchAll):
-            matched = base_meta.withColumn("score", F.lit(0.0))
-        else:
-            ids = self.executor.run(tree, k=None, spec=spec)
-            matched = base_meta.join(ids, "doc_id")
-            if sa.function_score:
-                # Q21 function_score (queries.py:227-277): additive
-                # length-prior boost, boost_mode sum; num_values
-                # re-based to doc_len for the single-text-field corpus
-                matched = matched.withColumn(
-                    "score",
-                    F.col("score") + F.sqrt(0.5 * F.col("doc_len")))
-        # the gathered top-k's column order, on every branch
-        matched = matched.select(*self._hits_schema().names)
-
+        # one facet pass per filter field its facets leave out; the
+        # per-facet cuts run in pandas
+        own = self._facet_passes(sa)
+        partials = {o: ex.scatter_facets(
+            tree, [f for f in own if own[f] == o], spec if o is None
+            else self._spec(auth, {f: v for f, v in sa.filters.items()
+                                   if f != o}, sa))
+            for o in set(own.values())}
+        branch = self._branches(tree, sa, auth)
         facets, facet_totals, significant = {}, {}, {}
         for f in sa.facets:
-            branch = self._post_filter(matched, sa, post_fields, f)
+            if f in own:
+                buckets = _facet_buckets(partials[own[f]], f)
+                facets[f] = ex.local_frame(
+                    buckets.head(_facet_size(sa, auth, f)), FACET_SCHEMA)
+                if _facet_total_on(sa, auth, f):
+                    facet_totals[f] = ex.local_frame(pd.DataFrame(
+                        {"cardinality": [len(buckets)]}), TOTAL_SCHEMA)
+                continue
             if f in sa.facet_interval:
                 # A3 through the arg dialect: calendar buckets for
                 # date/timestamp fields, width buckets for numerics
-                facets[f] = histogram_facet(branch, f,
+                facets[f] = histogram_facet(branch(f), f,
                                             sa.facet_interval[f])
             else:
-                facets[f] = terms_facet(branch, f,
+                facets[f] = terms_facet(branch(f), f,
                                         _facet_size(sa, auth, f))
             if _facet_total_on(sa, auth, f):
-                facet_totals[f] = cardinality(branch, f)
+                facet_totals[f] = cardinality(branch(f), f)
         for f in sa.facet_significant:
             # A5 through the arg dialect: matched docs as foreground,
             # the whole (live) collection as background
-            branch = self._post_filter(matched, sa, post_fields, f)
             significant[f] = significant_terms(
-                branch, self.doc_meta, f, _facet_size(sa, auth, f))
-
-        fully = self._post_filter(matched, sa, post_fields)
-        metrics_df = metric_aggs(fully, sa.metrics) if sa.metrics else None
-        total = fully.count() if with_total else None
-
-        if keyset is not None:
-            fully = fully.filter(keyset)
-        if sa.sort:
-            order = [F.col(f).asc_nulls_last() if asc
-                     else F.col(f).desc_nulls_last() for f, asc in sa.sort]
-            hits = fully.orderBy(*order, F.asc("doc_id"))
-        else:
-            # an unscored tree (score 0 everywhere) comes out in _doc
-            # order
-            hits = fully.orderBy(F.desc("score"), F.asc("doc_id"))
-        hits = hits.limit(sa.k) if sa.k else hits.limit(0)
-        if sa.highlight:
-            hits = self._highlight(hits, tree, sa)
-        hits = self._dehydrate(hits, sa)
-        return SearchResult(hits=hits,
+                branch(f), self.doc_meta, f, _facet_size(sa, auth, f))
+        metrics_df = (metric_aggs(branch(), sa.metrics) if sa.metrics
+                      else None)
+        return SearchResult(hits=self._dehydrate(hits, sa),
                             total=total, facets=facets,
                             facet_totals=facet_totals,
                             significant=significant, metrics=metrics_df)
+
+    def _branches(self, tree: Node, sa: SearchArgs, auth):
+        """→ ``branch(facet=None)``: the full match, every match under
+        the filters on fields no facet names with its doc_meta row and
+        score, built in Spark on first use, under the filters of every
+        faceted field but ``facet``. It is the input of the aggregations
+        that stay in Spark."""
+        post = [f for f in sa.facets if f in sa.filters]
+
+        @cache
+        def full() -> DataFrame:
+            matched = self._matches(tree, self._spec(auth, {
+                f: v for f, v in sa.filters.items() if f not in post}, sa))
+            if sa.function_score and not isinstance(tree, MatchAll):
+                # Q21 function_score (queries.py:227-277): HitOrder.boost
+                matched = matched.withColumn("score", F.col("score")
+                                             + F.sqrt(0.5 * F.col("doc_len")))
+            return matched
+
+        def branch(facet: str | None = None) -> DataFrame:
+            fields = {f: sa.filters[f] for f in post if f != facet}
+            return full().filter(meta_spec(
+                self.spark, self._meta_schema, fields).column()) \
+                if fields else full()
+        return branch
+
+    def _matches(self, tree: Node, spec: MetaSpec) -> DataFrame:
+        """The live docs passing ``spec`` that ``tree`` matches: their
+        doc_meta rows and scores (0.0 for a match-all), in Spark."""
+        base = self.doc_meta.filter(spec.column())
+        if isinstance(tree, MatchAll):
+            return base.withColumn("score", F.lit(0.0))
+        return base.join(self.executor.run(tree, k=None, spec=spec),
+                         "doc_id")
 
     def msearch(self, queries: dict[str, dict | SearchArgs],
                 k: int = 10, auth=None) -> DataFrame:
@@ -436,13 +444,8 @@ class Engine:
         sa = (args if isinstance(args, SearchArgs)
               else parse_args(args or {}))
         tree = self._plan(sa)
-        spec = self._spec(auth, sa.filters, sa)
-        base = self.doc_meta.filter(spec.column())
-        if isinstance(tree, MatchAll):
-            out = base
-        else:
-            ids = self.executor.run(tree, k=None, spec=spec)
-            out = base.join(ids.select("doc_id"), "doc_id")
+        out = self._matches(tree, self._spec(auth, sa.filters, sa)).drop(
+            "score")
         cols = list(out.columns)
         if include_fields:
             cols = [c for c in cols if c in set(include_fields)
@@ -457,83 +460,6 @@ class Engine:
         tree = self._plan(sa)
         spec = self._spec(auth, sa.filters, sa)
         return self.executor.scatter_count(tree, spec)
-
-    def _post_filter(self, matched: DataFrame, sa: SearchArgs,
-                     post_fields: list[str],
-                     facet: str | None = None) -> DataFrame:
-        """``matched`` under the post-filters of every faceted field
-        but ``facet`` (each facet excludes its own filter)."""
-        fields = [f for f in post_fields if f != facet]
-        if not fields:
-            return matched
-        return matched.filter(meta_spec(
-            self.spark, self._meta_schema,
-            {f: sa.filters[f] for f in fields}).column())
-
-    @staticmethod
-    def _cursor_literal(cv, dtype: str):
-        """Validate a cursor value against the column dtype DRIVER-SIDE
-        (Spark's non-ANSI cast would turn an unparsable value into a
-        NULL literal → a silently-empty page instead of an error)."""
-        import datetime as _dt
-        try:
-            if dtype in ("tinyint", "smallint", "int", "bigint"):
-                int(cv)
-            elif dtype in ("float", "double") or dtype.startswith(
-                    "decimal"):
-                float(cv)
-            elif dtype in ("timestamp", "timestamp_ntz", "date"):
-                _dt.datetime.fromisoformat(str(cv).replace("T", " "))
-        except (TypeError, ValueError):
-            raise ValueError(
-                f"search_after cursor value {cv!r} is not valid for a "
-                f"{dtype} sort column") from None
-        return F.lit(cv).cast(dtype)
-
-    def _keyset_after(self, sort: list[tuple[str, bool]],
-                      cursor: list):
-        """ES ``search_after`` keyset predicate: rows strictly AFTER
-        the cursor in (sort…, doc_id asc) order — deep paging as an
-        indexable range filter instead of an offset scan (the
-        reference's PIT+search_after export continuation,
-        /root/reference/openaleph_search/index/entities.py:112-140).
-        ``cursor`` carries one value per sort field plus the final
-        doc_id tiebreak. NULL sort keys order nulls_last (matching the
-        sort itself): a null-keyed row sorts after every non-null
-        cursor, and ``None`` as a cursor element resumes WITHIN the
-        null region of that key."""
-        keys = [*sort, ("doc_id", True)]
-        if len(cursor) != len(keys):
-            raise ValueError(
-                f"search_after needs {len(keys)} values (one per sort "
-                f"field + the doc_id tiebreak), got {len(cursor)}")
-        dtypes = self._dtypes()
-        for f, _ in keys:
-            if f not in dtypes:
-                raise ValueError(
-                    f"search_after sort field {f!r} is not a stored "
-                    "doc_meta column (score cursors are not stable "
-                    "floats)")
-        pred = None
-        eq = None
-        for (f, asc), cv in zip(keys, cursor):
-            col = F.col(f)
-            if cv is None:
-                # cursor sits in this key's null region: nothing sorts
-                # after null at this level; deeper keys break the tie
-                cmp = F.lit(False)
-                e = col.isNull()
-            else:
-                lit = self._cursor_literal(cv, dtypes.get(f, "string"))
-                # nulls_last: null-keyed rows sort AFTER any non-null
-                # cursor value, so they stay reachable on later pages
-                cmp = ((col > lit) if asc else (col < lit)) \
-                    | col.isNull()
-                e = col == lit
-            term = cmp if eq is None else (eq & cmp)
-            pred = term if pred is None else (pred | term)
-            eq = e if eq is None else (eq & e)
-        return pred
 
     # -- planning helpers -----------------------------------------------------
     def _hits_schema(self) -> StructType:

@@ -13,7 +13,10 @@ strategy, the scatter:
             decoded once per Engine), else one task per group (≈ one
             ES shard search, reading its own part files)
   gather:   each group emits ≤ k rows → one pandas merge and global
-            cut in the driver (tiny: groups × k rows)
+            cut in the driver (tiny: groups × k rows), both cuts by
+            ``top_k`` in the hits' ``HitOrder``: score desc, or a sort
+            by doc_meta keys, a search_after cursor or function_score's
+            boost, which each group evaluates unpruned
 
 The per-shard evaluator is a vectorized **block-max term-at-a-time
 top-k** (MaxScore family, same skip machinery as block-max WAND):
@@ -54,7 +57,7 @@ from ..index.codec import (bm25_idf, bm25_tfnorm, decode_blocks,
                            decode_positions)
 from ..index.storage import IndexStorage
 from ..ops.util import gather, plan_tasks, task_frames
-from .filters import MetaSpec
+from .filters import Keyset, MetaSpec, sort_by, sort_keys
 from .ir import (Bool, DisMax, MatchAll, Node, PhraseLeaf, PrefixLeaf,
                  TermLeaf, WildcardLeaf)
 
@@ -66,18 +69,47 @@ MULTI_TYPE = StructType([*RESULT_TYPE.fields,
 
 # the final cut of gathered scatter output runs here in pandas: a Spark
 # sort on a LocalRelation would still cost a job per query
-def top_k(pdf: pd.DataFrame | None, k: int,
-          by: str | None = None) -> pd.DataFrame | None:
-    """Global top-k of gathered per-group hits by (score desc, doc_id
-    asc); per ``by`` value (one query of a batch) when given."""
+def top_k(pdf: pd.DataFrame | None, k: int, by: str | None = None,
+          keys=(("score", False),)) -> pd.DataFrame | None:
+    """The top k of per-group hits in ``keys`` order, (column, asc)
+    pairs (score desc, or ``HitOrder.keys()``), doc_id asc breaking
+    ties; per ``by`` value (one query of a batch) when given. A group
+    cuts its own hits with it, and the gather re-cuts their union."""
     if pdf is None:
         return None
-    if by is None:
-        return pdf.sort_values(["score", "doc_id"],
-                               ascending=[False, True]).head(k)
-    return (pdf.sort_values([by, "score", "doc_id"],
-                            ascending=[True, False, True])
-            .groupby(by, sort=False).head(k))
+    order = [*([(by, True)] if by else []), *keys, ("doc_id", True)]
+    pdf = pdf.sort_values([c for c, _ in order],
+                          ascending=[a for _, a in order])
+    return pdf.head(k) if by is None else pdf.groupby(
+        by, sort=False).head(k)
+
+
+class HitOrder(NamedTuple):
+    """The order a hits pass cuts in. The default, score desc, is the
+    one block-max pruning bounds; any other evaluates each group's
+    matches unpruned. ``sort``: ((column, asc, dtype), …) keys before
+    the doc_id tie-break (``score`` is a key like any doc_meta column);
+    ``boost``: function_score's additive sqrt(0.5·doc_len), added to
+    every score first; ``after``: a search_after ``Keyset`` every hit
+    must follow."""
+    sort: tuple = ()
+    boost: bool = False
+    after: Keyset | None = None
+
+    @property
+    def plain(self) -> bool:
+        return not (self.sort or self.boost or self.after)
+
+    def keys(self) -> list[tuple[str, bool]]:
+        """The (column, asc) pairs ``top_k`` cuts by."""
+        return sort_by(self.sort) if self.sort else [("score", False)]
+
+    def cols(self) -> list[str]:
+        """The doc_meta columns the order reads, doc_id aside."""
+        cols = {c for c, _, _ in self.sort}
+        cols |= set(self.after.cols() if self.after else ())
+        cols |= {"doc_len"} if self.boost else set()
+        return sorted(cols - {"doc_id", "score"})
 
 
 def universe_tree(tree: Node) -> bool:
@@ -798,17 +830,43 @@ def _hydrate(out: pd.DataFrame, tables: _PartFiles, parts: list[int],
                      axis=1)
 
 
+def _order_cut(ids, scores, meta, order: HitOrder, k: int
+               ) -> pd.DataFrame:
+    """A group's top ``k`` of its matches (``ids``, ``scores``) in
+    ``order``: each match's order columns taken from the group's
+    doc_meta rows ``meta`` (sorted by doc_id, holding every match),
+    function_score's boost added, the search_after mask applied, then
+    cut by ``top_k`` over ``sort_keys``."""
+    import pyarrow as pa
+    rows = pa.table({"doc_id": ids, "score": scores})
+    if order.cols():
+        taken = meta.take(pa.array(np.searchsorted(
+            meta.column("doc_id").to_numpy(), ids)))
+        for c in order.cols():
+            rows = rows.append_column(c, taken.column(c))
+    if order.boost:
+        rows = rows.set_column(1, "score", pa.array(scores + np.sqrt(
+            0.5 * rows.column("doc_len").to_numpy())))
+    if order.after is not None:
+        rows = rows.filter(pa.array(order.after.mask(rows)))
+    return top_k(pd.DataFrame({
+        "doc_id": rows.column("doc_id").to_numpy(),
+        "score": rows.column("score").to_numpy(),
+        **sort_keys(rows, order.sort)}), k, keys=order.keys())
+
+
 def _scatter_eval_group(parts, tables, tomb, items, ctx, qterms,
                         read_cols, need_pos, k, spec, mode, meta_fields,
-                        facet_fields, meta_read_cols):
+                        extra, meta_read_cols, order):
     """Evaluate one scatter group (a set of doc-disjoint source parts),
     in a task or in the driver: slice the group's part tables
     (``tables``: the driver's ``_PartCache``, else ``_PartFiles``) for
-    the query terms' postings blocks, and, when restricting, faceting
-    or evaluating a universe tree, for the doc_meta rows where
-    ``spec.mask`` holds and the doc is live (not in ``tomb``); then run
-    the _ShardEval kernel. Returns one pandas frame (mode-shaped) or
-    None."""
+    the query terms' postings blocks, and, when restricting, faceting,
+    ordering by doc_meta columns or evaluating a universe tree, for the
+    doc_meta rows where ``spec.mask`` holds and the doc is live (not in
+    ``tomb``), with the ``extra`` columns a facet or an order reads;
+    then run the _ShardEval kernel. Returns one pandas frame
+    (mode-shaped) or None."""
     import pyarrow as pa
 
     allowed = None
@@ -819,7 +877,7 @@ def _scatter_eval_group(parts, tables, tomb, items, ctx, qterms,
             keep = spec.mask(mt)
             if tomb is not None:
                 keep &= ~_in_sorted(mt.column("doc_id").to_numpy(), tomb)
-            pieces.append(mt.select(["doc_id", *(facet_fields or [])])
+            pieces.append(mt.select(["doc_id", *extra])
                           .filter(pa.array(keep)))
         meta = pa.concat_tables(pieces, promote_options="permissive")
         allowed = meta.column("doc_id").to_numpy()
@@ -848,7 +906,7 @@ def _scatter_eval_group(parts, tables, tomb, items, ctx, qterms,
             return None
         pos = np.searchsorted(allowed, ids)
         out = []
-        for f in facet_fields:
+        for f in extra:
             vals = meta.column(f).to_pandas().to_numpy()[pos]
             vc = pd.Series(vals).value_counts(dropna=True)
             out.append(pd.DataFrame({
@@ -859,6 +917,12 @@ def _scatter_eval_group(parts, tables, tomb, items, ctx, qterms,
     if mode == "count":
         ids, _ = ev.eval(items[0][1], root=True)
         return pd.DataFrame({"n": [int(ids.size)]}) if ids.size else None
+
+    if order is not None:  # a top-k in another order than score desc
+        ids, scores = ev.eval(items[0][1], root=True)
+        out = _order_cut(ids, scores, meta, order, k)
+        return _hydrate(out, tables, parts, meta_fields) if len(out) \
+            else None
 
     # scores | multi | topk: each tree's top-k (every match for k=None)
     rows = []
@@ -1290,7 +1354,8 @@ class SearchExecutor:
                       spec: MetaSpec | None, mode: str,
                       out_schema: StructType | None = None,
                       meta_fields: list[str] | None = None,
-                      facet_fields: list[str] | None = None):
+                      facet_fields: list[str] | None = None,
+                      order: HitOrder | None = None):
         """Run the scatter. ``items`` = [(entity_id|None, tree)].
 
         ``spec`` semantics: None → raw postings evaluation, tombstoned
@@ -1298,7 +1363,9 @@ class SearchExecutor:
         a MetaSpec (possibly with zero conjuncts) → restrict to LIVE
         docs passing it (tombstones subtracted).
         Modes: scores | multi | topk | facet | count; ``meta_fields``
-        hydrates each group's hits from its own doc_meta files.
+        hydrates each group's hits from its own doc_meta files; a topk
+        ``order`` (not ``plain``) cuts each group's unpruned matches in
+        that order instead of score desc.
 
         A bounded mode (``scatter_gathers``) returns the per-group
         frames gathered into one pandas frame, or None when nothing
@@ -1312,6 +1379,8 @@ class SearchExecutor:
         terms, ctx, need_pos, read_cols, est, tasks, groups = \
             self._scatter_plan([t for _, t in items], k, mode)
         bounded = scatter_gathers(mode, k)
+        if order is not None:
+            ctx = {**ctx, "k_prune": None}
         if not groups or (spec is not None and spec.match_none):
             return None if bounded else self.spark.createDataFrame(
                 [], out_schema)
@@ -1319,7 +1388,7 @@ class SearchExecutor:
             groups, self._driver_tables() if tasks == 0 else lay["files"],
             items, ctx,
             terms, read_cols, need_pos, k, spec, mode, meta_fields,
-            facet_fields)
+            facet_fields or (order.cols() if order else []), order)
         if not bounded:
             return task_frames(self.spark, tasks, run, out_schema)
         frames = gather(self.spark, groups, tasks, run)
@@ -1328,7 +1397,7 @@ class SearchExecutor:
     @staticmethod
     def _scatter_fn(groups, tables: _PartFiles, items, ctx, terms,
                     read_cols, need_pos, k, spec: MetaSpec | None,
-                    mode: str, meta_fields, facet_fields):
+                    mode: str, meta_fields, extra, order):
         """→ ``run(group ids)``, yielding each group's non-empty frame;
         the same closure runs in the driver (over the part cache) or
         inside a task (over the part files)."""
@@ -1337,14 +1406,11 @@ class SearchExecutor:
         tombs = spec is not None and bool(tables.tomb_paths)
         spec = spec or MetaSpec()
         spec_cols = spec.cols()
-        # facet mode always needs the meta read (values of matched
-        # docs), and a universe tree its doc ids
+        # a facet or an order needs the meta read (the ``extra`` values
+        # of matched docs), and a universe tree its doc ids
         meta_read_cols = None
-        if mode == "facet":
-            meta_read_cols = ["doc_id"] + sorted(
-                set(spec_cols) | set(facet_fields))
-        elif spec_cols or tombs or ctx["universe"]:
-            meta_read_cols = ["doc_id"] + spec_cols
+        if extra or spec_cols or tombs or ctx["universe"]:
+            meta_read_cols = ["doc_id"] + sorted(set(spec_cols) | set(extra))
 
         def run(gids):
             tomb = tables.dead() if tombs else None
@@ -1352,7 +1418,7 @@ class SearchExecutor:
                 out = _scatter_eval_group(
                     groups[int(gid)], tables, tomb, items, ctx, qterms,
                     read_cols, need_pos, k, spec, mode, meta_fields,
-                    facet_fields, meta_read_cols)
+                    extra, meta_read_cols, order)
                 if out is not None:
                     yield out
         return run
@@ -1374,13 +1440,16 @@ class SearchExecutor:
 
     def scatter_topk_hydrated(self, tree: Node, k: int,
                               spec: MetaSpec | None,
-                              meta_fields: list[str]
+                              meta_fields: list[str], order: HitOrder
                               ) -> pd.DataFrame | None:
-        """Per-group top-k, hydrated from the group's own doc_meta
-        files → pandas (doc_id, score, …meta_fields), ≤ k rows per
-        group, unsorted (caller applies the global cut)."""
+        """Per-group top-k in ``order``, hydrated from the group's own
+        doc_meta files → pandas (doc_id, score, …meta_fields, and the
+        order's ``sort_keys`` columns), ≤ k rows per group, unsorted
+        (caller applies the global cut, ``top_k`` by
+        ``order.keys()``)."""
         return self._scatter_exec([(None, tree)], k, spec, "topk",
-                                  meta_fields=meta_fields)
+                                  meta_fields=meta_fields,
+                                  order=None if order.plain else order)
 
     def scatter_multi_hydrated(self, trees: dict[str, Node], k: int,
                                spec: MetaSpec | None,

@@ -1,4 +1,5 @@
-"""Doc_meta filter semantics: one rule set, two evaluators.
+"""Doc_meta value semantics: one rule set for filters, sort keys and
+search_after cursors.
 
 ``meta_spec`` translates a read's doc_meta restriction — the session
 ACL (``SearchAuth``: admin → none, no datasets → match none, else
@@ -7,8 +8,9 @@ ACL (``SearchAuth``: admin → none, no datasets → match none, else
 :class:`MetaSpec`. A spec is evaluated two ways:
 
 * ``mask()`` over the Arrow doc_meta rows a scatter group reads itself;
-* ``column()`` as a Spark predicate, for the doc_meta scans that stay in
-  Spark (match-all, the full-match branches, export).
+* ``column()`` as a Spark predicate, used only by the aggregations that
+  stay in Spark (histogram and non-string terms facets, significant
+  terms, metrics) and by ``export``.
 
 Both compare against the same literal values. String columns compare
 uncast. Every other column's literals are cast by Spark once, in the
@@ -17,6 +19,12 @@ numbers the mask compares: timestamps as epoch micros, dates as epoch
 days. ``column()`` turns those numbers back into typed literals, so the
 two evaluators cannot drift apart. A new filter op adds a case to both
 evaluators and to the property test in ``tests/test_property.py``.
+
+Hits order in the scatter groups and in the gather's pandas cut, as
+Spark orders rows: ``sort_keys`` turns sort keys into columns pandas
+sorts right (nulls last, NaN above every number), and ``keyset`` builds
+a search_after cursor's :class:`Keyset` from the same comparisons and
+literal casts as the filters.
 """
 from __future__ import annotations
 
@@ -27,6 +35,7 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from .parser import partial_date_bounds
@@ -64,19 +73,124 @@ def _hits(arr, op: str, dtype: str, vals: tuple) -> np.ndarray:
         else:
             out = pc.is_in(arr, value_set=pa.array(vals, arr.type))
         return out.fill_null(False).to_numpy(zero_copy_only=False)
-    if dtype in ("timestamp", "timestamp_ntz"):
-        arr = arr.cast(pa.timestamp("us", arr.type.tz), safe=False) \
-            .cast(pa.int64())
-    elif dtype == "date":
-        arr = arr.cast(pa.int32())
-    x = arr.fill_null(False if dtype == "boolean" else 0).to_numpy(
-        zero_copy_only=False)
+    x = _values(arr, dtype)
     if op in _RANGES:
         return _cmp(x, op, vals[0], dtype)
     if dtype in ("float", "double"):
         return (np.isin(x, [v for v in vals if not math.isnan(v)])
                 | (np.isnan(x) & any(math.isnan(v) for v in vals)))
     return np.isin(x, list(vals))
+
+
+def _values(arr, dtype: str) -> np.ndarray:
+    """The values of a non-string ``arr`` as the numbers the comparisons
+    read (timestamps as epoch micros, dates as epoch days), null rows
+    filled; callers mask them."""
+    if dtype in ("timestamp", "timestamp_ntz"):
+        arr = arr.cast(pa.timestamp("us", arr.type.tz), safe=False) \
+            .cast(pa.int64())
+    elif dtype == "date":
+        arr = arr.cast(pa.int32())
+    return arr.fill_null(False if dtype == "boolean" else 0).to_numpy(
+        zero_copy_only=False)
+
+
+def comparable(dtype: str) -> bool:
+    """Whether doc_meta values of Spark type ``dtype`` are filtered and
+    ordered here."""
+    return (dtype == "string" or dtype in _NUMERIC + _DATEISH
+            or dtype.startswith("decimal"))
+
+
+def sort_keys(table: pa.Table, sort) -> dict[str, np.ndarray]:
+    """Spark's order of ``table`` by ``sort``, ((column, asc, dtype), …):
+    nulls last either way, NaN above every number, -0.0 equal to 0.0.
+    Neither pandas (it reads an Arrow null as NaN) nor
+    ``pc.sort_indices`` (NaN after the numbers when descending) orders
+    so by itself, so each key becomes two plain columns that pandas
+    sorts right by ``sort_by(sort)``: its rank class (ascending: value
+    0, NaN 1; descending: NaN 0, value 1; null 2) and its value, NaN and
+    nulls filled."""
+    out = {}
+    for i, (col, asc, dtype) in enumerate(sort):
+        arr = table.column(col)
+        x = (arr.fill_null("").to_numpy(zero_copy_only=False)
+             if dtype == "string" else _values(arr, dtype))
+        nan = np.zeros(len(x), bool)
+        if dtype in ("float", "double"):
+            nan = np.isnan(x)
+            x = np.where(nan, 0.0, x) + 0.0  # -0.0 + 0.0 is 0.0
+        rank = np.where(nan, int(asc), int(not asc))
+        rank[~arr.is_valid().to_numpy(zero_copy_only=False)] = 2
+        out[f"_k{i}"], out[f"_v{i}"] = rank, x
+    return out
+
+
+def sort_by(sort) -> list[tuple[str, bool]]:
+    """The (column, asc) pairs that order ``sort_keys``' columns."""
+    return [kv for i, (_, asc, _) in enumerate(sort)
+            for kv in ((f"_k{i}", True), (f"_v{i}", asc))]
+
+
+@dataclass(frozen=True)
+class Keyset:
+    """ES ``search_after``: the rows strictly after a cursor in the
+    order of ``keys``, ((column, asc, dtype, value), …) ending with the
+    doc_id tie-break, as Spark orders them: nulls last, NaN above every
+    number. A ``None`` value cursors into that key's null region: no
+    row is after it at that key, and the later keys break the tie."""
+    keys: tuple
+
+    def cols(self) -> list[str]:
+        return [k[0] for k in self.keys]
+
+    def mask(self, table: pa.Table) -> np.ndarray:
+        after = np.zeros(table.num_rows, bool)
+        tie = np.ones(table.num_rows, bool)
+        for col, asc, dtype, v in self.keys:
+            arr = table.column(col)
+            valid = arr.is_valid().to_numpy(zero_copy_only=False)
+            if v is None:
+                later, same = np.zeros_like(valid), ~valid
+            else:
+                later = ~valid | (valid & _hits(
+                    arr, "gt" if asc else "lt", dtype, (v,)))
+                same = valid & _hits(arr, "in", dtype, (v,))
+            after |= tie & later
+            tie &= same
+        return after
+
+
+def keyset(spark, schema, keys: list[tuple[str, bool]],
+           cursor: list) -> Keyset:
+    """The :class:`Keyset` of a search_after ``cursor`` over ``keys``,
+    ((column, asc), …) ending with ``("doc_id", True)``: one value per
+    key, each cast in the driver as a filter literal is (``_cast``), so
+    an uncastable value raises ``ValueError`` instead of paging to
+    nothing."""
+    if len(cursor) != len(keys):
+        raise ValueError(
+            f"search_after needs {len(keys)} values (one per sort "
+            f"field + the doc_id tiebreak), got {len(cursor)}")
+    dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
+    out = []
+    for (f, asc), cv in zip(keys, cursor):
+        if f not in dtypes:
+            raise ValueError(
+                f"search_after sort field {f!r} is not a stored doc_meta "
+                "column (score cursors are not stable floats)")
+        v = cv
+        if cv is not None and dtypes[f] != "string":
+            try:
+                v = _cast(spark, dtypes[f], [cv])[cv]
+            except PySparkException:  # an ANSI cast fails, not nulls
+                v = None
+            if v is None:
+                raise ValueError(
+                    f"search_after cursor value {cv!r} is not valid for "
+                    f"a {dtypes[f]} sort column")
+        out.append((f, asc, dtypes[f], v))
+    return Keyset(tuple(out))
 
 
 def _isin(c, dtype: str, vals: tuple):
@@ -197,8 +311,7 @@ def meta_spec(spark, schema, filters: dict | None = None,
         dtype = dtypes.get(col)
         if dtype is None:
             raise ValueError(f"filter on unknown doc_meta column {col!r}")
-        if not (dtype == "string" or dtype in _NUMERIC + _DATEISH
-                or dtype.startswith("decimal")):
+        if not comparable(dtype):
             raise ValueError(f"cannot filter doc_meta column {col!r} of "
                              f"type {dtype}")
         raw.append((op, col, dtype, [str(v) for v in vals]))

@@ -433,7 +433,7 @@ def test_explain_reports_scatter_fanout(spark, fixture_engine,
     args = {"q": "banana crime", "limit": 10}
 
     e = fixture_engine.explain(args)
-    assert e["strategy"] == "topk_scatter_gather"
+    assert e["hits_order"] == ["score:desc", "doc_id:asc"]
     assert e["est_postings"] == df["banana"] + df["crime"]
     assert e["scatter_tasks"] == 0
     # the planned fan-out is the one the search runs: no job at all
@@ -441,7 +441,8 @@ def test_explain_reports_scatter_fanout(spark, fixture_engine,
         lambda: fixture_engine.search(args).hits.collect())[1] == []
     # an unbounded full match keeps its one-task job
     assert fixture_engine.explain(
-        {"q": "banana crime", "sort": "doc_len"})["scatter_tasks"] == 1
+        {"q": "banana crime", "metric:sum": "doc_len"}
+    )["full_match_tasks"] == 1
 
     # a query larger than par tasks' worth of postings fans out fully
     monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK",
@@ -581,16 +582,93 @@ def test_every_tree_shape_runs_no_job(spark, fixture_index, spark_jobs):
         *(("b", d, 0.0) for d in nots)]
 
 
+def _search_shapes(eng, cursor) -> dict:
+    """name → (read, its scatter passes): every search shape that is
+    not a plain top-k, with a plain top-10 as the baseline, each
+    collecting what it returns. ``cursor``: a ``sort=path``
+    search_after cursor."""
+    q = "banana OR kwazulu OR crime"
+
+    def read(args, with_total=False):
+        def fn():
+            res = eng.search({"q": q, **args}, with_total=with_total)
+            return ([tuple(r) for r in res.hits.collect()], res.total,
+                    {f: [tuple(r) for r in d.collect()]
+                     for f, d in res.facets.items()},
+                    {f: [tuple(r) for r in d.collect()]
+                     for f, d in res.facet_totals.items()})
+        return fn
+    return {
+        "plain": (read({"limit": 10}), 1),
+        "sort": (read({"sort": "path", "limit": 10}), 1),
+        "search_after": (read({"sort": "path", "limit": 10,
+                               "search_after": cursor}), 1),
+        "function_score": (read({"function_score": "true",
+                                 "limit": 10}), 1),
+        "with_total": (read({"limit": 10}, True), 2),
+        "post_filter_facet": (read({"facet": "lang", "filter:lang": "txt",
+                                    "limit": 0}), 1),
+        "facet_and_hits": (read({"facet": "lang", "limit": 10}), 2),
+        "facet_total": (read({"facet": "lang", "facet_total:lang": "true",
+                              "limit": 0}), 1),
+    }
+
+
+def _path_cursor(eng) -> list:
+    row = eng.search({"q": "banana OR kwazulu OR crime", "sort": "path",
+                      "limit": 2}).hits.collect()[-1]
+    return [row["path"], str(row["doc_id"])]
+
+
+def test_every_search_shape_runs_no_job(spark, fixture_index, monkeypatch,
+                                        spark_jobs):
+    """A key sort, a search_after page, function_score, with_total, a
+    post-filtered facet, a facet beside hits and a facet_total are
+    gathered scatter passes like a plain top-k: on the fixture index (a
+    one-group plan) each runs no Spark job, a fresh Engine's first read
+    included. With ``_POSTINGS_PER_TASK`` = 1 each scatter pass (hits,
+    total, one per facet filter set) is ONE single-stage job (no
+    Exchange) of one task per group, with the same results."""
+    from openaleph_search_spark.query import executor as xmod
+    from openaleph_search_spark.query.engine import Engine
+    cursor = _path_cursor(Engine(spark, fixture_index))
+    eng = Engine(spark, fixture_index)
+    want = {}
+    for name, (fn, _) in _search_shapes(eng, cursor).items():
+        want[name], jobs = spark_jobs(fn)
+        assert jobs == [], name
+    # banana.txt, crime.go, jane.py, kwazulu.txt, long.rs match
+    assert want["with_total"][1] == 5
+    assert want["search_after"][0] == want["sort"][0][2:]
+    assert want["post_filter_facet"][2]["lang"] == [
+        ("txt", 2), ("go", 1), ("py", 1), ("rs", 1)]
+    assert want["facet_total"][3] == {"lang": [(4,)]}
+
+    monkeypatch.setattr(xmod, "_POSTINGS_PER_TASK", 1)
+    n = min(len(eng.executor._scatter_layout()["parts"]),
+            spark.sparkContext.defaultParallelism)
+    assert n >= 2
+    eng = Engine(spark, fixture_index)
+    for name, (fn, passes) in _search_shapes(eng, cursor).items():
+        got, jobs = spark_jobs(fn)
+        assert jobs == [[n]] * passes, name
+        assert got == want[name], name
+
+
 def test_bounded_reads_never_build_doc_meta(spark, fixture_index,
                                             monkeypatch):
     """Bounded reads plan from meta.json's doc_meta schema: with the
     Spark doc_meta relation made unbuildable, a fresh Engine's top-k,
     count, terms facet, msearch, explain and stats give the rows they
-    gave before, for a plain, a match-all and a pure-NOT query."""
+    gave before, for a plain, a match-all and a pure-NOT query, and so
+    does every search shape: a key sort, search_after, function_score,
+    with_total, post-filtered facets, facets beside hits and
+    facet_total."""
     from openaleph_search_spark.query.engine import Engine
+    cursor = _path_cursor(Engine(spark, fixture_index))
 
     def reads(eng):
-        out = []
+        out = [fn() for fn, _ in _search_shapes(eng, cursor).values()]
         for q in ({"q": "banana OR kwazulu"}, {}, {"q": "-banana"}):
             out += [
                 eng.search({**q, "limit": 5}).hits.collect(),

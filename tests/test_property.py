@@ -825,25 +825,45 @@ def _cache_paths_reads(a: str, b: str, c: str) -> dict:
     }
 
 
+def _engine_paths(spark, idx: str, reads: dict) -> dict:
+    """Every read of ``reads`` (name → fn(engine)) from a cold Engine
+    (each read its Engine's first: the part cache fills), a warm Engine
+    (each read run before: only cache hits, no index file opened), the
+    task path (``_POSTINGS_PER_TASK`` = 1: one Spark task per group,
+    each reading its own part files) and a driver with no part cache
+    and no held term dictionary (budget 0: each read reads the query
+    terms' rows from the part files, and planning its dictionary rows
+    from the term_stats files) → {path: {name: result}}."""
+    from unittest import mock
+
+    from openaleph_search_spark.query import executor as xmod
+    from openaleph_search_spark.query.engine import Engine
+    cold = {n: fn(Engine(spark, idx)) for n, fn in reads.items()}
+    eng = Engine(spark, idx)
+    for fn in reads.values():
+        fn(eng)
+    misses = eng.explain({})["part_cache"]["misses"]
+    warm = {n: fn(eng) for n, fn in reads.items()}
+    assert eng.explain({})["part_cache"]["misses"] == misses
+    with mock.patch.object(xmod, "_POSTINGS_PER_TASK", 1):
+        task = {n: fn(Engine(spark, idx)) for n, fn in reads.items()}
+    with mock.patch.object(xmod, "_DRIVER_CACHE_BYTES", 0):
+        files = Engine(spark, idx)
+        uncached = {n: fn(files) for n, fn in reads.items()}
+        assert files.explain({})["part_cache"] is None
+        assert files.explain({})["term_dict"] is None
+    return {"cold": cold, "warm": warm, "task": task, "files": uncached}
+
+
 @given(_cache_case())
 @settings(max_examples=5, deadline=None)
 def test_part_cache_paths_agree(spark, tmp_path_factory, case):
     """On a random corpus with one deleted doc, every read class gives
-    the same rows, ranks and scores from a cold Engine (each read its
-    Engine's first: the part cache fills), a warm Engine (each read
-    run before: only cache hits, no index file opened), the task path
-    (``_POSTINGS_PER_TASK`` = 1: one Spark task per group, each reading
-    its own part files) and a driver with no part cache and no held
-    term dictionary (budget 0: each read reads the query terms' rows
-    from the part files, and planning its dictionary rows from the
-    term_stats files)."""
-    from unittest import mock
-
+    the same rows, ranks and scores from each engine path of
+    ``_engine_paths``: cold, warm, task and budget 0."""
     from openaleph_search_spark.index.build import build_index
     from openaleph_search_spark.index.mutate import delete_docs
     from openaleph_search_spark.index.storage import IndexStorage
-    from openaleph_search_spark.query import executor as xmod
-    from openaleph_search_spark.query.engine import Engine
     from pyspark.sql import functions as F
     docs, victim, words = case
     rows = [(f"r{i % 2}", f"d{i}.txt", "c", ("en", "fr")[i % 3 == 0],
@@ -854,23 +874,243 @@ def test_part_cache_paths_agree(spark, tmp_path_factory, case):
               "content string"), idx, num_partitions=3, num_shards=2,
         bigrams=True)
     delete_docs(spark, IndexStorage(idx), F.col("path") == f"d{victim}.txt")
-    reads = _cache_paths_reads(*words)
-    cold = {n: fn(Engine(spark, idx)) for n, fn in reads.items()}
-    eng = Engine(spark, idx)
-    for fn in reads.values():
-        fn(eng)
-    misses = eng.explain({"q": words[0]})["part_cache"]["misses"]
-    warm = {n: fn(eng) for n, fn in reads.items()}
-    assert eng.explain({"q": words[0]})["part_cache"]["misses"] == misses
-    with mock.patch.object(xmod, "_POSTINGS_PER_TASK", 1):
-        task = {n: fn(Engine(spark, idx)) for n, fn in reads.items()}
-    with mock.patch.object(xmod, "_DRIVER_CACHE_BYTES", 0):
-        files = Engine(spark, idx)
-        uncached = {n: fn(files) for n, fn in reads.items()}
-        assert files.explain({"q": words[0]})["part_cache"] is None
-        assert files.explain({"q": words[0]})["term_dict"] is None
-    assert warm == cold
-    assert task == cold
-    assert uncached == cold
+    got = _engine_paths(spark, idx, _cache_paths_reads(*words))
+    cold = got["cold"]
+    assert got["warm"] == cold
+    assert got["task"] == cold
+    assert got["files"] == cold
     assert not any(f"d{victim}.txt" in r for v in cold.values()
                    if isinstance(v, list) for r in v)
+
+
+# -- sort order, search_after, totals and post-filtered facets ---------------
+_UTC = __import__("datetime").timezone.utc
+_SORT_POOLS = {  # doc_meta column → its non-null values
+    "s": ["", "a", "b", "zz"],
+    "i": [-3, 0, 5, 2 ** 40],
+    "d": [float("nan"), -0.0, 0.0, 1.5, -2.5, float("inf")],
+    "t": [__import__("datetime").datetime(2020, 3, 1, h, tzinfo=_UTC)
+          for h in (0, 5, 23)],
+}
+
+
+@st.composite
+def _sort_case(draw):
+    n = draw(st.integers(4, 14))
+    docs = [(draw(st.lists(st.sampled_from(_CACHE_WORDS[:3]), min_size=1,
+                           max_size=6)),
+             draw(st.sampled_from(["en", "fr"])),
+             {c: draw(st.one_of(st.none(), st.sampled_from(pool)))
+              for c, pool in _SORT_POOLS.items()}) for _ in range(n)]
+    keys = draw(st.lists(st.sampled_from(list(_SORT_POOLS)), min_size=1,
+                         max_size=2, unique=True))
+    return {"docs": docs, "victim": draw(st.integers(0, n - 1)),
+            "q": draw(st.sampled_from(["alpha OR beta", "", "-alpha"])),
+            "sort": [(c, draw(st.booleans())) for c in keys],
+            "boost": draw(st.booleans()), "limit": draw(st.integers(1, 5)),
+            "at": draw(st.integers(0, 99)), "in_nulls": draw(st.booleans()),
+            "s": draw(st.sampled_from(_SORT_POOLS["s"])),
+            "lang": draw(st.sampled_from(["en", "fr"]))}
+
+
+def _spark_order(sort):
+    """A sort key for reference rows (dicts) in Spark's order of
+    ``sort``: nulls last either way, NaN above every number, -0.0 equal
+    to 0.0, then doc_id asc — written independently of the engine's
+    rank columns."""
+    import functools
+    import math
+
+    def rank(v):  # 0 number, 1 NaN, 2 null
+        if v is None:
+            return 2
+        return 1 if isinstance(v, float) and math.isnan(v) else 0
+
+    def cmp(a, b):
+        for col, asc in sort:
+            x, y = a[col], b[col]
+            rx, ry = rank(x), rank(y)
+            if 2 in (rx, ry):
+                c = (rx == 2) - (ry == 2)  # nulls last, asc or desc
+            else:
+                c = (rx > ry) - (rx < ry) if rx or ry else (x > y) - (x < y)
+                c = c if asc else -c
+            if c:
+                return c
+        return (a["doc_id"] > b["doc_id"]) - (a["doc_id"] < b["doc_id"])
+    return functools.cmp_to_key(cmp)
+
+
+def _cursor_str(v):
+    import datetime
+    if v is None or isinstance(v, str):
+        return v
+    if isinstance(v, datetime.datetime):
+        return v.astimezone(_UTC).strftime("%Y-%m-%d %H:%M:%S")
+    return repr(v)
+
+
+@given(_sort_case())
+@settings(max_examples=6, deadline=None)
+def test_sort_search_after_and_facets_match_reference(spark,
+                                                      tmp_path_factory,
+                                                      case):
+    """On a random tombstoned corpus with nullable string, long, double
+    (NaN, ±0.0 and inf included) and timestamp doc_meta columns: a sort
+    by 1-2 keys (each asc or desc), its search_after page from a cursor
+    taken off the whole ordered list (a None element included when the
+    row has one), with_total, function_score and two post-filtered
+    facets (with a facet_total) give, on every engine path of
+    ``_engine_paths``, the rows, scores, totals and buckets of a
+    reference over the BM25 oracle's scores that orders as Spark does.
+    The build stores a NaN doc_meta double as null (its pandas boundary
+    reads NaN as null), so the reference reads it so too; NaN's place
+    in the order is checked by ``test_hits_order_is_sparks``."""
+    import math
+    from collections import Counter
+
+    from openaleph_search_spark.index.build import build_index
+    from openaleph_search_spark.index.mutate import delete_docs
+    from openaleph_search_spark.index.storage import IndexStorage
+    from pyspark.sql import functions as F
+    rows = [(f"r{n % 2}", f"d{n}.txt", "c", lang, " ".join(toks),
+             *(m[c] for c in _SORT_POOLS))
+            for n, (toks, lang, m) in enumerate(case["docs"])]
+    idx = str(tmp_path_factory.mktemp("idx_sort"))
+    build_index(spark, spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, "
+              "content string, s string, i bigint, d double, t timestamp"),
+        idx, num_partitions=3, num_shards=2, meta_cols=list(_SORT_POOLS))
+    st_ = IndexStorage(idx)
+    victim = f"d{case['victim']}.txt"
+    delete_docs(spark, st_, F.col("path") == victim)
+
+    # the reference: the oracle's scores over the docs as built (a
+    # delete refreshes no stats), the victim dropped
+    ids = {r["path"]: r["doc_id"] for r in st_.doc_meta(spark).select(
+        "doc_id", "path").collect()}
+    oracle = OracleIndex({ids[r[1]]: r[4] for r in rows})
+    q, sort, limit = case["q"], case["sort"], case["limit"]
+    scores = oracle.or_query(["alpha", "beta"]) if q == "alpha OR beta" \
+        else {}
+    live = []
+    for r, (_, lang, m) in zip(rows, case["docs"]):
+        d = ids[r[1]]
+        if r[1] == victim or (q == "-alpha" and "alpha" in r[4].split()) \
+                or (q and q != "-alpha" and d not in scores):
+            continue
+        sc = scores.get(d, 0.0)
+        if case["boost"] and q:
+            sc += math.sqrt(0.5 * oracle.doc_len[d])
+        live.append({"doc_id": d, "score": sc, "lang": lang, **{
+            c: None if isinstance(v, float) and math.isnan(v) else v
+            for c, v in m.items()}})
+    order = _spark_order(sort)
+    ranked = sorted(live, key=order)
+    kept = sorted((r for r in live if r["s"] == case["s"]
+                   and r["lang"] == case["lang"]), key=order)
+
+    def buckets(col, rs):
+        n = Counter(r[col] for r in rs if r[col] is not None)
+        return sorted(n.items(), key=lambda kv: (-kv[1], kv[0]))
+
+    base = {"q": q, "sort": [f"{c}:{'asc' if a else 'desc'}"
+                             for c, a in sort],
+            "function_score": str(case["boost"]).lower()}
+    want = {"page": (ranked[:limit], len(ranked)),
+            "facets": (kept[:limit], len(kept), {
+                "s": buckets("s", [r for r in live
+                                   if r["lang"] == case["lang"]]),
+                "lang": buckets("lang", [r for r in live
+                                         if r["s"] == case["s"]])})}
+    reads = {
+        "page": lambda e: e.search({**base, "limit": limit},
+                                   with_total=True),
+        "facets": lambda e: e.search(
+            {**base, "limit": limit, "filter:s": case["s"],
+             "filter:lang": case["lang"], "facet": ["s", "lang"],
+             "facet_total:s": "true"}, with_total=True),
+    }
+    if ranked:
+        nulls = [r for r in ranked if r[sort[0][0]] is None]
+        cur = nulls[0] if case["in_nulls"] and nulls else \
+            ranked[case["at"] % len(ranked)]
+        at = ranked.index(cur)
+        want["after"] = (ranked[at + 1:at + 1 + limit], None)
+        reads["after"] = lambda e: e.search({
+            **base, "limit": limit, "search_after": [
+                *(_cursor_str(cur[c]) for c, _ in sort),
+                str(cur["doc_id"])]})
+
+    def collected(read):
+        def fn(e):
+            res = read(e)
+            return ([(r["doc_id"], r["score"]) for r in res.hits.collect()],
+                    res.total,
+                    {f: [tuple(r) for r in d.collect()]
+                     for f, d in res.facets.items()},
+                    {f: [tuple(r) for r in d.collect()]
+                     for f, d in res.facet_totals.items()})
+        return fn
+    got = _engine_paths(spark, idx, {n: collected(fn)
+                                     for n, fn in reads.items()})
+    for path, results in got.items():
+        for name, (hits, total, facets, totals) in results.items():
+            w = want[name]
+            assert [d for d, _ in hits] == [r["doc_id"] for r in w[0]], (
+                path, name, hits, w[0])
+            assert all(abs(sc - r["score"]) < 1e-9
+                       for (_, sc), r in zip(hits, w[0])), (path, name)
+            assert total == w[1], (path, name)
+            if name == "facets":
+                assert facets == w[2], (path, facets, w[2])
+                assert totals == {"s": [(len(w[2]["s"]),)]}, (path, totals)
+
+
+@given(rows=st.lists(st.tuples(
+           st.one_of(st.none(), st.sampled_from(
+               [float("nan"), -0.0, 0.0, 1.5, -2.5, float("inf"),
+                float("-inf")])),
+           st.one_of(st.none(), st.sampled_from(["", "a", "b", "é"]))),
+           min_size=1, max_size=25),
+       keys=st.lists(st.tuples(st.sampled_from(["d", "s"]), st.booleans()),
+                     min_size=1, max_size=2, unique_by=lambda t: t[0]),
+       k=st.integers(1, 30), at=st.integers(0, 99))
+@example(rows=[(float("nan"), None), (1.5, "a"), (None, "a"),
+               (-0.0, None), (0.0, "b"), (float("nan"), "a")],
+         keys=[("d", False)], k=6, at=0)
+@settings(max_examples=60, deadline=None)
+def test_hits_order_is_sparks(spark, rows, keys, k, at):
+    """A hits cut orders as Spark's orderBy does: ``top_k`` over
+    ``sort_keys`` columns (nulls last, NaN above every number, -0.0
+    equal to 0.0, doc_id breaking ties, each key asc or desc) gives
+    Spark's first k rows of the same Arrow table, and so does the
+    reference order of ``test_sort_search_after_and_facets_match_
+    reference``; a ``Keyset`` cursor on any row keeps exactly the rows
+    after it."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from openaleph_search_spark.query.executor import top_k
+    from openaleph_search_spark.query.filters import (Keyset, sort_by,
+                                                      sort_keys)
+    tbl = pa.table({"doc_id": pa.array(range(len(rows)), pa.int64()),
+                    "d": pa.array([r[0] for r in rows], pa.float64()),
+                    "s": pa.array([r[1] for r in rows], pa.string())})
+    dtype = {"d": "double", "s": "string"}
+    sort = [(c, asc, dtype[c]) for c, asc in keys]
+    cut = top_k(pd.DataFrame({"doc_id": tbl.column("doc_id").to_numpy(),
+                              **sort_keys(tbl, sort)}), k,
+                keys=sort_by(sort))
+    spark_rows = [r["doc_id"] for r in spark.createDataFrame(tbl).orderBy(
+        *(F.col(c).asc_nulls_last() if asc else F.col(c).desc_nulls_last()
+          for c, asc in keys), "doc_id").collect()]
+    ref = sorted(({"doc_id": i, "d": d, "s": s_}
+                  for i, (d, s_) in enumerate(rows)), key=_spark_order(keys))
+    assert [r["doc_id"] for r in ref] == spark_rows
+    assert cut["doc_id"].tolist() == spark_rows[:k]
+    cur = ref[at % len(ref)]
+    after = Keyset((*((c, asc, dtype[c], cur[c]) for c, asc in keys),
+                    ("doc_id", True, "bigint", cur["doc_id"]))).mask(tbl)
+    assert np.flatnonzero(after).tolist() == sorted(
+        spark_rows[spark_rows.index(cur["doc_id"]) + 1:])

@@ -290,32 +290,54 @@ def test_search_after_null_sort_keys(spark, fixture_docs_df, tmp_path):
 
 
 def test_explain_strategies(fixture_engine):
-    """Planner-debug output names the strategy search() actually takes
-    and surfaces expansions / phrase fast paths."""
+    """Planner-debug output names the path each part of search() takes
+    — the order its hits pass cuts in and whether it prunes, its facet
+    passes (one per filter set left out) and the aggregations that read
+    the full match in Spark — and surfaces expansions / phrase fast
+    paths."""
+    score = ["score:desc", "doc_id:asc"]
     e = fixture_engine.explain({"q": "banana crime", "limit": 10})
-    assert e["strategy"] == "topk_scatter_gather"
+    assert e["hits_order"] == score
     assert e["pruning_eligible"] and e["k"] == 10
+    assert e["facet_passes"] == [] and e["full_match"] == []
+    assert e["full_match_tasks"] is None
     assert set(e["terms"]) >= {"banana", "crime"}
     e = fixture_engine.explain({"q": "ba*", "limit": 5})
     assert "banana" in e["expansions"]["ba*"]
     e = fixture_engine.explain({"limit": 10})
-    assert e["strategy"] == "topk_scatter_gather"
+    assert e["hits_order"] == score
     e = fixture_engine.explain({"q": "banana", "facet": "lang",
                                 "limit": 0})
-    assert e["strategy"] == "facet_partials_scatter"
+    assert e["hits_order"] is None and e["facet_passes"] == [["lang"]]
+    assert e["full_match"] == []
     e = fixture_engine.explain({"q": "-banana", "limit": 10})
-    assert e["strategy"] == "topk_scatter_gather"
+    assert e["hits_order"] == score
+    # a key sort or function_score cuts every match unpruned
+    e = fixture_engine.explain({"q": "banana", "sort": "doc_len:desc",
+                                "limit": 5})
+    assert e["hits_order"] == ["doc_len:desc", "doc_id:asc"]
+    assert not e["pruning_eligible"]
+    e = fixture_engine.explain({"q": "banana", "function_score": "true",
+                                "limit": 5})
+    assert e["hits_order"] == score and not e["pruning_eligible"]
+    e = fixture_engine.explain({
+        "q": "banana", "facet": ["lang", "repo", "doc_len"],
+        "filter:lang": "txt", "facet_interval:doc_len": "100",
+        "metric:sum": "doc_len", "limit": 0})
+    assert e["facet_passes"] == [["lang"], ["repo"]]
+    assert e["full_match"] == ["facet:doc_len", "metric:sum"]
+    assert e["full_match_tasks"] == 1
     e = fixture_engine.explain({"q": '"banana crime"', "limit": 5})
     assert e["phrase_bigram_fast_path"] == [] or e["needs_positions"] \
         is False  # config-dependent: fixture index may lack bigrams
 
 
 def test_hit_columns_same_on_every_branch(fixture_engine):
-    """Every search branch returns its hits as (doc_id, score,
+    """Every search shape returns its hits as (doc_id, score,
     …doc_meta), the gathered top-k's order, so rows compare by
     position: sort, facets, with_total, search_after and
-    function_score (the full match), match-all, pure NOT and the
-    facet partials."""
+    function_score (each a scatter pass in its own cut order),
+    match-all, pure NOT and the facet partials."""
     gathered = fixture_engine.search({"q": "banana", "limit": 5})
     want = gathered.hits.columns
     assert want[:2] == ["doc_id", "score"]
@@ -324,22 +346,19 @@ def test_hit_columns_same_on_every_branch(fixture_engine):
     first = fixture_engine.search(
         {**q, "sort": "path"}).hit_rows(0, 1)[0]
     cases = [
-        ({**q, "sort": "doc_len"}, False, "full_match_then_branches"),
-        ({**q, "facet": "lang"}, False, "full_match_then_branches"),
+        ({**q, "sort": "doc_len"}, False, "doc_len:asc"),
+        ({**q, "facet": "lang"}, False, "score:desc"),
         (q, True, None),  # explain() takes no with_total
         ({**q, "sort": "path", "search_after": [
-            first["path"], str(first["doc_id"])]}, False,
-         "full_match_then_branches"),
-        ({**q, "function_score": "true"}, False,
-         "full_match_then_branches"),
-        ({"limit": 10}, False, "topk_scatter_gather"),
-        ({"q": "-banana", "limit": 10}, False, "topk_scatter_gather"),
-        ({"q": "banana", "facet": "lang", "limit": 0}, False,
-         "facet_partials_scatter"),
+            first["path"], str(first["doc_id"])]}, False, "path:asc"),
+        ({**q, "function_score": "true"}, False, "score:desc"),
+        ({"limit": 10}, False, "score:desc"),
+        ({"q": "-banana", "limit": 10}, False, "score:desc"),
+        ({"q": "banana", "facet": "lang", "limit": 0}, False, None),
     ]
-    for args, with_total, strategy in cases:
-        if strategy:
-            assert fixture_engine.explain(args)["strategy"] == strategy
+    for args, with_total, order in cases:
+        if order:
+            assert fixture_engine.explain(args)["hits_order"][0] == order
         res = fixture_engine.search(args, with_total=with_total)
         assert res.hits.columns == want, args
     # the same rows, position for position (no function_score boost)
@@ -367,6 +386,36 @@ def test_sort_by_field(fixture_engine):
         {"q": "banana OR kwazulu", "sort": "doc_len:desc", "limit": 10})
     lens = [r["doc_len"] for r in res.hit_rows(0, 10)]
     assert lens == sorted(lens, reverse=True)
+
+
+def test_unknown_sort_or_facet_field_raises(fixture_engine, monkeypatch):
+    """An unknown sort key or facet field raises ValueError naming the
+    field before any read, a sort by a column no doc_meta row holds
+    (``content``) included. ``score`` stays a sort key: ``sort=score``
+    orders hits by (score asc, doc_id asc), ``sort=score:desc`` as a
+    plain search does."""
+    import pytest as _pytest
+    from openaleph_search_spark.query.executor import SearchExecutor
+    q = {"q": "banana OR kwazulu OR crime", "limit": 10}
+    plain = fixture_engine.search(q).hit_rows(0, 10)
+    assert len(plain) >= 3
+    assert fixture_engine.search(
+        {**q, "sort": "score:desc"}).hit_rows(0, 10) == plain
+    assert fixture_engine.search({**q, "sort": "score"}).hit_rows(0, 10) \
+        == sorted(plain, key=lambda r: (r["score"], r["doc_id"]))
+
+    def no_read(*args, **kwargs):
+        raise AssertionError("a search read before validating its fields")
+    monkeypatch.setattr(SearchExecutor, "_scatter_exec", no_read)
+    for args, field in [({"sort": "nosuch"}, "nosuch"),
+                        ({"sort": "content"}, "content"),
+                        ({"sort": ["path", "nosuch:desc"]}, "nosuch"),
+                        ({"facet": "nosuch"}, "nosuch"),
+                        ({"facet": ["lang", "nosuch"], "limit": 0},
+                         "nosuch"),
+                        ({"facet_significant:nosuch": "true"}, "nosuch")]:
+        with _pytest.raises(ValueError, match=f"'{field}'"):
+            fixture_engine.search({**q, **args})
 
 
 def test_bm25_score_values_pinned(fixture_engine, oracle, ids_by_path):
